@@ -30,10 +30,12 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
   *    rename and its claim, which the resolve/retention/vacuum paths
   *    already ignore.
   *
-  * Selection: `graft.reftable.commit.primitive` = `rename` | `conditional`
-  * in the Hadoop conf wins; otherwise object-store schemes (plus any in
-  * `graft.reftable.commit.conditional.schemes`) default to conditional and
-  * everything else to rename.
+  * Selection ([[CommitPrimitive.forPath]]) is by the root's scheme alone:
+  * `file:` (and scheme-less) paths always take [[RenameCommit]]; the
+  * object-store schemes (`s3a`, `gs`, `abfs`, ...) plus any listed in
+  * `graft.reftable.commit.conditional.schemes` take [[ConditionalCommit]];
+  * every other scheme (`hdfs`, ...) takes [[RenameCommit]]. Callers never
+  * pick rename vs conditional themselves.
   *
   * Out of scope, by design: one-time quiesced migrations
   * ([[VersionedTable.adopt]]) and catalog RENAME TABLE still require a
@@ -41,8 +43,6 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
   * rename swap — all post-publish maintenance, never the commit path.
   */
 sealed trait CommitPrimitive {
-  def name: String
-
   /** Atomically create `dst` with exactly `content` iff `dst` does not
     * exist. True iff THIS caller created it — the primitive the commit
     * log's sequence claim (and CREATE TABLE's descriptor claim) rests on.
@@ -64,41 +64,17 @@ sealed trait CommitPrimitive {
 
 /** Rename/link-based primitive for POSIX and HDFS-class namespaces. */
 object RenameCommit extends CommitPrimitive {
-  val name = "rename"
   val atomicDirRename = true
 
   private def fc(conf: Configuration): FileContext = FileContext.getFileContext(conf)
 
-  private def isLocal(p: Path): Boolean = {
-    val s = p.toUri.getScheme
-    s == null || s == "file"
-  }
-
-  /** Hard link on local POSIX (link(2) is atomic and fails EEXIST — the
-    * local FileContext rename(NONE) and create(overwrite=false) are both
-    * check-then-act and can silently replace a concurrent winner),
-    * rename-no-overwrite elsewhere (atomic in the HDFS-class namespace).
+  /** Hard link on local POSIX ([[LocalFs.claim]]), rename-no-overwrite
+    * elsewhere (atomic in the HDFS-class namespace).
     * The tmp sibling is consumed or deleted either way.
     */
-  def putIfAbsent(dst: Path, content: Array[Byte], conf: Configuration): Boolean = {
-    if (isLocal(dst)) {
-      // all-NIO on the local scheme: the Hadoop create/delete calls this
-      // path used to make fork subprocesses without native libhadoop
-      // (see LocalFs) — ~16 ms per claim for two syscalls' worth of work
-      val d = LocalFs.nio(dst)
-      LocalFs.ensureParent(d)
-      val tmp = d.resolveSibling(
-        s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-      java.nio.file.Files.write(tmp, content,
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      val won = try {
-        java.nio.file.Files.createLink(d, tmp)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      java.nio.file.Files.deleteIfExists(tmp)
-      won
-    } else {
+  def putIfAbsent(dst: Path, content: Array[Byte], conf: Configuration): Boolean =
+    if (LocalFs.isLocal(dst)) LocalFs.claim(dst, content)
+    else {
       val fs = dst.getFileSystem(conf)
       val tmp = new Path(dst.getParent,
         s".tmp-${java.util.UUID.randomUUID().toString.take(12)}")
@@ -110,7 +86,6 @@ object RenameCommit extends CommitPrimitive {
           fs.delete(tmp, false); false
       }
     }
-  }
 
   /** Local scheme: NIO tmp + rename(2) — atomic replace, no forks (and no
     * delete-then-rename missing-file window, which the retry loop below
@@ -118,7 +93,7 @@ object RenameCommit extends CommitPrimitive {
     * briefly, then surfaced (best-effort callers catch).
     */
   def overwrite(dst: Path, content: Array[Byte], conf: Configuration): Unit = {
-    if (isLocal(dst)) return LocalFs.overwriteAtomic(dst, content)
+    if (LocalFs.isLocal(dst)) return LocalFs.overwriteAtomic(dst, content)
     val fs = dst.getFileSystem(conf)
     val tmp = new Path(dst.getParent, s".${dst.getName}.tmp${System.nanoTime()}")
     val out = fs.create(tmp, true)
@@ -142,53 +117,36 @@ object RenameCommit extends CommitPrimitive {
   *
   * The store contract is a conditional create: an attempt to create an
   * object that already exists must FAIL ATOMICALLY (S3 `If-None-Match: *`,
-  * GCS `ifGenerationMatch=0`, Azure `If-None-Match`). Local `file` paths
-  * implement it with `O_CREAT|O_EXCL` (`CREATE_NEW`) — truly atomic, used
-  * when tests force this primitive onto a local root. Other schemes go
-  * through `FileSystem.create(dst, overwrite = false)`, which the store's
-  * Hadoop connector maps to its conditional write; a connector whose
-  * non-overwrite create is check-then-act does NOT satisfy the contract
-  * (use [[RenameCommit]] there if the namespace renames atomically).
+  * GCS `ifGenerationMatch=0`, Azure `If-None-Match`). Every call goes
+  * through `FileSystem.create(dst, overwrite = ...)`, which the store's
+  * Hadoop connector maps to its conditional write or whole-object PUT; a
+  * connector whose non-overwrite create is check-then-act does NOT satisfy
+  * the contract (use [[RenameCommit]] there if the namespace renames
+  * atomically). [[CommitPrimitive.forPath]] never selects this primitive
+  * for a `file:` path, whose local create is check-then-act.
   */
 object ConditionalCommit extends CommitPrimitive {
-  val name = "conditional"
   val atomicDirRename = false
 
   def putIfAbsent(dst: Path, content: Array[Byte], conf: Configuration): Boolean = {
-    val scheme = dst.toUri.getScheme
-    if (scheme == null || scheme == "file") {
-      try {
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(Option(dst.toUri.getPath).getOrElse(dst.toString)),
-          content, java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      // a lost conditional write can surface at create OR at close (object
-      // stores report the precondition failure at PUT completion — S3's
-      // 412 arrives when the upload finishes)
-      val fs = dst.getFileSystem(conf)
-      try {
-        val out = fs.create(dst, false)
-        try out.write(content) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException if fs.exists(dst) => false
-      }
+    // a lost conditional write can surface at create OR at close (object
+    // stores report the precondition failure at PUT completion — S3's
+    // 412 arrives when the upload finishes)
+    val fs = dst.getFileSystem(conf)
+    try {
+      val out = fs.create(dst, false)
+      try out.write(content) finally out.close()
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case e: java.io.IOException if fs.exists(dst) => false
     }
   }
 
   /** Plain whole-object PUT: atomic on object stores (their visibility
-    * contract), which is the store class this primitive exists for. The
-    * local fallback (tests forcing this primitive onto a file root) gets
-    * the NIO atomic replace — a plain create-truncate would NOT model the
-    * store's whole-object visibility.
+    * contract), which is the store class this primitive exists for.
     */
   def overwrite(dst: Path, content: Array[Byte], conf: Configuration): Unit = {
-    val scheme = dst.toUri.getScheme
-    if (scheme == null || scheme == "file") return LocalFs.overwriteAtomic(dst, content)
     val fs = dst.getFileSystem(conf)
     val out = fs.create(dst, true)
     try out.write(content) finally out.close()
@@ -196,31 +154,27 @@ object ConditionalCommit extends CommitPrimitive {
 }
 
 object CommitPrimitive {
-  /** Hadoop conf key selecting the primitive: `rename` | `conditional`. */
-  val ConfKey = "graft.reftable.commit.primitive"
-
   /** Comma-separated extra schemes to treat as conditional-write stores
     * (e.g. a vendor connector, or a test filesystem modeling one).
     */
   val ExtraSchemesKey = "graft.reftable.commit.conditional.schemes"
 
   /** Schemes whose stores have no atomic rename but do have conditional
-    * writes — they default to [[ConditionalCommit]] without configuration.
+    * writes — they select [[ConditionalCommit]] without configuration.
     */
   private val ConditionalSchemes =
     Set("s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "cos", "wasb", "wasbs")
 
+  /** The primitive for `p`'s store, chosen by scheme (see the
+    * [[CommitPrimitive]] "Selection" paragraph).
+    */
   def forPath(p: Path, conf: Configuration): CommitPrimitive =
-    conf.get(ConfKey, "") match {
-      case RenameCommit.name => RenameCommit
-      case ConditionalCommit.name => ConditionalCommit
-      case "" =>
-        val extra = conf.get(ExtraSchemesKey, "")
-          .split(',').map(_.trim).filter(_.nonEmpty).toSet
-        val scheme = Option(p.toUri.getScheme).getOrElse("file")
-        if (ConditionalSchemes(scheme) || extra(scheme)) ConditionalCommit
-        else RenameCommit
-      case other => throw new IllegalArgumentException(
-        s"$ConfKey must be 'rename' or 'conditional', got '$other'")
+    if (LocalFs.isLocal(p)) RenameCommit
+    else {
+      val scheme = p.toUri.getScheme
+      val extra = conf.get(ExtraSchemesKey, "")
+        .split(',').map(_.trim).filter(_.nonEmpty).toSet
+      if (ConditionalSchemes(scheme) || extra(scheme)) ConditionalCommit
+      else RenameCommit
     }
 }

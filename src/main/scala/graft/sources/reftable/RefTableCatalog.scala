@@ -509,15 +509,10 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
       val dn = root.putArray("droppedColumns")
       dropped.toSeq.sorted.foreach(dn.add)
     }
-    if (LocalFs.isLocal(descriptorPath(ident)))
-      LocalFs.overwriteAtomic(descriptorPath(ident), om.writeValueAsBytes(root))
-    else {
-      val tmp = new Path(tablePath(ident), s"._TABLE.tmp${System.nanoTime()}")
-      val out = fs.create(tmp, false)
-      try out.write(om.writeValueAsBytes(root)) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(conf).rename(
-        tmp, descriptorPath(ident), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    // replace through the store's commit primitive: readers never see a
+    // half-written descriptor, on rename-capable and object stores alike
+    val dp = descriptorPath(ident)
+    CommitPrimitive.forPath(dp, conf).overwrite(dp, om.writeValueAsBytes(root), conf)
     loadTable(ident)
   }
 

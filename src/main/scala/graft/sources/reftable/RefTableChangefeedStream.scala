@@ -102,7 +102,8 @@ class RefTableChangefeedStream(
 
   /** Pin generation `gen` to the table's current version (idempotent: an
     * existing pin wins, so latestOffset/plan races within one generation
-    * agree on the listing).
+    * agree on the listing). The pin is claimed through the checkpoint
+    * store's [[CommitPrimitive]]; a lost claim adopts the winner's pin.
     */
   private def ensurePinned(gen: Long): String = synchronized {
     pinnedVersion(gen).getOrElse {
@@ -114,19 +115,12 @@ class RefTableChangefeedStream(
       val fs = cfDir.getFileSystem(conf)
       fs.mkdirs(cfDir)
       val pinBytes = s"""{"version":"$v"}""".getBytes("UTF-8")
-      if (LocalFs.isLocal(pinPath(gen))) {
-        // CREATE_NEW keeps the no-overwrite contract of fs.create(_, false)
-        val d = LocalFs.nio(pinPath(gen))
-        LocalFs.ensureParent(d)
-        java.nio.file.Files.write(d, pinBytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-      } else {
-        val out = fs.create(pinPath(gen), false)
-        try out.write(pinBytes) finally out.close()
-      }
-      pins(gen) = v
-      v
+      val p = pinPath(gen)
+      if (CommitPrimitive.forPath(p, conf).putIfAbsent(p, pinBytes, conf)) {
+        pins(gen) = v
+        v
+      } else pinnedVersion(gen).getOrElse(
+        throw new IllegalStateException(s"changefeed pin $p lost its claim but is unreadable"))
     }
   }
 

@@ -163,24 +163,7 @@ object DeletionVectors {
     fs.mkdirs(dst)
     parentSidecars.foreach { src =>
       val target = new Path(dst, src.getName)
-      if (!fs.exists(target)) {
-        val srcScheme = src.toUri.getScheme
-        val local = srcScheme == null || srcScheme == "file"
-        val linked = local && {
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(target.toUri.getPath),
-              java.nio.file.Paths.get(src.toUri.getPath))
-            true
-          } catch {
-            case _: UnsupportedOperationException | _: SecurityException => false
-            case _: java.nio.file.FileSystemException => false
-          }
-        }
-        if (!linked)
-          org.apache.hadoop.fs.FileUtil.copy(
-            src.getFileSystem(conf), src, fs, target, false, conf)
-      }
+      if (!fs.exists(target)) LocalFs.linkOrCopy(src, target, conf)
     }
   }
 

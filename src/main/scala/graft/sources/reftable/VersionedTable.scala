@@ -1,7 +1,7 @@
 package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Snapshot isolation for refreshable tables on plain file storage.
@@ -207,15 +207,6 @@ object VersionedTable {
     * Receives the staged dir's current path. Cleared by the spec that set
     * it. */
   @volatile private[graft] var onBeforeRebaseCommit: Option[String => Unit] = None
-
-  private def fc(conf: Configuration): FileContext = FileContext.getFileContext(conf)
-
-  /** rename-into-fresh-name, NIO on the local scheme (the FileContext
-    * local rename forks subprocesses — see [[LocalFs]]).
-    */
-  private def renameNoReplace(src: Path, dst: Path, conf: Configuration): Unit =
-    if (LocalFs.isLocal(src)) LocalFs.moveNoReplace(src, dst)
-    else fc(conf).rename(src, dst)
 
   /** The current version directory of `root`, if it is a versioned table
     * root: the max committed sequence when the commit log exists (one
@@ -580,21 +571,7 @@ object VersionedTable {
       if (partitionColumns.nonEmpty) fs.mkdirs(dir)
       val name = f"c$i%05d-${src.getName}"
       val dst = new Path(dir, name)
-      val srcScheme = src.toUri.getScheme
-      val local = srcScheme == null || srcScheme == "file"
-      val linked = local && {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(dst.toUri.getPath),
-            java.nio.file.Paths.get(src.toUri.getPath))
-          true
-        } catch {
-          case _: UnsupportedOperationException | _: SecurityException => false
-        }
-      }
-      if (!linked)
-        org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(conf), src, fs, dst, false, conf)
+      LocalFs.linkOrCopy(src, dst, conf)
       (f, (partSegs :+ name).mkString("/"))
     }
   }
@@ -818,7 +795,7 @@ object VersionedTable {
       // local scheme: rename(2) via NIO — the FileContext local rename
       // forks subprocesses (~28 ms/call without native libhadoop, see
       // LocalFs); the uuid-suffixed destination cannot pre-exist
-      renameNoReplace(staging, new Path(rootPath, name), conf)
+      LocalFs.renameNoReplace(staging, new Path(rootPath, name), conf)
     }
     onBeforeClaim.foreach(_(root))
     // the commit claim makes the version visible (and is the CAS for
@@ -827,14 +804,16 @@ object VersionedTable {
     // RebaseSpec, a lost claim first tries a COMMIT REBASE: if every
     // intervening commit's delta is disjoint from this publish's
     // read/write set, the staged dir re-points at the new head and
-    // re-claims — the derivation job is never re-run.
+    // re-claims — the derivation job is never re-run. The rebase re-stamps
+    // the staged dir by a directory rename, so only rename-capable stores
+    // attempt it; conditional stores re-derive.
     val commit =
       try commitVersion(root, name, marker, parent,
         if (requireBase) Some(parent) else None, conf)
       catch {
         case e: CommitConflictException =>
           (rebase, parent) match {
-            case (Some(spec), Some(base)) =>
+            case (Some(spec), Some(base)) if prim.atomicDirRename =>
               tryRebase(root, name, base, marker, spec, conf) match {
                 case Some(c) =>
                   rebasedCommits.incrementAndGet()
@@ -995,7 +974,7 @@ object VersionedTable {
         val freshNum = math.max(System.currentTimeMillis(),
           math.max(versionNum(head.version), versionNum(name)) + 1)
         val freshName = f"v$freshNum%019d" + "_" + java.util.UUID.randomUUID().toString.take(8)
-        renameNoReplace(new Path(rootPath, name), new Path(rootPath, freshName), conf)
+        LocalFs.renameNoReplace(new Path(rootPath, name), new Path(rootPath, freshName), conf)
         name = freshName
         onBeforeRebaseCommit.foreach(_(new Path(rootPath, name).toString))
         // backstop: a sweep that raced the pre-rename window leaves a
@@ -1928,7 +1907,7 @@ object VersionedTable {
       java.util.UUID.randomUUID().toString.take(8)
     val versionDir = new Path(rootPath, name)
     fs.mkdirs(versionDir)
-    entries.foreach(e => renameNoReplace(e, new Path(versionDir, e.getName), conf))
+    entries.foreach(e => LocalFs.renameNoReplace(e, new Path(versionDir, e.getName), conf))
     // ONE final physical walk, materialized: the adopted version carries a
     // file manifest (and skipping stats), so every later resolution —
     // batch scans and each streaming refresh — is a single manifest read,

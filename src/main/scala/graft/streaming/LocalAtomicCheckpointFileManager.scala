@@ -1,11 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, StandardOpenOption}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FSDataOutputStream, Path, PathFilter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+
+import graft.sources.reftable.LocalFs
 
 /** Spark's default streaming [[CheckpointFileManager]] drives every
   * checkpoint file — offset log, commit log, and EVERY state-store delta/
@@ -41,54 +43,37 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCh
 class LocalAtomicCheckpointFileManager(path: Path, conf: Configuration)
     extends FileContextBasedCheckpointFileManager(path, conf) {
 
-  private val local: Boolean = {
-    val s = path.toUri.getScheme
-    s == null || s == "file"
-  }
-
-  private def nio(p: Path): java.nio.file.Path =
-    java.nio.file.Paths.get(Option(p.toUri.getPath).getOrElse(p.toString))
+  private val local: Boolean = LocalFs.isLocal(path)
 
   override def createTempFile(tmp: Path): FSDataOutputStream = {
     if (!local) return super.createTempFile(tmp)
-    val t = nio(tmp)
-    val parent = t.getParent
-    if (parent != null && !Files.exists(parent)) Files.createDirectories(parent)
+    val t = LocalFs.nio(tmp)
+    LocalFs.ensureParent(t)
     new FSDataOutputStream(
       Files.newOutputStream(t, StandardOpenOption.CREATE,
         StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE), null)
   }
 
-  override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit = {
-    if (!local) return super.renameTempFile(src, dst, overwriteIfPossible)
-    val s = nio(src)
-    val d = nio(dst)
-    if (overwriteIfPossible) {
-      Files.move(s, d, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      // ATOMIC_MOVE alone maps to rename(2), which silently REPLACES —
-      // the existence check must be explicit. Same contract as
-      // fc.rename(NONE) on local (check-then-act there too): surface the
-      // loss as Hadoop's exception type, which Spark's checkpoint streams
-      // catch to detect a concurrent batch writer without clobbering it
-      if (Files.exists(d))
-        throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-          s"rename destination $dst already exists")
-      Files.move(s, d, StandardCopyOption.ATOMIC_MOVE)
-    }
-    ()
-  }
+  /** `moveNoReplace` surfaces a loss as Hadoop's
+    * `FileAlreadyExistsException`, exactly like `fc.rename(NONE)` — the
+    * type Spark's checkpoint streams catch to detect a concurrent batch
+    * writer without clobbering it.
+    */
+  override def renameTempFile(src: Path, dst: Path, overwriteIfPossible: Boolean): Unit =
+    if (!local) super.renameTempFile(src, dst, overwriteIfPossible)
+    else if (overwriteIfPossible) LocalFs.moveReplace(src, dst)
+    else LocalFs.moveNoReplace(src, dst)
 
   override def exists(p: Path): Boolean =
-    if (!local) super.exists(p) else Files.exists(nio(p))
+    if (!local) super.exists(p) else Files.exists(LocalFs.nio(p))
 
   override def mkdirs(p: Path): Unit =
-    if (!local) super.mkdirs(p) else { Files.createDirectories(nio(p)); () }
+    if (!local) super.mkdirs(p) else { Files.createDirectories(LocalFs.nio(p)); () }
 
   override def delete(p: Path): Unit =
     if (!local) super.delete(p)
     else {
-      val root = nio(p)
+      val root = LocalFs.nio(p)
       if (Files.exists(root)) {
         import scala.jdk.CollectionConverters._
         val all = Files.walk(root)
@@ -100,7 +85,7 @@ class LocalAtomicCheckpointFileManager(path: Path, conf: Configuration)
 
   override def list(p: Path, filter: PathFilter): Array[FileStatus] = {
     if (!local) return super.list(p, filter)
-    val dir = nio(p)
+    val dir = LocalFs.nio(p)
     if (!Files.isDirectory(dir)) {
       // single file, or missing: match the FileContext behavior (a missing
       // path surfaces as FileNotFoundException from listStatus)

@@ -127,4 +127,27 @@ class LocalFsFastPathSpec extends AnyFunSuite {
     mgr.delete(new Path(d.resolve("offsets").toString))
     assert(!mgr.exists(new Path(d.resolve("offsets").toString)))
   }
+
+  test("linkOrCopy hard-links on one device and copies across devices") {
+    val d = tmpDir()
+    val conf = new Configuration()
+    Files.write(d.resolve("src"), "bytes".getBytes)
+    LocalFs.linkOrCopy(new Path(d.resolve("src").toString),
+      new Path(d.resolve("same").toString), conf)
+    assert(Files.isSameFile(d.resolve("src"), d.resolve("same")))
+    val shm = Paths.get("/dev/shm")
+    assume(Files.isDirectory(shm) && Files.isWritable(shm) &&
+      Files.getFileStore(shm) != Files.getFileStore(d),
+      "needs a writable /dev/shm on a different filesystem than the temp dir")
+    val other = Files.createTempDirectory(shm, "graft_localfs_xdev_")
+    try {
+      LocalFs.linkOrCopy(new Path(d.resolve("src").toString),
+        new Path(other.resolve("copy").toString), conf)
+      assert(new String(Files.readAllBytes(other.resolve("copy"))) == "bytes")
+      assert(!Files.isSameFile(d.resolve("src"), other.resolve("copy")))
+    } finally {
+      Files.list(other).forEach(f => Files.delete(f))
+      Files.delete(other)
+    }
+  }
 }

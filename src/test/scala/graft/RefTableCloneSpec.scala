@@ -250,4 +250,32 @@ class RefTableCloneSpec extends AnyFunSuite {
     val b = readCurrent(dst).orderBy("id").collect()
     assert(a.sameElements(b))
   }
+
+  test("clone and promote across devices fall back to a copy and read back equal") {
+    import spark.implicits._
+    val shm = Paths.get("/dev/shm")
+    val src = tmpDir("xdev_src")
+    assume(Files.isDirectory(shm) && Files.isWritable(shm) &&
+      Files.getFileStore(shm) != Files.getFileStore(Paths.get(src)),
+      "needs a writable /dev/shm on a different filesystem than the temp dir")
+    val dst = Files.createTempDirectory(shm, "graft_clone_xdev_dst").toString
+    try {
+      val df = (0 until 2000).map(i => (i.toLong, i * 0.5)).toDF("id", "v")
+      VersionedTable.publishClustered(df, src, Seq("id"), numFiles = 4)
+      VersionedTable.cloneTo(src, dst)
+      assert(readCurrent(src).orderBy("id").collect()
+        .sameElements(readCurrent(dst).orderBy("id").collect()))
+      // the other direction: promote the audited clone back onto the source
+      RefTableMutations.deleteWhere(spark, dst, col("id") >= 1500L)
+      VersionedTable.promote(dst, src)
+      assert(readCurrent(src).orderBy("id").collect()
+        .sameElements(readCurrent(dst).orderBy("id").collect()))
+      assert(readCurrent(src).count() == 1500L)
+    } finally {
+      import scala.jdk.CollectionConverters._
+      val all = Files.walk(Paths.get(dst))
+      try all.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+      finally all.close()
+    }
+  }
 }

@@ -187,4 +187,48 @@ class RefTableObjectStoreSpec extends AnyFunSuite {
     assert(readIds(root) == Seq(1L, 2L, 3L), "replayed epoch must not duplicate")
     assert(VersionedTable.commitLog(root, conf).size == logBefore)
   }
+
+  test("a file: path selects the rename primitive even if listed as conditional") {
+    val c = new Configuration(conf)
+    c.set(CommitPrimitive.ExtraSchemesKey, "noren,file")
+    assert(CommitPrimitive.forPath(new Path("/tmp/x"), c) == RenameCommit)
+    assert(CommitPrimitive.forPath(new Path("file:/tmp/x"), c) == RenameCommit)
+    assert(CommitPrimitive.forPath(new Path("noren:///tmp/x"), c) == ConditionalCommit)
+  }
+
+  test("ALTER TABLE on a no-rename warehouse: ADD COLUMNS and SET TBLPROPERTIES") {
+    val cat = "gcat_noren_alter"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[RefTableCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", tmpRoot("wh"))
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, name STRING) USING reftable")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 'a')")
+    spark.sql(s"ALTER TABLE $cat.db.t ADD COLUMNS (score DOUBLE)")
+    spark.sql(s"ALTER TABLE $cat.db.t SET TBLPROPERTIES ('option.keepVersions' = '7')")
+    spark.sql(s"INSERT INTO $cat.db.t VALUES (2, 'b', 0.5)")
+    val rows = spark.table(s"$cat.db.t").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)))).toSeq
+    assert(rows == Seq((1L, "a", None), (2L, "b", Some(0.5))))
+    val props = spark.sql(s"SHOW TBLPROPERTIES $cat.db.t").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("option.keepVersions").contains("7"), s"props: $props")
+  }
+
+  test("a lost CAS with a RebaseSpec re-derives on a no-rename store (no rebase attempted)") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val root = tmpRoot("rederive")
+    VersionedTable.publish((1L to 10L).map(i => (i, s"n$i")).toDF("id", "name")
+      .repartitionByRange(2, col("id")), root)
+    val r0 = VersionedTable.rebasedCommits.get
+    VersionedTable.onBeforeClaim = Some { _ =>
+      VersionedTable.onBeforeClaim = None
+      append(root, Seq((20L, "t")))
+    }
+    try RefTableMutations.deleteWhere(spark, root, col("id") === 5L)
+    finally VersionedTable.onBeforeClaim = None
+    assert(VersionedTable.rebasedCommits.get == r0)
+    assert(readIds(root) == ((1L to 10L).filterNot(_ == 5L) :+ 20L))
+    assert(VersionedTable.commitLog(root, conf).size == 3)
+  }
 }
