@@ -1024,7 +1024,7 @@ object Profiling {
       spark: org.apache.spark.sql.SparkSession, root: String,
       version: Option[String] = None): DataFrame = {
     import graft.sources.reftable.{RefTableStats, SnapshotFiles}
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = graft.sources.reftable.HadoopConf()
     val dir = SnapshotFiles.resolveDir(root, version, conf)
     val manifest = RefTableStats.load(dir, conf).getOrElse(
       throw new IllegalArgumentException(

@@ -141,7 +141,7 @@ object DedupOps {
       import org.apache.spark.sql.util.CaseInsensitiveStringMap
       import scala.jdk.CollectionConverters._
       val base = RelationalSupport.scratchDir(s, dir, "q208_adm")
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.reftable.HadoopConf()
       val hfs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
       hfs.delete(new org.apache.hadoop.fs.Path(base), true)
       val (stagingRoot, corpusRoot, landing) =

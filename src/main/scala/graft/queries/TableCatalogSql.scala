@@ -466,7 +466,7 @@ object TableCatalogSql {
       // deterministic under bench re-runs: fresh landing zone + table
       val landing = s"$wh/landing"
       val fs = new org.apache.hadoop.fs.Path(landing)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(graft.sources.reftable.HadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(landing), true)
       s.sql(s"CREATE TABLE $cat.db.o " +
         "(o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT) USING reftable")
@@ -499,7 +499,7 @@ object TableCatalogSql {
       import org.apache.spark.sql.util.CaseInsensitiveStringMap
       import scala.jdk.CollectionConverters._
       val base = RelationalSupport.scratchDir(s, dir, "q198_ing")
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.reftable.HadoopConf()
       val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(base), true) // fresh zone + table
       val root = s"$base/t"
@@ -564,7 +564,7 @@ object TableCatalogSql {
     QueryDef("q199_branch_ff", (s, dir) => {
       import graft.sources.reftable.{RefTableMutations, VersionedTable}
       val base = RelationalSupport.scratchDir(s, dir, "q199_br")
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.reftable.HadoopConf()
       val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val root = s"$base/t"
@@ -603,7 +603,7 @@ object TableCatalogSql {
     QueryDef("q204_branch_rebase", (s, dir) => {
       import graft.sources.reftable.{RefTableMutations, VersionedTable}
       val base = RelationalSupport.scratchDir(s, dir, "q204_rb")
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.reftable.HadoopConf()
       val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
       fs.delete(new org.apache.hadoop.fs.Path(base), true)
       val root = s"$base/t"
@@ -896,7 +896,7 @@ object TableCatalogSql {
       // fresh root per invocation tag, but bench re-runs reuse it: reset by
       // deleting and republishing so version count stays deterministic
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(graft.sources.reftable.HadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       VersionedTable.publish(nation.repartition(2), root)
       VersionedTable.publish(nation.filter(col("n_regionkey") < 2).repartition(1), root)
@@ -977,7 +977,7 @@ object TableCatalogSql {
       // commit round-trips — an honest mutation-throughput figure — while
       // the warm pass measures what actually needs regression-tracking at
       // scale, resolving READS through the deep manifest chain
-      val conf = new org.apache.hadoop.conf.Configuration()
+      val conf = graft.sources.reftable.HadoopConf()
       val log = if (VersionedTable.resolve(root, conf).isEmpty) Nil
         else VersionedTable.commitLog(root, conf)
       var vMid: String = if (log.size >= 41) log(20).version else null

@@ -138,7 +138,7 @@ object TableMutations {
       import graft.sources.reftable.VersionedTable
       val root = RelationalSupport.scratchDir(s, dir, "q110_compact")
       val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .getFileSystem(graft.sources.reftable.HadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(root), true)
       VersionedTable.publish(
         Tables.load(s, dir, "supplier")

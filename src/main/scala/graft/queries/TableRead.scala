@@ -350,7 +350,7 @@ object TableRead {
         t(s, dir, "documents").select("doc_id", "lang", "text"),
         root, Seq("lang"), numFiles = 4)
       val resolved = graft.sources.reftable.SnapshotFiles.resolveDir(
-        root, None, new org.apache.hadoop.conf.Configuration())
+        root, None, graft.sources.reftable.HadoopConf())
       graft.sources.reftable.RefTableStats.augmentCategorical(s, resolved, Seq("lang"))
       s.read.format("reftable")
         .option("path", root)

@@ -4,14 +4,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Aggregate pushdown: COUNT / MIN / MAX answered from parquet footer
   * statistics, never touching a data page — the metadata-only fast path
@@ -234,14 +235,17 @@ class RefTableAggScan(opts: RefTableOptions, pushed: RefTableAggregates.PushedAg
         .toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      new RefTableAggReaderFactory(opts, pushed)
+      new RefTableAggReaderFactory(opts, pushed, HadoopConf.broadcast(SparkSession.active))
   }
 }
 
-class RefTableAggReaderFactory(opts: RefTableOptions, pushed: RefTableAggregates.PushedAgg)
+class RefTableAggReaderFactory(
+    opts: RefTableOptions, pushed: RefTableAggregates.PushedAgg,
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new RefTableAggFooterReader(opts, pushed, partition.asInstanceOf[RefTableInputPartition])
+    new RefTableAggFooterReader(opts, pushed, partition.asInstanceOf[RefTableInputPartition],
+      HadoopConf.copyOf(conf))
 }
 
 /** Reads ONLY the footer of its file and emits one partial-aggregate row
@@ -249,7 +253,7 @@ class RefTableAggReaderFactory(opts: RefTableOptions, pushed: RefTableAggregates
   */
 class RefTableAggFooterReader(
     opts: RefTableOptions, pushed: RefTableAggregates.PushedAgg,
-    partition: RefTableInputPartition)
+    partition: RefTableInputPartition, conf: Configuration)
     extends PartitionReader[InternalRow] {
   import RefTableAggregates._
 
@@ -258,8 +262,7 @@ class RefTableAggFooterReader(
   private var emitted = false
 
   private lazy val row: InternalRow = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(partition.path), new Configuration()))
+    val reader = HadoopConf.openParquet(new Path(partition.path), conf)
     try {
       val footerSchema = reader.getFooter.getFileMetaData.getSchema
       val blocks = reader.getFooter.getBlocks.asScala.toSeq

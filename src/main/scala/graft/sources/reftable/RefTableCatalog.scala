@@ -5,7 +5,6 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -42,7 +41,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     with StagingTableCatalog {
   private var catalogName: String = _
   private var warehouse: String = _
-  private val conf = new Configuration()
+  private def conf = HadoopConf()
 
   override def name(): String = catalogName
 

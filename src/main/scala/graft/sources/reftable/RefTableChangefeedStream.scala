@@ -2,7 +2,6 @@ package graft.sources.reftable
 
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
@@ -87,7 +86,7 @@ class RefTableChangefeedStream(
       m
     }
 
-  private val conf = new Configuration()
+  private val conf = HadoopConf()
   private var last: RefTableOffset = _
   private var availableNowGen: Option[Long] = None
   private val pins = scala.collection.mutable.Map.empty[Long, String]
@@ -239,8 +238,10 @@ class RefTableChangefeedStream(
     version = None, filterSql = None,
     changefeed = false, keyColumns = Nil)
 
+  private val taskConf = new HadoopConf.PerStream
+
   override def createReaderFactory(): PartitionReaderFactory =
-    new RefTableReaderFactory(scanOpts, required, Array.empty)
+    new RefTableReaderFactory(scanOpts, required, Array.empty, None, taskConf.get())
 
   override def deserializeOffset(json: String): Offset = {
     val o = RefTableOffset.fromJson(json)
@@ -271,5 +272,5 @@ class RefTableChangefeedStream(
     }
   }
 
-  override def stop(): Unit = synchronized { pins.clear() }
+  override def stop(): Unit = synchronized { pins.clear(); taskConf.release() }
 }

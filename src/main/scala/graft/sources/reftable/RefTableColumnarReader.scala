@@ -6,8 +6,7 @@ import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.{MessageType, Type}
@@ -82,7 +81,7 @@ object RefTableColumnarReader {
       path: Path, fileLength: Long, conf: Configuration): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     if (footerCache.size > 4096) footerCache.clear()
     footerCache.computeIfAbsent(s"$path#$fileLength", { _ =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+      val r = HadoopConf.openParquet(path, conf)
       try r.getFooter
       finally r.close()
     })
@@ -247,13 +246,12 @@ class RefTableColumnarReader(
     required: StructType,
     pushed: Array[Filter],
     partition: RefTableInputPartition,
-    limit: Option[Int] = None)
+    limit: Option[Int] = None,
+    conf: Configuration = HadoopConf())
     extends PartitionReader[ColumnarBatch] {
 
   // pushed LIMIT: rows still wanted from this partition
   private var remaining: Int = limit.getOrElse(Int.MaxValue)
-
-  private val conf = new Configuration()
   private val hadoopPath = new Path(partition.path)
 
   private val fileMeta = RefTableColumnarReader.fileMetaOf(hadoopPath, partition.fileLength, conf)

@@ -55,7 +55,7 @@ object DeletionVectors {
   /** The DV sidecar parquet files of a resolved version directory
     * (empty when the version has none).
     */
-  def sidecars(versionDir: String, conf: Configuration = new Configuration()): Seq[Path] = {
+  def sidecars(versionDir: String, conf: Configuration = HadoopConf()): Seq[Path] = {
     val d = new Path(versionDir, DvDir)
     val fs = d.getFileSystem(conf)
     if (!fs.exists(d)) Nil
@@ -64,7 +64,7 @@ object DeletionVectors {
       .map(_.getPath).sortBy(_.toString)
   }
 
-  def hasDv(versionDir: String, conf: Configuration = new Configuration()): Boolean =
+  def hasDv(versionDir: String, conf: Configuration = HadoopConf()): Boolean =
     sidecars(versionDir, conf).nonEmpty
 
   /** Driver-side load of a version's deleted positions, grouped by the
@@ -73,7 +73,7 @@ object DeletionVectors {
     * memory, the documented pin-time cost above.
     */
   def positionsByFile(
-      versionDir: String, conf: Configuration = new Configuration()): Map[String, Seq[Long]] = {
+      versionDir: String, conf: Configuration = HadoopConf()): Map[String, Seq[Long]] = {
     val out = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.TreeSet[Long]]
     sidecars(versionDir, conf).foreach { p =>
       val reader = ParquetReader.builder(new GroupReadSupport(), p).withConf(conf).build()
@@ -98,7 +98,7 @@ object DeletionVectors {
     * a concurrently-DV'd file must not be rewritten from its pre-DV image.
     */
   def referencedFiles(versionDir: String, excludeNames: Set[String],
-      conf: Configuration = new Configuration()): Set[String] = {
+      conf: Configuration = HadoopConf()): Set[String] = {
     val out = scala.collection.mutable.HashSet.empty[String]
     sidecars(versionDir, conf).filterNot(p => excludeNames.contains(p.getName)).foreach { p =>
       val reader = ParquetReader.builder(new GroupReadSupport(), p).withConf(conf).build()

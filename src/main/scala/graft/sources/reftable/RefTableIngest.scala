@@ -136,7 +136,7 @@ object RefTableIngest {
     require(Set("parquet", "orc", "json", "csv").contains(format),
       s"ingest: unsupported format '$format' (parquet, orc, json, csv)")
     require(maxFilesPerCall.forall(_ > 0), "ingest: maxFilesPerCall must be positive")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val srcPath = new Path(source)
     val fs = srcPath.getFileSystem(conf)
     require(fs.exists(srcPath) && fs.getFileStatus(srcPath).isDirectory,

@@ -105,7 +105,7 @@ object RefTableMaintenance {
   /** Read the decision inputs from storage — commit log, current listing,
     * stats manifest, `_BUCKETS.json` — no data pages.
     */
-  def signals(root: String, conf: Configuration = new Configuration()): Signals = {
+  def signals(root: String, conf: Configuration = HadoopConf()): Signals = {
     val dir = VersionedTable.resolve(root, conf).getOrElse(
       throw new IllegalArgumentException(s"$root is not a versioned table root"))
     val version = new Path(dir).getName
@@ -190,7 +190,7 @@ object RefTableMaintenance {
       maxReadAmp: Double = 1.5,
       keepVersions: Int = 3,
       partitionColumns: Seq[String] = Nil): Decision = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val s = signals(root, conf)
     val d = decide(s, targetFileBytes, maxSmallFiles, maxReadAmp)
     d.action match {

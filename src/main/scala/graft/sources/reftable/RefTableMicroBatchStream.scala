@@ -51,8 +51,8 @@ object SnapshotFiles {
       case None => VersionedTable.resolveRobust(dir, conf).getOrElse(dir)
     }
 
-  def list(dir: String, partitionColumns: Seq[String], version: Option[String]): Seq[SnapshotFile] = {
-    val conf = new Configuration()
+  def list(dir: String, partitionColumns: Seq[String], version: Option[String],
+      conf: Configuration = HadoopConf()): Seq[SnapshotFile] = {
     val resolved = resolveDir(dir, version, conf)
     // a manifest-referenced version (mutation output) NAMES its files —
     // possibly hosted in other version dirs — instead of containing them.
@@ -73,13 +73,13 @@ object SnapshotFiles {
         }
       // a version dir (manifest-less legacy version): walk unbounded — the
       // dir is immutable, so the cost is per-version, not per-refresh
-      return listPhysical(resolved, partitionColumns)
+      return listPhysical(resolved, partitionColumns, conf = conf)
     }
     // BARE root: every streaming refresh re-walks the whole layout on the
     // driver, so a many-partition bare dir is a standing per-refresh stall
     // — refuse past the limit and name the remedy (adopt migrates the
     // layout into a versioned root whose manifest lists in one read)
-    listPhysical(resolved, partitionColumns, bareDirLimit = Some(bareHiveDirLimit))
+    listPhysical(resolved, partitionColumns, bareDirLimit = Some(bareHiveDirLimit), conf = conf)
   }
 
   /** Max partition directories a BARE (un-adopted) Hive layout may hold
@@ -97,8 +97,7 @@ object SnapshotFiles {
     * roots (see [[list]]): exceeded → refuse with the adopt remedy.
     */
   def listPhysical(resolved: String, partitionColumns: Seq[String],
-      bareDirLimit: Option[Int] = None): Seq[SnapshotFile] = {
-    val conf = new Configuration()
+      bareDirLimit: Option[Int] = None, conf: Configuration = HadoopConf()): Seq[SnapshotFile] = {
     val p = new Path(resolved)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) throw new IllegalArgumentException(s"reftable path does not exist: $resolved")
@@ -168,25 +167,31 @@ object SnapshotFiles {
     * the manifest are guaranteed to come from the same snapshot.
     */
   def pruned(opts: RefTableOptions, filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[SnapshotFile] =
-    prunedCounted(opts, filters)._2
+    listing(opts, filters).files
 
-  /** [[pruned]] plus the PRE-pruning listing size, for the scan's
-    * filesListed/filesPruned metrics — one resolve and one listing, shared.
+  /** A scan's pinned snapshot: the version dir it resolved, the
+    * PRE-pruning file count (the scan's filesListed/filesPruned metrics)
+    * and the files that survived pruning.
     */
-  def prunedCounted(opts: RefTableOptions,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): (Long, Seq[SnapshotFile]) = {
-    val conf = new Configuration()
+  final case class Listing(resolved: String, listed: Long, files: Seq[SnapshotFile])
+
+  /** [[pruned]] with its resolved dir and pre-pruning size — one resolve,
+    * one listing and one Hadoop conf, shared.
+    */
+  def listing(opts: RefTableOptions,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Listing = {
+    val conf = HadoopConf()
     val resolved = resolveDir(opts.path, opts.version, conf)
     // physicalNesting: hidden partition transforms nest the layout under
     // derived dirs (ts_day=...) that are NOT schema fields — the walk and
     // the manifest pv keys use the dir names, pruning maps source-column
     // predicates onto them (RefTablePartitioning + RefTableTransforms)
-    val listed = list(resolved, opts.physicalNesting, None)
+    val listed = list(resolved, opts.physicalNesting, None, conf)
     val kept = RefTableStats.prune(
       resolved,
       RefTablePartitioning.prune(listed, opts, filters),
       opts, filters, conf)
-    (listed.size.toLong, kept)
+    Listing(resolved, listed.size.toLong, kept)
   }
 }
 
@@ -280,7 +285,7 @@ class RefTableMicroBatchStream(
       Option(latestConsumedOffset.orElse(null)).foreach { o =>
         val off = RefTableOffset.fromJson(o.json())
         m.put("generation", off.gen.toString)
-        snapshots.get(off.gen).foreach { fs =>
+        snapshots.get(off.gen).map(_.files).foreach { fs =>
           m.put("snapshotFiles", fs.size.toString)
           m.put("snapshotBytes", fs.map(_.length).sum.toString)
           m.put("filesEmitted",
@@ -292,7 +297,7 @@ class RefTableMicroBatchStream(
 
   private var last: RefTableOffset = _
   private var availableNowGen: Option[Long] = None
-  private val snapshots = scala.collection.mutable.Map.empty[Long, Seq[SnapshotFile]]
+  private val snapshots = scala.collection.mutable.Map.empty[Long, SnapshotFiles.Listing]
   // generations whose listing THIS instance pinned at emission time.
   // `snapshots.contains` is NOT that: replay of an uncommitted batch
   // (planInputPartitions) and prepareForTriggerAvailableNow both pin
@@ -304,11 +309,33 @@ class RefTableMicroBatchStream(
   private def computeGen(nowMs: Long): Long =
     if (opts.refreshMs <= 0) 0L else nowMs / opts.refreshMs
 
-  private def filesOf(gen: Long): Seq[SnapshotFile] =
-    // partition pruning happens at pinning time: a generation of a
-    // partitioned table under a partition filter IS the pruned listing
-    // (offsets and admission-control slices count pruned files only)
-    snapshots.getOrElseUpdate(gen, SnapshotFiles.pruned(opts, pushed.toSeq))
+  private def pin(): SnapshotFiles.Listing = SnapshotFiles.listing(opts, pushed.toSeq)
+
+  // partition pruning happens at pinning time: a generation of a
+  // partitioned table under a partition filter IS the pruned listing
+  // (offsets and admission-control slices count pruned files only)
+  private def pinnedOf(gen: Long): SnapshotFiles.Listing = snapshots.getOrElseUpdate(gen, pin())
+
+  private def filesOf(gen: Long): Seq[SnapshotFile] = pinnedOf(gen).files
+
+  // optimizer statistics of the newest pinned generation, built once per
+  // generation (trigger-mode re-emissions and chunks reuse them)
+  private var pinnedStats: Option[(Long, RefTableStatistics)] = None
+
+  /** Statistics of the generation the batch being planned reads: the
+    * listing pinned in [[latestOffset]], not the table as it is now (a
+    * version published mid-generation is not what this batch scans).
+    * None before the first pin.
+    */
+  def statistics(): Option[RefTableStatistics] = synchronized {
+    for (l <- Option(last); listing <- snapshots.get(l.gen)) yield {
+      if (!pinnedStats.exists(_._1 == l.gen))
+        pinnedStats = Some(l.gen -> new RefTableStatistics(opts, required, listing))
+      pinnedStats.get._2
+    }
+  }
+
+  private val taskConf = new HadoopConf.PerStream
 
   override def initialOffset(): Offset = RefTableOffset(-1L, -1L, -1L)
 
@@ -376,11 +403,11 @@ class RefTableMicroBatchStream(
         // monotonicity), so the offset records the true wall-clock
         // generation separately — the next real refresh boundary is
         // detected against `wall`, not `gen`.
-        val files = snapshots(prev.gen)
+        val pinned = snapshots(prev.gen)
         val wallNow = computeGen(System.currentTimeMillis())
         val gen = math.max(wallNow, prev.gen + 1)
-        snapshots(gen) = files
-        RefTableOffset(prev.batch + 1, gen, sliceEnd(files, 0, limit), wallNow)
+        snapshots(gen) = pinned
+        RefTableOffset(prev.batch + 1, gen, sliceEnd(pinned.files, 0, limit), wallNow)
       } else {
         val wallNow = availableNowGen.getOrElse(computeGen(System.currentTimeMillis()))
         if (prev.gen < 0 || wallNow > prev.wallGen) {
@@ -392,12 +419,12 @@ class RefTableMicroBatchStream(
           // stale listing forever); AvailableNow uses the listing pinned
           // at prepare time.
           val gen = math.max(wallNow, prev.gen + 1)
-          val files = availableNowGen match {
-            case Some(g) => filesOf(g)
-            case None => SnapshotFiles.pruned(opts, pushed.toSeq)
+          val pinned = availableNowGen match {
+            case Some(g) => pinnedOf(g)
+            case None => pin()
           }
-          snapshots(gen) = files
-          RefTableOffset(prev.batch + 1, gen, sliceEnd(files, 0, limit), wallNow)
+          snapshots(gen) = pinned
+          RefTableOffset(prev.batch + 1, gen, sliceEnd(pinned.files, 0, limit), wallNow)
         } else if (opts.emitPerTrigger && availableNowGen.isEmpty)
           // trigger-mode re-emission honors the admission caps too: a cycle
           // of chunked batches re-covers the snapshot, then restarts
@@ -428,7 +455,7 @@ class RefTableMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new RefTableReaderFactory(opts, required, pushed)
+    new RefTableReaderFactory(opts, required, pushed, None, taskConf.get())
 
   override def deserializeOffset(json: String): Offset = {
     val o = RefTableOffset.fromJson(json)
@@ -442,5 +469,10 @@ class RefTableMicroBatchStream(
     ownGens.filter(_ < e.gen).toList.foreach(ownGens.remove)
   }
 
-  override def stop(): Unit = synchronized { snapshots.clear(); ownGens.clear() }
+  override def stop(): Unit = synchronized {
+    snapshots.clear()
+    ownGens.clear()
+    pinnedStats = None
+    taskConf.release()
+  }
 }

@@ -149,7 +149,7 @@ object RefTableMutations {
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
       partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): String =
     VersionedTable.withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     // mergeSchema: an adopted version (or one assembled by earlier
@@ -204,7 +204,7 @@ object RefTableMutations {
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
       partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): String =
     VersionedTable.withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
@@ -271,7 +271,7 @@ object RefTableMutations {
       gate: Option[RefTableOptions] = None): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     // mergeSchema: see deleteWhere — never let a sampled schema narrow
@@ -379,7 +379,7 @@ object RefTableMutations {
       gate: Option[RefTableOptions]): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(keyCols.nonEmpty, "upsertMergeOnRead needs at least one key column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     // streaming exactly-once: base pinned (resolveLayout) BEFORE the marker
     // check, publish CAS requires that base — the same unsplittable
@@ -497,7 +497,7 @@ object RefTableMutations {
     // full-row sugar over mergeClauses: update/insert take the source's
     // same-named columns (source extras like an op marker are ignored; a
     // row-producing clause still demands the full table row)
-    val conf0 = new Configuration()
+    val conf0 = HadoopConf()
     val cur0 = resolveLayout(root, conf0, partitionColumns)
     val tableCols = readAll(spark, root, cur0, listLayout(cur0, partitionColumns),
       partitionColumns, partitionTypes).schema.fieldNames.toSeq
@@ -668,7 +668,7 @@ object RefTableMutations {
       nmbsUpdateFirst: Boolean = false): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
@@ -816,7 +816,7 @@ object RefTableMutations {
       nmbsUpdateFirst: Boolean = false): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
@@ -966,7 +966,7 @@ object RefTableMutations {
       gate: Option[RefTableOptions] = None): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
@@ -1023,7 +1023,7 @@ object RefTableMutations {
       gate: Option[RefTableOptions] = None): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(set.nonEmpty, "updateWhereMergeOnRead needs at least one SET column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
@@ -1118,7 +1118,7 @@ object RefTableMutations {
     val missing = partitionColumns.filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"overwrite source is missing partition column(s): ${missing.mkString(", ")}")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     // dynamic overwrite REPLACES every row of the touched partitions — a
@@ -1243,7 +1243,7 @@ object RefTableMutations {
     require(changes.columns.contains("change_type"),
       "changefeed must carry change_type (insert|delete|update) — see SnapshotDiff.diff")
     require(keyCols.nonEmpty, "applyChangesMergeOnRead needs at least one key column")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolveLayout(root, conf, partitionColumns)
     val files = listLayout(current, partitionColumns)
     val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
@@ -1425,7 +1425,7 @@ object RefTableMutations {
     if (partitionColumns.isEmpty && files.forall(_.partitionValues.isEmpty))
       return prep(
         spark.read.option("mergeSchema", "true").parquet(files.map(_.path): _*), files, spark)
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val rootPath = new Path(root)
     val qualifiedRoot = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
     def hostOf(p: String): String = {
@@ -1633,7 +1633,7 @@ object RefTableMutations {
       targetFileBytes: Long = 128L * 1024 * 1024, maxReadAmp: Double = 1.5,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil): Option[String] =
     VersionedTable.withConflictRetry(root) { () =>
-      val conf = new Configuration()
+      val conf = HadoopConf()
       val current = resolveLayout(root, conf, partitionColumns)
       val files = listLayout(current, partitionColumns)
       if (files.size < 2) return None

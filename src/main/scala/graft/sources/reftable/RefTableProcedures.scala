@@ -381,7 +381,7 @@ final class AnalyzeProcedure(resolveOpts: String => RefTableOptions)
         .isInstanceOf[org.apache.spark.sql.types.ArrayType],
         s"analyze: column '$c' is an array — NDV sketches cover atomic types")
     }
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = HadoopConf()
     val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)
     RefTableStats.augmentNdv(SparkSession.active, resolved,
       cols.map(opts.storageColumn), conf)

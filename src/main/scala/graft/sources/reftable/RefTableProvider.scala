@@ -332,9 +332,9 @@ class RefTableScanBuilder(opts: RefTableOptions)
     if (opts.changefeed) return false // batch reads are refused under changefeed
     // merge-on-read deletion vectors invalidate footer counts (and can
     // hide a deleted extremum): decline, the real scan subtracts them
-    if (DeletionVectors.hasDv(
-        SnapshotFiles.resolveDir(opts.path, opts.version, new org.apache.hadoop.conf.Configuration()),
-        new org.apache.hadoop.conf.Configuration())) return false
+    val conf = HadoopConf()
+    if (DeletionVectors.hasDv(SnapshotFiles.resolveDir(opts.path, opts.version, conf), conf))
+      return false
     RefTableAggregates.accept(opts, aggregation, sessionTz) match {
       case Some(p) => pushedAgg = Some(p); true
       case None => false
@@ -406,147 +406,20 @@ class RefTableScan(
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     driverMetrics.report
 
+  // the stream this scan planned, if it is a streaming scan: its
+  // statistics come from the listing the stream pinned
+  @volatile private var stream: Option[RefTableMicroBatchStream] = None
+
   /** Size the snapshot for the optimizer: without statistics a DSv2 relation
     * defaults to Long.MaxValue and is NEVER auto-broadcast — which would
     * defeat the source's documented purpose (a small lookup table feeding a
-    * join, docs/Table-streamingsource.md:10-14). File bytes scaled by the
-    * session compression factor, like Spark's own file sources.
+    * join, docs/Table-streamingsource.md:10-14). A batch scan sizes a fresh
+    * listing; a streaming scan sizes the generation its stream pinned (see
+    * [[RefTableMicroBatchStream.statistics]]) and lists nothing per trigger.
     */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val prunedFiles = SnapshotFiles.pruned(opts, (pushed ++ declared).toSeq)
-    private val bytes: Long = {
-      val factor =
-        try org.apache.spark.sql.SparkSession.active.conf
-          .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
-        catch { case _: Throwable => 1.0 }
-      // post-pruning size: a partition-filtered scan of a huge table is
-      // exactly the case where accurate (small) stats enable the broadcast
-      math.max(1L, (prunedFiles.map(_.length).sum * factor).toLong)
-    }
-    // exact post-pruning row count from the stats manifest (DV-masked rows
-    // subtracted) — present only when EVERY surviving file has a fresh
-    // stats entry; an upper bound under residual filters, like Spark's own
-    // file-source estimates. Feeds the CBO's join-order/build-side choices.
-    private val fileStats: Option[Seq[RefTableStats.FileStats]] =
-      try {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val resolved = SnapshotFiles.resolveDir(opts.path, opts.version, conf)
-        val stats = RefTableStats.statsForListing(resolved, prunedFiles, conf)
-        val perFile = prunedFiles.map(f => stats.get(f.path))
-        if (perFile.forall(_.isDefined)) Some(perFile.flatten) else None
-      } catch { case _: Throwable => None }
-    private val rows: java.util.OptionalLong = fileStats match {
-      case Some(fss) => java.util.OptionalLong.of(math.max(0L,
-        fss.map(_.rows).sum - prunedFiles.map(_.dvPositions.size.toLong).sum))
-      case None => java.util.OptionalLong.empty()
-    }
-    // per-column CBO statistics over the SURVIVING files: NDV from the
-    // unioned per-file HLL sketches the `ndvStats` writer option lands in
-    // the manifest (union only when every surviving file carries a sketch
-    // — a partial union would silently understate), null counts summed
-    // from the same entries. Spark's transformV2Stats turns these into
-    // catalyst ColumnStat, so equality-filter selectivity and join
-    // cardinality estimate from real NDVs at PLAN time — the broadcast
-    // build side is picked before a single task runs, no AQE re-plan.
-    // LAZY and file-count-bounded: the union heapifies one ~KB sketch per
-    // surviving file per sketched column, so it runs only when Spark
-    // actually asks for columnStats (CBO on), and a listing past the bound
-    // reports no column stats rather than megabytes of driver sketch work
-    // per plan — row/size stats keep the broadcast decision usable there
-    private lazy val colStats
-        : java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-      val m = new java.util.HashMap[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-      // keyed on what the MANIFEST carries, not on a read option: ndvStats
-      // is a writer declaration, and readers of an ndv-sketched table get
-      // the column stats with a bare path+schema
-      for (fss <- fileStats; if prunedFiles.size <= 4096; f <- required.fields) {
-        val sc = opts.storageColumn(f.name)
-        val entries = fss.map(_.cols.get(sc))
-        if (entries.nonEmpty && entries.forall(_.exists(_.hll.isDefined))) {
-          val ndvOpt = RefTableStats.ndvEstimate(entries.map(_.get.hll.get))
-          val nullsKnown = entries.forall(_.get.nulls >= 0L)
-          // per-file null counts predate deletion vectors, while numRows
-          // subtracts DV'd positions — clamp so a heavily-deleted listing
-          // can never report nullCount > rowCount (a nonsense null
-          // fraction that skews CBO selectivity)
-          val nulls = math.min(entries.map(_.get.nulls).sum,
-            rows.orElse(Long.MaxValue))
-          ndvOpt.foreach { ndv =>
-            // equi-height histogram from the surviving files' merged KLL
-            // sketches (plain-numeric ndvStats columns carry them):
-            // range-filter selectivity estimates from real value mass, not
-            // min/max uniformity — union only when EVERY surviving file
-            // carries a sketch, like the NDV rule above. The sketch's
-            // exact bounds feed min()/max() as catalyst-typed values
-            // (FilterEstimation never consults a histogram without them).
-            val histInfo: Option[RefTableStats.KllHist] =
-              if (!entries.forall(_.exists(_.kll.isDefined))) None
-              else RefTableStats.kllHistogram(entries.map(_.get.kll.get), ndv)
-            // catalyst-internal min/max values from the sketch's double
-            // form (timestamps were sketched in micros, dates in days —
-            // exactly the internal Long/Int representations)
-            def typed(v: Double): Option[Object] = f.dataType match {
-              case org.apache.spark.sql.types.IntegerType => Some(Int.box(v.toInt))
-              case org.apache.spark.sql.types.LongType => Some(Long.box(v.toLong))
-              case org.apache.spark.sql.types.ShortType => Some(Short.box(v.toShort))
-              case org.apache.spark.sql.types.ByteType => Some(Byte.box(v.toByte))
-              case org.apache.spark.sql.types.FloatType => Some(Float.box(v.toFloat))
-              case org.apache.spark.sql.types.DoubleType => Some(Double.box(v))
-              case org.apache.spark.sql.types.TimestampType => Some(Long.box(v.toLong))
-              case org.apache.spark.sql.types.DateType => Some(Int.box(v.toInt))
-              case _ => None
-            }
-            val hist: Option[org.apache.spark.sql.connector.read.colstats.Histogram] =
-              histInfo.map { kh =>
-                val binArr = kh.bins.map { case (binLo, binHi, binNdv) =>
-                  new org.apache.spark.sql.connector.read.colstats.HistogramBin {
-                    override def lo(): Double = binLo
-                    override def hi(): Double = binHi
-                    override def ndv(): Long = binNdv
-                  }
-                }.toArray
-                new org.apache.spark.sql.connector.read.colstats.Histogram {
-                  override def height(): Double = kh.height
-                  override def bins()
-                      : Array[org.apache.spark.sql.connector.read.colstats.HistogramBin] =
-                    binArr
-                }
-              }
-            val minV = histInfo.flatMap(kh => typed(kh.min))
-            val maxV = histInfo.flatMap(kh => typed(kh.max))
-            m.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
-              new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-                override def distinctCount(): java.util.OptionalLong =
-                  java.util.OptionalLong.of(ndv)
-                override def nullCount(): java.util.OptionalLong =
-                  if (nullsKnown) java.util.OptionalLong.of(nulls)
-                  else java.util.OptionalLong.empty()
-                override def min(): java.util.Optional[Object] =
-                  minV.map(java.util.Optional.of[Object](_))
-                    .getOrElse(java.util.Optional.empty())
-                override def max(): java.util.Optional[Object] =
-                  maxV.map(java.util.Optional.of[Object](_))
-                    .getOrElse(java.util.Optional.empty())
-                override def histogram(): java.util.Optional[
-                    org.apache.spark.sql.connector.read.colstats.Histogram] =
-                  hist.map(java.util.Optional.of[
-                    org.apache.spark.sql.connector.read.colstats.Histogram](_))
-                    .getOrElse(java.util.Optional.empty())
-              })
-          }
-        }
-      }
-      m
-    }
-    override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong = rows
-    override def columnStats(): java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
-  }
+  override def estimateStatistics(): Statistics =
+    stream.flatMap(_.statistics()).getOrElse(
+      new RefTableStatistics(opts, required, SnapshotFiles.listing(opts, (pushed ++ declared).toSeq)))
 
   /** Storage-partitioned joins: with `groupByPartition` the scan reports
     * KeyGroupedPartitioning over its partition columns — one planned
@@ -582,7 +455,150 @@ class RefTableScan(
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     if (opts.changefeed)
       new RefTableChangefeedStream(opts, required, pushed ++ declared, checkpointLocation)
-    else new RefTableMicroBatchStream(opts, required, pushed ++ declared)
+    else {
+      val s = new RefTableMicroBatchStream(opts, required, pushed ++ declared)
+      stream = Some(s)
+      s
+    }
+}
+
+/** Optimizer statistics of one pinned listing. File bytes scaled by the
+  * session compression factor, like Spark's own file sources.
+  */
+class RefTableStatistics(
+    opts: RefTableOptions, required: StructType, listing: SnapshotFiles.Listing)
+    extends Statistics {
+  private val prunedFiles = listing.files
+  private val bytes: Long = {
+    val factor =
+      try org.apache.spark.sql.SparkSession.active.conf
+        .get("spark.sql.sources.fileCompressionFactor", "1.0").toDouble
+      catch { case _: Throwable => 1.0 }
+    // post-pruning size: a partition-filtered scan of a huge table is
+    // exactly the case where accurate (small) stats enable the broadcast
+    math.max(1L, (prunedFiles.map(_.length).sum * factor).toLong)
+  }
+  // exact post-pruning row count from the stats manifest (DV-masked rows
+  // subtracted) — present only when EVERY surviving file has a fresh
+  // stats entry; an upper bound under residual filters, like Spark's own
+  // file-source estimates. Feeds the CBO's join-order/build-side choices.
+  private val fileStats: Option[Seq[RefTableStats.FileStats]] =
+    try {
+      val stats = RefTableStats.statsForListing(listing.resolved, prunedFiles, HadoopConf())
+      val perFile = prunedFiles.map(f => stats.get(f.path))
+      if (perFile.forall(_.isDefined)) Some(perFile.flatten) else None
+    } catch { case _: Throwable => None }
+  private val rows: java.util.OptionalLong = fileStats match {
+    case Some(fss) => java.util.OptionalLong.of(math.max(0L,
+      fss.map(_.rows).sum - prunedFiles.map(_.dvPositions.size.toLong).sum))
+    case None => java.util.OptionalLong.empty()
+  }
+  // per-column CBO statistics over the SURVIVING files: NDV from the
+  // unioned per-file HLL sketches the `ndvStats` writer option lands in
+  // the manifest (union only when every surviving file carries a sketch
+  // — a partial union would silently understate), null counts summed
+  // from the same entries. Spark's transformV2Stats turns these into
+  // catalyst ColumnStat, so equality-filter selectivity and join
+  // cardinality estimate from real NDVs at PLAN time — the broadcast
+  // build side is picked before a single task runs, no AQE re-plan.
+  // LAZY and file-count-bounded: the union heapifies one ~KB sketch per
+  // surviving file per sketched column, so it runs only when Spark
+  // actually asks for columnStats (CBO on), and a listing past the bound
+  // reports no column stats rather than megabytes of driver sketch work
+  // per plan — row/size stats keep the broadcast decision usable there
+  private lazy val colStats
+      : java.util.Map[org.apache.spark.sql.connector.expressions.NamedReference,
+        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
+    val m = new java.util.HashMap[
+      org.apache.spark.sql.connector.expressions.NamedReference,
+      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
+    // keyed on what the MANIFEST carries, not on a read option: ndvStats
+    // is a writer declaration, and readers of an ndv-sketched table get
+    // the column stats with a bare path+schema
+    for (fss <- fileStats; if prunedFiles.size <= 4096; f <- required.fields) {
+      val sc = opts.storageColumn(f.name)
+      val entries = fss.map(_.cols.get(sc))
+      if (entries.nonEmpty && entries.forall(_.exists(_.hll.isDefined))) {
+        val ndvOpt = RefTableStats.ndvEstimate(entries.map(_.get.hll.get))
+        val nullsKnown = entries.forall(_.get.nulls >= 0L)
+        // per-file null counts predate deletion vectors, while numRows
+        // subtracts DV'd positions — clamp so a heavily-deleted listing
+        // can never report nullCount > rowCount (a nonsense null
+        // fraction that skews CBO selectivity)
+        val nulls = math.min(entries.map(_.get.nulls).sum,
+          rows.orElse(Long.MaxValue))
+        ndvOpt.foreach { ndv =>
+          // equi-height histogram from the surviving files' merged KLL
+          // sketches (plain-numeric ndvStats columns carry them):
+          // range-filter selectivity estimates from real value mass, not
+          // min/max uniformity — union only when EVERY surviving file
+          // carries a sketch, like the NDV rule above. The sketch's
+          // exact bounds feed min()/max() as catalyst-typed values
+          // (FilterEstimation never consults a histogram without them).
+          val histInfo: Option[RefTableStats.KllHist] =
+            if (!entries.forall(_.exists(_.kll.isDefined))) None
+            else RefTableStats.kllHistogram(entries.map(_.get.kll.get), ndv)
+          // catalyst-internal min/max values from the sketch's double
+          // form (timestamps were sketched in micros, dates in days —
+          // exactly the internal Long/Int representations)
+          def typed(v: Double): Option[Object] = f.dataType match {
+            case org.apache.spark.sql.types.IntegerType => Some(Int.box(v.toInt))
+            case org.apache.spark.sql.types.LongType => Some(Long.box(v.toLong))
+            case org.apache.spark.sql.types.ShortType => Some(Short.box(v.toShort))
+            case org.apache.spark.sql.types.ByteType => Some(Byte.box(v.toByte))
+            case org.apache.spark.sql.types.FloatType => Some(Float.box(v.toFloat))
+            case org.apache.spark.sql.types.DoubleType => Some(Double.box(v))
+            case org.apache.spark.sql.types.TimestampType => Some(Long.box(v.toLong))
+            case org.apache.spark.sql.types.DateType => Some(Int.box(v.toInt))
+            case _ => None
+          }
+          val hist: Option[org.apache.spark.sql.connector.read.colstats.Histogram] =
+            histInfo.map { kh =>
+              val binArr = kh.bins.map { case (binLo, binHi, binNdv) =>
+                new org.apache.spark.sql.connector.read.colstats.HistogramBin {
+                  override def lo(): Double = binLo
+                  override def hi(): Double = binHi
+                  override def ndv(): Long = binNdv
+                }
+              }.toArray
+              new org.apache.spark.sql.connector.read.colstats.Histogram {
+                override def height(): Double = kh.height
+                override def bins()
+                    : Array[org.apache.spark.sql.connector.read.colstats.HistogramBin] =
+                  binArr
+              }
+            }
+          val minV = histInfo.flatMap(kh => typed(kh.min))
+          val maxV = histInfo.flatMap(kh => typed(kh.max))
+          m.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
+            new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
+              override def distinctCount(): java.util.OptionalLong =
+                java.util.OptionalLong.of(ndv)
+              override def nullCount(): java.util.OptionalLong =
+                if (nullsKnown) java.util.OptionalLong.of(nulls)
+                else java.util.OptionalLong.empty()
+              override def min(): java.util.Optional[Object] =
+                minV.map(java.util.Optional.of[Object](_))
+                  .getOrElse(java.util.Optional.empty())
+              override def max(): java.util.Optional[Object] =
+                maxV.map(java.util.Optional.of[Object](_))
+                  .getOrElse(java.util.Optional.empty())
+              override def histogram(): java.util.Optional[
+                  org.apache.spark.sql.connector.read.colstats.Histogram] =
+                hist.map(java.util.Optional.of[
+                  org.apache.spark.sql.connector.read.colstats.Histogram](_))
+                  .getOrElse(java.util.Optional.empty())
+            })
+        }
+      }
+    }
+    m
+  }
+  override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
+  override def numRows(): java.util.OptionalLong = rows
+  override def columnStats(): java.util.Map[
+      org.apache.spark.sql.connector.expressions.NamedReference,
+      org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
 }
 
 /** One-shot batch read of the current snapshot. */
@@ -592,12 +608,14 @@ class RefTableBatch(
     metrics: Option[RefTableMetrics.DriverScanMetrics] = None) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val gen = if (opts.refreshMs <= 0) 0L else System.currentTimeMillis() / opts.refreshMs
-    val (listedCount, pruned) = SnapshotFiles.prunedCounted(opts, pushed.toSeq)
-    metrics.foreach { m => m.listed = listedCount; m.kept = pruned.size }
+    val listing = SnapshotFiles.listing(opts, pushed.toSeq)
+    val pruned = listing.files
+    metrics.foreach { m => m.listed = listing.listed; m.kept = pruned.size }
     if (opts.groupByPartition && opts.partitionColumns.nonEmpty)
       RefTablePartitions.planGrouped(pruned, gen, opts)
     else RefTablePartitions.plan(pruned, gen)
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new RefTableReaderFactory(opts, required, pushed, limit)
+    new RefTableReaderFactory(opts, required, pushed, limit,
+      HadoopConf.broadcast(org.apache.spark.sql.SparkSession.active))
 }

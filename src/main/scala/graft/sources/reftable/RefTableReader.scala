@@ -12,12 +12,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.{MessageType, Type}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** One byte range of one snapshot file = one input partition: files are
   * split at maxPartitionBytes boundaries and a range reads the row groups
@@ -150,9 +152,10 @@ private final class ChainedPartitionReader[T](
   }
 }
 
-/** Serializable factory — only (options, required schema) ship to executors;
-  * readers are constructed executor-side (the reference relied on lazy
-  * per-executor transformer init for the same reason,
+/** Serializable factory — only (options, required schema, the scan's
+  * broadcast Hadoop conf) ship to executors; readers are constructed
+  * executor-side, each on a private copy of the conf (the reference relied
+  * on lazy per-executor transformer init for the same reason,
   * TableStreamingSource.java:113-115).
   *
   * Scans are columnar whenever every output type is supported by Spark's
@@ -161,7 +164,7 @@ private final class ChainedPartitionReader[T](
   */
 class RefTableReaderFactory(
     opts: RefTableOptions, required: StructType, pushed: Array[Filter],
-    limit: Option[Int] = None)
+    limit: Option[Int], conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = {
@@ -183,19 +186,21 @@ class RefTableReaderFactory(
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = partition match {
     case g: RefTableGroupedInputPartition =>
       new ChainedPartitionReader(g.splits.toIndexedSeq,
-        (s: RefTableInputPartition) => new RefTableColumnarReader(opts, required, pushed, s, limit))
+        (s: RefTableInputPartition) =>
+          new RefTableColumnarReader(opts, required, pushed, s, limit, HadoopConf.copyOf(conf)))
     case p =>
-      new RefTableColumnarReader(
-        opts, required, pushed, p.asInstanceOf[RefTableInputPartition], limit)
+      new RefTableColumnarReader(opts, required, pushed,
+        p.asInstanceOf[RefTableInputPartition], limit, HadoopConf.copyOf(conf))
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
     case g: RefTableGroupedInputPartition =>
       new ChainedPartitionReader(g.splits.toIndexedSeq,
-        (s: RefTableInputPartition) => new RefTablePartitionReader(opts, required, pushed, s, limit))
+        (s: RefTableInputPartition) =>
+          new RefTablePartitionReader(opts, required, pushed, s, limit, HadoopConf.copyOf(conf)))
     case p =>
-      new RefTablePartitionReader(
-        opts, required, pushed, p.asInstanceOf[RefTableInputPartition], limit)
+      new RefTablePartitionReader(opts, required, pushed,
+        p.asInstanceOf[RefTableInputPartition], limit, HadoopConf.copyOf(conf))
   }
 }
 
@@ -214,13 +219,12 @@ class RefTablePartitionReader(
     required: StructType,
     pushed: Array[Filter],
     partition: RefTableInputPartition,
-    limit: Option[Int] = None)
+    limit: Option[Int] = None,
+    conf: Configuration = HadoopConf())
     extends PartitionReader[InternalRow] {
 
   // pushed LIMIT: rows still wanted from this partition
   private var remaining: Int = limit.getOrElse(Int.MaxValue)
-
-  private val conf = new Configuration()
 
   private val fileMeta =
     RefTableColumnarReader.fileMetaOf(new Path(partition.path), partition.fileLength, conf)

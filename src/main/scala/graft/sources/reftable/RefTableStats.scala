@@ -8,8 +8,6 @@ import scala.util.control.NonFatal
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -121,7 +119,7 @@ object RefTableStats {
     * hundreds-of-MB JSON document — through the driver.
     */
   def writeManifest(
-      dir: String, conf: Configuration = new Configuration(),
+      dir: String, conf: Configuration = HadoopConf(),
       shardThreshold: Int = ShardThreshold): Unit = {
     val base = new Path(dir)
     val fs = base.getFileSystem(conf)
@@ -322,7 +320,7 @@ object RefTableStats {
     * column). `nulls` is -1 when any row group leaves the null count unset.
     */
   private def fileColumnStats(path: Path, conf: Configuration): (Long, Map[String, (Any, Any, Long)]) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val reader = HadoopConf.openParquet(path, conf)
     try {
       val md = reader.getFooter
       val blocks = md.getBlocks.asScala.toSeq
@@ -415,7 +413,7 @@ object RefTableStats {
     */
   def augmentCategorical(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
-      maxDistinct: Int = 64, conf: Configuration = new Configuration()): Unit = {
+      maxDistinct: Int = 64, conf: Configuration = HadoopConf()): Unit = {
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty, "augmentCategorical needs at least one column")
     val base = new Path(dir)
@@ -588,7 +586,7 @@ object RefTableStats {
   def augmentBloom(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
       expectedItems: Long = 100000L, fpp: Double = 0.03,
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf()): Unit = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     require(cols.nonEmpty, "augmentBloom needs at least one column")
@@ -663,7 +661,7 @@ object RefTableStats {
     */
   def augmentNdv(
       spark: org.apache.spark.sql.SparkSession, dir: String, cols: Seq[String],
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf()): Unit = {
     import org.apache.spark.sql.functions._
     require(cols.nonEmpty, "augmentNdv needs at least one column")
     val base = new Path(dir)

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** DSv2 STREAMING write for reftable catalog tables —
   * `df.writeStream.toTable("graft.db.t")`.
@@ -74,6 +75,7 @@ class RefTableStreamingWrite(
       f.copy(name = opts.storageColumn(f.name)))
     RefTableWriterFactory(
       stagingRoot, StructType(storageFields), opts.partitionColumns.toList,
+      new SerializableConfiguration(HadoopConf()),
       boundExpectations(), opts.onViolation, quarantineProjection())
   }
 
@@ -126,7 +128,7 @@ class RefTableStreamingWrite(
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val epochMsgs = messages.toSeq.collect { case m: StagedEpochFiles => m }
     val staged = epochMsgs.flatMap(_.files)
     // expectation drop census (onViolation=drop): aggregate across tasks
@@ -289,7 +291,7 @@ class RefTableStreamingWrite(
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val epochDir = new Path(s"$stagingRoot/$epochId")
     epochDir.getFileSystem(conf).delete(epochDir, true)
     ()
@@ -311,10 +313,13 @@ final case class StagedEpochFiles(
 
 /** Serializable per-task writer factory. `schema` carries STORAGE names
   * in declared order (partition columns included — they are projected out
-  * of file content but read from the row for directory routing).
+  * of file content but read from the row for directory routing). `conf`
+  * is the session's Hadoop conf, shipped with the tasks the way Spark's
+  * own file writers ship theirs.
   */
 final case class RefTableWriterFactory(
     stagingRoot: String, schema: StructType, partitionColumns: List[String],
+    conf: SerializableConfiguration,
     expectations: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
     onViolation: String = "fail",
     quarantine: Option[(StructType,
@@ -323,7 +328,8 @@ final case class RefTableWriterFactory(
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     new EpochWriter(s"$stagingRoot/$epochId", schema, partitionColumns,
-      f"part-$partitionId%05d-$taskId", expectations, onViolation, quarantine)
+      f"part-$partitionId%05d-$taskId", new Configuration(conf.value),
+      expectations, onViolation, quarantine)
 }
 
 /** Executor-side parquet writer for one task of one epoch. Rows split by
@@ -336,6 +342,7 @@ final case class RefTableWriterFactory(
 final class EpochWriter(
     epochDir: String, schema: StructType, partitionColumns: List[String],
     filePrefix: String,
+    conf: Configuration,
     expectations: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Nil,
     onViolation: String = "fail",
     quarantine: Option[(StructType,
@@ -366,20 +373,16 @@ final class EpochWriter(
   private var qFile: String = _
   private var qRows = 0L
 
-  private val conf = {
-    val c = new Configuration()
-    // ParquetWriteSupport.init / SparkToParquetSchemaConverter read these
-    // from the hadoop conf with no defaults (Spark's own writer sets them
-    // in prepareWrite) — TIMESTAMP_MICROS + CORRECTED to match every
-    // other reftable write path
-    c.set("spark.sql.parquet.writeLegacyFormat", "false")
-    c.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-    c.set("spark.sql.parquet.fieldId.write.enabled", "false")
-    c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-    c
-  }
+  // ParquetWriteSupport.init / SparkToParquetSchemaConverter read these
+  // from the hadoop conf with no defaults (Spark's own writer sets them
+  // in prepareWrite) — TIMESTAMP_MICROS + CORRECTED to match every
+  // other reftable write path
+  conf.set("spark.sql.parquet.writeLegacyFormat", "false")
+  conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+  conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
+  conf.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
+  conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+  conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
   private val partIdx = partitionColumns.map(schema.fieldIndex)
   private val dataIdx = schema.fields.indices.filterNot(partIdx.contains)
   private val dataSchema = StructType(dataIdx.map(schema.fields))

@@ -164,7 +164,7 @@ object RefTableWrites {
     * retention accepts.
     */
   def lastCommittedBatch(root: String, appId: String,
-      conf: Configuration = new Configuration()): Option[Long] = {
+      conf: Configuration = HadoopConf()): Option[Long] = {
     val prefix = s"txn:$appId:"
     val log = VersionedTable.commitLog(root, conf)
     val markers =
@@ -222,7 +222,7 @@ object RefTableWrites {
     require(opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty,
       "appendVersion: clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that " +
         "re-cluster on append; use insert() (batch) which rewrites the layout per commit")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     guardBareRoot(opts, conf)
     opts.retainForMs.foreach(VersionedTable.declareRetention(opts.path, _, conf))
     // a COMPUTED append source (an anti-join delta, a union, an aggregated
@@ -406,7 +406,7 @@ object RefTableWrites {
   def insert(opts: RefTableOptions, data: Dataset[Row], overwrite: Boolean,
       overwriteMode: Option[String] = None): Unit = withQuarantineCache {
     guardReadOnly(opts)
-    val conf = new Configuration()
+    val conf = HadoopConf()
     guardBareRoot(opts, conf)
     opts.retainForMs.foreach(VersionedTable.declareRetention(opts.path, _, conf))
     val gated = enforceExpectations(opts, data)
@@ -557,7 +557,7 @@ class RefTableSink(
       // replayed epoch lands exactly once. Declared expectations gate the
       // batch exactly like an append (fail/drop/quarantine).
       val appId = sinkAppId(batch)
-      val conf = new Configuration()
+      val conf = HadoopConf()
       RefTableWrites.withQuarantineCache {
         val gated = RefTableWrites.enforceExpectations(opts, batch)
         val fresh = VersionedTable.resolve(opts.path, conf).isEmpty
@@ -588,7 +588,7 @@ class RefTableSink(
       }
     } else if (append) {
       val appId = sinkAppId(batch)
-      val conf = new Configuration()
+      val conf = HadoopConf()
       // no-data triggers: nothing to commit, nothing to mark (an existing
       // table stays at its version; a FRESH root still publishes so readers
       // find an empty table rather than no table)

@@ -66,7 +66,7 @@ object VersionedTable {
     * per-epoch writers call this on every commit, and an unchanged policy
     * must not cost a write. */
   def declareRetention(root: String, ms: Long,
-      conf: Configuration = new Configuration()): Unit = {
+      conf: Configuration = HadoopConf()): Unit = {
     val p = new Path(new Path(root), RetentionDecl)
     if (!declaredRetentionMs(root, conf).contains(ms))
       try CommitPrimitive.forPath(p, conf).overwrite(p, ms.toString.getBytes("UTF-8"), conf)
@@ -215,7 +215,7 @@ object VersionedTable {
     * atomically with their full content, so there is no partial-read
     * window on this path.
     */
-  def resolve(root: String, conf: Configuration = new Configuration()): Option[String] =
+  def resolve(root: String, conf: Configuration = HadoopConf()): Option[String] =
     lastCommit(root, conf).map(c => new Path(root, c.version).toString)
 
   /** Latest commit of the table: max sequence in the commit log, or a
@@ -223,7 +223,7 @@ object VersionedTable {
     * written before the log — and [[adopt]]-migrated bare dirs — read and
     * CAS correctly; their first logged commit claims sequence 1).
     */
-  def lastCommit(root: String, conf: Configuration = new Configuration()): Option[Commit] = {
+  def lastCommit(root: String, conf: Configuration = HadoopConf()): Option[Commit] = {
     commitFiles(root, conf).lastOption match {
       case Some((seq, path)) => Some(readCommit(seq, path, conf))
       case None => pointerLines(root, conf).flatMap { lines =>
@@ -236,7 +236,7 @@ object VersionedTable {
   /** Retained commit records, ascending sequence. Empty for legacy roots
     * (their state is the synthetic seq-0 of [[lastCommit]]).
     */
-  def commitLog(root: String, conf: Configuration = new Configuration()): Seq[Commit] =
+  def commitLog(root: String, conf: Configuration = HadoopConf()): Seq[Commit] =
     commitFiles(root, conf).map { case (seq, p) => readCommit(seq, p, conf) }
 
   private def commitsDirExists(root: String, conf: Configuration): Boolean = {
@@ -319,7 +319,7 @@ object VersionedTable {
     * HDFS/object-store renames don't have the window; the retry simply
     * never fires there.
     */
-  def resolveRobust(root: String, conf: Configuration = new Configuration()): Option[String] = {
+  def resolveRobust(root: String, conf: Configuration = HadoopConf()): Option[String] = {
     var attempts = 0
     while (true) {
       resolve(root, conf) match {
@@ -346,7 +346,7 @@ object VersionedTable {
     * line 2), if any — used by [[completeModePublisher]] for replay
     * idempotency.
     */
-  def publishedMarker(root: String, conf: Configuration = new Configuration()): Option[String] =
+  def publishedMarker(root: String, conf: Configuration = HadoopConf()): Option[String] =
     lastCommit(root, conf).flatMap(_.marker)
 
   /** Pointer file content as lines: line 1 = version name, optional
@@ -477,7 +477,7 @@ object VersionedTable {
       val cols = node.putArray("cols")
       bucketCols.foreach(cols.add)
       node.put("n", nBuckets)
-      LocalFs.createWrite(staging.getFileSystem(new Configuration()),
+      LocalFs.createWrite(staging.getFileSystem(HadoopConf()),
         new Path(staging, BucketsMarker), om.writeValueAsBytes(node))
     }
   }
@@ -520,7 +520,7 @@ object VersionedTable {
     */
   def cloneTo(srcRoot: String, dstRoot: String, version: Option[String] = None,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     // merge-on-read sources clone too: the listing arrives with its pinned
     // DV positions attached, and a remapped sidecar re-keys them onto the
     // clone's fresh (c%05d-prefixed) file names — see writeRemapped
@@ -591,7 +591,7 @@ object VersionedTable {
   def promote(
       stagingRoot: String, targetRoot: String, expectedBase: Option[String] = None,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     // a MoR'd staging table promotes too: its pinned DV positions re-key
     // onto the promoted version's fresh file names (see cloneTo)
     val files = SnapshotFiles.list(stagingRoot, partitionColumns, None)
@@ -633,7 +633,7 @@ object VersionedTable {
     * (orphan) directories.
     */
   def parentOf(root: String, version: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf()): Option[String] =
     commitLog(root, conf).find(_.version == version).flatMap(_.parent)
 
   /** Optimistic-concurrency wrapper for read-modify-write publishes
@@ -739,7 +739,7 @@ object VersionedTable {
     require(keepVersions >= 2,
       "keepVersions must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     if (resolve(root, conf).isEmpty && fs.exists(rootPath) && bareEntries(rootPath, fs).nonEmpty)
@@ -1058,7 +1058,7 @@ object VersionedTable {
     */
   def restore(root: String, toVersionOrTag: String, keepVersions: Int = 3,
       partitionColumns: Seq[String] = Nil): String = withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf()
     // `tag:<name>` restores the tagged version (tags protect their target
     // from retention, so this is always a retained state); `ts:<timestamp>`
     // restores TIMESTAMP AS OF
@@ -1111,7 +1111,7 @@ object VersionedTable {
     require(name.matches(TagNameRe),
       s"tag: invalid tag name '$name' (allowed: letters, digits, '.', '_', '-'; " +
         "must start alphanumeric; max 128 chars)")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val target = version.getOrElse(
       resolve(root, conf).map(p => new Path(p).getName).getOrElse(
         throw new IllegalArgumentException(s"$root is not a versioned table root")))
@@ -1149,7 +1149,7 @@ object VersionedTable {
     * it protected. Returns whether the tag existed.
     */
   def dropTag(root: String, name: String): Boolean = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val rootPath = new Path(root)
     val p = tagPath(rootPath, name)
     val fs = rootPath.getFileSystem(conf)
@@ -1159,7 +1159,7 @@ object VersionedTable {
 
   /** All tags as (name, version, createdMs), name-ordered. */
   def tags(root: String,
-      conf: Configuration = new Configuration()): Seq[(String, String, Long)] = {
+      conf: Configuration = HadoopConf()): Seq[(String, String, Long)] = {
     val dir = new Path(new Path(root), TagsDir)
     val fs = dir.getFileSystem(conf)
     val entries =
@@ -1178,7 +1178,7 @@ object VersionedTable {
 
   /** The version a tag names, if the tag exists. */
   def resolveTag(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] = {
+      conf: Configuration = HadoopConf()): Option[String] = {
     val p = tagPath(new Path(root), name)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) None
@@ -1228,7 +1228,7 @@ object VersionedTable {
     require(name.matches(TagNameRe),
       s"branch: invalid branch name '$name' (allowed: letters, digits, '.', '_', " +
         "'-'; must start alphanumeric; max 128 chars)")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val fork = version match {
       case Some(v) =>
         new Path(SnapshotFiles.resolveDir(root, Some(v), conf)).getName
@@ -1260,7 +1260,7 @@ object VersionedTable {
 
   /** The fork version a branch's next fast-forward CASes against. */
   def branchFork(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf()): Option[String] =
     readFork(root, name, "version", conf)
 
   /** The BRANCH version whose content matched main at the recorded fork —
@@ -1269,7 +1269,7 @@ object VersionedTable {
     * older branches (rebase then falls back to the clone commit).
     */
   def branchBase(root: String, name: String,
-      conf: Configuration = new Configuration()): Option[String] =
+      conf: Configuration = HadoopConf()): Option[String] =
     readFork(root, name, "base", conf)
 
   private def readFork(root: String, name: String, field: String,
@@ -1301,7 +1301,7 @@ object VersionedTable {
   }
 
   /** All branches: (name, fork version, branch head version if published). */
-  def branches(root: String, conf: Configuration = new Configuration())
+  def branches(root: String, conf: Configuration = HadoopConf())
       : Seq[(String, String, Option[String])] = {
     val dir = new Path(new Path(root), BranchesDir)
     val fs = dir.getFileSystem(conf)
@@ -1325,7 +1325,7 @@ object VersionedTable {
     */
   def fastForward(root: String, name: String,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val bRoot = branchRoot(root, name)
     var attempts = 0
     while (attempts < 3) {
@@ -1410,7 +1410,7 @@ object VersionedTable {
     */
   def rebaseBranch(root: String, name: String,
       partitionColumns: Seq[String] = Nil, keepVersions: Int = 3): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val bRoot = branchRoot(root, name)
     branchFork(root, name, conf).getOrElse(
       throw new IllegalArgumentException(
@@ -1505,7 +1505,7 @@ object VersionedTable {
     * untouched — branch versions were never in main's commit log.
     */
   def dropBranch(root: String, name: String): Boolean = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val p = new Path(branchRoot(root, name))
     val fs = p.getFileSystem(conf)
     fs.exists(p) && fs.delete(p, true)
@@ -1545,7 +1545,7 @@ object VersionedTable {
     * retention.
     */
   def resolveAsOf(root: String, tsMillis: Long,
-      conf: Configuration = new Configuration()): Option[String] = {
+      conf: Configuration = HadoopConf()): Option[String] = {
     val log = commitLog(root, conf) // ascending seq
     if (log.isEmpty) // legacy pointer-only root: name order is all there is
       committedVersionDirs(root, conf).takeWhile(versionTimestampMs(_) <= tsMillis).lastOption
@@ -1560,7 +1560,7 @@ object VersionedTable {
     * hand a pinned reader the wrong snapshot.
     */
   def resolveSpec(root: String, spec: String,
-      conf: Configuration = new Configuration()): String =
+      conf: Configuration = HadoopConf()): String =
     if (spec.startsWith("tag:")) {
       val t = spec.stripPrefix("tag:")
       resolveTag(root, t, conf).getOrElse(
@@ -1592,7 +1592,7 @@ object VersionedTable {
       spark: org.apache.spark.sql.SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024, keepVersions: Int = 3,
       partitionColumns: Seq[String] = Nil): String = withConflictRetry(root) { () =>
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolve(root, conf).getOrElse(
       throw new IllegalArgumentException(s"$root is not a versioned table root"))
     val bytes = SnapshotFiles.list(current, partitionColumns).map(_.length).sum
@@ -1646,7 +1646,7 @@ object VersionedTable {
     */
   def history(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val current = resolve(root, conf).map(p => new Path(p).getName)
     committedVersionDirs(root, conf).zipWithIndex.map { case (name, i) =>
       val dir = new Path(root, name).toString
@@ -1684,7 +1684,7 @@ object VersionedTable {
     require(minKeep >= 2,
       "minKeep must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val committed = committedVersionDirs(root, conf)
     val youngEnough = committed.count(v => versionTimestampMs(v) >= olderThanMs)
     vacuum(root, math.max(minKeep, youngEnough))
@@ -1694,7 +1694,7 @@ object VersionedTable {
     require(keepVersions >= 2,
       "keepVersions must be >= 2: retaining only the current version would delete " +
         "the previous one under readers still pinned to it")
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     val all = commitFiles(root, conf)
@@ -1839,7 +1839,7 @@ object VersionedTable {
   def changes(
       spark: org.apache.spark.sql.SparkSession, root: String,
       keyCols: Seq[String], fromVersion: String): org.apache.spark.sql.DataFrame = {
-    val (b, a) = diffSides(spark, root, fromVersion, new Configuration())
+    val (b, a) = diffSides(spark, root, fromVersion, HadoopConf())
     graft.operators.SnapshotDiff.diff(b, a, keyCols)
   }
 
@@ -1852,7 +1852,7 @@ object VersionedTable {
   def changesImages(
       spark: org.apache.spark.sql.SparkSession, root: String,
       keyCols: Seq[String], fromVersion: String): org.apache.spark.sql.DataFrame = {
-    val (b, a) = diffSides(spark, root, fromVersion, new Configuration())
+    val (b, a) = diffSides(spark, root, fromVersion, HadoopConf())
     graft.operators.SnapshotDiff.diffImages(b, a, keyCols)
   }
 
@@ -1897,7 +1897,7 @@ object VersionedTable {
     * effect of publishing). Returns the created version name.
     */
   def adopt(root: String, partitionColumns: Seq[String] = Nil): String = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     require(resolve(root, conf).isEmpty, s"$root is already a versioned table root")
@@ -1940,7 +1940,7 @@ object VersionedTable {
     * must not shadow a later in-log re-declaration.
     */
   def layoutDeclaration(
-      root: String, conf: Configuration = new Configuration()): Option[(Long, String)] = {
+      root: String, conf: Configuration = HadoopConf()): Option[(Long, String)] = {
     val p = new Path(root, LayoutDecl)
     val fs = p.getFileSystem(conf)
     val fromFile =
@@ -1974,7 +1974,7 @@ object VersionedTable {
     */
   private[reftable] def readVersion(
       spark: org.apache.spark.sql.SparkSession, versionDir: String): DataFrame = {
-    val conf = new Configuration()
+    val conf = HadoopConf()
     val p = new Path(versionDir)
     val manifested = p.getName.matches("v\\d{19}_[0-9a-f]{8}") && p.getParent != null &&
       RefTableFileManifest.exists(p.getParent.toString, p.getName, conf)
@@ -2007,7 +2007,7 @@ object VersionedTable {
     * to intersect with, so all version dirs stand, as before.
     */
   def committedVersionDirs(
-      root: String, conf: Configuration = new Configuration()): Seq[String] = {
+      root: String, conf: Configuration = HadoopConf()): Seq[String] = {
     val log = commitLog(root, conf)
     val dirs = versionDirs(root, conf)
     if (log.isEmpty) dirs
@@ -2015,7 +2015,7 @@ object VersionedTable {
   }
 
   /** Version directory names under `root`, oldest first. */
-  def versionDirs(root: String, conf: Configuration = new Configuration()): Seq[String] = {
+  def versionDirs(root: String, conf: Configuration = HadoopConf()): Seq[String] = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(conf)
     if (!fs.exists(rootPath)) Seq.empty
