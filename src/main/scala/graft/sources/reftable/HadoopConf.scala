@@ -3,7 +3,10 @@ package graft.sources.reftable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
@@ -79,4 +82,14 @@ private[graft] object HadoopConf {
   def openParquet(path: Path, conf: Configuration): ParquetFileReader =
     ParquetFileReader.open(
       HadoopInputFile.fromPath(path, conf), HadoopReadOptions.builder(conf, path).build())
+
+  /** Opens a parquet file for a record-at-a-time `Group` read on `conf`.
+    * `ParquetReader.builder(readSupport, path)` builds its options from a
+    * fresh `Configuration` before `withConf` replaces it; a builder over a
+    * `HadoopInputFile` takes the file's conf instead.
+    */
+  def groupReader(path: Path, conf: Configuration): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(path, conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport
+    }.build()
 }

@@ -412,11 +412,10 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
         val f = fields.find(_.name == nm).getOrElse(
           throw new IllegalArgumentException(s"column '$nm' does not exist"))
         // descriptor-only type WIDENING: existing files keep their narrower
-        // physical type and both readers widen per file (the columnar path
-        // through a widening vector view, the row path at decode); new
-        // writes land at the declared width. Only conversions that are
-        // lossless for every representable value are accepted — anything
-        // else would silently mis-read typed bytes
+        // physical type and the scan widens per file through a widening
+        // vector view; new writes land at the declared width. Only
+        // conversions that are lossless for every representable value are
+        // accepted — anything else would silently mis-read typed bytes
         import org.apache.spark.sql.types._
         val ok = (f.dataType, ut.newDataType) match {
           case (ByteType, ShortType | IntegerType | LongType) => true

@@ -230,10 +230,14 @@ class RefTableChangefeedStream(
   /** The scratch files hold OUTPUT-named columns plus change_type; read
     * them through the standard reader with an identity-mapped options
     * view (the gen column still rides the partition-constant mechanism).
+    * Identity includes the column mapping: a renamed column is stored in
+    * the scratch under its logical name, and since validation refuses
+    * duplicate field names (and `change_type` under changefeed), no two
+    * output fields share a storage column.
     */
   private val scanOpts: RefTableOptions = opts.copy(
     schema = StructType(opts.schema.fields :+ StructField("change_type", StringType, nullable = false)),
-    rowField = None, keyColumn = None,
+    rowField = None, keyColumn = None, columnMapping = Map.empty,
     partitionColumns = Nil, hiddenPartitions = Nil,
     version = None, filterSql = None,
     changefeed = false, keyColumns = Nil)

@@ -19,14 +19,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Columnar scan path: decodes parquet through Spark's
+/** The scan decoder — the only one: every reftable scan (batch,
+  * micro-batch stream, changefeed stream) decodes parquet through Spark's
   * VectorizedParquetRecordReader (the same batched decoder the built-in
-  * parquet source uses — dictionary-aware, null-vector based, ~10× the
-  * example-Group row decode) and republishes the batch under the source's
-  * output projection:
+  * parquet source uses — dictionary-aware, null-vector based) and
+  * republishes the batch under the source's output projection. It decodes
+  * every type option validation accepts (`RefTableConfig.decodable`):
+  * flat primitives including SMALLINT/TINYINT, DECIMAL, DATE and
+  * TIMESTAMP, and single-level arrays — VECTOR / token-list columns — via
+  * Spark's nested-column decode (parquet LIST → offsets + child vector).
   *
-  *  - storage columns are requested once each and shared when both `rowField`
-  *    and the raw key column appear in the schema;
+  *  - storage columns are requested once each (option validation refuses
+  *    two fields over one storage column);
   *  - the generation column rides the reader's partition-value mechanism
   *    (a ConstantColumnVector, zero per-row cost);
   *  - TIMESTAMP(NANOS) columns — unsupported by the vectorized decoder as
@@ -38,31 +42,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * a residual (see RefTableScanBuilder.pushFilters).
   */
 object RefTableColumnarReader {
-  /** Types the vectorized decoder handles for this source's schemas.
-    * Single-level arrays of the declarable vector element types ride
-    * Spark's own nested-column vectorized decode (parquet LIST → offsets +
-    * child vector, SPARK-34863) — embedding corpora are the north star's
-    * dominant scans, so an `array<float>` column must NOT demote the whole
-    * file to the row-oriented Group reader. Deeper nesting never reaches
-    * here (refused at option validation).
-    */
-  def supports(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | FloatType | BooleanType |
-         StringType | BinaryType | TimestampType | DateType | ShortType | ByteType => true
-    case _: DecimalType => true
-    case ArrayType(et, _) => et match {
-      case IntegerType | LongType | DoubleType | FloatType | BooleanType |
-           StringType | BinaryType =>
-        // escape hatch mirroring Spark's own
-        // spark.sql.parquet.enableNestedColumnVectorizedReader: row-path
-        // arrays on demand (A/B adjudication, emergency fallback)
-        !"false".equalsIgnoreCase(
-          System.getProperty("graft.reftable.vectorized.arrays", "true"))
-      case _ => false
-    }
-    case _ => false
-  }
-
   /** Per-executor footer cache: byte-range splits of the same file (and
     * re-reads across generations) share one footer parse instead of one
     * metadata round-trip per split. Holds the FULL footer (schema +
@@ -86,10 +65,6 @@ object RefTableColumnarReader {
       finally r.close()
     })
   }
-
-  private[reftable] def fileMetaOf(
-      path: Path, fileLength: Long, conf: Configuration): org.apache.parquet.hadoop.metadata.FileMetaData =
-    footerOf(path, fileLength, conf).getFileMetaData
 
   /** File-global row index of the first row a byte-range split starting at
     * `start` will decode: the summed row counts of the row groups BEFORE
@@ -120,48 +95,6 @@ object RefTableColumnarReader {
   private[reftable] def pvConst(
       opts: RefTableOptions, pv: Map[String, String], f: StructField): Boolean =
     pv.contains(f.name) && !opts.hiddenTransforms.exists(_.dirName == f.name)
-
-  /** Forward schema evolution, shared by both read paths: a declared
-    * column absent from this (older) file — neither a directory constant
-    * of the file nor in its data pages — reads as a null constant when
-    * allowMissingColumns is set.
-    */
-  private[reftable] def missingFromFile(
-      opts: RefTableOptions, fileSchema: MessageType, pv: Map[String, String],
-      f: StructField): Boolean =
-    !opts.genColumn.contains(f.name) && !pvConst(opts, pv, f) &&
-      opts.allowMissingColumns && !fileSchema.containsField(opts.storageColumn(f.name))
-
-  /** Pushed filters usable against THIS file, shared by both read paths:
-    * parquet rejects predicates over columns it doesn't have, so filters
-    * referencing a column this file lacks are withheld here — the residual
-    * above the scan evaluates them over the null-filled rows with SQL
-    * semantics. Filters on type-WIDENED columns are withheld per file too:
-    * the predicate translates at the declared (wider) type and parquet
-    * refuses e.g. a long predicate over an INT32 column — the residual
-    * keeps exactness, the file just isn't pre-skipped.
-    */
-  private[reftable] def pushableForFile(
-      opts: RefTableOptions, fileSchema: MessageType, pushed: Array[Filter]): Array[Filter] =
-    pushed.filter(_.references.forall { n =>
-      opts.genColumn.contains(n) || opts.isPartitionCol(n) || {
-        val sc = opts.storageColumn(n)
-        fileSchema.containsField(sc) && !physicalNarrowerThanDeclared(opts, fileSchema, n, sc)
-      }
-    })
-
-  private def physicalNarrowerThanDeclared(
-      opts: RefTableOptions, fileSchema: MessageType, field: String, storageCol: String): Boolean = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val t = fileSchema.getType(Seq(storageCol): _*)
-    if (!t.isPrimitive) return false
-    val p = t.asPrimitiveType().getPrimitiveTypeName
-    opts.schema.fields.find(_.name == field).map(_.dataType) match {
-      case Some(LongType)   => p == INT32
-      case Some(DoubleType) => p == FLOAT
-      case _ => false
-    }
-  }
 
   /** The Spark type this file NATURALLY decodes a storage column at
     * (primitive + annotation); None when unstatable/absent. Used by the
@@ -254,7 +187,8 @@ class RefTableColumnarReader(
   private var remaining: Int = limit.getOrElse(Int.MaxValue)
   private val hadoopPath = new Path(partition.path)
 
-  private val fileMeta = RefTableColumnarReader.fileMetaOf(hadoopPath, partition.fileLength, conf)
+  private val fileMeta =
+    RefTableColumnarReader.footerOf(hadoopPath, partition.fileLength, conf).getFileMetaData
   private val fileSchema: MessageType = fileMeta.getSchema
 
   private def isNanos(col: String): Boolean =
@@ -264,8 +198,13 @@ class RefTableColumnarReader(
         case _ => false
       })
 
+  /** Forward schema evolution: a declared column absent from this (older)
+    * file — neither a directory constant of the file nor in its data pages
+    * — reads as a null constant when allowMissingColumns is set.
+    */
   private def missingFromFile(f: StructField): Boolean =
-    RefTableColumnarReader.missingFromFile(opts, fileSchema, partition.partitionValues, f)
+    !opts.genColumn.contains(f.name) && !pvConst(f) &&
+      opts.allowMissingColumns && !fileSchema.containsField(opts.storageColumn(f.name))
   private def pvConst(f: StructField): Boolean =
     RefTableColumnarReader.pvConst(opts, partition.partitionValues, f)
 
@@ -308,6 +247,35 @@ class RefTableColumnarReader(
   locally { while (dvIdx < dvPos.length && dvPos(dvIdx) < physRow) dvIdx += 1 }
   private val selection: DvSelection = if (dvPos.isEmpty) null else new DvSelection
 
+  /** Pushed filters usable against THIS file: parquet rejects predicates
+    * over columns it doesn't have, so filters referencing a column this
+    * file lacks are withheld here — the residual above the scan evaluates
+    * them over the null-filled rows with SQL semantics. Filters on
+    * type-WIDENED columns are withheld per file too: the predicate
+    * translates at the declared (wider) type and parquet refuses e.g. a
+    * long predicate over an INT32 column — the residual keeps exactness,
+    * the file just isn't pre-skipped.
+    */
+  private def pushableForFile: Array[Filter] =
+    pushed.filter(_.references.forall { n =>
+      opts.genColumn.contains(n) || opts.isPartitionCol(n) || {
+        val sc = opts.storageColumn(n)
+        fileSchema.containsField(sc) && !physicalNarrowerThanDeclared(n, sc)
+      }
+    })
+
+  private def physicalNarrowerThanDeclared(field: String, storageCol: String): Boolean = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val t = fileSchema.getType(Seq(storageCol): _*)
+    if (!t.isPrimitive) return false
+    val p = t.asPrimitiveType().getPrimitiveTypeName
+    opts.schema.fields.find(_.name == field).map(_.dataType) match {
+      case Some(LongType)   => p == INT32
+      case Some(DoubleType) => p == FLOAT
+      case _ => false
+    }
+  }
+
   // distinct storage columns, each requested once; nanos timestamps as
   // longs; type-WIDENED columns (declared wider than this file's physical)
   // requested at the file's NATURAL type and served through a widening
@@ -342,8 +310,7 @@ class RefTableColumnarReader(
     // (the file-source contract), so the result is identical
     val preds =
       if (dvPos.nonEmpty) Array.empty[org.apache.parquet.filter2.predicate.FilterPredicate]
-      else RefTableColumnarReader.pushableForFile(opts, fileSchema, pushed)
-        .flatMap(f => RefTableFilters.translate(opts, f))
+      else pushableForFile.flatMap(f => RefTableFilters.translate(opts, f))
     if (preds.nonEmpty) ParquetInputFormat.setFilterPredicate(conf, preds.reduce(FilterApi.and))
     val (dtMode, dtTz, i96Mode, i96Tz) = RefTableColumnarReader.rebaseSpec(fileMeta)
     val r = new VectorizedParquetRecordReader(

@@ -370,14 +370,14 @@ object RefTableOptions {
     }
 
     // FAIL-FAST TYPE SURFACE (the same contract as every other option):
-    // a declared type the readers cannot decode must refuse at analysis
-    // time, not throw from an executor mid-scan. Decodable: the flat
+    // a declared type the scan decoder (RefTableColumnarReader) cannot
+    // decode must refuse at analysis time, not throw from an executor
+    // mid-scan. This is the one list of decodable types: the flat
     // primitives, plus single-level arrays of
     // float/double/int/long/string/boolean/binary — the VECTOR /
-    // token-list column classes (served VECTORIZED through Spark's
-    // nested-column decode, with the Group reader as the row fallback).
-    // Deeper nesting: pack to BINARY (graft.functions PackVector) or
-    // flatten.
+    // token-list column classes, decoded through Spark's nested-column
+    // vectorized reader. Deeper nesting: pack to BINARY (graft.functions
+    // PackVector) or flatten.
     def decodable(dt: DataType): Boolean = dt match {
       case IntegerType | LongType | DoubleType | FloatType | BooleanType |
            StringType | BinaryType | TimestampType | DateType |

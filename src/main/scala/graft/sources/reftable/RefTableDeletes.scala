@@ -2,8 +2,6 @@ package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, not, regexp_extract}
 
@@ -75,17 +73,8 @@ object DeletionVectors {
   def positionsByFile(
       versionDir: String, conf: Configuration = HadoopConf()): Map[String, Seq[Long]] = {
     val out = scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.TreeSet[Long]]
-    sidecars(versionDir, conf).foreach { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), p).withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val file = g.getBinary("file", 0).toStringUsingUTF8
-          val pos = g.getLong("pos", 0)
-          out.getOrElseUpdate(file, scala.collection.mutable.TreeSet.empty[Long]) += pos
-          g = reader.read()
-        }
-      } finally reader.close()
+    eachPosition(sidecars(versionDir, conf), conf) { (file, pos) =>
+      out.getOrElseUpdate(file, scala.collection.mutable.TreeSet.empty[Long]) += pos
     }
     out.iterator.map { case (f, ps) => f -> ps.toSeq }.toMap
   }
@@ -100,18 +89,24 @@ object DeletionVectors {
   def referencedFiles(versionDir: String, excludeNames: Set[String],
       conf: Configuration = HadoopConf()): Set[String] = {
     val out = scala.collection.mutable.HashSet.empty[String]
-    sidecars(versionDir, conf).filterNot(p => excludeNames.contains(p.getName)).foreach { p =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), p).withConf(conf).build()
+    eachPosition(sidecars(versionDir, conf).filterNot(p => excludeNames.contains(p.getName)),
+      conf)((file, _) => out += file)
+    out.toSet
+  }
+
+  /** Every `(file, pos)` row of the given sidecars, in file order. */
+  private def eachPosition(sidecars: Seq[Path], conf: Configuration)(
+      f: (String, Long) => Unit): Unit =
+    sidecars.foreach { p =>
+      val reader = HadoopConf.groupReader(p, conf)
       try {
         var g = reader.read()
         while (g != null) {
-          out += g.getBinary("file", 0).toStringUsingUTF8
+          f(g.getBinary("file", 0).toStringUsingUTF8, g.getLong("pos", 0))
           g = reader.read()
         }
       } finally reader.close()
     }
-    out.toSet
-  }
 
   /** Attach pinned DV positions to a resolved listing (no-op without
     * sidecars). Keys are matched on the version-relative tail of each

@@ -275,6 +275,52 @@ class RefTableCatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("SMALLINT and TINYINT columns decode as declared and widen under ALTER COLUMN TYPE") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // parquet stores both as INT32 annotated INT(16) / INT(8)
+    val dir = Files.createTempDirectory("graft_smallint").toString
+    Seq[(Long, Option[Short], Option[Byte])](
+      (1L, Some(Short.MinValue), Some(Byte.MinValue)), (2L, Some(-1), Some(-1)),
+      (3L, None, None), (4L, Some(Short.MaxValue), Some(Byte.MaxValue)), (5L, Some(7), Some(0)))
+      .toDF("id", "s", "b").repartition(1).write.mode("overwrite").parquet(dir)
+    val ref = spark.read.format("reftable").option("path", dir)
+      .option("schema", "id BIGINT, s SMALLINT, b TINYINT").load()
+    val exp = spark.read.parquet(dir)
+    assert(ref.schema.map(_.dataType.simpleString) == Seq("bigint", "smallint", "tinyint"))
+    assert(ref.exceptAll(exp).count() == 0 && exp.exceptAll(ref).count() == 0)
+    val refNeg = ref.filter(col("s") < 0 && col("b") < 0)
+    val expNeg = exp.filter(col("s") < 0 && col("b") < 0)
+    assert(refNeg.count() == 2 &&
+      refNeg.exceptAll(expNeg).count() == 0 && expNeg.exceptAll(refNeg).count() == 0)
+
+    withCatalog { (cat, _) =>
+      spark.sql(s"CREATE NAMESPACE $cat.db20")
+      spark.sql(s"CREATE TABLE $cat.db20.t (id INT, s SMALLINT, b TINYINT) USING reftable")
+      spark.sql(s"INSERT INTO $cat.db20.t VALUES " +
+        s"(1, CAST(${Short.MinValue} AS SMALLINT), CAST(${Byte.MinValue} AS TINYINT)), " +
+        s"(2, CAST(${Short.MaxValue} AS SMALLINT), CAST(${Byte.MaxValue} AS TINYINT)), " +
+        "(3, NULL, NULL)")
+      spark.sql(s"ALTER TABLE $cat.db20.t ALTER COLUMN s TYPE BIGINT")
+      spark.sql(s"ALTER TABLE $cat.db20.t ALTER COLUMN b TYPE INT")
+      assert(spark.table(s"$cat.db20.t").schema.map(_.dataType.simpleString) ==
+        Seq("int", "bigint", "int"))
+      // the INT(16) / INT(8) files read at the new widths
+      def rows = spark.table(s"$cat.db20.t").orderBy("id").collect().toSeq.map(r =>
+        (r.getInt(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
+          Option(r.get(2)).map(_.asInstanceOf[Int])))
+      assert(rows == Seq(
+        (1, Some(Short.MinValue.toLong), Some(Byte.MinValue.toInt)),
+        (2, Some(Short.MaxValue.toLong), Some(Byte.MaxValue.toInt)),
+        (3, None, None)))
+      // a post-widen write lands at the new width; both widths read together
+      spark.sql(s"INSERT INTO $cat.db20.t VALUES (4, ${Long.MinValue}, ${Int.MinValue})")
+      assert(rows.last == (4, Some(Long.MinValue), Some(Int.MinValue)))
+      assert(spark.sql(s"SELECT id FROM $cat.db20.t WHERE s < 0 AND b < 0")
+        .collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 4))
+    }
+  }
+
   test("ALTER COLUMN TYPE widening is descriptor-only: old INT32/FLOAT files read widened") {
     withCatalog { (cat, wh) =>
       spark.sql(s"CREATE NAMESPACE $cat.db11")

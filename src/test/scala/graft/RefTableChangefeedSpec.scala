@@ -132,6 +132,18 @@ class RefTableChangefeedSpec extends AnyFunSuite {
     assert(first.select("g").distinct().count() == 1)
   }
 
+  test("a renamed column (columnMapping) streams under its logical name") {
+    // the delta scratch stores output-named columns, so the scan over it
+    // must not resolve the logical name through the table's mapping again
+    import spark.implicits._
+    val root = tmpDir("colmap")
+    VersionedTable.publish((1L to 20L).toDF("id").withColumn("amount", col("id") * 3), root)
+    val got = drain(root, "id BIGINT, price BIGINT", "id", tmpDir("colmap_ck"), "cf_colmap",
+      Map("columnMapping" -> "price:amount"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(got == (1L to 20L).map(i => (i, i * 3, "insert")), s"got: $got")
+  }
+
   test("validation: changefeed option misuse fails at analysis time") {
     def load(opts: Map[String, String]) = {
       var r = spark.readStream.format("reftable")

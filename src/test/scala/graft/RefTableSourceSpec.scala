@@ -26,6 +26,22 @@ class RefTableSourceSpec extends AnyFunSuite {
 
   private val ddl = "id BIGINT, name STRING"
 
+  /** Reads planned input partitions the way a scan task does: through the
+    * factory's columnar reader, one row per live row of each batch.
+    */
+  private def readPartitions(o: RefTableOptions,
+      parts: Array[org.apache.spark.sql.connector.read.InputPartition])
+      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    val factory = new graft.sources.reftable.RefTableReaderFactory(
+      o, o.outputSchema, Array.empty, None, graft.sources.reftable.HadoopConf.broadcast(spark))
+    parts.flatMap { p =>
+      val rdr = factory.createColumnarReader(p)
+      try Iterator.continually(rdr).takeWhile(_.next())
+        .flatMap(_ => rdr.get().rowIterator().asScala.map(_.copy())).toList
+      finally rdr.close()
+    }.toSeq
+  }
+
   test("batch read matches parquet contents") {
     val dir = Files.createTempDirectory("reftable_batch_").toString
     writeTable(dir, Seq((1L, "a"), (2L, "b")))
@@ -297,21 +313,6 @@ class RefTableSourceSpec extends AnyFunSuite {
       .option("path", dir).option("schema", decDdl).load()
     val exp = spark.read.parquet(dir).select("id", "amt", "d")
     assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0)
-    // row fallback path, driven directly
-    import graft.sources.reftable.{RefTableInputPartition, RefTablePartitionReader, SnapshotFiles}
-    val opts = RefTableOptions.from(new CaseInsensitiveStringMap(
-      Map("path" -> dir, "schema" -> decDdl).asJava))
-    val f = SnapshotFiles.list(dir).head
-    val rdr = new RefTablePartitionReader(
-      opts, opts.outputSchema, Array.empty,
-      RefTableInputPartition(f.path, 0L, f.length, f.length, 0L))
-    val rows = try Iterator.continually(rdr).takeWhile(_.next()).map(_.get().copy()).toList
-      finally rdr.close()
-    val byId = rows.sortBy(_.getLong(0))
-    assert(byId.size == 2)
-    assert(byId(0).getDecimal(1, 12, 2).toString == "123.45")
-    assert(byId(1).getDecimal(1, 12, 2).toString == "-7.89")
-    assert(byId(1).getInt(2) == -1) // 1969-12-31 = epoch day -1
   }
 
   test("admission control: a generation chunks at maxFilesPerTrigger with the gen pinned") {
@@ -551,18 +552,6 @@ class RefTableSourceSpec extends AnyFunSuite {
     // a filter on the evolved column is exact over null-filled rows
     assert(read(true).filter(col("score") > 5).collect().map(_.getLong(0)).toSeq == Seq(2L))
     assert(read(true).filter(col("score").isNull).collect().map(_.getLong(0)).toSeq == Seq(1L))
-    // row fallback path agrees (drive it directly on the old file)
-    import graft.sources.reftable.{RefTableInputPartition, RefTableOptions => RTO, RefTablePartitionReader, SnapshotFiles}
-    val o = RTO.from(new CaseInsensitiveStringMap(Map(
-      "path" -> dir, "schema" -> evolved, "allowMissingColumns" -> "true").asJava))
-    val oldFile = SnapshotFiles.list(dir).filter { f =>
-      val rdr = new RefTablePartitionReader(o, o.outputSchema, Array.empty,
-        RefTableInputPartition(f.path, 0L, f.length, f.length, 0L))
-      val rs = try Iterator.continually(rdr).takeWhile(_.next()).map(_.get().copy()).toList
-        finally rdr.close()
-      rs.exists(_.isNullAt(2))
-    }
-    assert(oldFile.size == 1, "the row path must also null-fill the evolved column")
   }
 
   test("time travel and version changefeeds on a versioned root") {
@@ -1092,8 +1081,10 @@ class RefTableSourceSpec extends AnyFunSuite {
     // delete+rename swap of a single staged file. A plain-parquet directory
     // has no snapshot isolation (a listing can pin a file the swap is about
     // to delete — the same hazard any non-transactional table rewrite has),
-    // so the swap runs right AFTER a generation's batch lands: with a 5s
-    // refresh that puts ~4.8s between the swap and the next listing.
+    // so the swap runs only once the CURRENT wall-clock generation's batch
+    // has shown v1 with at least 2s left before the next 5s boundary (the
+    // next listing); a batch that lands late in its generation waits for
+    // the next generation's.
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.hadoop.fs.{Path => HPath}
     val dir = Files.createTempDirectory("reftable_multigen_").toString
@@ -1127,8 +1118,9 @@ class RefTableSourceSpec extends AnyFunSuite {
       .start()
     def waitFor(cond: => Boolean): Boolean = {
       val deadline = System.currentTimeMillis() + 30000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      cond
+      var ok = cond
+      while (!ok && System.currentTimeMillis() < deadline) { Thread.sleep(100); ok = cond }
+      ok
     }
     // stage the v2 file up front so the post-observation swap is two
     // metadata ops (delete + rename), microseconds against the 5s margin
@@ -1137,8 +1129,13 @@ class RefTableSourceSpec extends AnyFunSuite {
     val fs = new HPath(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val staged = fs.listStatus(new HPath(staging))
       .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    assert(waitFor(perGen.synchronized(perGen.values.exists(_ == expected(1)))),
-      "v1 generation never observed")
+    def v1SafeToSwap: Boolean = {
+      val now = System.currentTimeMillis()
+      val gen = now / 5000L
+      (gen + 1) * 5000L - now >= 2000L &&
+        perGen.synchronized(perGen.get(gen).contains(expected(1)))
+    }
+    assert(waitFor(v1SafeToSwap), "v1 generation never observed early in its generation")
     fs.listStatus(new HPath(dir)).filter(_.getPath.getName.endsWith(".parquet"))
       .foreach(s => fs.delete(s.getPath, false))
     fs.rename(staged, new HPath(dir, "data_v2.parquet"))
@@ -1192,8 +1189,7 @@ class RefTableSourceSpec extends AnyFunSuite {
     // hosted across version dirs, each carrying partition values from the
     // manifest — the streaming listing must surface them and the declared
     // filter must still prune partitions before admission
-    import graft.sources.reftable.{RefTableInputPartition, RefTableMutations,
-      RefTablePartitionReader, VersionedTable}
+    import graft.sources.reftable.{RefTableMutations, VersionedTable}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val root = Files.createTempDirectory("reftable_pmstream_").toString + "/tbl"
@@ -1214,12 +1210,8 @@ class RefTableSourceSpec extends AnyFunSuite {
     val s = new RefTableMicroBatchStream(o, o.outputSchema,
       graft.sources.reftable.RefTableFilters.declared(o).toArray)
     val end = s.latestOffset(s.initialOffset(), s.getDefaultReadLimit)
-    val ids = s.planInputPartitions(s.initialOffset(), end).flatMap { p =>
-      val rdr = new RefTablePartitionReader(o, o.outputSchema, Array.empty,
-        p.asInstanceOf[RefTableInputPartition])
-      try Iterator.continually(rdr).takeWhile(_.next()).map(_.get().getLong(0)).toList
-      finally rdr.close()
-    }.sorted.toSeq
+    val ids = readPartitions(o, s.planInputPartitions(s.initialOffset(), end))
+      .map(_.getLong(0)).sorted
     assert(ids == (150L until 300L).filter(_ % 3 == 1).toSeq,
       "the stream must see the post-mutation b=1 partition exactly")
     assert(VersionedTable.resolve(root).isDefined)
@@ -1234,8 +1226,7 @@ class RefTableSourceSpec extends AnyFunSuite {
     // alive because newer manifests still name their files. Rows deleted by
     // the mutations MUST still be emitted (snapshot isolation), and only
     // commit() releases the pin.
-    import graft.sources.reftable.{RefTableInputPartition, RefTableMutations,
-      RefTablePartitionReader, VersionedTable}
+    import graft.sources.reftable.{RefTableMutations, VersionedTable}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val root = Files.createTempDirectory("reftable_pinvac_").toString + "/tbl"
@@ -1262,12 +1253,7 @@ class RefTableSourceSpec extends AnyFunSuite {
     val o3 = s.latestOffset(o2, s.getDefaultReadLimit).asInstanceOf[RefTableOffset]
     val parts = chunk1 ++ s.planInputPartitions(o1, o2) ++ s.planInputPartitions(o2, o3)
     assert(parts.length == 5, "the full pinned listing must still be drainable")
-    val ids = parts.flatMap { p =>
-      val rdr = new RefTablePartitionReader(o, o.outputSchema, Array.empty,
-        p.asInstanceOf[RefTableInputPartition])
-      try Iterator.continually(rdr).takeWhile(_.next()).map(_.get().getLong(0)).toList
-      finally rdr.close()
-    }.sorted.toSeq
+    val ids = readPartitions(o, parts).map(_.getLong(0)).sorted
     assert(ids == (0L until 500L),
       "the pinned snapshot must emit rows the mutations deleted (snapshot isolation)")
     s.commit(o3) // release the pin
@@ -1278,13 +1264,7 @@ class RefTableSourceSpec extends AnyFunSuite {
     var cur = s2.latestOffset(prev, s2.getDefaultReadLimit)
     val ids2 = scala.collection.mutable.Set[Long]()
     while (cur != prev) {
-      s2.planInputPartitions(prev, cur).foreach { p =>
-        val rdr = new RefTablePartitionReader(o, o.outputSchema, Array.empty,
-          p.asInstanceOf[RefTableInputPartition])
-        try Iterator.continually(rdr).takeWhile(_.next())
-          .foreach(r => ids2 += r.get().getLong(0))
-        finally rdr.close()
-      }
+      readPartitions(o, s2.planInputPartitions(prev, cur)).foreach(r => ids2 += r.getLong(0))
       prev = cur
       cur = s2.latestOffset(prev, s2.getDefaultReadLimit)
     }

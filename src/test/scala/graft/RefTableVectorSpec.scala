@@ -117,7 +117,7 @@ class RefTableVectorSpec extends AnyFunSuite {
     assert(got.toSeq == (1L to 5L).map(i => (i, Seq(i.toFloat, i + 0.5f))))
   }
 
-  test("vector columns survive merge-on-read deletes (DV-masked row path)") {
+  test("vector columns survive merge-on-read deletes (DV-masked columnar path)") {
     import spark.implicits._
     val root = tmp("mor")
     VersionedTable.publish(
