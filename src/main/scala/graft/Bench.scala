@@ -31,10 +31,12 @@ object Bench {
     }.mkString("\"", ",", "\"")
   }
   /** The exact stdout line for a given warm population — factored out so the
-    * line-length budget is spec-testable without running queries. */
+    * line-length budget is spec-testable without running queries. Entries
+    * that threw are not in `warm` (a failure's wall time is not a result):
+    * their numeric ids ride the `failed` list, omitted when empty. */
   def stdoutLine(
       warm: Seq[(String, Double)], sfName: String,
-      drain: Seq[(String, Double)] = Nil): String = {
+      drain: Seq[(String, Double)] = Nil, failed: Seq[String] = Nil): String = {
     // the drain map (operator-only seconds for streaming entries — wall
     // minus drain is lifecycle overhead, the component the host
     // environment band dominates) rides the recorded line again since
@@ -43,7 +45,10 @@ object Bench {
     // environment-band inflation is adjudicable from BENCH_r{N}.json alone
     val drainPart =
       if (drain.isEmpty) "" else s""","drain_unit":"cs","drain":${packed(drain)}"""
-    s"""{"metric":"total","value":${r3(warm.map(_._2).sum)},"unit":"sec","q_key":"NN=qNN","q_fmt":"NN:cs;bare=prev+1","queries":${packed(warm)}$drainPart,"sf":"$sfName"}"""
+    val failedPart =
+      if (failed.isEmpty) ""
+      else failed.map(short(_).toInt).sorted.mkString(""","failed":[""", ",", "]")
+    s"""{"metric":"total","value":${r3(warm.map(_._2).sum)},"unit":"sec","q_key":"NN=qNN","q_fmt":"NN:cs;bare=prev+1","queries":${packed(warm)}$drainPart$failedPart,"sf":"$sfName"}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -69,15 +74,23 @@ object Bench {
     // time streaming helpers report through BenchProbe (0 for batch
     // entries); wall minus drain is StreamingQuery lifecycle overhead,
     // the component the host environment band dominates
-    val results: Seq[(String, Seq[(Double, Double)])] =
+    // An entry that throws on any run is FAILED: it leaves the per-query
+    // map and the total (its wall time measures the failure, not the
+    // query) and is listed under "failed" instead
+    val outcomes: Seq[(String, Either[Throwable, Seq[(Double, Double)]])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        name -> (1 to runs).map { _ =>
+        name -> (try Right((1 to runs).map { _ =>
           BenchProbe.takeDrainSeconds()
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+          fn(spark, sfDir).count()
           ((System.nanoTime() - t0) / 1e9, BenchProbe.takeDrainSeconds())
-        }
+        }) catch { case e: Throwable => Left(e) })
     }
+    val failed = outcomes.collect { case (k, Left(e)) =>
+      System.err.println(s"[bench] $k failed: $e")
+      k
+    }
+    val results = outcomes.collect { case (k, Right(rs)) => k -> rs }
     def p50(xs: Seq[Double]): Double = xs.sorted.apply((xs.size - 1) / 2)
     // The harness that records this line keeps only the LAST ~2000 chars of
     // stdout; the full-name double-precision form was ~6 KB, so its opening
@@ -109,7 +122,7 @@ object Bench {
     // the EXACTLY-2000-char recorder window by 193 entries; round 16's
     // "NN:cs" pack (q_fmt field) brought 218 entries to ~900 chars.
     val sfName = new java.io.File(sfDir).getName
-    val line = stdoutLine(warm, sfName, drain)
+    val line = stdoutLine(warm, sfName, drain, failed)
     // full form (BENCH.json only): line + cold/runs attribution
     val full = line.stripSuffix(s""","sf":"$sfName"}""") +
       s""","cold_total":${r3(coldTotal)},"runs":$runs,"sf":"$sfName"}"""
@@ -120,7 +133,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(new java.io.File("BENCH.json"), "UTF-8")
       try w.println(full) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => System.err.println(s"[bench] BENCH.json not written: $e") }
     println(line)
     spark.stop()
   }

@@ -38,7 +38,7 @@ private[reftable] object ChangefeedDiff {
 
   def readListing(spark: SparkSession, opts: RefTableOptions,
       files: Seq[SnapshotFile], withMeta: Boolean): DataFrame =
-    RefTableMutations.readFilesForDiff(
+    RefTableMutations.readFilesEx(
       spark, opts.path, files, opts.physicalNesting,
       RefTableMutations.partitionTypesOf(opts), withMeta)
 

@@ -200,8 +200,10 @@ object SchemaJson {
   *  - `mergeMode`       same switch for SQL MERGE INTO (clause-hit rows
   *                      die by position, update images + inserts stage
   *                      as one file — the Iceberg write.merge.mode
-  *                      split; falls back to COW when an UPDATE SET
-  *                      names a partition column);
+  *                      split). Under `updateMode` and `mergeMode`
+  *                      alike, a SET on a partition column moves the
+  *                      row: its new image stages under the new
+  *                      partition;
   *  - `hiddenPartitions` comma-separated partition TRANSFORMS
   *                      (`days(ts)`, `bucket(16, user_id)`,
   *                      `truncate(4, name)` — [[RefTableTransforms]]):

@@ -3,7 +3,7 @@ package graft.sources.reftable
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, not, regexp_extract}
+import org.apache.spark.sql.functions.{broadcast, col, regexp_extract}
 
 /** Merge-on-read DELETE via deletion vectors — the Delta-DV / Iceberg
   * position-delete shape. A MoR delete commits O(deleted rows) bytes: the
@@ -162,16 +162,6 @@ object DeletionVectors {
     }
   }
 
-  /** Guard for operations that have not been taught deletion vectors and
-    * would silently resurrect deleted rows (footer-stats aggregates):
-    * refuse loudly with the materialization remedy.
-    */
-  def requireNone(versionDir: String, op: String, conf: Configuration): Unit =
-    if (hasDv(versionDir, conf))
-      throw new UnsupportedOperationException(
-        s"$op does not support a version with merge-on-read deletion vectors " +
-          s"($versionDir/$DvDir); run VersionedTable.compact first to materialize the deletes")
-
   /** Sidecar for a re-hosted listing (clone/promote): the linked files get
     * fresh names inside the new version dir, so the source's position keys
     * cannot carry verbatim — this writes ONE sidecar whose keys are the
@@ -204,10 +194,4 @@ object DeletionVectors {
       writer.write(g)
     } finally writer.close()
   }
-
-  /** SQL DELETE keep-filter, shared with the COW path: SQL semantics keep
-    * rows where the predicate is NULL.
-    */
-  def keepCondition(condition: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    not(org.apache.spark.sql.functions.coalesce(condition, org.apache.spark.sql.functions.lit(false)))
 }

@@ -16,8 +16,9 @@ import org.apache.spark.sql.graft.{ColumnBridge, DatasetBridge}
   * `ReplaceData`) demands a full executor-side DSv2 `BatchWrite`; the
   * reftable write path is deliberately a V1 fallback around the versioned
   * publish, so instead these statements are rewritten AT ANALYSIS TIME
-  * into driver commands over the same file-granular copy-on-write
-  * mutations that serve `DELETE FROM` and the programmatic API — the
+  * into driver commands over the same file-granular mutations (copy-on-
+  * write or merge-on-read, per the table's `updateMode`/`mergeMode`) that
+  * serve `DELETE FROM` and the programmatic API — the
   * custom-`Rule[LogicalPlan]` escape hatch Spark keeps for exactly the
   * operators its planner cannot express for a source. Injected by
   * [[graft.functions.GraftExtensions]]
@@ -331,24 +332,17 @@ case class RefTableDmlRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** Driver command for the rewritten `UPDATE`: a no-op on a never-published
-  * root (nothing to update), else the COW [[RefTableMutations.updateWhere]].
+  * root (nothing to update), else the table's `updateMode` picks the
+  * strategy ([[RefTableMutations.updateWhere]] or
+  * [[RefTableMutations.updateWhereMergeOnRead]]). A SET on a partition
+  * column moves the row under either.
   */
 case class UpdateRefTableCommand(
     opts: RefTableOptions, set: Map[String, Column], condition: Column)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    if (VersionedTable.resolve(opts.path).nonEmpty) {
-      if (opts.updateMode == "mergeOnRead" && !set.keys.exists(opts.partitionColumns.contains))
-        RefTableMutations.updateWhereMergeOnRead(spark, opts.path, set, condition,
-          opts.keepVersions, opts.partitionColumns, RefTableMutations.partitionTypesOf(opts),
-          gate = Some(opts))
-      else
-        // partition-column SET moves rows across directories — only the
-        // COW rewrite can restage them, so mergeOnRead falls back
-        RefTableMutations.updateWhere(spark, opts.path, set, condition, opts.keepVersions,
-          opts.partitionColumns, RefTableMutations.partitionTypesOf(opts),
-          gate = Some(opts))
-    }
+    if (VersionedTable.resolve(opts.path).nonEmpty)
+      RefTableMutations.sqlUpdate(spark, opts, set, condition)
     Seq.empty
   }
 }
@@ -361,22 +355,17 @@ case class UpdateRefTableCommand(
 case class DeleteRefTableCommand(opts: RefTableOptions, condition: Column)
     extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    if (VersionedTable.resolve(opts.path).nonEmpty) {
-      if (opts.deleteMode == "mergeOnRead")
-        RefTableMutations.deleteWhereMergeOnRead(spark, opts.path, condition,
-          opts.keepVersions, opts.partitionColumns,
-          RefTableMutations.partitionTypesOf(opts))
-      else
-        RefTableMutations.deleteWhere(spark, opts.path, condition, opts.keepVersions,
-          opts.partitionColumns, RefTableMutations.partitionTypesOf(opts))
-    }
+    if (VersionedTable.resolve(opts.path).nonEmpty)
+      RefTableMutations.sqlDelete(spark, opts, condition)
     Seq.empty
   }
 }
 
 /** Driver command for the rewritten `MERGE INTO`. A never-published target
   * bootstraps as an empty version first (so a pure-insert merge into a
-  * fresh table works), then runs [[RefTableMutations.mergeClauses]].
+  * fresh table works); then the table's `mergeMode` picks the strategy
+  * ([[RefTableMutations.mergeClauses]] or
+  * [[RefTableMutations.mergeClausesMergeOnRead]]).
   */
 case class MergeRefTableCommand(
     opts: RefTableOptions, sourcePlan: LogicalPlan, keys: Seq[(String, Column)],
@@ -394,30 +383,13 @@ case class MergeRefTableCommand(
         spark.createDataFrame(new java.util.ArrayList[Row](), storage).repartition(1),
         opts.path, opts.keepVersions)
     }
-    // the join keys become same-named source columns, so mergeClauses'
+    // the join keys become same-named source columns, so the engine's
     // equi-join matches the ON clause exactly
     val source = DatasetBridge.ofRows(spark, sourcePlan)
       .select(keys.map { case (k, e) => e.as(k) } ++
         source0Cols(sourcePlan).map(org.apache.spark.sql.functions.col): _*)
-    val updSetsPartitionCol =
-      (update.toSeq ++ nmbsUpdate.toSeq)
-        .exists(_._2.keys.exists(opts.partitionColumns.contains))
-    if (opts.mergeMode == "mergeOnRead" && !updSetsPartitionCol)
-      RefTableMutations.mergeClausesMergeOnRead(spark, opts.path, source, keys.map(_._1),
-        update, delete, insert, opts.keepVersions,
-        opts.partitionColumns, RefTableMutations.partitionTypesOf(opts),
-        gate = Some(opts),
-        notMatchedBySourceUpdate = nmbsUpdate, notMatchedBySourceDelete = nmbsDelete,
-        nmbsUpdateFirst = nmbsUpdateFirst)
-    else
-      // partition-column SET moves rows across directories — only the COW
-      // rewrite can restage them, so mergeOnRead falls back
-      RefTableMutations.mergeClauses(spark, opts.path, source, keys.map(_._1),
-        update, delete, insert, opts.keepVersions,
-        opts.partitionColumns, RefTableMutations.partitionTypesOf(opts),
-        gate = Some(opts),
-        notMatchedBySourceUpdate = nmbsUpdate, notMatchedBySourceDelete = nmbsDelete,
-        nmbsUpdateFirst = nmbsUpdateFirst)
+    RefTableMutations.sqlMerge(spark, opts, source, keys.map(_._1),
+      update, delete, insert, nmbsUpdate, nmbsDelete, nmbsUpdateFirst)
     Seq.empty
   }
 

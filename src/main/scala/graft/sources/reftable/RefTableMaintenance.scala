@@ -123,8 +123,7 @@ object RefTableMaintenance {
     val readAmp = declared
       .filter(d => (d.kind == "cluster" || d.kind == "zorder") && d.cols.nonEmpty)
       .flatMap(d => readAmplification(dir, files, d.cols.head, conf))
-    val bucketMarker = new Path(dir, VersionedTable.BucketsMarker)
-      .getFileSystem(conf).exists(new Path(dir, VersionedTable.BucketsMarker))
+    val bucketMarker = VersionedTable.bucketLayout(dir, conf).nonEmpty
     // merge-on-read delete pressure: sidecar count only (a directory
     // listing — the census must stay metadata-cheap per table)
     val dv = DeletionVectors.sidecars(dir, conf).size

@@ -277,7 +277,6 @@ object RefTableMetaTables {
       case None => Array(row("status", "unpublished"))
       case Some(dir) =>
         val name = new Path(dir).getName
-        val fs = new Path(dir).getFileSystem(conf)
         val manifest = RefTableFileManifest.exists(root, name, conf)
         val pvCols: Seq[String] = partitionColsOf(root, conf)
         val files = SnapshotFiles.list(dir, pvCols)
@@ -288,16 +287,8 @@ object RefTableMetaTables {
           row("bytes", files.map(_.length).sum.toString))
         val partitioned =
           if (pvCols.nonEmpty) Seq(row("partition_columns", pvCols.mkString(","))) else Nil
-        val bp = new Path(dir, VersionedTable.BucketsMarker)
-        val bucketed = if (!fs.exists(bp)) Nil else {
-          val in = fs.open(bp)
-          val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-            finally in.close()
-          import scala.jdk.CollectionConverters._
-          Seq(
-            row("bucket_columns", Option(node.get("cols"))
-              .map(_.elements().asScala.map(_.asText()).mkString(",")).getOrElse("")),
-            row("bucket_count", node.path("n").asInt(0).toString))
+        val bucketed = VersionedTable.bucketLayout(dir, conf).toSeq.flatMap { case (cols, n) =>
+          Seq(row("bucket_columns", cols.mkString(",")), row("bucket_count", n.toString))
         }
         (base ++ partitioned ++ bucketed).toArray
     }

@@ -2,16 +2,18 @@ package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, hash, lit, max, min, not, pmod, when}
-import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, hash, lit,
+  max, min, not, pmod, slice, sort_array, sum, when}
+import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, In, LessThanOrEqual}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** File-granular copy-on-write mutations for versioned table roots: DELETE
-  * and keyed MERGE (upsert) publish a NEW version in which only the files
-  * that MAY contain affected rows are rewritten; every other file of the
-  * current version is carried by REFERENCE — the new version directory
-  * holds the rewritten files plus a `_FILES.json` manifest naming the
-  * inherited ones in their original version dirs
+/** File-granular mutations for versioned table roots: DELETE, UPDATE,
+  * keyed upsert, MERGE and changefeed apply publish a NEW version in which
+  * only the files that MAY contain affected rows are touched; every other
+  * file of the current version is carried by REFERENCE — the new version
+  * directory holds the staged files plus a `_FILES.json` manifest naming
+  * the inherited ones in their original version dirs
   * ([[RefTableFileManifest]]). A 1-file delete on a 10k-file table commits
   * O(1) data files and O(1) manifest entries; before manifests every
   * mutation hard-linked/copied all carried files — O(total files)
@@ -20,13 +22,24 @@ import org.apache.spark.sql.sources.Filter
   * versions still name survives its own commit's expiry
   * ([[RefTableFileManifest.protectedDirs]]).
   *
+  * One pipeline serves every DML (the Delta "find the touched files, then
+  * rewrite or mark" shape): the DML derives ONE change set from one pinned
+  * base — the narrowed files, the filters the commit rebase re-tests, what
+  * it removes from those files (a key set, or a row edit), and the rows it
+  * lands — and one write strategy, chosen once by the caller, lands it.
+  * Copy-on-write rewrites the narrowed files (survivors plus new rows);
+  * merge-on-read leaves them in place, marks the removed rows' positions in
+  * one `_DV/` sidecar ([[DeletionVectors]]) and stages only the new rows.
+  * The `*MergeOnRead` entry points are the same DMLs under the second
+  * strategy.
+  *
   * "May contain" comes from the publish-time statistics manifest
   * ([[RefTableStats.prune]]) — the same machinery that skips files at read
   * time decides which files a mutation must touch. On a table clustered or
   * z-ordered by the mutation's dimensions, a selective DELETE or a
-  * key-local upsert rewrites O(matching) files; without stats (or with a
-  * predicate stats can't bound) every file conservatively rewrites, which
-  * is plain copy-on-write — never wrong, just not narrow.
+  * key-local upsert touches O(matching) files; without stats (or with a
+  * predicate stats can't bound) every file is conservatively touched —
+  * never wrong, just not narrow.
   *
   * Readers are never endangered: mutations are ordinary publishes
   * (staged version dir + atomic pointer swap + retention), so pinned
@@ -39,12 +52,12 @@ import org.apache.spark.sql.sources.Filter
   * losing one.
   *
   * Partitioned layouts: mutations accept the layout's declared
-  * `partitionColumns` (and optional `partitionTypes`); rewritten rows
-  * restage under their `col=value` directories, carried files keep
-  * theirs, and partition pruning joins stats pruning in the may-match
-  * narrowing. Callers that omit the declared partition columns for a
-  * partitioned root get a flat rewrite of the touched files — correct
-  * but layout-degrading, so [[RefTableDml]] always threads them.
+  * `partitionColumns` (and optional `partitionTypes`); staged rows land
+  * under their `col=value` directories (so a SET on a partition column
+  * moves the row, under either strategy), carried files keep theirs, and
+  * partition pruning joins stats pruning in the may-match narrowing.
+  * Callers that omit the declared partition columns for a partitioned root
+  * are refused ([[resolveLayout]]), so [[RefTableDml]] always threads them.
   *
   * Layout drift: carried-over files keep their clustering; REWRITTEN
   * files are written unclustered (their manifest bounds are still exact,
@@ -111,7 +124,7 @@ object RefTableMutations {
     gate.filter(_.expectations.nonEmpty) match {
       case None => lit(true)
       case Some(o) =>
-        import org.apache.spark.sql.functions.{concat_ws, sum}
+        import org.apache.spark.sql.functions.concat_ws
         val preds = gatePreds(spark, o, image)
         val passAll = preds.map(_._2).reduce(_ && _)
         o.onViolation match {
@@ -140,6 +153,318 @@ object RefTableMutations {
         }
     }
 
+  // ===== one mutation pipeline: base → change set → write strategy =====
+
+  /** The pinned base every DML derives from: the resolved current version,
+    * its listing, and its merged schema. mergeSchema because an adopted
+    * version (or one assembled by earlier mutations) can hold files
+    * predating a column; a sampled schema would silently DROP those
+    * columns from rewritten rows.
+    */
+  private final class Base(val spark: SparkSession, val root: String,
+      val partitionColumns: Seq[String], val partitionTypes: Map[String, DataType]) {
+    val conf: Configuration = HadoopConf()
+    val current: String = resolveLayout(root, conf, partitionColumns)
+    // manifest-aware listing: manifest-referenced versions resolve their
+    // `_FILES.json` chain, physical ones walk the declared partition tree
+    val files: Seq[SnapshotFile] = SnapshotFiles.list(current, partitionColumns)
+    lazy val schema: StructType =
+      readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
+    lazy val types: Map[String, DataType] = schema.fields.map(f => f.name -> f.dataType).toMap
+    lazy val popts: RefTableOptions = pruneOpts(root, schema, partitionColumns, partitionTypes)
+    def version: String = new Path(current).getName
+
+    /** Files whose partition values and stats cannot rule out `filters`. */
+    def prune(filters: Seq[Filter]): Seq[SnapshotFile] =
+      RefTableStats.prune(current,
+        RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
+
+    /** Live rows of `fs` (pinned deletion vectors subtracted). */
+    def read(fs: Seq[SnapshotFile]): DataFrame =
+      readFilesEx(spark, root, fs, partitionColumns, partitionTypes, withMeta = false)
+
+    /** Live rows of `fs` with their `__rel`/`__pos` file coordinates. The
+      * coordinate read cannot subtract deletion vectors itself, so the
+      * pinned positions are anti-joined here: without it, a row removed by
+      * an EARLIER merge-on-read commit would match again (and an update
+      * would stage its image twice).
+      */
+    def readWithCoords(fs: Seq[SnapshotFile]): DataFrame = {
+      val raw = readFilesEx(spark, root, fs, partitionColumns, partitionTypes, withMeta = true)
+      val pinned = fs.flatMap(f => f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
+      if (pinned.isEmpty) raw else {
+        import spark.implicits._
+        val dv = pinned.toDF("__dv_file", "__dv_pos")
+        raw.join(broadcast(dv),
+          raw("__rel") === dv("__dv_file") && raw("__pos") === dv("__dv_pos"), "left_anti")
+      }
+    }
+  }
+
+  /** One DML's change over its base: the narrowed files it may touch, what
+    * the commit rebase re-tests ([[Conflicts]]), which of the narrowed
+    * files' live rows it removes, and the rows it lands besides — built
+    * from those live rows (None when nothing was narrowed) or, for the
+    * streaming writer, epoch files already written that `stage` moves into
+    * the version.
+    */
+  private final case class ChangeSet(
+      base: Base,
+      narrowed: Seq[SnapshotFile],
+      conflicts: Conflicts,
+      removed: Removed,
+      lands: Option[DataFrame] => Option[DataFrame] = _ => None,
+      stage: Option[Path => Unit] = None)
+
+  private sealed trait Removed
+  /** Every live row whose key appears in `keys` (upsert, applyChanges). */
+  private final case class ByKeys(keyCols: Seq[String], keys: DataFrame) extends Removed
+  /** A row edit over the live rows (delete, update, merge). */
+  private final case class ByRows(edit: DataFrame => Edit) extends Removed
+
+  /** A row edit over `frame`, built from the narrowed files' live rows:
+    * `dies` marks the rows whose old image goes, `imaged` the dying rows
+    * that land an after-image, and `project` yields that image where
+    * `imaged` holds and the row unchanged elsewhere.
+    */
+  private final case class Edit(
+      frame: DataFrame, dies: Column, imaged: Option[Column], project: Seq[Column])
+
+  /** What the commit rebase re-tests against concurrently added files. */
+  private sealed trait Conflicts
+  /** The read predicate's pushable filters (delete, update). */
+  private final case class PredicateConflicts(filters: Seq[Filter]) extends Conflicts
+  /** The source's key bounds; None = its keys are all NULL, so nothing
+    * added can match (upsert, merge, applyChanges). */
+  private final case class KeyConflicts(filters: Option[Seq[Filter]]) extends Conflicts
+  /** The change read every file (NOT MATCHED BY SOURCE): no delta is
+    * provably disjoint, so a lost claim always re-derives. */
+  private case object ReadsAll extends Conflicts
+
+  /** How a change set lands, chosen once by the caller. */
+  private sealed abstract class WriteStrategy {
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String
+  }
+
+  /** Rewrite the narrowed files: their survivors and after-images, plus the
+    * landed rows, in one write; the manifest drops the narrowed files. */
+  private case object CopyOnWrite extends WriteStrategy {
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String = {
+      val live = if (cs.narrowed.isEmpty) None else Some(cs.base.read(cs.narrowed))
+      val rewritten = live.map(l => cs.removed match {
+        case ByKeys(keyCols, keys) => l.join(keys, keyCols, "left_anti")
+        case ByRows(edit) =>
+          val e = edit(l)
+          e.frame.filter(e.imaged.foldLeft(not(e.dies))(_ || _)).select(e.project: _*)
+      })
+      // the may-match subset can lack columns other files carry —
+      // null-fill instead of failing (readers null-fill them too)
+      val rows = (rewritten ++ cs.lands(live))
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      publish(cs, keepVersions, txn, rewrites = true, stagesImages = false) { staging =>
+        rows.foreach(VersionedTable.writeParquetMicros(
+          _, staging.toString, cs.base.partitionColumns))
+      }
+    }
+  }
+
+  /** Leave the narrowed files in place: stage only the after-images and
+    * landed rows, and mark the removed rows' positions (pinned deletion
+    * vectors subtracted) in one `_DV/` sidecar. The commit is O(changed
+    * rows), never O(narrowed file bytes); readers subtract positions,
+    * [[VersionedTable.compact]] materializes.
+    */
+  private case object MergeOnRead extends WriteStrategy {
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String = {
+      val live = if (cs.narrowed.isEmpty) None else Some(cs.base.readWithCoords(cs.narrowed))
+      val (images, dying) = cs.removed match {
+        case ByKeys(keyCols, keys) =>
+          (None, live.map(_.join(keys.distinct(), keyCols, "left_semi")))
+        case ByRows(edit) => live.map(edit) match {
+          case None => (None, None)
+          case Some(e) =>
+            (e.imaged.map(i => e.frame.filter(i).select(e.project: _*)),
+              Some(e.frame.filter(e.dies)))
+        }
+      }
+      val rows = (images ++ cs.lands(live))
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+      publish(cs, keepVersions, txn, rewrites = false, stagesImages = images.nonEmpty) { staging =>
+        // new rows first: writeParquetMicros owns creating the staging dir
+        // and refuses a pre-existing one; the sidecar goes beneath it
+        rows.foreach(VersionedTable.writeParquetMicros(
+          _, staging.toString, cs.base.partitionColumns))
+        cs.stage.foreach(_(staging))
+        // one sidecar per commit: the position set of one change is the
+        // small side by construction
+        dying.foreach(_.select(col("__rel").as("file"), col("__pos").as("pos"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(new Path(staging, DeletionVectors.DvDir).toString))
+      }
+    }
+  }
+
+  /** The publish both strategies share: CAS on the base, a `_FILES.json`
+    * delta inheriting the base's files — minus the narrowed ones when the
+    * strategy `rewrites` them — and the rebase spec of [[VersionedTable.
+    * RebaseSpec]]: the narrowed files are the read set (and the rewrite
+    * set when `rewrites`). Predicate-local changes tolerate blind appends
+    * (the Delta write-serializable rule) and conflict with a delta that
+    * adds a file the predicate may match. Key-matching changes also
+    * conflict with blind appends that may carry the source's keys (two
+    * concurrent upserts of one new key must not both insert it), and with
+    * concurrent position marks on read files (their staged images could
+    * duplicate a concurrently mutated row) — as merge-on-read UPDATE does
+    * (`stagesImages`). A `txn` marks the commit for exactly-once replay,
+    * and a rebase re-checks it against the moved head before re-claiming.
+    */
+  private def publish(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)],
+      rewrites: Boolean, stagesImages: Boolean)(populate: Path => Unit): String = {
+    val b = cs.base
+    val rels = relsOf(b.root, cs.narrowed, b.conf)
+    def spec(keyed: Boolean, mayMatch: (String, Seq[RefTableFileManifest.Entry]) => Boolean) =
+      VersionedTable.RebaseSpec(removedRel = if (rewrites) rels else Set.empty, readRel = rels,
+        addedMayMatch = mayMatch, conflictOnBlindAppend = keyed,
+        stagesImages = keyed || stagesImages, partitionColumns = b.partitionColumns,
+        revalidate = () => !txn.exists(replayed(b, _)))
+    val rebase = cs.conflicts match {
+      case PredicateConflicts(filters) => Some(spec(keyed = false, statsOverlap(b, filters)))
+      case KeyConflicts(Some(filters)) => Some(spec(keyed = true, statsOverlap(b, filters)))
+      // all-NULL source keys: an equi-join key never matches NULL
+      case KeyConflicts(None) => Some(spec(keyed = true, (_, _) => false))
+      case ReadsAll => None
+    }
+    VersionedTable.publishVia(b.root, keepVersions,
+      marker = txn.map { case (a, n) => s"txn:$a:$n" },
+      parent = Some(b.version), requireBase = true, rebase = rebase) { staging =>
+      populate(staging)
+      referenceRest(b.root, staging, b.current, if (rewrites) cs.narrowed else Nil,
+        b.conf, b.partitionColumns)
+    }
+  }
+
+  /** Run one DML: pin a base, build its change set, land it with
+    * `strategy`, under the commit CAS and conflict retry (each attempt
+    * re-derives from the new current).
+    */
+  private def mutate(spark: SparkSession, root: String, keepVersions: Int,
+      partitionColumns: Seq[String], partitionTypes: Map[String, DataType],
+      strategy: WriteStrategy, txn: Option[(String, Long)] = None)(
+      build: Base => ChangeSet): String =
+    VersionedTable.withConflictRetry(root) { () =>
+      val b = new Base(spark, root, partitionColumns, partitionTypes)
+      // streaming exactly-once: base pinned BEFORE the marker check, and
+      // the publish CAS requires that base — the same unsplittable
+      // check-then-commit as RefTableWrites.appendVersion. A replayed epoch
+      // (restart or zombie attempt) sees its own txn marker and lands nothing.
+      if (txn.exists(replayed(b, _))) b.version
+      else strategy.land(build(b), keepVersions, txn)
+    }
+
+  /** The SQL surfaces' DELETE, UPDATE and MERGE on a table: its
+    * `deleteMode`/`updateMode`/`mergeMode` picks the write strategy, and
+    * its declared expectations gate the after-images.
+    */
+  private[reftable] def sqlDelete(
+      spark: SparkSession, opts: RefTableOptions, condition: Column): String =
+    onTable(spark, opts, opts.deleteMode)(deleteSet(_, condition))
+
+  private[reftable] def sqlUpdate(spark: SparkSession, opts: RefTableOptions,
+      set: Map[String, Column], condition: Column): String =
+    onTable(spark, opts, opts.updateMode)(updateSet(_, set, condition, Some(opts)))
+
+  private[reftable] def sqlMerge(spark: SparkSession, opts: RefTableOptions,
+      source: DataFrame, keyCols: Seq[String],
+      update: Option[(Column, Map[String, Column])], delete: Option[Column],
+      insert: Option[(Column, Map[String, Column])],
+      nmbsUpdate: Option[(Column, Map[String, Column])], nmbsDelete: Option[Column],
+      nmbsUpdateFirst: Boolean): String =
+    onTable(spark, opts, opts.mergeMode)(mergeSet(_, source, keyCols, update, delete, insert,
+      Some(opts), nmbsUpdate, nmbsDelete, nmbsUpdateFirst))
+
+  private def onTable(spark: SparkSession, opts: RefTableOptions, mode: String)(
+      build: Base => ChangeSet): String =
+    mutate(spark, opts.path, opts.keepVersions, opts.partitionColumns, partitionTypesOf(opts),
+      if (mode == "mergeOnRead") MergeOnRead else CopyOnWrite)(build)
+
+  private def replayed(b: Base, txn: (String, Long)): Boolean =
+    RefTableWrites.lastCommittedBatch(b.root, txn._1, b.conf).exists(_ >= txn._2)
+
+  /** Predicate narrowing (DELETE/UPDATE): stats and partition pruning under
+    * the predicate's pushable filters, intersected on bucketed layouts with
+    * the buckets its key equalities hash to.
+    */
+  private def narrowByPredicate(b: Base, condition: Column): (Seq[SnapshotFile], Seq[Filter]) = {
+    val filters = RefTableFilters.fromPredicate(b.spark, b.schema, condition)
+    val mayMatch = if (filters.isEmpty) b.files else b.prune(filters)
+    (inBuckets(mayMatch, bucketsOfFilters(b, filters)), filters)
+  }
+
+  private final case class KeyNarrowing(
+      empty: Boolean, narrowed: Seq[SnapshotFile], filters: Option[Seq[Filter]], row: Row)
+
+  /** Key narrowing (upsert, MERGE, applyChanges) in ONE aggregation job over
+    * `source`: its row count, `extra` aggregates the caller reads back from
+    * `row` (columns 1..extra.size), each key column's [min, max], and — when
+    * EVERY partition column is part of the key — the source's partition
+    * values. The key bounds are sound for ANY key arity: a row matching on
+    * ALL key columns falls inside every column's source bounds, so a file
+    * whose stats are disjoint on ANY single key column provably hosts no
+    * match. The partition values are sound only under the stated
+    * condition: a file in partition p holds rows with p alone, and key
+    * matching then implies partition equality. ≤64 distinct values become
+    * an In filter (exact cells); more fall back to [min, max] bounds.
+    * Bucketed layouts then narrow to the source's bucket ids.
+    *
+    * `filters` None means some key column is entirely NULL in the source:
+    * an equi-join key never matches NULL, so nothing is narrowed.
+    */
+  private def narrowByKeys(b: Base, source: DataFrame, keyCols: Seq[String],
+      extra: Seq[Column] = Nil): KeyNarrowing = {
+    val pc = b.partitionColumns
+    val partKeyed = pc.nonEmpty && pc.forall(keyCols.contains)
+    val aggs = (count(lit(1)) +: extra) ++
+      keyCols.flatMap(k => Seq(min(col(k)), max(col(k)))) ++
+      (if (!partKeyed) Nil else pc.flatMap(c => Seq(min(col(c)), max(col(c)),
+        slice(sort_array(collect_set(col(c))), 1, 65))))
+    val row = source.agg(aggs.head, aggs.tail: _*).first()
+    val keyBase = 1 + extra.size
+    val per = keyCols.indices.map { i =>
+      val at = keyBase + 2 * i
+      if (row.isNullAt(at)) None
+      else Some(Seq[Filter](GreaterThanOrEqual(keyCols(i), row.get(at)),
+        LessThanOrEqual(keyCols(i), row.get(at + 1))))
+    }
+    if (row.getLong(0) == 0L) KeyNarrowing(empty = true, Nil, None, row)
+    else if (per.exists(_.isEmpty)) KeyNarrowing(empty = false, Nil, None, row)
+    else {
+      val partBase = keyBase + 2 * keyCols.size
+      val partFilters: Seq[Filter] = if (!partKeyed) Nil else pc.indices.flatMap { i =>
+        val (lo, hi, set) = (row.get(partBase + 3 * i), row.get(partBase + 3 * i + 1),
+          row.getSeq[Any](partBase + 3 * i + 2))
+        if (lo == null) Nil // no non-null partition key in the source
+        else if (set.size <= 64) Seq(In(pc(i), set.toArray))
+        else Seq(GreaterThanOrEqual(pc(i), lo), LessThanOrEqual(pc(i), hi))
+      }
+      val filters = per.flatten.flatten ++ partFilters
+      KeyNarrowing(empty = false,
+        inBuckets(b.prune(filters), bucketsOfKeys(b, source, keyCols)), Some(filters), row)
+    }
+  }
+
+  private def requireKeys(keyCols: Seq[String], cols: Seq[String]): Unit =
+    require(keyCols.forall(cols.contains),
+      s"key columns ${keyCols.filterNot(cols.contains).mkString(", ")} not in the table")
+
+  private def requireColumns(what: String, source: DataFrame, cols: Seq[String]): Unit = {
+    val missing = cols.filterNot(source.columns.contains)
+    require(missing.isEmpty, s"$what is missing table column(s): ${missing.mkString(", ")}")
+  }
+
+  /** A live frame's table columns: everything but the file coordinates. */
+  private def tableCols(live: DataFrame): Seq[String] =
+    live.columns.toSeq.filterNot(c => c == "__rel" || c == "__pos")
+
   /** Delete rows where `condition` is TRUE (SQL DELETE semantics: rows
     * where it is NULL are kept) and publish the result as the next
     * version. Returns the new version name.
@@ -147,40 +472,9 @@ object RefTableMutations {
   def deleteWhere(
       spark: SparkSession, root: String, condition: Column,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): String =
-    VersionedTable.withConflictRetry(root) { () =>
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    // mergeSchema: an adopted version (or one assembled by earlier
-    // mutations) can hold files predating a column; the sampled-schema
-    // default would silently DROP those columns from rewritten rows
-    val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
-    val popts = pruneOpts(root, schema, partitionColumns, partitionTypes)
-    val filters = RefTableFilters.fromPredicate(spark, schema, condition)
-    val mayMatch0 = if (filters.isEmpty) files
-      else RefTableStats.prune(current,
-        RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
-    // bucketed layouts: a key-equality delete narrows to the keys' buckets
-    val mayMatch = if (mayMatch0.isEmpty) mayMatch0
-      else bucketNarrowByFilters(spark, current, files, filters,
-        schema.fields.map(f => f.name -> f.dataType).toMap, conf) match {
-        case Some(keep) => mayMatch0.filter(f => keep.contains(f.path))
-        case None => mayMatch0
-      }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      rebase = Some(cowSpec(root, mayMatch, partitionColumns, filters, popts, conf))) { staging =>
-      if (mayMatch.nonEmpty) {
-        // keep ⇔ NOT(cond IS TRUE): rows where the predicate is NULL
-        // survive a SQL DELETE, and a bare !cond would drop them
-        val kept = readFiles(spark, root, mayMatch, partitionColumns, partitionTypes)
-          .filter(not(coalesce(condition, lit(false))))
-        VersionedTable.writeParquetMicros(kept, staging.toString, partitionColumns)
-      }
-      referenceRest(root, staging, current, mayMatch, conf, partitionColumns)
-    }
-  }
+      partitionTypes: Map[String, DataType] = Map.empty): String =
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite)(
+      deleteSet(_, condition))
 
   /** Merge-on-read DELETE: rows where `condition` is TRUE are marked in
     * `_DV/` position sidecars instead of rewriting any data file — the
@@ -202,51 +496,16 @@ object RefTableMutations {
   def deleteWhereMergeOnRead(
       spark: SparkSession, root: String, condition: Column,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty): String =
-    VersionedTable.withConflictRetry(root) { () =>
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
-    val popts = pruneOpts(root, schema, partitionColumns, partitionTypes)
-    val filters = RefTableFilters.fromPredicate(spark, schema, condition)
-    val mayMatch0 = if (filters.isEmpty) files
-      else RefTableStats.prune(current,
-        RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
-    val mayMatch = if (mayMatch0.isEmpty) mayMatch0
-      else bucketNarrowByFilters(spark, current, files, filters,
-        schema.fields.map(f => f.name -> f.dataType).toMap, conf) match {
-        case Some(keep) => mayMatch0.filter(f => keep.contains(f.path))
-        case None => mayMatch0
-      }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      // MoR: removes nothing (removedRel empty — concurrent position marks
-      // union against pure-DV deltas), but a concurrent REWRITE of a marked
-      // file orphans our positions, so the marked set is the read set
-      rebase = Some(VersionedTable.RebaseSpec(
-        removedRel = Set.empty, readRel = relsOf(root, mayMatch, conf),
-        addedMayMatch = statsOverlap(root, filters, popts, conf),
-        partitionColumns = partitionColumns))) { staging =>
-      if (mayMatch.nonEmpty) {
-        // position pass over only the may-match files: rows where the
-        // predicate is TRUE become (file, pos) sidecar entries (NULL
-        // keeps, like SQL DELETE). Already-DV'd positions may re-mark —
-        // sidecar loads deduplicate, so that is inert.
-        val marked = readFilesEx(spark, root, mayMatch, partitionColumns, partitionTypes,
-            withMeta = true)
-          .filter(coalesce(condition, lit(false)))
-          .select(col("__rel").as("file"), col("__pos").as("pos"))
-        // one sidecar per commit (the position set of one delete is the
-        // small side by construction; a delete wide enough to make this
-        // file huge should have been COW)
-        marked.coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, DeletionVectors.DvDir).toString)
-      }
-      // data listing unchanged: inherit every parent file; writeDelta
-      // also carries the parent's existing sidecars in beside ours
-      referenceRest(root, staging, current, Nil, conf, partitionColumns)
-    }
+      partitionTypes: Map[String, DataType] = Map.empty): String =
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead)(
+      deleteSet(_, condition))
+
+  /** DELETE's change set: the rows where `condition` is TRUE die (a bare
+    * !cond would also drop the rows where it is NULL). */
+  private def deleteSet(b: Base, condition: Column): ChangeSet = {
+    val (narrowed, filters) = narrowByPredicate(b, condition)
+    ChangeSet(b, narrowed, PredicateConflicts(filters), ByRows(live =>
+      Edit(live, coalesce(condition, lit(false)), None, tableCols(live).map(col))))
   }
 
   /** Keyed MERGE (upsert): rows of `source` replace current rows with the
@@ -267,71 +526,10 @@ object RefTableMutations {
   def upsert(
       spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      partitionTypes: Map[String, DataType] = Map.empty,
       gate: Option[RefTableOptions] = None): String =
-    VersionedTable.withConflictRetry(root) { () =>
-    require(keyCols.nonEmpty, "upsert needs at least one key column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    // mergeSchema: see deleteWhere — never let a sampled schema narrow
-    // the rewrite of a mixed-schema version
-    val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
-    val curCols = cur.columns.toSeq
-    require(keyCols.forall(curCols.contains),
-      s"key columns ${keyCols.filterNot(curCols.contains).mkString(", ")} not in the table")
-    val missing = curCols.filterNot(source.columns.contains)
-    require(missing.isEmpty,
-      s"upsert source is missing table column(s): ${missing.mkString(", ")}")
-    val aligned0 = source.select(curCols.map(col): _*)
-    // every source row is a full after-image; a dropped (violating) row's
-    // mutation is skipped entirely — its key neither updates nor inserts
-    val aligned = materializeComputedSource(aligned0.filter(
-      gateApply(spark, gate, aligned0, lit(true), col, "upsert")))
-
-    // ONE aggregation job answers emptiness AND the per-key-column bounds
-    // (a separate isEmpty was a whole extra Spark job per commit —
-    // sustained single-row mutation chains pay it 1:1 per upsert).
-    // keyFilters also feed the rebase conflict check (concurrently-added
-    // files overlapping the source's key bounds force a re-derive).
-    val (empty, mayMatch, keyFilters): (Boolean, Seq[SnapshotFile], Option[Seq[Filter]]) = {
-      val aggs = Seq(org.apache.spark.sql.functions.count(lit(1))) ++ keyBoundAggs(keyCols)
-      val mm = aligned.agg(aggs.head, aggs.tail: _*).first()
-      if (mm.getLong(0) == 0L) (true, Nil, None)
-      else keyBoundFilters(keyCols, mm, 1) match {
-        case None => (false, Nil, None) // a key column is all-null: pure inserts
-        case Some(filters) =>
-          val popts = pruneOpts(root, cur.schema, partitionColumns, partitionTypes)
-          (false, RefTableStats.prune(current,
-            RefTablePartitioning.prune(files, popts, filters), popts, filters, conf),
-            Some(filters))
-      }
-    }
-    // hash-bucketed layouts narrow by the source's bucket ids, intersected
-    // with the stats narrowing above — scattered point keys stay O(batch)
-    val narrowed =
-      if (empty || mayMatch.isEmpty) mayMatch
-      else bucketNarrow(current, files, aligned, keyCols,
-        cur.schema.fields.map(f => f.name -> f.dataType).toMap, conf) match {
-        case Some(keep) => mayMatch.filter(f => keep.contains(f.path))
-        case None => mayMatch
-      }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      rebase = Some(keyedSpec(root, narrowed, partitionColumns, keyFilters,
-        pruneOpts(root, cur.schema, partitionColumns, partitionTypes), conf))) { staging =>
-      val rewritten =
-        if (narrowed.isEmpty) aligned
-        else readFiles(spark, root, narrowed, partitionColumns, partitionTypes)
-          .join(aligned.select(keyCols.map(col): _*), keyCols, "left_anti")
-          // the may-match subset can lack columns other files carry —
-          // null-fill instead of failing (readers null-fill them too)
-          .unionByName(aligned, allowMissingColumns = true)
-      if (!empty || narrowed.nonEmpty)
-        VersionedTable.writeParquetMicros(rewritten, staging.toString, partitionColumns)
-      referenceRest(root, staging, current, narrowed, conf, partitionColumns)
-    }
-  }
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite)(
+      upsertSet(_, Left(source), keyCols, gate, "upsert"))
 
   /** Merge-on-read keyed UPSERT: the O(batch) commit shape for
     * CDC-apply. Matched current rows' positions go into `_DV/` sidecars
@@ -339,21 +537,20 @@ object RefTableMutations {
     * is rewritten), and the WHOLE source batch stages as the new data
     * file (replacements and inserts alike). A sustained single-row-upsert
     * stream commits O(1) data files and O(1) sidecar rows per batch on
-    * any table size; readers subtract, compact materializes. Unlike the
-    * COW [[upsert]], partition moves are free: the old image dies by
-    * position, the new image stages under its own partition directory.
-    * Same key semantics (null-key source rows insert, null-key current
-    * rows never match, duplicate source keys stage as duplicates), same
-    * narrowing, CAS and retry.
+    * any table size; readers subtract, compact materializes. Partition
+    * moves are free: the old image dies by position, the new image stages
+    * under its own partition directory. Same key semantics (null-key
+    * source rows insert, null-key current rows never match, duplicate
+    * source keys stage as duplicates), same narrowing, CAS and retry.
     */
   def upsertMergeOnRead(
       spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      partitionTypes: Map[String, DataType] = Map.empty,
       txn: Option[(String, Long)] = None,
       gate: Option[RefTableOptions] = None): String =
-    upsertMoR(spark, root, Left(source), keyCols, keepVersions,
-      partitionColumns, partitionTypes, txn, gate)
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead, txn)(
+      upsertSet(_, Left(source), keyCols, gate, "upsertMergeOnRead"))
 
   /** Merge-on-read upsert whose new images are ALREADY parquet files (the
     * DSv2 streaming write's staged epoch): `stageImages` copies them into
@@ -365,108 +562,31 @@ object RefTableMutations {
       spark: SparkSession, root: String,
       stageImages: Path => Unit, keySource: DataFrame, keyCols: Seq[String],
       keepVersions: Int, partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType],
+      partitionTypes: Map[String, DataType],
       txn: Option[(String, Long)]): String =
-    upsertMoR(spark, root, Right((stageImages, keySource)), keyCols, keepVersions,
-      partitionColumns, partitionTypes, txn, gate = None)
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead, txn)(
+      upsertSet(_, Right((stageImages, keySource)), keyCols, None, "upsertMergeOnRead"))
 
-  private def upsertMoR(
-      spark: SparkSession, root: String,
-      images: Either[DataFrame, (Path => Unit, DataFrame)], keyCols: Seq[String],
-      keepVersions: Int, partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType],
-      txn: Option[(String, Long)],
-      gate: Option[RefTableOptions]): String =
-    VersionedTable.withConflictRetry(root) { () =>
-    require(keyCols.nonEmpty, "upsertMergeOnRead needs at least one key column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    // streaming exactly-once: base pinned (resolveLayout) BEFORE the marker
-    // check, publish CAS requires that base — the same unsplittable
-    // check-then-commit as RefTableWrites.appendVersion. A replayed epoch
-    // (restart or zombie attempt) sees its own txn marker and lands nothing.
-    if (txn.exists { case (a, b) =>
-        RefTableWrites.lastCommittedBatch(root, a, conf).exists(_ >= b) })
-      return new Path(current).getName
-    val marker = txn.map { case (a, b) => s"txn:$a:$b" }
-    val files = listLayout(current, partitionColumns)
-    val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
-    val curCols = cur.columns.toSeq
-    require(keyCols.forall(curCols.contains),
-      s"key columns ${keyCols.filterNot(curCols.contains).mkString(", ")} not in the table")
-    val aligned: Option[DataFrame] = images.left.toOption.map { source =>
-      val missing = curCols.filterNot(source.columns.contains)
-      require(missing.isEmpty,
-        s"upsertMergeOnRead source is missing table column(s): ${missing.mkString(", ")}")
+  /** Upsert's change set: the source's keys are removed, its rows land. */
+  private def upsertSet(b: Base, images: Either[DataFrame, (Path => Unit, DataFrame)],
+      keyCols: Seq[String], gate: Option[RefTableOptions], what: String): ChangeSet = {
+    require(keyCols.nonEmpty, s"$what needs at least one key column")
+    val curCols = b.schema.fieldNames.toSeq
+    requireKeys(keyCols, curCols)
+    // every source row is a full after-image; a dropped (violating) row's
+    // mutation is skipped entirely — its key neither updates nor inserts
+    // (the staged path pre-gates in the epoch writer)
+    val aligned = images.left.toOption.map { source =>
+      requireColumns(s"$what source", source, curCols)
       val a0 = source.select(curCols.map(col): _*)
-      // full after-images: a dropped (violating) row's mutation is
-      // skipped entirely (staged path pre-gates in the epoch writer)
-      materializeComputedSource(
-        a0.filter(gateApply(spark, gate, a0, lit(true), col, "upsert")))
+      materializeComputedSource(a0.filter(gateApply(b.spark, gate, a0, lit(true), col, "upsert")))
     }
-    // the key projection drives narrowing and the DV semi-join; for the
-    // staged path it reads ONLY the key columns of the epoch files
-    val keysFrame = images.fold(
-      _ => aligned.get.select(keyCols.map(col): _*),
-      { case (_, ks) => ks.select(keyCols.map(col): _*) })
-    // same one-job emptiness + per-key-column bounds narrowing as the COW
-    // upsert (any key arity)
-    val (empty, mayMatch, keyFilters): (Boolean, Seq[SnapshotFile], Option[Seq[Filter]]) = {
-      val aggs = Seq(org.apache.spark.sql.functions.count(lit(1))) ++ keyBoundAggs(keyCols)
-      val mm = keysFrame.agg(aggs.head, aggs.tail: _*).first()
-      if (mm.getLong(0) == 0L) (true, Nil, None)
-      else keyBoundFilters(keyCols, mm, 1) match {
-        case None => (false, Nil, None) // a key column is all-null: pure inserts
-        case Some(filters) =>
-          val popts = pruneOpts(root, cur.schema, partitionColumns, partitionTypes)
-          (false, RefTableStats.prune(current,
-            RefTablePartitioning.prune(files, popts, filters), popts, filters, conf),
-            Some(filters))
-      }
-    }
-    val narrowed =
-      if (empty || mayMatch.isEmpty) mayMatch
-      else bucketNarrow(current, files, keysFrame, keyCols,
-        cur.schema.fields.map(f => f.name -> f.dataType).toMap, conf) match {
-        case Some(keep) => mayMatch.filter(f => keep.contains(f.path))
-        case None => mayMatch
-      }
-    VersionedTable.publishVia(root, keepVersions, marker = marker,
-      parent = Some(new Path(current).getName), requireBase = true,
-      // MoR upsert: marks old positions in the read files (removes
-      // nothing), stages the batch as new images; a txn-marked epoch
-      // re-checks its replay guard before any rebase re-claim
-      rebase = Some(keyedSpec(root, narrowed, partitionColumns, keyFilters,
-        pruneOpts(root, cur.schema, partitionColumns, partitionTypes), conf,
-        removeTouched = false).copy(
-        revalidate = () => txn.forall { case (a, b) =>
-          !RefTableWrites.lastCommittedBatch(root, a, conf).exists(_ >= b) }))) { staging =>
-      // the new images (and inserts): the whole aligned batch, staged once
-      images.fold(
-        _ => if (!empty) VersionedTable.writeParquetMicros(
-          aligned.get, staging.toString, partitionColumns),
-        { case (stage, _) => stage(staging) })
-      if (narrowed.nonEmpty) {
-        // matched OLD positions: live rows (pinned DVs subtracted) of the
-        // may-match files whose key appears in the batch
-        val metaAll = readFilesEx(spark, root, narrowed, partitionColumns, partitionTypes,
-          withMeta = true)
-        val pinned = narrowed.flatMap(f =>
-          f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
-        val live = if (pinned.isEmpty) metaAll else {
-          import spark.implicits._
-          val dv = pinned.toDF("__dv_file", "__dv_pos")
-          metaAll.join(org.apache.spark.sql.functions.broadcast(dv),
-            metaAll("__rel") === dv("__dv_file") && metaAll("__pos") === dv("__dv_pos"),
-            "left_anti")
-        }
-        live.join(keysFrame.distinct(), keyCols, "left_semi")
-          .select(col("__rel").as("file"), col("__pos").as("pos"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, DeletionVectors.DvDir).toString)
-      }
-      referenceRest(root, staging, current, Nil, conf, partitionColumns)
-    }
+    // the key projection drives narrowing and the removal; for the staged
+    // path it reads ONLY the key columns of the epoch files
+    val keys = images.fold(_ => aligned.get, _._2).select(keyCols.map(col): _*)
+    val k = narrowByKeys(b, keys, keyCols)
+    ChangeSet(b, k.narrowed, KeyConflicts(k.filters), ByKeys(keyCols, keys),
+      lands = _ => aligned.filterNot(_ => k.empty), stage = images.toOption.map(_._1))
   }
 
   /** SQL-MERGE-shaped row-level operation with CDC ergonomics: for each
@@ -476,8 +596,8 @@ object RefTableMutations {
     * three clause conditions evaluate over the SOURCE row — the
     * change-data-capture shape, where the feed itself says what to do —
     * so `source` may carry columns beyond the table schema (an op marker)
-    * that never land in the table. [[applyChanges]] wires the
-    * [[graft.operators.SnapshotDiff]] changefeed format straight in.
+    * that never land in the table. [[applyChanges]] applies the
+    * [[graft.operators.SnapshotDiff]] changefeed format directly.
     *
     * File narrowing, null-key semantics, schema handling and the commit
     * CAS are exactly [[upsert]]'s: only stats-may-match files rewrite,
@@ -492,28 +612,22 @@ object RefTableMutations {
       matchedDelete: Option[Column] = None,
       notMatchedInsert: Option[Column] = Some(lit(true)),
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
-      gate: Option[RefTableOptions] = None): String = {
-    // full-row sugar over mergeClauses: update/insert take the source's
-    // same-named columns (source extras like an op marker are ignored; a
-    // row-producing clause still demands the full table row)
-    val conf0 = HadoopConf()
-    val cur0 = resolveLayout(root, conf0, partitionColumns)
-    val tableCols = readAll(spark, root, cur0, listLayout(cur0, partitionColumns),
-      partitionColumns, partitionTypes).schema.fieldNames.toSeq
-    if (matchedUpdate.nonEmpty || notMatchedInsert.nonEmpty) {
-      val missing = tableCols.filterNot(source.columns.contains)
-      require(missing.isEmpty,
-        s"merge source is missing table column(s): ${missing.mkString(", ")}")
+      partitionTypes: Map[String, DataType] = Map.empty,
+      gate: Option[RefTableOptions] = None): String =
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite) { b =>
+      // full-row sugar over the clause form: update/insert take the
+      // source's same-named columns (source extras like an op marker are
+      // ignored; a row-producing clause still demands the full table row)
+      val tableCols = b.schema.fieldNames.toSeq
+      if (matchedUpdate.nonEmpty || notMatchedInsert.nonEmpty)
+        requireColumns("merge source", source, tableCols)
+      def fullRow(c: Option[Column]): Option[(Column, Map[String, Column])] =
+        c.map(cond => (cond,
+          tableCols.filter(source.columns.contains).filterNot(keyCols.contains)
+            .map(n => n -> col(n)).toMap)) // keys ride the join, not the map
+      mergeSet(b, source, keyCols, fullRow(matchedUpdate), matchedDelete,
+        fullRow(notMatchedInsert), gate, None, None, nmbsUpdateFirst = false)
     }
-    def fullRow(c: Option[Column]): Option[(Column, Map[String, Column])] =
-      c.map(cond => (cond,
-        tableCols.filter(source.columns.contains).filterNot(keyCols.contains)
-          .map(n => n -> col(n)).toMap)) // keys ride the join, not the map
-    mergeClauses(spark, root, source, keyCols,
-      fullRow(matchedUpdate), matchedDelete, fullRow(notMatchedInsert), keepVersions,
-      partitionColumns, partitionTypes, gate)
-  }
 
   /** Mutation sources are evaluated several times per commit: the
     * narrowing aggregate, the bucket narrowing, the staged write, and (MoR)
@@ -548,100 +662,12 @@ object RefTableMutations {
     if (computed) graft.operators.Materialize.once(df, eager = false) else df
   }
 
-  /** Per-key-column bounds aggregates — (min, max) per key column,
-    * appended after a caller's leading aggregates in one job.
-    */
-  private def keyBoundAggs(keyCols: Seq[String]): Seq[Column] =
-    keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
-
-  /** Decode [[keyBoundAggs]] from an aggregation `row` starting at column
-    * `base`: the conjunction of per-column [min, max] range filters, sound
-    * for ANY key arity — a row matching on ALL key columns falls inside
-    * every column's source bounds, so a file whose stats are disjoint on
-    * ANY single key column provably hosts no match. This is what keeps a
-    * (tenant, id)-keyed CDC batch O(may-match files) instead of "rewrite
-    * everything, conservatively". None = some key column is entirely NULL
-    * in the source, i.e. no source row can match any current row (an
-    * equi-join key never matches NULL) — callers skip the match pass.
-    */
-  private def keyBoundFilters(
-      keyCols: Seq[String], row: org.apache.spark.sql.Row, base: Int)
-      : Option[Seq[org.apache.spark.sql.sources.Filter]] = {
-    val per = keyCols.zipWithIndex.map { case (k, i) =>
-      if (row.isNullAt(base + 2 * i)) None
-      else Some(Seq[org.apache.spark.sql.sources.Filter](
-        org.apache.spark.sql.sources.GreaterThanOrEqual(k, row.get(base + 2 * i)),
-        org.apache.spark.sql.sources.LessThanOrEqual(k, row.get(base + 2 * i + 1))))
-    }
-    if (per.exists(_.isEmpty)) None else Some(per.flatten.flatten)
-  }
-
-  /** The merge family's shared file narrowing — ONE aggregation job for
-    * emptiness + every pruning signal the source offers: per-key-column
-    * min/max bounds (any key arity, as in [[upsert]]), and — when EVERY
-    * partition column is part of the merge key — the source's partition
-    * values. The latter
-    * is sound ONLY under that condition: a file in partition p holds rows
-    * with p alone, and key-matching then implies partition equality, so
-    * files outside the source's partition values can neither match nor be
-    * matched. ≤64 distinct values become an In filter (exact cells); more
-    * fall back to [min,max] range bounds. Bucketed layouts narrow to the
-    * source's bucket ids on top. Returns (sourceIsEmpty, narrowedFiles).
-    */
-  private def mergeNarrow(
-      root: String, current: String, files: Seq[SnapshotFile],
-      cur: DataFrame, marked: DataFrame, keyCols: Seq[String],
-      partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType],
-      conf: Configuration): (Boolean, Seq[SnapshotFile], Option[Seq[Filter]]) = {
-    val types = cur.schema.fields.map(f => f.name -> f.dataType).toMap
-    val partKeyed = partitionColumns.nonEmpty && partitionColumns.forall(keyCols.contains)
-    val aggExprs: Seq[Column] =
-      Seq(org.apache.spark.sql.functions.count(lit(1))) ++
-        keyBoundAggs(keyCols) ++
-        (if (partKeyed) partitionColumns.flatMap(c => Seq(min(col(c)), max(col(c)),
-          org.apache.spark.sql.functions.slice(
-            org.apache.spark.sql.functions.sort_array(
-              org.apache.spark.sql.functions.collect_set(col(c))), 1, 65))) else Nil)
-    val (empty, mayMatch, srcFilters): (Boolean, Seq[SnapshotFile], Option[Seq[Filter]]) = {
-      val mm = marked.agg(aggExprs.head, aggExprs.tail: _*).first()
-      if (mm.getLong(0) == 0L) (true, Nil, None)
-      else keyBoundFilters(keyCols, mm, 1) match {
-        case None => (false, Nil, None) // a key column is all-null: pure inserts
-        case Some(keyFilters) =>
-          val base = 1 + 2 * keyCols.size
-          val partFilters: Seq[org.apache.spark.sql.sources.Filter] =
-            if (!partKeyed) Nil
-            else partitionColumns.zipWithIndex.flatMap { case (c, i) =>
-              val (lo, hi, set) = (mm.get(base + 3 * i), mm.get(base + 3 * i + 1),
-                mm.getSeq[Any](base + 3 * i + 2))
-              if (lo == null) Nil // no non-null partition key in the source
-              else if (set.size <= 64) Seq(org.apache.spark.sql.sources.In(c, set.toArray))
-              else Seq(
-                org.apache.spark.sql.sources.GreaterThanOrEqual(c, lo),
-                org.apache.spark.sql.sources.LessThanOrEqual(c, hi))
-            }
-          val filters = keyFilters ++ partFilters
-          val popts = pruneOpts(root, cur.schema, partitionColumns, partitionTypes)
-          (false, RefTableStats.prune(current,
-            RefTablePartitioning.prune(files, popts, filters), popts, filters, conf),
-            Some(filters))
-      }
-    }
-    val narrowed =
-      if (empty || mayMatch.isEmpty) mayMatch
-      else bucketNarrow(current, files, marked, keyCols, types, conf) match {
-        case Some(keep) => mayMatch.filter(f => keep.contains(f.path))
-        case None => mayMatch
-      }
-    (empty, narrowed, srcFilters)
-  }
-
   /** The general MERGE engine behind [[merge]] and the SQL `MERGE INTO`
     * rewrite: update and insert clauses carry explicit per-column value
     * maps (expressions over the SOURCE row). A column absent from the
     * update map keeps its target value (partial `SET`); one absent from
-    * the insert map inserts NULL. Key columns cannot be updated.
+    * the insert map inserts NULL. Key columns cannot be updated; a SET on
+    * a partition column moves the row to its new partition.
     *
     * `notMatchedBySource*` (the Delta/SQL:2023 full-sync clauses) act on
     * TARGET rows no source key matches: their conditions and SET values
@@ -661,30 +687,62 @@ object RefTableMutations {
       matchedDelete: Option[Column],
       notMatchedInsert: Option[(Column, Map[String, Column])],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      partitionTypes: Map[String, DataType] = Map.empty,
       gate: Option[RefTableOptions] = None,
       notMatchedBySourceUpdate: Option[(Column, Map[String, Column])] = None,
       notMatchedBySourceDelete: Option[Column] = None,
       nmbsUpdateFirst: Boolean = false): String =
-    VersionedTable.withConflictRetry(root) { () =>
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite)(
+      mergeSet(_, source, keyCols, matchedUpdate, matchedDelete, notMatchedInsert, gate,
+        notMatchedBySourceUpdate, notMatchedBySourceDelete, nmbsUpdateFirst))
+
+  /** Merge-on-read MERGE: the [[mergeClauses]] semantics in the O(changes)
+    * commit shape — matched rows hit by an update or delete clause die by
+    * POSITION (`_DV/` sidecar), the update clauses' new images (old row +
+    * clause SETs, so partial SET keeps target values) and the insert
+    * clauses' rows stage as one data file. No target file is rewritten;
+    * clause conditions and values evaluate over the SOURCE row, delete
+    * takes precedence over update on the same key, matched rows no clause
+    * hits survive untouched — exactly the COW contract (one change set,
+    * two strategies). Compaction materializes.
+    */
+  def mergeClausesMergeOnRead(
+      spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
+      matchedUpdate: Option[(Column, Map[String, Column])],
+      matchedDelete: Option[Column],
+      notMatchedInsert: Option[(Column, Map[String, Column])],
+      keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
+      partitionTypes: Map[String, DataType] = Map.empty,
+      gate: Option[RefTableOptions] = None,
+      notMatchedBySourceUpdate: Option[(Column, Map[String, Column])] = None,
+      notMatchedBySourceDelete: Option[Column] = None,
+      nmbsUpdateFirst: Boolean = false): String =
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead)(
+      mergeSet(_, source, keyCols, matchedUpdate, matchedDelete, notMatchedInsert, gate,
+        notMatchedBySourceUpdate, notMatchedBySourceDelete, nmbsUpdateFirst))
+
+  /** MERGE's change set: a row edit over the narrowed live rows left-joined
+    * to the source, plus the inserts. */
+  private def mergeSet(b: Base, source: DataFrame, keyCols: Seq[String],
+      matchedUpdate: Option[(Column, Map[String, Column])],
+      matchedDelete: Option[Column],
+      notMatchedInsert: Option[(Column, Map[String, Column])],
+      gate: Option[RefTableOptions],
+      notMatchedBySourceUpdate: Option[(Column, Map[String, Column])],
+      notMatchedBySourceDelete: Option[Column],
+      nmbsUpdateFirst: Boolean): ChangeSet = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
     // table columns = file columns ++ DECLARED-but-unmaterialized columns
     // (schema evolution: a just-ALTERed column no committed file carries
     // yet — assignable; old files null-fill on read, new files carry it)
-    val fileCols = cur.columns.toSeq
-    val declaredExtra: Seq[(String, org.apache.spark.sql.types.DataType)] =
+    val fileCols = b.schema.fieldNames.toSeq
+    val declaredExtra: Seq[(String, DataType)] =
       gate.toSeq.flatMap(o => o.schema.fields.toSeq.map(f =>
         o.storageColumn(f.name) -> f.dataType))
         .filterNot { case (n, _) => fileCols.contains(n) }
     val curCols = fileCols ++ declaredExtra.map(_._1)
-    val types =
-      cur.schema.fields.map(f => f.name -> f.dataType).toMap ++ declaredExtra.toMap
-    require(keyCols.forall(curCols.contains),
-      s"key columns ${keyCols.filterNot(curCols.contains).mkString(", ")} not in the table")
+    val types = b.types ++ declaredExtra.toMap
+    requireKeys(keyCols, curCols)
     val updSet = matchedUpdate.map(_._2).getOrElse(Map.empty)
     val insSet = notMatchedInsert.map(_._2).getOrElse(Map.empty)
     val nmbsSet = notMatchedBySourceUpdate.map(_._2).getOrElse(Map.empty)
@@ -708,249 +766,72 @@ object RefTableMutations {
           matchedDelete.getOrElse(lit(false)).as("__del"),
           notMatchedInsert.map(_._1).getOrElse(lit(false)).as("__ins"),
           lit(true).as("__m")): _*))
-
-    val (empty, narrowed, mergeFilters) =
-      if (nmbsActive) (false, files, None) // every file can hold unmatched rows
-      else mergeNarrow(
-        root, current, files, cur, marked, keyCols, partitionColumns, partitionTypes, conf)
-    // gate the after-images BEFORE staging (fail refuses the whole commit
-    // with nothing written; quarantine appends the rejects first):
-    // inserts are full final rows, update images are the OLD row with the
-    // clause SETs applied — both exactly what would land
-    val matchedFlag = coalesce(col("__m"), lit(false))
-    val inserts0 = marked.filter(col("__ins"))
-      .join(cur.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .select(curCols.map(c =>
-        if (insSet.contains(c)) col(s"__i_$c").as(c)
-        else if (keyCols.contains(c)) col(c) // join key doubles as the insert key
-        else lit(null).cast(types(c)).as(c)): _*)
-    val inserts = inserts0.filter(
-      gateApply(spark, gate, inserts0, lit(true), col, "MERGE insert"))
-    val rewritten =
-      if (narrowed.isEmpty) inserts
+    val (empty, narrowed, conflicts) =
+      if (nmbsActive) (false, b.files, ReadsAll) // every file can hold unmatched rows
       else {
-        val sub = readFiles(spark, root, narrowed, partitionColumns, partitionTypes)
-        val subCols = sub.columns.toSeq // may lack columns other files carry
-        // NMBS conditions/values evaluate over the TARGET side of the
-        // join; marked's non-key columns are all __-prefixed, so target
-        // names resolve unambiguously. Declared order decides a row BOTH
-        // clause conditions hit: update-first statements exempt
-        // update-condition rows from the delete
-        val rawNDel = coalesce(notMatchedBySourceDelete.getOrElse(lit(false)), lit(false))
-        val rawNUpd = coalesce(
-          notMatchedBySourceUpdate.map(_._1).getOrElse(lit(false)), lit(false))
-        val nmbsDel = !matchedFlag &&
-          (if (nmbsUpdateFirst) rawNDel && !rawNUpd else rawNDel)
-        val joined = sub.join(marked, keyCols, "left_outer")
-          .filter(not(matchedFlag && coalesce(col("__del"), lit(false))) && not(nmbsDel))
-        val updCand = matchedFlag && coalesce(col("__upd"), lit(false))
-        // base value for a column the narrowed files do not carry (other
-        // files' columns, or a declared just-evolved one): null, like read
-        def base(c: String): Column =
-          if (subCols.contains(c)) col(c) else lit(null).cast(types(c))
-        val uImg: String => Column = c =>
-          if (updSet.contains(c) && !keyCols.contains(c)) col(s"__u_$c") else base(c)
-        // a violating update is SKIPPED (old image survives), never a
-        // silent delete; fail mode censuses and throws before any staging
-        val applies = updCand &&
-          gateApply(spark, gate, joined, updCand, uImg, "MERGE update")
-        val nmbsSetCast = nmbsSet.map { case (c, v) => c -> v.cast(types(c)) }
-        // delete-first rows were already filtered out above; update-first
-        // keeps both-condition rows here, where the update claims them
-        val nmbsCand = !matchedFlag && rawNUpd
-        val nImg: String => Column = c =>
-          if (nmbsSetCast.contains(c) && !keyCols.contains(c)) nmbsSetCast(c) else base(c)
-        val nmbsApplies = nmbsCand && gateApply(
-          spark, gate, joined, nmbsCand, nImg, "MERGE not-matched-by-source update")
-        // assigned columns absent from these files' schema must still be
-        // emitted (null base, clause value where a clause applies)
-        val extraOut = curCols.filterNot(subCols.contains)
-          .filter(c => !keyCols.contains(c) && (updSet.contains(c) || nmbsSetCast.contains(c)))
-        joined.select((subCols ++ extraOut).map { c =>
-            val hasU = updSet.contains(c) && !keyCols.contains(c)
-            val hasN = nmbsSetCast.contains(c) && !keyCols.contains(c)
-            if (!hasU && !hasN) col(c)
-            else {
-              var e = when(if (hasU) applies else lit(false), uImg(c))
-              e = e.when(if (hasN) nmbsApplies else lit(false), nImg(c))
-              e.otherwise(base(c)).as(c)
-            }
-          }: _*)
-          // the may-match subset can lack columns other files carry —
-          // null-fill instead of failing (readers null-fill them too)
-          .unionByName(inserts, allowMissingColumns = true)
+        val k = narrowByKeys(b, marked, keyCols)
+        (k.empty, k.narrowed, KeyConflicts(k.filters))
       }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      // NMBS clauses read the FULL target — no delta is provably disjoint,
-      // so they keep the plain re-derive path
-      rebase = if (nmbsActive) None
-        else Some(keyedSpec(root, narrowed, partitionColumns, mergeFilters,
-          pruneOpts(root, cur.schema, partitionColumns, partitionTypes), conf))) { staging =>
-      if (!empty || narrowed.nonEmpty)
-        VersionedTable.writeParquetMicros(rewritten, staging.toString, partitionColumns)
-      referenceRest(root, staging, current, narrowed, conf, partitionColumns)
-    }
-  }
 
-  /** Merge-on-read MERGE: the [[mergeClauses]] semantics in the O(changes)
-    * commit shape — matched rows hit by an update or delete clause die by
-    * POSITION (`_DV/` sidecar), the update clauses' new images (old row +
-    * clause SETs, so partial SET keeps target values) and the insert
-    * clauses' rows stage as one data file. No target file is rewritten;
-    * clause conditions and values evaluate over the SOURCE row, delete
-    * takes precedence over update on the same key, matched rows no clause
-    * hits survive untouched — exactly the COW contract, verified by the
-    * shared spec shapes. Compaction materializes.
-    */
-  def mergeClausesMergeOnRead(
-      spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
-      matchedUpdate: Option[(Column, Map[String, Column])],
-      matchedDelete: Option[Column],
-      notMatchedInsert: Option[(Column, Map[String, Column])],
-      keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
-      gate: Option[RefTableOptions] = None,
-      notMatchedBySourceUpdate: Option[(Column, Map[String, Column])] = None,
-      notMatchedBySourceDelete: Option[Column] = None,
-      nmbsUpdateFirst: Boolean = false): String =
-    VersionedTable.withConflictRetry(root) { () =>
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
-    // see mergeClauses: declared-but-unmaterialized columns are assignable
-    val fileCols = cur.columns.toSeq
-    val declaredExtra: Seq[(String, org.apache.spark.sql.types.DataType)] =
-      gate.toSeq.flatMap(o => o.schema.fields.toSeq.map(f =>
-        o.storageColumn(f.name) -> f.dataType))
-        .filterNot { case (n, _) => fileCols.contains(n) }
-    val curCols = fileCols ++ declaredExtra.map(_._1)
-    val types =
-      cur.schema.fields.map(f => f.name -> f.dataType).toMap ++ declaredExtra.toMap
-    require(keyCols.forall(curCols.contains),
-      s"key columns ${keyCols.filterNot(curCols.contains).mkString(", ")} not in the table")
-    val updSet = matchedUpdate.map(_._2).getOrElse(Map.empty)
-    val insSet = notMatchedInsert.map(_._2).getOrElse(Map.empty)
-    val nmbsSet = notMatchedBySourceUpdate.map(_._2).getOrElse(Map.empty)
-    val badKeys = keyCols.filter(k => updSet.contains(k) || nmbsSet.contains(k))
-    require(badKeys.isEmpty, s"merge cannot update key column(s) ${badKeys.mkString(", ")}")
-    (updSet.keys ++ insSet.keys ++ nmbsSet.keys).find(!curCols.contains(_)).foreach(c =>
-      throw new IllegalArgumentException(s"merge assigns unknown table column '$c'"))
-    require(!(updSet.keys ++ nmbsSet.keys).exists(partitionColumns.contains),
-      "mergeClausesMergeOnRead cannot move rows across partitions (SET on a partition " +
-        "column); use the copy-on-write mergeClauses")
-    val nmbsActive =
-      notMatchedBySourceUpdate.nonEmpty || notMatchedBySourceDelete.nonEmpty
-    val valCols = curCols.filterNot(keyCols.contains)
-    val marked = materializeComputedSource(source.select(
-      keyCols.map(col) ++
-        valCols.filter(updSet.contains).map(c => updSet(c).cast(types(c)).as(s"__u_$c")) ++
-        curCols.filter(insSet.contains).map(c => insSet(c).cast(types(c)).as(s"__i_$c")) ++
-        Seq(
-          matchedUpdate.map(_._1).getOrElse(lit(false)).as("__upd"),
-          matchedDelete.getOrElse(lit(false)).as("__del"),
-          notMatchedInsert.map(_._1).getOrElse(lit(false)).as("__ins")): _*))
-    val (empty, narrowed, mergeFilters) =
-      if (nmbsActive) (false, files, None) // every file can hold unmatched rows
-      else mergeNarrow(
-        root, current, files, cur, marked, keyCols, partitionColumns, partitionTypes, conf)
-    // MoR merge rebase: marks old positions in read files (removes
-    // nothing), stages images; NMBS reads the full target → no rebase
-    val morMergeRebase =
-      if (nmbsActive) None
-      else Some(keyedSpec(root, narrowed, partitionColumns, mergeFilters,
-        pruneOpts(root, cur.schema, partitionColumns, partitionTypes), conf,
-        removeTouched = false))
-    // after-image gate (see gateApply): fail censuses BEFORE staging,
-    // quarantine appends the rejects first, drop skips the row's mutation
-    // (its old POSITION must then survive too — see `dies` below)
-    val inserts0 = marked.filter(col("__ins"))
-      .join(cur.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .select(curCols.map(c =>
-        if (insSet.contains(c)) col(s"__i_$c").as(c)
-        else if (keyCols.contains(c)) col(c)
-        else lit(null).cast(types(c)).as(c)): _*)
-    val inserts = inserts0.filter(
-      gateApply(spark, gate, inserts0, lit(true), col, "MERGE insert"))
-    if (narrowed.isEmpty) {
-      VersionedTable.publishVia(root, keepVersions,
-        parent = Some(new Path(current).getName), requireBase = true,
-        rebase = morMergeRebase) { staging =>
-        if (!empty)
-          VersionedTable.writeParquetMicros(inserts, staging.toString, partitionColumns)
-        referenceRest(root, staging, current, Nil, conf, partitionColumns)
-      }
-    } else {
-      // live rows of the may-match files, with file coordinates
-      val metaAll = readFilesEx(spark, root, narrowed, partitionColumns, partitionTypes,
-        withMeta = true)
-      val pinned = narrowed.flatMap(f =>
-        f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
-      val live = if (pinned.isEmpty) metaAll else {
-        import spark.implicits._
-        val dv = pinned.toDF("__dv_file", "__dv_pos")
-        metaAll.join(org.apache.spark.sql.functions.broadcast(dv),
-          metaAll("__rel") === dv("__dv_file") && metaAll("__pos") === dv("__dv_pos"),
-          "left_anti")
-      }
-      // matched rows a clause HITS (update or delete): positions die;
-      // update survivors (not deleted) contribute new images built from
-      // the OLD row + the clause SETs
-      val hit = live.join(
-        marked.filter(coalesce(col("__upd"), lit(false)) ||
-          coalesce(col("__del"), lit(false))), keyCols, "inner")
-      val delHit = coalesce(col("__del"), lit(false))
-      val updCand = !delHit && coalesce(col("__upd"), lit(false))
-      // a declared just-evolved column no live file carries: null base
-      val liveCols = live.columns.toSet
+    // inserts: source rows no live key matches. Narrowing bounds every
+    // source key, so the narrowed files' live keys are all the keys an
+    // insert can collide with. Gated as full final rows (fail refuses the
+    // whole commit before anything stages; quarantine appends the rejects
+    // first)
+    def inserts(live: Option[DataFrame]): Option[DataFrame] = if (empty) None else {
+      val cand = marked.filter(col("__ins"))
+      val rows = live.fold(cand)(l => cand.join(l.select(keyCols.map(col): _*), keyCols, "left_anti"))
+        .select(curCols.map(c =>
+          if (insSet.contains(c)) col(s"__i_$c").as(c)
+          else if (keyCols.contains(c)) col(c) // join key doubles as the insert key
+          else lit(null).cast(types(c)).as(c)): _*)
+      Some(rows.filter(gateApply(b.spark, gate, rows, lit(true), col, "MERGE insert")))
+    }
+
+    ChangeSet(b, narrowed, conflicts, lands = inserts, removed = ByRows { live =>
+      val liveCols = tableCols(live)
+      // marked's non-key columns are all __-prefixed, so target names
+      // (NMBS conditions and values) resolve unambiguously on the join
+      val frame = live.join(marked, keyCols, "left_outer")
+      val matched = coalesce(col("__m"), lit(false))
+      val del = matched && coalesce(col("__del"), lit(false))
+      // declared order decides a row BOTH NMBS conditions hit (the first
+      // declared clause wins, per SQL/Delta merge semantics)
+      val rawNDel = !matched && coalesce(notMatchedBySourceDelete.getOrElse(lit(false)), lit(false))
+      val rawNUpd = !matched &&
+        coalesce(notMatchedBySourceUpdate.map(_._1).getOrElse(lit(false)), lit(false))
+      val nDel = if (nmbsUpdateFirst) rawNDel && !rawNUpd else rawNDel
+      // base value for a column the narrowed files do not carry (other
+      // files' columns, or a declared just-evolved one): null, like read
       def base(c: String): Column =
         if (liveCols.contains(c)) col(c) else lit(null).cast(types(c))
       val uImg: String => Column = c =>
-        if (!keyCols.contains(c) && updSet.contains(c)) col(s"__u_$c") else base(c)
-      val updApplies = updCand &&
-        gateApply(spark, gate, hit, updCand, uImg, "MERGE update")
-      val newImages = hit.filter(updApplies)
-        .select(curCols.map(c => uImg(c).as(c)): _*)
-      // a skipped (violating) update neither stages a new image nor kills
-      // its old position — the row survives untouched
-      val dies = hit.filter(delHit || updApplies)
-      // NMBS pass: live target rows with NO source key — delete kills the
-      // position; update kills it AND stages the old row + target-side
-      // SETs as the new image (delete precedence, like the matched side)
-      val (nmbsImages, nmbsDies) = if (!nmbsActive) (None, None) else {
-        val miss = live.join(marked.select(keyCols.map(col): _*), keyCols, "left_anti")
-        // declared order decides a row BOTH clause conditions hit (the
-        // first declared clause wins, per SQL/Delta merge semantics)
-        val rawNDel = coalesce(notMatchedBySourceDelete.getOrElse(lit(false)), lit(false))
-        val rawNUpd = coalesce(
-          notMatchedBySourceUpdate.map(_._1).getOrElse(lit(false)), lit(false))
-        val nDel = if (nmbsUpdateFirst) rawNDel && !rawNUpd else rawNDel
-        val nmbsSetCast = nmbsSet.map { case (c, v) => c -> v.cast(types(c)) }
-        val nCand = !nDel && rawNUpd
-        val nImg: String => Column = c =>
-          if (!keyCols.contains(c) && nmbsSetCast.contains(c)) nmbsSetCast(c) else base(c)
-        val nApplies = nCand && gateApply(
-          spark, gate, miss, nCand, nImg, "MERGE not-matched-by-source update")
-        (Some(miss.filter(nApplies).select(curCols.map(c => nImg(c).as(c)): _*)),
-          Some(miss.filter(nDel || nApplies)))
-      }
-      VersionedTable.publishVia(root, keepVersions,
-        parent = Some(new Path(current).getName), requireBase = true,
-        rebase = morMergeRebase) { staging =>
-        VersionedTable.writeParquetMicros(
-          nmbsImages.foldLeft(newImages.unionByName(inserts, allowMissingColumns = true))(
-            (a, b) => a.unionByName(b, allowMissingColumns = true)),
-          staging.toString, partitionColumns)
-        nmbsDies.map(_.select(col("__rel").as("file"), col("__pos").as("pos")))
-          .foldLeft(dies.select(col("__rel").as("file"), col("__pos").as("pos")))(
-            _ unionByName _)
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, DeletionVectors.DvDir).toString)
-        referenceRest(root, staging, current, Nil, conf, partitionColumns)
-      }
-    }
+        if (updSet.contains(c) && !keyCols.contains(c)) col(s"__u_$c") else base(c)
+      val nmbsCast = nmbsSet.map { case (c, v) => c -> v.cast(types(c)) }
+      val nImg: String => Column = c =>
+        if (nmbsCast.contains(c) && !keyCols.contains(c)) nmbsCast(c) else base(c)
+      // update images are the OLD row with the clause SETs applied; a
+      // violating one is SKIPPED (the old row survives), never a silent
+      // delete. Delete precedence: a deleted row never images
+      val updCand = !del && matched && coalesce(col("__upd"), lit(false))
+      val applies = updCand && gateApply(b.spark, gate, frame, updCand, uImg, "MERGE update")
+      val nCand = !nDel && rawNUpd
+      val nApplies = nCand && gateApply(
+        b.spark, gate, frame, nCand, nImg, "MERGE not-matched-by-source update")
+      val imaged = applies || nApplies
+      // assigned columns absent from these files' schema must still be
+      // emitted (null base, clause value where a clause applies)
+      val assigned = curCols.filterNot(liveCols.contains)
+        .filter(c => !keyCols.contains(c) && (updSet.contains(c) || nmbsCast.contains(c)))
+      Edit(frame, del || nDel || imaged, Some(imaged), (liveCols ++ assigned).map { c =>
+        val hasU = updSet.contains(c) && !keyCols.contains(c)
+        val hasN = nmbsCast.contains(c) && !keyCols.contains(c)
+        if (!hasU && !hasN) col(c)
+        else when(if (hasU) applies else lit(false), uImg(c))
+          .when(if (hasN) nApplies else lit(false), nImg(c))
+          .otherwise(base(c)).as(c)
+      })
+    })
   }
 
   /** SQL-UPDATE semantics as a file-granular COW rewrite: rows where
@@ -962,48 +843,11 @@ object RefTableMutations {
   def updateWhere(
       spark: SparkSession, root: String, set: Map[String, Column], condition: Column,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
-      gate: Option[RefTableOptions] = None): String =
-    VersionedTable.withConflictRetry(root) { () =>
+      partitionTypes: Map[String, DataType] = Map.empty,
+      gate: Option[RefTableOptions] = None): String = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    set.keys.find(!types.contains(_)).foreach(c =>
-      throw new IllegalArgumentException(s"UPDATE assigns unknown table column '$c'"))
-    val popts = pruneOpts(root, schema, partitionColumns, partitionTypes)
-    val filters = RefTableFilters.fromPredicate(spark, schema, condition)
-    val mayMatch0 = if (filters.isEmpty) files
-      else RefTableStats.prune(current,
-        RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
-    // bucketed layouts: a key-equality update narrows to the keys' buckets
-    val mayMatch = if (mayMatch0.isEmpty) mayMatch0
-      else bucketNarrowByFilters(spark, current, files, filters, types, conf) match {
-        case Some(keep) => mayMatch0.filter(f => keep.contains(f.path))
-        case None => mayMatch0
-      }
-    // after-image gate: the image of a hit row is the row with the SETs
-    // applied; a violating hit is SKIPPED (old image survives — `hit`
-    // narrows), fail censuses before any staging, quarantine appends first
-    val updated: Option[DataFrame] = if (mayMatch.isEmpty) None else {
-      val sub = readFiles(spark, root, mayMatch, partitionColumns, partitionTypes)
-      val cand = coalesce(condition, lit(false))
-      val aImg: String => Column = c =>
-        if (set.contains(c)) set(c).cast(types(c)) else col(c)
-      val hit = cand && gateApply(spark, gate, sub, cand, aImg, "UPDATE")
-      Some(sub.select(sub.columns.toSeq.map(c =>
-        if (set.contains(c)) when(hit, set(c).cast(types(c))).otherwise(col(c)).as(c)
-        else col(c)): _*))
-    }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      rebase = Some(cowSpec(root, mayMatch, partitionColumns, filters, popts, conf))) { staging =>
-      updated.foreach(u =>
-        VersionedTable.writeParquetMicros(u, staging.toString, partitionColumns))
-      referenceRest(root, staging, current, mayMatch, conf, partitionColumns)
-    }
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite)(
+      updateSet(_, set, condition, gate))
   }
 
   /** Merge-on-read UPDATE: matched rows' old positions go into `_DV/`
@@ -1011,84 +855,40 @@ object RefTableMutations {
     * the rewritten rows stage as a NEW data file — the commit is
     * O(matched rows), never O(may-match file bytes), the Iceberg
     * merge-on-read UPDATE shape. Same narrowing, CAS and NULL semantics
-    * (WHERE NULL leaves the row untouched) as the COW [[updateWhere]];
-    * [[VersionedTable.compact]] materializes. The two passes over the
-    * may-match files (positions, rewritten rows) read immutable inputs,
-    * so they are consistent by construction.
+    * (WHERE NULL leaves the row untouched) as the COW [[updateWhere]]; a
+    * SET on a partition column stages the new image under its new
+    * partition. [[VersionedTable.compact]] materializes.
     */
   def updateWhereMergeOnRead(
       spark: SparkSession, root: String, set: Map[String, Column], condition: Column,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
-      gate: Option[RefTableOptions] = None): String =
-    VersionedTable.withConflictRetry(root) { () =>
+      partitionTypes: Map[String, DataType] = Map.empty,
+      gate: Option[RefTableOptions] = None): String = {
     require(set.nonEmpty, "updateWhereMergeOnRead needs at least one SET column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val schema = readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    set.keys.find(!types.contains(_)).foreach(c =>
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead)(
+      updateSet(_, set, condition, gate))
+  }
+
+  /** UPDATE's change set: the hit rows die and land their after-images. */
+  private def updateSet(b: Base, set: Map[String, Column], condition: Column,
+      gate: Option[RefTableOptions]): ChangeSet = {
+    set.keys.find(!b.types.contains(_)).foreach(c =>
       throw new IllegalArgumentException(s"UPDATE assigns unknown table column '$c'"))
-    require(!set.keys.exists(partitionColumns.contains),
-      "updateWhereMergeOnRead cannot move rows across partitions (SET on a partition " +
-        "column); use the copy-on-write updateWhere")
-    val popts = pruneOpts(root, schema, partitionColumns, partitionTypes)
-    val filters = RefTableFilters.fromPredicate(spark, schema, condition)
-    val mayMatch0 = if (filters.isEmpty) files
-      else RefTableStats.prune(current,
-        RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
-    val mayMatch = if (mayMatch0.isEmpty) mayMatch0
-      else bucketNarrowByFilters(spark, current, files, filters, types, conf) match {
-        case Some(keep) => mayMatch0.filter(f => keep.contains(f.path))
-        case None => mayMatch0
-      }
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      // MoR update: marks positions + stages images for READ files — any
-      // concurrent position mark on them could duplicate a row, so
-      // stagesImages arms the strict rule-2 check
-      rebase = Some(VersionedTable.RebaseSpec(
-        removedRel = Set.empty, readRel = relsOf(root, mayMatch, conf),
-        addedMayMatch = statsOverlap(root, filters, popts, conf),
-        stagesImages = true,
-        partitionColumns = partitionColumns))) { staging =>
-      if (mayMatch.nonEmpty) {
-        // matched = rows whose OLD image must vanish (DV) and whose NEW
-        // image stages. withMeta skips DV subtraction (it needs raw
-        // coordinates), so subtract the pinned positions here explicitly:
-        // without it, a row deleted or updated by an EARLIER MoR commit
-        // would match again and duplicate its new image.
-        val metaAll = readFilesEx(spark, root, mayMatch, partitionColumns, partitionTypes,
-          withMeta = true)
-        val pinned = mayMatch.flatMap(f =>
-          f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
-        val meta = if (pinned.isEmpty) metaAll else {
-          import spark.implicits._
-          val dv = pinned.toDF("__dv_file", "__dv_pos")
-          metaAll.join(org.apache.spark.sql.functions.broadcast(dv),
-            metaAll("__rel") === dv("__dv_file") && metaAll("__pos") === dv("__dv_pos"),
-            "left_anti")
-        }
-        // after-image gate: a violating hit is SKIPPED — it neither stages
-        // a new image nor loses its old position (fail censuses first)
-        val cand = coalesce(condition, lit(false))
-        val aImg: String => Column = c =>
-          if (set.contains(c)) set(c).cast(types(c)) else col(c)
-        val matched = meta.filter(
-          cand && gateApply(spark, gate, meta, cand, aImg, "UPDATE"))
-        // new images first (writeParquetMicros owns creating the staging
-        // dir and refuses a pre-existing one), then the position sidecar
-        // into its subdirectory
-        val rewritten = matched.select(schema.fields.map(_.name).toSeq.map(c =>
-          if (set.contains(c)) set(c).cast(types(c)).as(c) else col(c)): _*)
-        VersionedTable.writeParquetMicros(rewritten, staging.toString, partitionColumns)
-        matched.select(col("__rel").as("file"), col("__pos").as("pos"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, DeletionVectors.DvDir).toString)
-      }
-      referenceRest(root, staging, current, Nil, conf, partitionColumns)
-    }
+    val (narrowed, filters) = narrowByPredicate(b, condition)
+    val values = set.map { case (c, v) => c -> v.cast(b.types(c)) }
+    ChangeSet(b, narrowed, PredicateConflicts(filters), ByRows { live =>
+      val liveCols = tableCols(live)
+      def base(c: String): Column =
+        if (liveCols.contains(c)) col(c) else lit(null).cast(b.types(c))
+      // after-image gate: a violating hit is SKIPPED (the old image
+      // survives); fail censuses before any staging, quarantine appends
+      // first
+      val cand = coalesce(condition, lit(false))
+      val hit = cand && gateApply(b.spark, gate, live, cand,
+        c => values.getOrElse(c, base(c)), "UPDATE")
+      Edit(live, hit, Some(hit), (liveCols ++ set.keys.filterNot(liveCols.contains)).map(c =>
+        values.get(c).fold(col(c))(v => when(hit, v).otherwise(base(c)).as(c))))
+    })
   }
 
   /** Dynamic partition overwrite (the Delta `replaceWhere`-on-partitions /
@@ -1102,7 +902,7 @@ object RefTableMutations {
     * Partition identity is value-level under the DECLARED types: a file
     * under `bucket=007` and a source row with bucket 7 name the same
     * partition when the column is numeric (same canonicalization contract
-    * as [[readFiles]]/compaction). Null partition values match the Hive
+    * as [[readFilesEx]]/compaction). Null partition values match the Hive
     * default-partition directory. The distinct-partition collect is
     * bounded by the number of touched partitions — the same bounded
     * driver-side class as shard offsets and codebooks.
@@ -1110,7 +910,7 @@ object RefTableMutations {
   def overwritePartitions(
       spark: SparkSession, root: String, source: DataFrame,
       partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      partitionTypes: Map[String, DataType] = Map.empty,
       keepVersions: Int = 3): String =
     VersionedTable.withConflictRetry(root) { () =>
     require(partitionColumns.nonEmpty,
@@ -1118,15 +918,13 @@ object RefTableMutations {
     val missing = partitionColumns.filterNot(source.columns.contains)
     require(missing.isEmpty,
       s"overwrite source is missing partition column(s): ${missing.mkString(", ")}")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
+    val b = new Base(spark, root, partitionColumns, partitionTypes)
     // dynamic overwrite REPLACES every row of the touched partitions — a
     // file written under an earlier partition spec (partition evolution)
     // isn't partition-matched by directory values, so its rows of a
     // touched partition would silently SURVIVE the overwrite. Refuse the
     // mixed layout loudly; one compact migrates it.
-    val foreign = files.filterNot(f => partitionColumns.forall(f.partitionValues.contains))
+    val foreign = b.files.filterNot(f => partitionColumns.forall(f.partitionValues.contains))
     if (foreign.nonEmpty) throw new IllegalStateException(
       s"reftable: dynamic partition overwrite needs every snapshot file to carry the " +
         s"current partition value(s) [${partitionColumns.mkString(", ")}], but " +
@@ -1149,7 +947,7 @@ object RefTableMutations {
       case ldt: java.time.LocalDateTime => ldt.toString // TIMESTAMP_NTZ
       case other => other.toString
     }
-    def canonRaw(raw: String, dt: org.apache.spark.sql.types.DataType): Option[String] = {
+    def canonRaw(raw: String, dt: DataType): Option[String] = {
       import org.apache.spark.sql.types._
       if (raw == RefTablePartitioning.HiveDefaultPartition) None
       else Some(dt match {
@@ -1172,7 +970,7 @@ object RefTableMutations {
       .distinct().collect()
       .map(r => partitionColumns.indices.map(i => canonTyped(r.get(i))).toSeq)
       .toSet
-    val replaced = files.filter { f =>
+    val replaced = b.files.filter { f =>
       // a flat-hosted file (no directory values at all — adopted/mixed
       // layouts) is never partition-matched; the Hive null-partition dir
       // canonicalizes to None and CAN match an all-null source tuple
@@ -1181,14 +979,14 @@ object RefTableMutations {
           canonRaw(f.partitionValues(c), pType(c, partitionTypes))))
     }
     VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
+      parent = Some(b.version), requireBase = true,
       // dynamic overwrite: replaces whole partitions — a rebase is sound
       // unless the concurrent delta touched (rewrote, or non-blindly added
       // files into) a replaced partition. A BLIND append into one simply
       // serializes after the overwrite and survives, like any later append.
       rebase = Some(VersionedTable.RebaseSpec(
-        removedRel = relsOf(root, replaced, conf),
-        readRel = relsOf(root, replaced, conf),
+        removedRel = relsOf(root, replaced, b.conf),
+        readRel = relsOf(root, replaced, b.conf),
         addedMayMatch = (_, added) => added.exists { e =>
           !partitionColumns.forall(e.pv.contains) ||
             touched.contains(partitionColumns.map(c =>
@@ -1197,7 +995,7 @@ object RefTableMutations {
         partitionColumns = partitionColumns))) { staging =>
       if (touched.nonEmpty)
         VersionedTable.writeParquetMicros(source, staging.toString, partitionColumns)
-      referenceRest(root, staging, current, replaced, conf, partitionColumns)
+      referenceRest(root, staging, b.current, replaced, b.conf, partitionColumns)
     }
   }
 
@@ -1207,22 +1005,15 @@ object RefTableMutations {
     * [[VersionedTable.changes]] — a changefeed read off one table replays
     * onto a copy, version by version. Insert/update ops upsert (an insert
     * op whose key already exists updates it, making replay idempotent);
-    * delete ops delete.
+    * delete ops delete; a row whose `change_type` is NULL does neither.
     */
   def applyChanges(
       spark: SparkSession, root: String, changes: DataFrame, keyCols: Seq[String],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
-      gate: Option[RefTableOptions] = None): String = {
-    require(changes.columns.contains("change_type"),
-      "changefeed must carry change_type (insert|delete|update) — see SnapshotDiff.diff")
-    merge(spark, root, changes, keyCols,
-      matchedUpdate = Some(col("change_type") =!= "delete"),
-      matchedDelete = Some(col("change_type") === "delete"),
-      notMatchedInsert = Some(col("change_type") =!= "delete"),
-      keepVersions = keepVersions, partitionColumns = partitionColumns,
-      partitionTypes = partitionTypes, gate = gate)
-  }
+      partitionTypes: Map[String, DataType] = Map.empty,
+      gate: Option[RefTableOptions] = None): String =
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, CopyOnWrite)(
+      changesSet(_, changes, keyCols, gate))
 
   /** Merge-on-read changefeed apply: the replication primitive in its
     * O(changes) commit shape — ONE commit marks every changed key's old
@@ -1237,91 +1028,37 @@ object RefTableMutations {
   def applyChangesMergeOnRead(
       spark: SparkSession, root: String, changes: DataFrame, keyCols: Seq[String],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty,
+      partitionTypes: Map[String, DataType] = Map.empty,
       gate: Option[RefTableOptions] = None): String =
-    VersionedTable.withConflictRetry(root) { () =>
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead)(
+      changesSet(_, changes, keyCols, gate))
+
+  /** applyChanges' change set: every changed key is removed, the
+    * insert/update after-images land. */
+  private def changesSet(b: Base, changes: DataFrame, keyCols: Seq[String],
+      gate: Option[RefTableOptions]): ChangeSet = {
     require(changes.columns.contains("change_type"),
       "changefeed must carry change_type (insert|delete|update) — see SnapshotDiff.diff")
-    require(keyCols.nonEmpty, "applyChangesMergeOnRead needs at least one key column")
-    val conf = HadoopConf()
-    val current = resolveLayout(root, conf, partitionColumns)
-    val files = listLayout(current, partitionColumns)
-    val cur = readAll(spark, root, current, files, partitionColumns, partitionTypes)
-    val curCols = cur.columns.toSeq
-    require(keyCols.forall(curCols.contains),
-      s"key columns ${keyCols.filterNot(curCols.contains).mkString(", ")} not in the table")
-    val missing0 = curCols.filterNot(changes.columns.contains)
-    require(missing0.isEmpty,
-      s"changefeed is missing table column(s): ${missing0.mkString(", ")}")
+    require(keyCols.nonEmpty, "applyChanges needs at least one key column")
+    val curCols = b.schema.fieldNames.toSeq
+    requireKeys(keyCols, curCols)
+    requireColumns("changefeed", changes, curCols)
     // a diff-computed changefeed is evaluated by the bounds aggregate, the
-    // staged write AND the DV semi-join below — compute it once
-    val changesOnce = materializeComputedSource(changes)
-    val ct = col("change_type")
-    // one job: total, upsert count, and per-key-column bounds over ALL
-    // changed keys (any key arity) — delete keys must narrow too
-    val (total, nUpserts, mayMatch, cdcFilters):
-        (Long, Long, Seq[SnapshotFile], Option[Seq[Filter]]) = {
-      val aggs = Seq(
-        org.apache.spark.sql.functions.count(lit(1)),
-        org.apache.spark.sql.functions.sum(when(ct =!= "delete", 1L).otherwise(0L))) ++
-        keyBoundAggs(keyCols)
-      val mm = changesOnce.agg(aggs.head, aggs.tail: _*).first()
-      val t = mm.getLong(0)
-      val u = if (mm.isNullAt(1)) 0L else mm.getLong(1)
-      if (t == 0L) (0L, 0L, Nil, None)
-      else keyBoundFilters(keyCols, mm, 2) match {
-        case None => (t, u, Nil, None) // a key column is all-null: nothing can match
-        case Some(filters) =>
-          val popts = pruneOpts(root, cur.schema, partitionColumns, partitionTypes)
-          (t, u, RefTableStats.prune(current,
-            RefTablePartitioning.prune(files, popts, filters), popts, filters, conf),
-            Some(filters))
-      }
-    }
-    val narrowed =
-      if (mayMatch.isEmpty) mayMatch
-      else bucketNarrow(current, files, changesOnce, keyCols,
-        cur.schema.fields.map(f => f.name -> f.dataType).toMap, conf) match {
-        case Some(keep) => mayMatch.filter(f => keep.contains(f.path))
-        case None => mayMatch
-      }
-    // after-image gate over the upsert images (deletes land nothing and
-    // always apply): a violating upsert is SKIPPED — its key's old
-    // position survives and no new image stages
-    val upsPass = gateApply(spark, gate, changesOnce, ct =!= "delete", col,
-      "applyChanges upsert")
-    VersionedTable.publishVia(root, keepVersions,
-      parent = Some(new Path(current).getName), requireBase = true,
-      // CDC apply: MoR position marks + staged images, key-matching
-      rebase = Some(keyedSpec(root, narrowed, partitionColumns, cdcFilters,
-        pruneOpts(root, cur.schema, partitionColumns, partitionTypes), conf,
-        removeTouched = false))) { staging =>
-      if (nUpserts > 0L)
-        VersionedTable.writeParquetMicros(
-          changesOnce.filter(ct =!= "delete" && upsPass).select(curCols.map(col): _*),
-          staging.toString, partitionColumns)
-      if (narrowed.nonEmpty) {
-        val metaAll = readFilesEx(spark, root, narrowed, partitionColumns, partitionTypes,
-          withMeta = true)
-        val pinned = narrowed.flatMap(f =>
-          f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
-        val live = if (pinned.isEmpty) metaAll else {
-          import spark.implicits._
-          val dv = pinned.toDF("__dv_file", "__dv_pos")
-          metaAll.join(org.apache.spark.sql.functions.broadcast(dv),
-            metaAll("__rel") === dv("__dv_file") && metaAll("__pos") === dv("__dv_pos"),
-            "left_anti")
-        }
-        live.join(
-            changesOnce.filter(ct === "delete" || upsPass)
-              .select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_semi")
-          .select(col("__rel").as("file"), col("__pos").as("pos"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(new Path(staging, DeletionVectors.DvDir).toString)
-      }
-      referenceRest(root, staging, current, Nil, conf, partitionColumns)
-    }
+    // write AND the key removal — compute it once
+    val once = materializeComputedSource(changes)
+    val del = coalesce(col("change_type") === "delete", lit(false))
+    val ups = coalesce(col("change_type") =!= "delete", lit(false))
+    // one job: the upsert count beside the bounds over ALL changed keys
+    // (delete keys must narrow too)
+    val k = narrowByKeys(b, once, keyCols, Seq(sum(when(ups, 1L).otherwise(0L))))
+    val upserts = !k.empty && !k.row.isNullAt(1) && k.row.getLong(1) > 0L
+    // after-image gate over the upserts: a violating one is SKIPPED — its
+    // key's old row survives and no new image lands
+    val pass = ups && gateApply(b.spark, gate, once, ups, col, "applyChanges upsert")
+    ChangeSet(b, k.narrowed, KeyConflicts(k.filters),
+      ByKeys(keyCols, once.filter(del || pass).select(keyCols.map(col): _*)),
+      lands = _ => if (!upserts) None else Some(once.filter(pass)
+        .select(curCols.map(c => col(c).cast(b.types(c)).as(c)): _*)))
   }
 
   /** Resolve the current version dir. With no `partitionColumns` declared,
@@ -1355,10 +1092,9 @@ object RefTableMutations {
     * exactly against directory values and data leaves against file stats.
     */
   private def pruneOpts(
-      root: String, schema: org.apache.spark.sql.types.StructType,
-      partitionColumns: Seq[String] = Nil,
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType] = Map.empty) = {
-    val withPv = org.apache.spark.sql.types.StructType(
+      root: String, schema: StructType, partitionColumns: Seq[String],
+      partitionTypes: Map[String, DataType]) = {
+    val withPv = StructType(
       schema.fields ++ partitionColumns.filterNot(schema.fieldNames.contains).map(c =>
         org.apache.spark.sql.types.StructField(c, pType(c, partitionTypes))))
     RefTableOptions(path = root, schema = withPv, rowField = None, keyColumn = None,
@@ -1366,8 +1102,7 @@ object RefTableMutations {
       partitionColumns = partitionColumns)
   }
 
-  private def pType(
-      c: String, partitionTypes: Map[String, org.apache.spark.sql.types.DataType]) =
+  private def pType(c: String, partitionTypes: Map[String, DataType]) =
     partitionTypes.getOrElse(c, org.apache.spark.sql.types.StringType)
 
   /** Read a set of listed files with their partition columns attached as
@@ -1380,35 +1115,18 @@ object RefTableMutations {
     * (`bucket=007` → `bucket=7` when the column is typed numeric) while
     * preserving partition VALUES under the declared type — same contract
     * as compaction.
+    *
+    * `withMeta = false` (every rewrite path): pinned deletion vectors
+    * subtract on the raw file read — a rewrite that missed them would
+    * resurrect deleted rows into its staged files. `withMeta = true` (the
+    * merge-on-read position passes and the changefeed stream's file-delta
+    * diff): rows keep their `__rel`/`__pos` file coordinates and DVs are
+    * NOT subtracted.
     */
-  private def readFiles(
+  private[reftable] def readFilesEx(
       spark: SparkSession, root: String, files: Seq[SnapshotFile],
       partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType]): DataFrame =
-    readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta = false)
-
-  /** As [[readFiles]]. `withMeta = false` (every rewrite path): pinned
-    * deletion vectors subtract on the raw file read — a rewrite that
-    * missed them would resurrect deleted rows into its staged files.
-    * `withMeta = true` (the MoR delete's position pass): rows keep their
-    * `__rel`/`__pos` file coordinates and DVs are NOT subtracted
-    * (re-marking an already-deleted position is inert — sidecar loads
-    * deduplicate).
-    */
-  /** Listing-based raw read for the changefeed stream's file-delta diff —
-    * same mechanics as the mutation reads ([[readFilesEx]]).
-    */
-  private[reftable] def readFilesForDiff(
-      spark: SparkSession, root: String, files: Seq[SnapshotFile],
-      partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType],
-      withMeta: Boolean): DataFrame =
-    readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta)
-
-  private def readFilesEx(
-      spark: SparkSession, root: String, files: Seq[SnapshotFile],
-      partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType],
+      partitionTypes: Map[String, DataType],
       withMeta: Boolean): DataFrame = {
     def prep(df: DataFrame, group: Seq[SnapshotFile], sess: SparkSession): DataFrame =
       if (withMeta)
@@ -1468,49 +1186,36 @@ object RefTableMutations {
       spark, typed.queryExecution.analyzed)
   }
 
-  /** Hash-bucket narrowing: when the CURRENT version is a physical
-    * bucketed layout ([[VersionedTable.publishBucketed]]) whose bucket
-    * columns equal the mutation's key columns, the files that may contain
-    * a source key are exactly the files of the source's bucket ids —
-    * `pmod(hash(keys), n)`, the same `HashPartitioning` expression the
+  /** Keep the files of `buckets` (None: the layout does not apply, keep
+    * all). Evaluated only when there is something to narrow. */
+  private def inBuckets(files: Seq[SnapshotFile], buckets: => Option[Set[Int]]): Seq[SnapshotFile] =
+    if (files.isEmpty) files
+    else buckets.fold(files)(ids => files.filter(f => bucketIdOf(f.path).exists(ids.contains)))
+
+  /** Hash-bucket narrowing for keyed mutations: when the CURRENT version is
+    * a physical bucketed layout ([[VersionedTable.publishBucketed]]) whose
+    * bucket columns equal the mutation's key columns, the files that may
+    * contain a source key are exactly the files of the source's bucket ids
+    * — `pmod(hash(keys), n)`, the same `HashPartitioning` expression the
     * writer's `repartition(n, cols)` used, read back from the staged
     * `part-NNNNN` task indices. The distinct-bucket collect is bounded by
-    * the batch's bucket count. Returns None when the layout doesn't apply
-    * (no marker — e.g. any post-mutation manifest version — or different
-    * columns), in which case callers keep their stats-based narrowing; a
-    * Some intersects with it. This is what keeps a k-key upsert on an
-    * n-bucket table at ≤ k rewritten files even when the keys are
-    * scattered across the whole key range (where [min,max] narrowing
-    * keeps everything).
+    * the batch's bucket count. None when the layout doesn't apply (no
+    * marker — e.g. any post-mutation manifest version — or different
+    * columns). This is what keeps a k-key upsert on an n-bucket table at
+    * ≤ k rewritten files even when the keys are scattered across the whole
+    * key range (where [min,max] narrowing keeps everything).
     */
-  private def bucketNarrow(
-      current: String, files: Seq[SnapshotFile], source: DataFrame,
-      keyCols: Seq[String],
-      types: Map[String, org.apache.spark.sql.types.DataType],
-      conf: Configuration): Option[Set[String]] = {
-    val bp = new Path(current, VersionedTable.BucketsMarker)
-    val fs = bp.getFileSystem(conf)
-    if (!fs.exists(bp)) return None
-    val in = fs.open(bp)
-    val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val cols = {
-      import scala.jdk.CollectionConverters._
-      Option(node.get("cols")).map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+  private def bucketsOfKeys(
+      b: Base, source: DataFrame, keyCols: Seq[String]): Option[Set[Int]] =
+    VersionedTable.bucketLayout(b.current, b.conf).collect {
+      // hash is order-sensitive: exact match only
+      case (cols, n) if cols == keyCols && n > 0 && keyCols.forall(b.types.contains) =>
+        // hash under the TABLE's key types, not the source's: Murmur3 is
+        // type-sensitive (hash(3:int) != hash(3L:bigint)), and the writer
+        // hashed the table-typed columns
+        source.select(pmod(hash(keyCols.map(c => col(c).cast(b.types(c))): _*), lit(n)))
+          .distinct().collect().map(_.getInt(0)).toSet
     }
-    val n = node.path("n").asInt(0)
-    if (cols != keyCols || n <= 0) return None // hash is order-sensitive: exact match only
-    if (!keyCols.forall(types.contains)) return None
-    // hash under the TABLE's key types, not the source's: Murmur3 is
-    // type-sensitive (hash(3:int) != hash(3L:bigint)), and the writer
-    // hashed the table-typed columns — same contract bucketNarrowByFilters
-    // enforces with lit(v).cast(types(c))
-    val touched = source
-      .select(pmod(hash(keyCols.map(c => col(c).cast(types(c))): _*), lit(n)).as("__b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val keep = files.filter(f => bucketIdOf(f.path).exists(touched.contains))
-    Some(keep.map(_.path).toSet)
-  }
 
   private val BucketFilePattern = "part-(\\d+)".r
 
@@ -1527,23 +1232,10 @@ object RefTableMutations {
     * ONE one-row Spark job so literal hashing can never drift from the
     * writer's `HashPartitioning`.
     */
-  private def bucketNarrowByFilters(
-      spark: SparkSession, current: String, files: Seq[SnapshotFile],
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      types: Map[String, org.apache.spark.sql.types.DataType],
-      conf: Configuration): Option[Set[String]] = {
-    val bp = new Path(current, VersionedTable.BucketsMarker)
-    if (!bp.getFileSystem(conf).exists(bp)) return None
-    val in = bp.getFileSystem(conf).open(bp)
-    val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    val cols = {
-      import scala.jdk.CollectionConverters._
-      Option(node.get("cols")).map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    }
-    val n = node.path("n").asInt(0)
-    if (cols.isEmpty || n <= 0 || !cols.forall(types.contains)) return None
-    import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, In}
+  private def bucketsOfFilters(b: Base, filters: Seq[Filter]): Option[Set[Int]] = {
+    import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo}
+    val (cols, n) = VersionedTable.bucketLayout(b.current, b.conf).getOrElse(return None)
+    if (cols.isEmpty || n <= 0 || !cols.forall(b.types.contains)) return None
     val valuesPerCol: Seq[Seq[Any]] = cols.map { c =>
       filters.collectFirst {
         case EqualTo(a, v) if a == c => Seq(v)
@@ -1556,58 +1248,37 @@ object RefTableMutations {
     }
     if (tuples.isEmpty || tuples.size > 256) return None // cross-product cap
     val exprs = tuples.zipWithIndex.map { case (t, i) =>
-      pmod(hash(cols.zip(t).map { case (c, v) => lit(v).cast(types(c)) }: _*), lit(n)).as(s"b$i")
+      pmod(hash(cols.zip(t).map { case (c, v) => lit(v).cast(b.types(c)) }: _*), lit(n)).as(s"b$i")
     }
-    val row = spark.range(1).select(exprs: _*).first()
-    val touched = tuples.indices.map(row.getInt).toSet
-    Some(files.filter(f => bucketIdOf(f.path).exists(touched.contains)).map(_.path).toSet)
+    val row = b.spark.range(1).select(exprs: _*).first()
+    Some(tuples.indices.map(row.getInt).toSet)
   }
 
-  /** The declared types of a relation's partition columns — the map the
-    * mutation paths need to cast Hive directory values back to typed
-    * columns. Partition columns are validated against the storage schema
-    * at option-parse time, so the lookup is total for a valid relation.
-    */
   /** Declared name→type for EVERY schema field, not just the current
-    * partition columns: under partition evolution a mutation read can
-    * discover a since-removed partition column from an old file's
-    * `col=value` directories, and it must cast back to the DECLARED type
-    * (inference is off, so the raw directory string would otherwise union
-    * as string against the typed data pages of newer files).
+    * partition columns — the map the mutation paths need to cast Hive
+    * directory values back to typed columns. Under partition evolution a
+    * mutation read can discover a since-removed partition column from an
+    * old file's `col=value` directories, and it must cast back to the
+    * DECLARED type (inference is off, so the raw directory string would
+    * otherwise union as string against the typed data pages of newer
+    * files).
     */
-  def partitionTypesOf(opts: RefTableOptions): Map[String, org.apache.spark.sql.types.DataType] =
+  def partitionTypesOf(opts: RefTableOptions): Map[String, DataType] =
     opts.schema.fields.map(f => f.name -> f.dataType).toMap
-
-  /** The manifest-aware file listing of the resolved `current` version:
-    * manifest-referenced versions resolve their `_FILES.json` chain
-    * ([[RefTableFileManifest.resolve]] via [[SnapshotFiles.list]]); physical
-    * versions list flat files or walk the Hive partition tree per the
-    * declared `partitionColumns`.
-    */
-  private def listLayout(current: String, partitionColumns: Seq[String]): Seq[SnapshotFile] =
-    SnapshotFiles.list(current, partitionColumns)
 
   /** Read the full logical content of a (possibly manifest-referenced)
     * version from its resolved listing, mergeSchema on, with partition
-    * columns attached as typed columns ([[readFiles]]). An empty listing
+    * columns attached as typed columns ([[readFilesEx]]). An empty listing
     * falls back to the directory read so error behavior matches the
     * pre-manifest code exactly.
     */
   private[reftable] def readAll(
       spark: SparkSession, root: String, current: String, files: Seq[SnapshotFile],
       partitionColumns: Seq[String],
-      partitionTypes: Map[String, org.apache.spark.sql.types.DataType]): DataFrame =
+      partitionTypes: Map[String, DataType]): DataFrame =
     if (files.isEmpty) spark.read.option("mergeSchema", "true").parquet(current)
-    else readFiles(spark, root, files, partitionColumns, partitionTypes)
+    else readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta = false)
 
-  /** Write the staging dir's `_FILES.json`: the new version inherits the
-    * parent's files minus the rewritten (`touched`) ones, plus whatever
-    * parquet the mutation staged — O(touched) manifest entries, zero
-    * filesystem operations on carried files (they are named, not moved).
-    * `partitionColumns` direct the staged-file listing: a partitioned
-    * rewrite stages files under `col=value` subdirectories, and listing
-    * them flat would silently drop the rewritten rows from the manifest.
-    */
   /** INCREMENTAL RECLUSTER — the Delta OPTIMIZE-incremental shape: carry a
     * MAXIMAL pairwise-disjoint set of files by reference (classical
     * interval scheduling over the leading cluster column's stats bands —
@@ -1633,11 +1304,10 @@ object RefTableMutations {
       targetFileBytes: Long = 128L * 1024 * 1024, maxReadAmp: Double = 1.5,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil): Option[String] =
     VersionedTable.withConflictRetry(root) { () =>
-      val conf = HadoopConf()
-      val current = resolveLayout(root, conf, partitionColumns)
-      val files = listLayout(current, partitionColumns)
+      val b = new Base(spark, root, partitionColumns, Map.empty)
+      val files = b.files
       if (files.size < 2) return None
-      val stats = RefTableStats.statsForListing(current, files, conf)
+      val stats = RefTableStats.statsForListing(b.current, files, b.conf)
       val lead = cols.head
       val bounds: Map[String, (Double, Double)] = files.flatMap { f =>
         for {
@@ -1678,11 +1348,11 @@ object RefTableMutations {
         wide.map(_.length).sum.toDouble / targetFileBytes).toInt)
       val marker = s"layout=${if (zorder) "zorder" else "cluster"}:${cols.mkString(",")}"
       Some(VersionedTable.publishVia(root, keepVersions, marker = Some(marker),
-        parent = Some(new Path(current).getName), requireBase = true,
+        parent = Some(b.version), requireBase = true,
         rebase = Some(VersionedTable.RebaseSpec(
-          removedRel = relsOf(root, wide, conf), readRel = relsOf(root, wide, conf),
+          removedRel = relsOf(root, wide, b.conf), readRel = relsOf(root, wide, b.conf),
           partitionColumns = partitionColumns))) { staging =>
-        val df = readFiles(spark, root, wide, partitionColumns, Map.empty)
+        val df = b.read(wide)
         val sorted =
           if (zorder) {
             val zc = "__graft_z"
@@ -1692,10 +1362,18 @@ object RefTableMutations {
             .sortWithinPartitions(cols.map(col): _*)
         VersionedTable.writeParquetMicros(sorted, staging.toString, partitionColumns,
           colocatePartitions = false) // range/z-order pre-arranged above
-        referenceRest(root, staging, current, wide, conf, partitionColumns)
+        referenceRest(root, staging, b.current, wide, b.conf, partitionColumns)
       })
     }
 
+  /** Write the staging dir's `_FILES.json`: the new version inherits the
+    * parent's files minus the rewritten (`touched`) ones, plus whatever
+    * parquet the mutation staged — O(touched) manifest entries, zero
+    * filesystem operations on carried files (they are named, not moved).
+    * `partitionColumns` direct the staged-file listing: a partitioned
+    * rewrite stages files under `col=value` subdirectories, and listing
+    * them flat would silently drop the rewritten rows from the manifest.
+    */
   private def referenceRest(
       root: String, staging: Path, current: String, touched: Seq[SnapshotFile],
       conf: Configuration, partitionColumns: Seq[String]): Unit =
@@ -1724,55 +1402,16 @@ object RefTableMutations {
     * mutation's read set is the whole base, so rules 1–2 refuse any
     * non-blind delta before this hook runs.
     */
-  private def statsOverlap(root: String, filters: Seq[Filter], popts: RefTableOptions,
-      conf: Configuration): (String, Seq[RefTableFileManifest.Entry]) => Boolean =
+  private def statsOverlap(b: Base, filters: Seq[Filter])
+      : (String, Seq[RefTableFileManifest.Entry]) => Boolean =
     (headDir, added) => filters.isEmpty || {
       // qualified paths: prune's host-grouping relativizes against the
       // QUALIFIED root and fails open (= conflicts) on a mismatch
-      val rootPath = new Path(root)
+      val rootPath = new Path(b.root)
       val qualifiedRoot =
-        rootPath.getFileSystem(conf).makeQualified(rootPath).toString
+        rootPath.getFileSystem(b.conf).makeQualified(rootPath).toString
       val sfs = added.map(e =>
         SnapshotFile(s"$qualifiedRoot/${e.rel}", e.len, e.pv))
-      RefTableStats.prune(headDir, sfs, popts, filters, conf).nonEmpty
+      RefTableStats.prune(headDir, sfs, b.popts, filters, b.conf).nonEmpty
     }
-
-  /** RebaseSpec for a predicate-local COW mutation (DELETE/UPDATE): the
-    * pruned may-match set is both the read and the rewrite set; blind
-    * appends never conflict (the Delta write-serializable rule), other
-    * deltas conflict when they add a file the predicate may match.
-    */
-  private def cowSpec(root: String, touched: Seq[SnapshotFile],
-      partitionColumns: Seq[String], filters: Seq[Filter], popts: RefTableOptions,
-      conf: Configuration): VersionedTable.RebaseSpec = {
-    val rels = relsOf(root, touched, conf)
-    VersionedTable.RebaseSpec(removedRel = rels, readRel = rels,
-      addedMayMatch = statsOverlap(root, filters, popts, conf),
-      partitionColumns = partitionColumns)
-  }
-
-  /** RebaseSpec for a key-matching mutation (upsert/MERGE): like [[cowSpec]]
-    * but blind appends also conflict when they may carry the source's keys —
-    * two concurrent upserts of one new key must not both insert it — and
-    * concurrent position marks on read files conflict (the staged images
-    * could duplicate a concurrently-mutated row). `keyFilters` None means
-    * the source's keys are all NULL — an equi-join key never matches NULL,
-    * so no added file can conflict.
-    */
-  private def keyedSpec(root: String, touched: Seq[SnapshotFile],
-      partitionColumns: Seq[String], keyFilters: Option[Seq[Filter]],
-      popts: RefTableOptions, conf: Configuration,
-      removeTouched: Boolean = true): VersionedTable.RebaseSpec = {
-    val rels = relsOf(root, touched, conf)
-    VersionedTable.RebaseSpec(
-      removedRel = if (removeTouched) rels else Set.empty,
-      readRel = rels,
-      addedMayMatch = keyFilters match {
-        case None => (_, _) => false
-        case Some(fs) => statsOverlap(root, fs, popts, conf)
-      },
-      conflictOnBlindAppend = true,
-      stagesImages = true,
-      partitionColumns = partitionColumns)
-  }
 }

@@ -171,7 +171,8 @@ class RefTable(val opts: RefTableOptions, raw: Map[String, String] = Map.empty) 
   }
 
   /** SQL `DELETE FROM` / `TRUNCATE TABLE`, routed into the file-granular
-    * copy-on-write mutation ([[RefTableMutations.deleteWhere]]) — the
+    * mutation ([[RefTableMutations.deleteWhere]], or
+    * [[RefTableMutations.deleteWhereMergeOnRead]] under `deleteMode`) — the
     * declared `partitionColumns` thread through so Hive-partitioned
     * layouts mutate first-class (partition pruning narrows the rewrite
     * before file stats do). Only predicates with an exact Column
@@ -204,12 +205,7 @@ class RefTable(val opts: RefTableOptions, raw: Map[String, String] = Map.empty) 
       val cond = filters.map(f => RefTableFilters.toColumn(opts, f).getOrElse(
         throw new UnsupportedOperationException(s"cannot push delete predicate $f")))
         .reduce(_ && _)
-      if (opts.deleteMode == "mergeOnRead")
-        RefTableMutations.deleteWhereMergeOnRead(spark, opts.path, cond, opts.keepVersions,
-          opts.partitionColumns, RefTableMutations.partitionTypesOf(opts))
-      else
-        RefTableMutations.deleteWhere(spark, opts.path, cond, opts.keepVersions,
-          opts.partitionColumns, RefTableMutations.partitionTypesOf(opts))
+      RefTableMutations.sqlDelete(spark, opts, cond)
     }
     ()
   }

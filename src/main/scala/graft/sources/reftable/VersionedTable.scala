@@ -440,9 +440,25 @@ object VersionedTable {
   }
 
   /** Marker file a bucketed publish writes into its version dir: the
-    * bucket columns and count the file layout was hashed by.
+    * bucket columns and count the file layout was hashed by. Written by
+    * [[publishBucketed]], read back only through [[bucketLayout]].
     */
-  val BucketsMarker = "_BUCKETS.json"
+  private val BucketsMarker = "_BUCKETS.json"
+
+  /** The bucket columns and count a [[publishBucketed]] version `dir` was
+    * hashed by, read from its marker; None when `dir` holds no marker (not
+    * a bucketed publish — e.g. any post-mutation manifest version).
+    */
+  def bucketLayout(dir: String, conf: Configuration): Option[(Seq[String], Int)] = {
+    val bp = new Path(dir, BucketsMarker)
+    val fs = bp.getFileSystem(conf)
+    if (!fs.exists(bp)) return None
+    val in = fs.open(bp)
+    val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+      finally in.close()
+    import scala.jdk.CollectionConverters._
+    Some((node.path("cols").elements().asScala.map(_.asText()).toSeq, node.path("n").asInt(0)))
+  }
 
   /** Publish with a HASH-bucketed layout: rows land in `nBuckets` files by
     * `pmod(hash(bucketCols), n)` — Spark's own `HashPartitioning` id

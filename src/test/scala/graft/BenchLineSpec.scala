@@ -73,4 +73,23 @@ class BenchLineSpec extends AnyFunSuite {
     // value = sum of warm seconds, 3-decimal
     assert(line.contains("\"value\":3.790,"))
   }
+
+  test("a thrown entry is listed under failed, absent from queries and the total") {
+    val line = Bench.stdoutLine(
+      Seq("q01_scan_project" -> 0.27, "q106_containment" -> 3.29), "sf0.1",
+      failed = Seq("q02_key_as_field"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(json.get("queries").asText() == "01:27,106:329")
+    assert(json.get("value").asDouble() == 3.56)
+    assert(json.get("failed").isArray && json.get("failed").size() == 1 &&
+      json.get("failed").get(0).asInt() == 2, line)
+    assert(!Bench.stdoutLine(Seq("q01_scan_project" -> 0.27), "sf0.1").contains("failed"))
+    // 230 entries, every 23rd failed: the failures break the packed runs
+    // (explicit ids) and add their own list, and the line still fits
+    val (bad, ok) = simulatedWarm(230).zipWithIndex.partition(_._2 % 23 == 0)
+    val worst = Bench.stdoutLine(
+      ok.map(_._1), "sf0.1", simulatedDrain(60), bad.map(_._1._1))
+    assert(worst.contains("\"failed\":["))
+    assert(worst.length < 2000, s"line is ${worst.length} chars: would truncate")
+  }
 }
