@@ -669,7 +669,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
         if (!creating) prim.overwrite(dp, descriptor, conf)
       }
       try fs.delete(rtasDir, true) catch { case _: java.io.IOException => () }
-      try RefTableWrites.augmentStatsAfterCommit(
+      try RefTableWrites.augmentStats(
         opts, org.apache.spark.sql.SparkSession.active, conf)
       catch { case scala.util.control.NonFatal(_) => () }
     }

@@ -215,7 +215,7 @@ object SchemaJson {
   *  - `expect.<name>`   row-level expectation: a SQL predicate every
   *                      written row must satisfy (NULL outcomes violate),
   *                      enforced by EVERY write surface — batch INSERT,
-  *                      the V1 sink, and in the DSv2 streaming write's
+  *                      mutations, and the DSv2 streaming write's
   *                      executor loop (codegen'd predicate). With
   *                      `onViolation` = `fail` (default) a violating
   *                      write/epoch is refused whole, naming the rule

@@ -243,13 +243,13 @@ object RefTableMutations {
 
   /** How a change set lands, chosen once by the caller. */
   private sealed abstract class WriteStrategy {
-    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[RefTableWrites.Txn]): String
   }
 
   /** Rewrite the narrowed files: their survivors and after-images, plus the
     * landed rows, in one write; the manifest drops the narrowed files. */
   private case object CopyOnWrite extends WriteStrategy {
-    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String = {
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[RefTableWrites.Txn]): String = {
       val live = if (cs.narrowed.isEmpty) None else Some(cs.base.read(cs.narrowed))
       val rewritten = live.map(l => cs.removed match {
         case ByKeys(keyCols, keys) => l.join(keys, keyCols, "left_anti")
@@ -275,7 +275,7 @@ object RefTableMutations {
     * [[VersionedTable.compact]] materializes.
     */
   private case object MergeOnRead extends WriteStrategy {
-    def land(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)]): String = {
+    def land(cs: ChangeSet, keepVersions: Int, txn: Option[RefTableWrites.Txn]): String = {
       val live = if (cs.narrowed.isEmpty) None else Some(cs.base.readWithCoords(cs.narrowed))
       val (images, dying) = cs.removed match {
         case ByKeys(keyCols, keys) =>
@@ -318,7 +318,7 @@ object RefTableMutations {
     * (`stagesImages`). A `txn` marks the commit for exactly-once replay,
     * and a rebase re-checks it against the moved head before re-claiming.
     */
-  private def publish(cs: ChangeSet, keepVersions: Int, txn: Option[(String, Long)],
+  private def publish(cs: ChangeSet, keepVersions: Int, txn: Option[RefTableWrites.Txn],
       rewrites: Boolean, stagesImages: Boolean)(populate: Path => Unit): String = {
     val b = cs.base
     val rels = relsOf(b.root, cs.narrowed, b.conf)
@@ -326,7 +326,7 @@ object RefTableMutations {
       VersionedTable.RebaseSpec(removedRel = if (rewrites) rels else Set.empty, readRel = rels,
         addedMayMatch = mayMatch, conflictOnBlindAppend = keyed,
         stagesImages = keyed || stagesImages, partitionColumns = b.partitionColumns,
-        revalidate = () => !txn.exists(replayed(b, _)))
+        revalidate = () => !txn.exists(_.replayed(b.root, b.conf)))
     val rebase = cs.conflicts match {
       case PredicateConflicts(filters) => Some(spec(keyed = false, statsOverlap(b, filters)))
       case KeyConflicts(Some(filters)) => Some(spec(keyed = true, statsOverlap(b, filters)))
@@ -335,7 +335,7 @@ object RefTableMutations {
       case ReadsAll => None
     }
     VersionedTable.publishVia(b.root, keepVersions,
-      marker = txn.map { case (a, n) => s"txn:$a:$n" },
+      marker = txn.map(_.marker),
       parent = Some(b.version), requireBase = true, rebase = rebase) { staging =>
       populate(staging)
       referenceRest(b.root, staging, b.current, if (rewrites) cs.narrowed else Nil,
@@ -349,15 +349,15 @@ object RefTableMutations {
     */
   private def mutate(spark: SparkSession, root: String, keepVersions: Int,
       partitionColumns: Seq[String], partitionTypes: Map[String, DataType],
-      strategy: WriteStrategy, txn: Option[(String, Long)] = None)(
+      strategy: WriteStrategy, txn: Option[RefTableWrites.Txn] = None)(
       build: Base => ChangeSet): String =
     VersionedTable.withConflictRetry(root) { () =>
       val b = new Base(spark, root, partitionColumns, partitionTypes)
       // streaming exactly-once: base pinned BEFORE the marker check, and
       // the publish CAS requires that base — the same unsplittable
-      // check-then-commit as RefTableWrites.appendVersion. A replayed epoch
+      // check-then-commit as RefTableWrites.commitAppend. A replayed epoch
       // (restart or zombie attempt) sees its own txn marker and lands nothing.
-      if (txn.exists(replayed(b, _))) b.version
+      if (txn.exists(_.replayed(b.root, b.conf))) b.version
       else strategy.land(build(b), keepVersions, txn)
     }
 
@@ -386,9 +386,6 @@ object RefTableMutations {
       build: Base => ChangeSet): String =
     mutate(spark, opts.path, opts.keepVersions, opts.partitionColumns, partitionTypesOf(opts),
       if (mode == "mergeOnRead") MergeOnRead else CopyOnWrite)(build)
-
-  private def replayed(b: Base, txn: (String, Long)): Boolean =
-    RefTableWrites.lastCommittedBatch(b.root, txn._1, b.conf).exists(_ >= txn._2)
 
   /** Predicate narrowing (DELETE/UPDATE): stats and partition pruning under
     * the predicate's pushable filters, intersected on bucketed layouts with
@@ -547,23 +544,23 @@ object RefTableMutations {
       spark: SparkSession, root: String, source: DataFrame, keyCols: Seq[String],
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil,
       partitionTypes: Map[String, DataType] = Map.empty,
-      txn: Option[(String, Long)] = None,
       gate: Option[RefTableOptions] = None): String =
-    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead, txn)(
+    mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead)(
       upsertSet(_, Left(source), keyCols, gate, "upsertMergeOnRead"))
 
   /** Merge-on-read upsert whose new images are ALREADY parquet files (the
     * DSv2 streaming write's staged epoch): `stageImages` copies them into
     * the version staging dir, `keySource` is a key-projected read of the
     * same files used only for file narrowing and the old-position DV
-    * semi-join. Same commit/marker semantics as [[upsertMergeOnRead]].
+    * semi-join. Same commit semantics as [[upsertMergeOnRead]], under the
+    * epoch's exactly-once `txn` marker.
     */
   private[reftable] def upsertMergeOnReadStaged(
       spark: SparkSession, root: String,
       stageImages: Path => Unit, keySource: DataFrame, keyCols: Seq[String],
       keepVersions: Int, partitionColumns: Seq[String],
       partitionTypes: Map[String, DataType],
-      txn: Option[(String, Long)]): String =
+      txn: Option[RefTableWrites.Txn]): String =
     mutate(spark, root, keepVersions, partitionColumns, partitionTypes, MergeOnRead, txn)(
       upsertSet(_, Right((stageImages, keySource)), keyCols, None, "upsertMergeOnRead"))
 
@@ -1269,15 +1266,30 @@ object RefTableMutations {
   /** Read the full logical content of a (possibly manifest-referenced)
     * version from its resolved listing, mergeSchema on, with partition
     * columns attached as typed columns ([[readFilesEx]]). An empty listing
-    * falls back to the directory read so error behavior matches the
-    * pre-manifest code exactly.
+    * holds no rows but still needs a schema: a partitioned write of an
+    * empty result (a DELETE that removed every row) stages no file at all,
+    * so the schema comes from the nearest older retained version that has
+    * files. With none, the directory read keeps the pre-manifest error.
     */
   private[reftable] def readAll(
       spark: SparkSession, root: String, current: String, files: Seq[SnapshotFile],
       partitionColumns: Seq[String],
       partitionTypes: Map[String, DataType]): DataFrame =
-    if (files.isEmpty) spark.read.option("mergeSchema", "true").parquet(current)
-    else readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta = false)
+    if (files.nonEmpty)
+      readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta = false)
+    else {
+      val name = new Path(current).getName
+      val older = VersionedTable.commitLog(root, HadoopConf()).map(_.version)
+        .takeWhile(_ != name).reverse
+      older.iterator.map(v => SnapshotFiles.list(new Path(root, v).toString, partitionColumns))
+        .find(_.nonEmpty) match {
+        case Some(fs) =>
+          val schema = readFilesEx(spark, root, fs, partitionColumns, partitionTypes,
+            withMeta = false).schema
+          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+        case None => spark.read.option("mergeSchema", "true").parquet(current)
+      }
+    }
 
   /** INCREMENTAL RECLUSTER — the Delta OPTIMIZE-incremental shape: carry a
     * MAXIMAL pairwise-disjoint set of files by reference (classical

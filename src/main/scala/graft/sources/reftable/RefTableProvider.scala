@@ -31,80 +31,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .load()
   * }}}
   */
-class RefTableProvider extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.StreamSinkProvider {
+class RefTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "reftable"
-
-  /** `writeStream.format("reftable")`: publish each batch as a version of
-    * the table at `path` (see [[RefTableSink]]).
-    *
-    *  - `outputMode=complete`: every batch is the full table state →
-    *    published whole ([[VersionedTable.completeModePublisher]]);
-    *  - `outputMode=append`: every batch is a delta → committed O(new data)
-    *    via [[RefTableWrites.appendVersion]] with a `txn:<appId>:<batchId>`
-    *    marker riding the commit CAS, so restart/zombie replays of a batch
-    *    land EXACTLY ONCE (the reference's restart contract,
-    *    PipelineTest.java:151-177: rows written across a restart all
-    *    visible, none duplicated). `appId` is the streaming query id
-    *    (stable across restarts from the checkpoint) unless overridden by
-    *    the `txnAppId` option — override it when two different queries
-    *    must append to the same table from shared checkpoint lineages;
-    *  - `outputMode=update`: requires declared `keyColumns` — each batch is
-    *    the CHANGED rows of a keyed result (the watermarked-aggregation
-    *    shape), applied as an O(batch) merge-on-read upsert on those keys
-    *    under the same `txn:` marker discipline. Without `keyColumns`
-    *    update mode stays refused: changed rows have no merge semantics
-    *    without a key.
-    *
-    * The same explicit-schema contract as reads: `path` and `schema` are
-    * required and validated up front (DataStreamWriter routes
-    * TableProviders through inferSchema before the V1-sink fallback, so
-    * schema-less sink options could never reach here anyway), and each
-    * arriving batch is checked against the declaration. Extra options:
-    * `keepVersions` (default 3); `partitionColumns` produce a Hive layout
-    * inside each version, with the DataStreamWriter's `partitionBy`
-    * honored when the option is absent.
-    */
-  override def createSink(
-      sqlContext: org.apache.spark.sql.SQLContext,
-      parameters: Map[String, String],
-      partitionColumns: Seq[String],
-      outputMode: org.apache.spark.sql.streaming.OutputMode): org.apache.spark.sql.execution.streaming.Sink = {
-    val append = outputMode == org.apache.spark.sql.streaming.OutputMode.Append()
-    val update = outputMode == org.apache.spark.sql.streaming.OutputMode.Update()
-    if (!append && !update && outputMode != org.apache.spark.sql.streaming.OutputMode.Complete())
-      throw new IllegalArgumentException(
-        "reftable sink supports outputMode=complete (each batch is the full table " +
-          "state), outputMode=append (each batch committed as an O(new data) version " +
-          "with exactly-once replay markers), and outputMode=update on tables that " +
-          "declare 'keyColumns' (each batch applied as a keyed upsert)")
-    val opts = RefTableOptions.from(
-      new CaseInsensitiveStringMap(parameters.asJava))
-    if (update && opts.keyColumns.isEmpty)
-      throw new IllegalArgumentException(
-        "reftable sink: outputMode=update needs the table's merge key — declare " +
-          "'keyColumns' (comma-separated schema fields); each update batch then " +
-          "applies as an O(batch) merge-on-read upsert on those keys")
-    if (opts.version.nonEmpty)
-      throw new IllegalArgumentException("reftable sink: a pinned 'version' is read-only")
-    if (opts.genColumn.nonEmpty)
-      throw new IllegalArgumentException(
-        "reftable sink: 'genColumn' is a read-side projection of refresh generations")
-    val keep = opts.keepVersions // validated with every other option
-    val partCols =
-      if (opts.partitionColumns.nonEmpty) opts.partitionColumns else partitionColumns
-    // writer-side partitionBy bypasses the option validation path
-    partCols.foreach(c => if (!opts.schema.fieldNames.contains(c))
-      throw new IllegalArgumentException(
-        s"reftable sink: partition column '$c' is not a field of the declared schema"))
-    if ((append || update) &&
-        (opts.clusterBy.nonEmpty || opts.zorderBy.nonEmpty || opts.bucketBy.nonEmpty))
-      throw new IllegalArgumentException(
-        "reftable append/update sink: clusterBy/zorderBy/bucketBy layouts are GLOBAL " +
-          "properties that re-cluster on every commit; use outputMode=complete (or batch INSERT)")
-    new RefTableSink(opts, keep, partCols, append = append, update = update,
-      txnAppId = parameters.get("txnAppId").filter(_.nonEmpty))
-  }
 
   // Deploy-time vs run-time validation split (reference:
   // TableStreamingSource.java:59-70 vs :74-76): inferSchema runs at analysis
@@ -212,8 +140,10 @@ class RefTable(val opts: RefTableOptions, raw: Map[String, String] = Map.empty) 
   // BATCH_WRITE is required by the DataFrameWriter.save() capability gate
   // even though the produced Write is a V1Write fallback; V1_BATCH_WRITE is
   // what routes the physical plan through the InsertableRelation.
-  // STREAMING_WRITE serves `writeStream.toTable(...)` through the DSv2
-  // path (RefTableStreamingWrite) — catalog tables have no V1 fallback.
+  // STREAMING_WRITE serves `writeStream.format("reftable")` and
+  // `writeStream.toTable(...)` alike through the one DSv2 streaming write
+  // (RefTableStreamingWrite); the provider offers no V1 sink, so naming it
+  // in `spark.sql.streaming.disabledV2Writers` fails the query at start.
   // AUTOMATIC_SCHEMA_EVOLUTION arms `MERGE WITH SCHEMA EVOLUTION`:
   // Spark's ResolveMergeIntoSchemaEvolution ALTERs the catalog table
   // (riding our ADD COLUMN support) and re-resolves before the DML

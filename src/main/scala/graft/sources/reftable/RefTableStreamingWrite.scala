@@ -1,6 +1,7 @@
 package graft.sources.reftable
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -13,14 +14,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-/** DSv2 STREAMING write for reftable catalog tables —
-  * `df.writeStream.toTable("graft.db.t")`.
-  *
-  * The V1 sink ([[RefTableSink]]) covers the format-based surface
-  * (`writeStream.format("reftable")` + explicit path/schema); catalog
-  * tables resolve through the DSv2 write path, which has no V1 fallback,
-  * so this is the properly DISTRIBUTED implementation of the same two
-  * modes:
+/** The one STREAMING write for reftable — `writeStream.format("reftable")`
+  * and `df.writeStream.toTable("graft.db.t")` both run it (the table
+  * declares STREAMING_WRITE, so the engine never falls back to a V1 sink).
+  * A properly DISTRIBUTED implementation of the three output modes:
   *
   *  - executors write their partitions of each micro-batch straight to
   *    parquet under an ignored `.streaming-<queryId>/<epochId>/` staging
@@ -36,12 +33,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    and with renamed files the retry would have nothing left to publish;
   *    the epoch dir is deleted only after a successful commit):
   *    append mode → an O(new data) version via the by-reference manifest
-  *    delta under the `txn:<appId>:<epochId>` marker, the same
-  *    pinned-base CAS discipline as [[RefTableWrites.appendVersion]]
-  *    (pin base → check [[RefTableWrites.lastCommittedBatch]] → publish
-  *    requiring that base), so restart/zombie replays land EXACTLY ONCE;
-  *    complete mode (engine calls `truncate()` on the builder) → the
-  *    epoch's files become the FULL next version, same marker dedup.
+  *    delta under the epoch's [[RefTableWrites.Txn]] marker, through the
+  *    one exactly-once append commit ([[RefTableWrites.commitAppend]]), so
+  *    restart/zombie replays land EXACTLY ONCE; complete mode (engine
+  *    calls `truncate()` on the builder) → the epoch's files become the
+  *    FULL next version, same marker dedup.
   *
   * `appId` is the streaming query id (stable across checkpoint restarts;
   * `LogicalWriteInfo.queryId`), overridable via the `txnAppId` write
@@ -60,10 +56,7 @@ class RefTableStreamingWrite(
     keyedUpsert: Boolean = false)
     extends StreamingWrite {
 
-  require(opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty,
-    "reftable streaming write: clusterBy/zorderBy/bucketBy layouts are GLOBAL " +
-      "properties that re-cluster per commit; maintain them with batch INSERT " +
-      "or RefTableMaintenance")
+  RefTableWrites.refuseGlobalLayout(opts)
 
   private val stagingRoot = s"${opts.path}/.streaming-$appId"
 
@@ -145,51 +138,41 @@ class RefTableStreamingWrite(
     // staging dir — with renamed files the epoch's data would be gone and
     // the retry would have nothing to publish. The epoch dir stays the
     // durable source until the commit lands; cleanup() removes it after.
-    def move(staging: Path): Unit = {
+    def copyInto(staging: Path, from: Path, files: Seq[StagedFile]): Unit = {
       // an EMPTY truncate epoch still publishes (an empty version); the
       // staging dir must exist even when no file lands in it
       fs.mkdirs(staging)
-      staged.foreach { f =>
+      files.foreach { f =>
         val dst = new Path(staging, f.rel)
         fs.mkdirs(dst.getParent)
         if (!org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(epochDir, f.rel), fs, dst, false, conf))
+            fs, new Path(from, f.rel), fs, dst, false, conf))
           throw new java.io.IOException(s"failed to stage ${f.rel} into $staging")
       }
     }
+    def move(staging: Path): Unit = copyInto(staging, epochDir, staged)
+    // post-commit work is best-effort — it never fails the stream — but a
+    // failure is reported, like the drop census, never swallowed silently
+    def bestEffort(what: String)(f: => Unit): Unit =
+      try f catch { case NonFatal(e) =>
+        System.err.println(s"[reftable] epoch $epochId $what failed on ${opts.path} " +
+          s"(the commit stands): $e")
+      }
+    lazy val spark = org.apache.spark.sql.SparkSession.active
     // QUARANTINE FIRST (onViolation=quarantine): the rejects log commits
     // before the main epoch, so a crash between the two leaves a
     // quarantined-but-also-unpublished epoch (replayed whole on restart),
-    // never a silently vanished reject. Its own txn marker space
-    // (`<appId>#q`) makes the quarantine commit replay-deduped too.
+    // never a silently vanished reject. Its own transaction (`<appId>#q`)
+    // makes the quarantine commit replay-deduped too.
     val stagedQ = epochMsgs.flatMap(_.quarantineFiles)
     if (stagedQ.nonEmpty) {
       val qOpts = RefTableWrites.quarantineOpts(opts)
       val qRows = epochMsgs.map(_.quarantineRows).sum
       System.err.println(
         s"[reftable] epoch $epochId quarantined $qRows row(s) to ${qOpts.path}")
-      val qMarker = Some(s"txn:$appId#q:$epochId")
-      VersionedTable.withConflictRetry(qOpts.path) { () =>
-        val qBase = VersionedTable.resolve(qOpts.path, conf).map(p => new Path(p).getName)
-        if (RefTableWrites.lastCommittedBatch(qOpts.path, s"$appId#q", conf)
-            .exists(_ >= epochId)) {
-          () // replayed epoch: quarantine already durable
-        } else {
-          VersionedTable.publishVia(qOpts.path, qOpts.keepVersions, marker = qMarker,
-            parent = qBase, requireBase = true,
-            manifestPartitionCols = Nil) { staging =>
-            stagedQ.foreach { f =>
-              val dst = new Path(staging, f.rel)
-              fs.mkdirs(dst.getParent)
-              if (!org.apache.hadoop.fs.FileUtil.copy(
-                  fs, new Path(new Path(epochDir, "_q"), f.rel), fs, dst, false, conf))
-                throw new java.io.IOException(s"failed to stage quarantine ${f.rel}")
-            }
-            qBase.foreach(b => RefTableFileManifest.writeDelta(
-              qOpts.path, staging, b, Set.empty, Nil, conf))
-          }
-          ()
-        }
+      RefTableWrites.commitAppend(qOpts.path, qOpts.keepVersions, Nil,
+          Some(RefTableWrites.Txn(s"$appId#q", epochId)), conf) { (staging, _) =>
+        copyInto(staging, new Path(epochDir, "_q"), stagedQ)
       }
     }
     // append mode: a no-data trigger against an existing table commits
@@ -199,95 +182,55 @@ class RefTableStreamingWrite(
     if (staged.isEmpty && !truncate && VersionedTable.resolve(opts.path, conf).isDefined) {
       cleanup(); return
     }
-    // keyed tables (declared keyColumns): every non-complete epoch applies
-    // as an O(epoch) merge-on-read UPSERT — update-mode rows replace their
-    // key's current image via a DV on the old positions, and epochs whose
-    // keys are all new degrade to a plain append (the key-bounds probe
-    // prunes every file). The staged epoch files are adopted as the new
-    // images directly (no rewrite); only their key columns are re-read,
-    // for file narrowing and the old-position semi-join. Same
-    // txn:<appId>:<epochId> marker discipline — replays land exactly once.
-    if (keyedUpsert && VersionedTable.resolve(opts.path, conf).isDefined) {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val storageSchema = StructType(opts.schema.fields.map(f =>
-        f.copy(name = opts.storageColumn(f.name))))
-      val keyCols = opts.keyColumns.map(opts.storageColumn)
-      val paths = staged.map(f => new Path(epochDir, f.rel).toString)
-      val keySource = spark.read.schema(storageSchema)
-        .option("basePath", epochDir.toString).parquet(paths: _*)
-      RefTableMutations.upsertMergeOnReadStaged(
-        spark, opts.path, move, keySource, keyCols,
-        opts.keepVersions, opts.partitionColumns,
-        RefTableMutations.partitionTypesOf(opts),
-        txn = Some((appId, epochId)))
-      cleanup()
-      try {
-        RefTableWrites.augmentStatsAfterCommit(opts, spark, conf)
-      } catch { case scala.util.control.NonFatal(_) => () }
-      return
-    }
-    val marker = Some(s"txn:$appId:$epochId")
-    RefTableWrites.guardBranchExists(opts.path, conf)
-    val committed = VersionedTable.withConflictRetry(opts.path) { () =>
-      // pin base FIRST, then the marker check, then CAS on that base —
-      // the ordering that makes check-then-commit unsplittable (see
-      // RefTableWrites.appendVersion)
-      val base = VersionedTable.resolve(opts.path, conf).map(p => new Path(p).getName)
-      if (RefTableWrites.lastCommittedBatch(opts.path, appId, conf).exists(_ >= epochId)) {
-        false // replayed epoch: already committed
-      } else if (truncate || base.isEmpty) {
-        // complete mode (or the first version): the epoch IS the table
-        VersionedTable.publishVia(opts.path, opts.keepVersions, marker = marker,
-          parent = base, requireBase = true,
-          manifestPartitionCols = opts.partitionColumns) { staging => move(staging) }
+    val txn = RefTableWrites.Txn(appId, epochId)
+    val upsert = keyedUpsert && VersionedTable.resolve(opts.path, conf).isDefined
+    val committed =
+      if (upsert) {
+        // keyed tables (declared keyColumns): every non-complete epoch
+        // applies as an O(epoch) merge-on-read UPSERT — update-mode rows
+        // replace their key's current image via a DV on the old positions,
+        // and epochs whose keys are all new degrade to a plain append (the
+        // key-bounds probe prunes every file). The staged epoch files are
+        // adopted as the new images directly (no rewrite); only their key
+        // columns are re-read, for file narrowing and the old-position
+        // semi-join. Same marker discipline — replays land exactly once.
+        val storageSchema = StructType(opts.schema.fields.map(f =>
+          f.copy(name = opts.storageColumn(f.name))))
+        val paths = staged.map(f => new Path(epochDir, f.rel).toString)
+        val keySource = spark.read.schema(storageSchema)
+          .option("basePath", epochDir.toString).parquet(paths: _*)
+        RefTableMutations.upsertMergeOnReadStaged(
+          spark, opts.path, move, keySource, opts.keyColumns.map(opts.storageColumn),
+          opts.keepVersions, opts.partitionColumns,
+          RefTableMutations.partitionTypesOf(opts), Some(txn))
         true
       } else {
-        // pure epoch append: a lost CAS (e.g. to a concurrent autoCompact
-        // or CDC-apply) rebases instead of re-copying the epoch's files;
-        // revalidate re-checks the exactly-once epoch replay guard against
-        // the moved head (a zombie attempt of the SAME query may have
-        // landed this epoch)
-        VersionedTable.publishVia(opts.path, opts.keepVersions, marker = marker,
-          parent = base, requireBase = true,
-          rebase = Some(VersionedTable.RebaseSpec(
-            removedRel = Set.empty, readRel = Set.empty,
-            partitionColumns = opts.partitionColumns,
-            revalidate = () => !RefTableWrites
-              .lastCommittedBatch(opts.path, appId, conf).exists(_ >= epochId)))) { staging =>
-          move(staging)
-          RefTableFileManifest.writeDelta(opts.path, staging, base.get, Set.empty,
-            opts.partitionColumns, conf)
-        }
-        true
+        RefTableWrites.guardBranchExists(opts.path, conf)
+        // complete mode replaces the table; a pure epoch append's lost CAS
+        // (e.g. to a concurrent autoCompact or CDC-apply) rebases instead
+        // of re-copying the epoch's files
+        RefTableWrites.commitAppend(opts.path, opts.keepVersions, opts.partitionColumns,
+            Some(txn), conf, replace = truncate) { (staging, _) => move(staging) }
       }
-    }
     cleanup()
-    // best-effort per-file stats for the committed epoch (batch writes get
-    // them inline via augmentStats): without this, versions produced ONLY
-    // by the streaming write would answer estimateStatistics with nothing
-    // and stats-based pruning would silently degrade until a batch write
-    // or maintenance pass ran. Never fails the stream.
-    if (committed) {
-      try {
-        RefTableWrites.augmentStatsAfterCommit(
-          opts, org.apache.spark.sql.SparkSession.active, conf)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // per-file stats for the committed epoch (batch writes get them inline):
+    // without this, versions produced ONLY by the streaming write would
+    // answer estimateStatistics with nothing and stats-based pruning would
+    // degrade until a batch write or maintenance pass ran
+    if (committed)
+      bestEffort("stats augmentation")(RefTableWrites.augmentStats(opts, spark, conf))
     // opt-in maintenance: streaming appends accrete one file per task per
     // epoch; once the file count crosses the threshold, compact as a
-    // normal CAS'd publish. Best-effort — maintenance must never fail the
-    // stream (a concurrent writer's conflict or a transient listing error
-    // just defers compaction to the next epoch).
-    if (committed && opts.autoCompact && !truncate) {
-      try {
-        RefTableMaintenance.maintain(
-          org.apache.spark.sql.SparkSession.active, opts.path,
+    // normal CAS'd publish (a concurrent writer's conflict or a transient
+    // listing error just defers compaction to the next epoch)
+    if (committed && opts.autoCompact && !truncate && !upsert)
+      bestEffort("auto-compaction") {
+        RefTableMaintenance.maintain(spark, opts.path,
           maxSmallFiles = opts.autoCompactFiles,
           keepVersions = opts.keepVersions,
           partitionColumns = opts.partitionColumns)
         ()
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+      }
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

@@ -50,7 +50,9 @@ import org.apache.spark.sql.sources.InsertableRelation
   * analyzed DataFrame (columns already aligned to the table schema) and
   * delegates to [[VersionedTable]], which also writes the `_STATS.json`
   * skipping manifest — so written tables are immediately prunable.
-  * Streaming writes go through [[VersionedTable.completeModePublisher]].
+  * Streaming writes (`writeStream.format("reftable")` and `toTable`) go
+  * through the DSv2 [[RefTableStreamingWrite]]; every exactly-once append,
+  * batch or streaming, lands through [[commitAppend]].
   */
 object RefTableWrites {
 
@@ -127,16 +129,9 @@ object RefTableWrites {
           "Publish it as a versioned root (VersionedTable.publish) or target a fresh directory.")
   }
 
-  /** Post-commit skipping-stats augmentation for non-batch write surfaces
-    * (the DSv2 streaming commit) — same work as the batch writers'
-    * inline [[augmentStats]] call.
-    */
-  private[reftable] def augmentStatsAfterCommit(opts: RefTableOptions,
-      spark: org.apache.spark.sql.SparkSession, conf: Configuration): Unit =
-    augmentStats(opts, spark, conf)
-
-  /** Post-commit skipping-stats augmentation declared by the options. */
-  private def augmentStats(opts: RefTableOptions, spark: org.apache.spark.sql.SparkSession,
+  /** Post-commit skipping-stats augmentation declared by the options —
+    * run by every write surface after its commit lands. */
+  private[reftable] def augmentStats(opts: RefTableOptions, spark: org.apache.spark.sql.SparkSession,
       conf: Configuration): Unit = {
     def storage(cols: Seq[String]): Seq[String] = cols.map(opts.storageColumn)
     if (opts.categoricalStats.nonEmpty) {
@@ -154,18 +149,17 @@ object RefTableWrites {
   }
 
   /** Highest micro-batch id transaction `appId` has committed to `root`,
-    * read from `txn:<appId>:<batchId>` markers in the RETAINED commit log
-    * (markers ride each commit's atomic claim, so they can never disagree
-    * with the committed state). Retention bounds the lookback to
-    * `keepVersions` commits — the replay a restart produces is of the
-    * LAST batch this query committed, so its marker is among the newest
-    * commits unless more than keepVersions external writers interleaved
-    * mid-replay, the same practical bound Delta's SetTransaction
-    * retention accepts.
+    * read from [[Txn]] markers in the RETAINED commit log (markers ride
+    * each commit's atomic claim, so they can never disagree with the
+    * committed state). Retention bounds the lookback to `keepVersions`
+    * commits — the replay a restart produces is of the LAST batch this
+    * query committed, so its marker is among the newest commits unless
+    * more than keepVersions external writers interleaved mid-replay, the
+    * same practical bound Delta's SetTransaction retention accepts.
     */
   def lastCommittedBatch(root: String, appId: String,
       conf: Configuration = HadoopConf()): Option[Long] = {
-    val prefix = s"txn:$appId:"
+    val prefix = Txn.prefix(appId)
     val log = VersionedTable.commitLog(root, conf)
     val markers =
       if (log.nonEmpty) log.flatMap(_.marker)
@@ -175,30 +169,95 @@ object RefTableWrites {
     if (ids.isEmpty) None else Some(ids.max)
   }
 
-  /** Append `data` to the versioned root as ONE new version — the shared
-    * non-layout append path of batch INSERT INTO and the streaming append
-    * sink. The commit is O(new data): the new version writes ONLY the
+  /** Batch `batch` of exactly-once transaction `appId` — the one owner of
+    * the `txn:<appId>:<batch>` commit marker. A batch is `replayed` once
+    * its transaction committed it, or a later one, to `root`.
+    */
+  private[reftable] final case class Txn(appId: String, batch: Long) {
+    def marker: String = Txn.prefix(appId) + batch
+    def replayed(root: String, conf: Configuration): Boolean =
+      lastCommittedBatch(root, appId, conf).exists(_ >= batch)
+  }
+
+  private[reftable] object Txn {
+    def prefix(appId: String): String = s"txn:$appId:"
+  }
+
+  /** The exactly-once append commit: every append surface lands here
+    * (batch INSERT INTO / [[appendVersion]], each streaming epoch, and the
+    * epoch's quarantine rejects). `populate(staging, full)` stages the new
+    * rows; `full` is false when the version inherits every base file by
+    * reference (the `_FILES.json` delta written after populate) and true
+    * when the version is exactly what populate stages — a fresh root, or
+    * `replace` (a complete-mode epoch is the whole table). Returns whether
+    * it committed: false when `txn` was already committed (a replay).
+    *
+    * ORDER MATTERS inside each CAS attempt: the base version is resolved
+    * (pinned) FIRST, the [[Txn]] marker is checked SECOND, and the publish
+    * CAS guards exactly that pinned base. Any commit landing after the
+    * marker check — including a zombie attempt committing this very batch
+    * — necessarily moves the head past the pinned base, so our CAS fails;
+    * the retry re-resolves, re-checks the marker, sees the winner's entry
+    * and lands nothing. (Checking the marker BEFORE pinning the base would
+    * leave a window where the zombie's commit is absorbed into a
+    * freshly-resolved base and the batch lands twice — the same reason
+    * Delta checks SetTransaction against the pinned snapshot.) An append
+    * onto a base reads and removes nothing, so a lost CAS rebases onto any
+    * concurrent commit instead of re-staging, once the replay check holds
+    * against the moved head.
+    */
+  private[reftable] def commitAppend(root: String, keepVersions: Int,
+      partitionColumns: Seq[String], txn: Option[Txn], conf: Configuration,
+      replace: Boolean = false)(populate: (Path, Boolean) => Unit): Boolean =
+    VersionedTable.withConflictRetry(root) { () =>
+      val base = VersionedTable.resolve(root, conf).map(p => new Path(p).getName)
+      if (txn.exists(_.replayed(root, conf))) false
+      else {
+        val marker = txn.map(_.marker)
+        base.filterNot(_ => replace) match {
+          case Some(b) =>
+            VersionedTable.publishVia(root, keepVersions, marker = marker,
+              parent = base, requireBase = true,
+              rebase = Some(VersionedTable.RebaseSpec(
+                removedRel = Set.empty, readRel = Set.empty,
+                partitionColumns = partitionColumns,
+                revalidate = () => !txn.exists(_.replayed(root, conf))))) { staging =>
+              populate(staging, false)
+              RefTableFileManifest.writeDelta(root, staging, b, Set.empty,
+                partitionColumns, conf)
+            }
+          case None => // CAS still armed: a concurrent first publish (or a
+            // commit under a replacing epoch) conflicts instead of being shadowed
+            VersionedTable.publishVia(root, keepVersions, marker = marker,
+              parent = base, requireBase = true,
+              manifestPartitionCols = partitionColumns)(populate(_, true))
+        }
+        true
+      }
+    }
+
+  /** clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that
+    * re-cluster per commit; an O(new data) append cannot keep them. */
+  private[reftable] def refuseGlobalLayout(opts: RefTableOptions): Unit =
+    require(opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty,
+      "reftable append: clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that " +
+        "re-cluster per commit; write them with batch INSERT (which rewrites the layout " +
+        "per commit) or maintain them with RefTableMaintenance")
+
+  /** Append `data` to the versioned root as ONE new version — the
+    * non-layout append path of batch INSERT INTO and of callers holding a
+    * DataFrame. The commit is O(new data): the new version writes ONLY the
     * appended rows and its `_FILES.json` inherits every base file by
     * reference (RefTableFileManifest); the base snapshot is never read.
     * Runs optimistically under the commit CAS (see [[insert]]'s
     * concurrency contract).
     *
-    * `txn = Some((appId, batchId))` arms EXACTLY-ONCE for streaming
-    * replays. ORDER MATTERS inside each CAS attempt: the base version is
-    * resolved (pinned) FIRST, the [[lastCommittedBatch]] marker is checked
-    * SECOND, and the publish CAS guards exactly that pinned base. Any
-    * commit landing after the marker check — including a zombie attempt
-    * committing this very batch — necessarily moves the head past the
-    * pinned base, so our CAS fails; the retry re-resolves, re-checks the
-    * marker, sees the winner's `txn:` entry and lands nothing. (Checking
-    * the marker BEFORE pinning the base would leave a window where the
-    * zombie's commit is absorbed into a freshly-resolved base and the
-    * batch lands twice — the same reason Delta checks SetTransaction
-    * against the pinned snapshot.)
+    * `txn = Some((appId, batchId))` arms EXACTLY-ONCE for replays: a batch
+    * the transaction already committed lands nothing (see [[commitAppend]]).
     */
   def appendVersion(opts: RefTableOptions, data: Dataset[Row],
       txn: Option[(String, Long)] = None): Unit =
-    appendVersionInternal(opts, data, txn, preEnforced = false)
+    appendVersionInternal(opts, data, txn.map { case (a, b) => Txn(a, b) }, preEnforced = false)
 
   /** The quarantine gate's one-materialized-pass cache (see
     * [[enforceExpectations]]): set when the gate persists the input,
@@ -216,12 +275,10 @@ object RefTableWrites {
       }
     }
 
-  private[reftable] def appendVersionInternal(opts: RefTableOptions, data: Dataset[Row],
-      txn: Option[(String, Long)], preEnforced: Boolean): Unit = withQuarantineCache {
+  private def appendVersionInternal(opts: RefTableOptions, data: Dataset[Row],
+      txn: Option[Txn], preEnforced: Boolean): Unit = withQuarantineCache {
     guardReadOnly(opts)
-    require(opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty,
-      "appendVersion: clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that " +
-        "re-cluster on append; use insert() (batch) which rewrites the layout per commit")
+    refuseGlobalLayout(opts)
     val conf = HadoopConf()
     guardBareRoot(opts, conf)
     opts.retainForMs.foreach(VersionedTable.declareRetention(opts.path, _, conf))
@@ -233,47 +290,13 @@ object RefTableWrites {
     // populates the blocks, the write reads them back.
     val aligned = RefTableMutations.materializeComputedSource(alignedStorage(opts,
       if (preEnforced) data.toDF() else enforceExpectations(opts, data)))
-    val marker = txn.map { case (a, b) => s"txn:$a:$b" }
-    val committed = VersionedTable.withConflictRetry(opts.path) { () =>
-      // pin the base FIRST: the marker check below is made against this
-      // pinned head, and the publish CAS requires it unchanged — so the
-      // check-then-commit pair cannot split (see Scaladoc)
-      val base = VersionedTable.resolve(opts.path, conf).map(p => new Path(p).getName)
-      if (txn.exists { case (a, b) =>
-          lastCommittedBatch(opts.path, a, conf).exists(_ >= b) }) {
-        false // replayed batch: the transaction already committed it (or a later one)
-      } else {
-        base match {
-          case Some(b) =>
-            // pure append: empty read/write set — a lost CAS rebases onto
-            // any concurrent commit instead of re-staging the batch.
-            // revalidate: a txn-marked batch re-checks its replay guard
-            // against the moved head (a concurrent writer of the SAME
-            // transaction may have landed this very batch)
-            VersionedTable.publishVia(opts.path, opts.keepVersions, marker = marker,
-              parent = base, requireBase = true,
-              rebase = Some(VersionedTable.RebaseSpec(
-                removedRel = Set.empty, readRel = Set.empty,
-                partitionColumns = opts.partitionColumns,
-                revalidate = () => txn.forall { case (a, b2) =>
-                  !lastCommittedBatch(opts.path, a, conf).exists(_ >= b2) }))) { staging =>
-              if (!aligned.isEmpty)
-                VersionedTable.writeParquetMicros(
-                  aligned, staging.toString, opts.partitionColumns)
-              RefTableFileManifest.writeDelta(opts.path, staging, b, Set.empty,
-                opts.partitionColumns, conf)
-            }
-          case None => // first version of a fresh root; CAS still armed so a
-            // concurrent first publish conflicts instead of being shadowed
-            VersionedTable.publishVia(opts.path, opts.keepVersions, marker = marker,
-              parent = None, requireBase = true,
-              manifestPartitionCols = opts.partitionColumns) { staging =>
-              VersionedTable.writeParquetMicros(
-                aligned, staging.toString, opts.partitionColumns)
-            }
-        }
-        true
-      }
+    // an empty batch onto a base stages nothing (the delta inherits every
+    // base file); a full publish always writes, so the version carries the
+    // schema even when it holds no rows
+    val committed = commitAppend(opts.path, opts.keepVersions, opts.partitionColumns,
+        txn, conf) { (staging, full) =>
+      if (full || !aligned.isEmpty)
+        VersionedTable.writeParquetMicros(aligned, staging.toString, opts.partitionColumns)
     }
     // outside the retry loop: a stats failure after a successful commit must
     // not re-run the (already-committed) append; replayed no-ops skip it
@@ -394,7 +417,7 @@ object RefTableWrites {
   /** Version-pinned (time travel) relations and genColumn projections are
     * read-only through EVERY write entry point.
     */
-  private def guardReadOnly(opts: RefTableOptions): Unit = {
+  private[reftable] def guardReadOnly(opts: RefTableOptions): Unit = {
     if (opts.version.nonEmpty)
       throw new UnsupportedOperationException(
         "reftable: a version-pinned (time travel) relation is read-only")
@@ -449,8 +472,8 @@ object RefTableWrites {
     else if (overwrite) doPublish(aligned, None, cas = false) // derives from nothing
     else if (opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty) {
       // plain appends (no global re-clustering declared) commit O(new
-      // data) via the shared manifest-append path (also the streaming
-      // append sink's path). clusterBy/zorderBy/bucketBy tables keep the
+      // data) through the one exactly-once append commit (the streaming
+      // epochs' commit too). clusterBy/zorderBy/bucketBy tables keep the
       // full rewrite below: their layout is a GLOBAL property, which is
       // the point of the option (for bucketBy it keeps every version
       // physically bucketed so keyed-mutation narrowing never lapses).
@@ -501,113 +524,6 @@ object RefTableWrites {
   }
 }
 
-/** V1 streaming sink — `writeStream.format("reftable")` is the sink-side of
-  * the loop the source reads (a stream MAINTAINS a refreshable snapshot
-  * table). Three modes (UPDATE requires declared `keyColumns`: each batch
-  * is the changed rows of a keyed result, applied as an O(batch)
-  * merge-on-read upsert under the same `txn:` marker discipline as
-  * append). The other two:
-  *
-  *  - COMPLETE: each batch is the full table state, published as a version
-  *    with the replay idempotency of [[VersionedTable.completeModePublisher]]
-  *    (re-publishing an already-published batch id is a no-op);
-  *  - APPEND: each batch is a delta, committed O(new data) through
-  *    [[RefTableWrites.appendVersion]] under a `txn:<appId>:<batchId>`
-  *    marker — the EXACTLY-ONCE guarantee holds across driver restarts and
-  *    zombie attempts because the marker check is made against the pinned
-  *    base the commit CAS guards (see [[RefTableWrites.appendVersion]]).
-  *    Empty batches against an existing table are skipped entirely: no
-  *    version churn from no-data triggers (replaying a skipped batch is a
-  *    no-op either way).
-  *
-  * `appId` for the append marker: the `txnAppId` option when set, else the
-  * streaming query id (stable across checkpoint restarts — it is restored
-  * from the checkpoint's metadata file, unlike the per-run runId).
-  */
-class RefTableSink(
-    opts: RefTableOptions, keepVersions: Int, partitionColumns: Seq[String],
-    append: Boolean = false, update: Boolean = false, txnAppId: Option[String] = None)
-    extends org.apache.spark.sql.execution.streaming.Sink {
-  private lazy val publish =
-    VersionedTable.completeModePublisher(opts.path, keepVersions, partitionColumns)
-  /** Restart-stable transaction id for the exactly-once marker: the
-    * `txnAppId` option when set, else the streaming query id (restored
-    * from the checkpoint across restarts, unlike the per-run runId).
-    */
-  private def sinkAppId(data: Dataset[Row]): String =
-    txnAppId.orElse(Option(data.sparkSession.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY)))
-      .getOrElse(throw new IllegalStateException(
-        "reftable sink: no streaming query id on this thread and no 'txnAppId' " +
-          "option — the exactly-once marker needs a restart-stable transaction id"))
-  override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
-    // the declared schema is the write contract, same as it is for reads;
-    // a drifted stream must fail loudly, not publish a surprise layout
-    val declared = opts.schema.fieldNames.toSeq
-    if (data.columns.toSeq != declared)
-      throw new IllegalStateException(
-        s"reftable sink: batch columns ${data.columns.toSeq} do not match the " +
-          s"declared schema $declared")
-    val batch = org.apache.spark.sql.graft.DatasetBridge.rebatch(data)
-    if (update) {
-      // update mode: the batch is the CHANGED rows of a keyed result (the
-      // watermarked-aggregation shape) — applied as an O(batch)
-      // merge-on-read upsert on the declared keyColumns, under the same
-      // txn:<appId>:<batchId> marker discipline as the append path, so a
-      // replayed epoch lands exactly once. Declared expectations gate the
-      // batch exactly like an append (fail/drop/quarantine).
-      val appId = sinkAppId(batch)
-      val conf = HadoopConf()
-      RefTableWrites.withQuarantineCache {
-        val gated = RefTableWrites.enforceExpectations(opts, batch)
-        val fresh = VersionedTable.resolve(opts.path, conf).isEmpty
-        if (!fresh && gated.isEmpty) () // no changes, no version churn
-        else {
-          if (fresh) {
-            // first epoch of a fresh root: nothing to merge into — the
-            // batch IS version 1 (marker rides the commit for replay dedup;
-            // appendVersion renames declared→storage itself)
-            RefTableWrites.appendVersionInternal(
-              opts, gated, txn = Some((appId, batchId)), preEnforced = true)
-          } else {
-            // the mutation API reads the table's files, so it speaks
-            // STORAGE names — rename the batch to match
-            val stored = opts.schema.fields.foldLeft(gated) { (df, f) =>
-              val s = opts.storageColumn(f.name)
-              if (s == f.name) df else df.withColumnRenamed(f.name, s)
-            }
-            RefTableMutations.upsertMergeOnRead(
-              data.sparkSession, opts.path, stored,
-              opts.keyColumns.map(opts.storageColumn),
-              keepVersions, opts.partitionColumns,
-              RefTableMutations.partitionTypesOf(opts),
-              txn = Some((appId, batchId)))
-            ()
-          }
-        }
-      }
-    } else if (append) {
-      val appId = sinkAppId(batch)
-      val conf = HadoopConf()
-      // no-data triggers: nothing to commit, nothing to mark (an existing
-      // table stays at its version; a FRESH root still publishes so readers
-      // find an empty table rather than no table)
-      if (batch.isEmpty && VersionedTable.resolve(opts.path, conf).isDefined) return
-      val writeOpts =
-        if (opts.partitionColumns == partitionColumns) opts
-        else opts.copy(partitionColumns = partitionColumns)
-      RefTableWrites.appendVersion(writeOpts, batch, txn = Some((appId, batchId)))
-    } else {
-      val stored = opts.schema.fields.foldLeft(batch) { (df, f) =>
-        val s = opts.storageColumn(f.name)
-        if (s == f.name) df else df.withColumnRenamed(f.name, s)
-      }
-      publish(stored, batchId)
-    }
-  }
-  override def toString: String = s"RefTableSink(${opts.path})"
-}
-
 class RefTableWriteBuilder(opts: RefTableOptions, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
   // SaveMode.Overwrite / INSERT OVERWRITE arrive as truncate() on the
@@ -645,9 +561,7 @@ class RefTableWriteBuilder(opts: RefTableOptions, info: LogicalWriteInfo)
     // engine prefers DSv2 once STREAMING_WRITE is declared): appId = the
     // checkpoint-stable streaming query id, overridable per write
     override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-      if (opts.version.nonEmpty || opts.genColumn.nonEmpty)
-        throw new UnsupportedOperationException(
-          "reftable: a version-pinned or genColumn relation is read-only")
+      RefTableWrites.guardReadOnly(opts)
       // the declared schema is the write contract, same as for reads — a
       // drifted stream must fail loudly here, not write a positional
       // "fix" (the engine passes the QUERY's schema; catalog tables are

@@ -1881,8 +1881,7 @@ object VersionedTable {
     * them as table states would be wrong, hence the name.
     */
   def completeModePublisher(
-      root: String, keepVersions: Int = 3,
-      partitionColumns: Seq[String] = Nil): (DataFrame, Long) => Unit = {
+      root: String, keepVersions: Int = 3): (DataFrame, Long) => Unit = {
     // foreachBatch is at-least-once: a replayed batch must not publish a
     // duplicate version (it would burn a retention slot and could prune a
     // version a pinned reader still needs). The marker rides the
@@ -1898,7 +1897,7 @@ object VersionedTable {
     (batch, batchId) => {
       val m = s"$instance:$batchId"
       if (!publishedMarker(root).contains(m)) {
-        publishInternal(batch, root, keepVersions, partitionColumns, marker = Some(m))
+        publishInternal(batch, root, keepVersions, Nil, marker = Some(m))
       }
       ()
     }

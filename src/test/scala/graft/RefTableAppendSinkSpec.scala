@@ -205,47 +205,32 @@ class RefTableAppendSinkSpec extends AnyFunSuite {
     assert(nVersions(root) == nBefore)
   }
 
-  test("V1 sink fallback (disabledV2Writers) keeps both modes working") {
-    // with STREAMING_WRITE declared the engine prefers the DSv2 path; the
-    // V1 StreamSinkProvider remains the documented escape hatch — pin it
+  test("disabledV2Writers naming the provider fails start() instead of writing") {
+    // there is no V1 sink to fall back to: the one streaming write is DSv2
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_v1sink_")
+    val base = Files.createTempDirectory("graft_nov1_")
     val in = s"$base/in"
     val root = s"$base/tbl"
+    Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
     val prev = spark.conf.getOption("spark.sql.streaming.disabledV2Writers")
     spark.conf.set("spark.sql.streaming.disabledV2Writers",
       "graft.sources.reftable.RefTableProvider")
     try {
-      Seq((1L, "a")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
-      def drain(mode: String, path: String, schema: String,
-          agg: Boolean = false): Unit = {
-        val src = spark.readStream.schema("id LONG, name STRING")
+      val e = intercept[Exception] {
+        spark.readStream.schema("id LONG, name STRING")
           .option("recursiveFileLookup", "true").parquet(in)
-        val df = if (agg) src.groupBy("name").agg(count(lit(1)).as("n")) else src
-        val q = df.writeStream.format("reftable")
-          .option("path", path).option("schema", schema)
-          .option("checkpointLocation",
-            Files.createTempDirectory("graft_v1sink_ck_").toString)
-          .outputMode(mode)
+          .writeStream.format("reftable")
+          .option("path", root).option("schema", ddl)
+          .option("checkpointLocation", s"$base/ck")
+          .outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination(120000)
-        q.stop()
       }
-      drain("append", root, ddl)
-      assert(readBack(root) == Seq((1L, "a")))
-      assert(RefTableWrites.lastCommittedBatch(root,
-        VersionedTable.commitLog(root, conf).last.marker.get
-          .split(':')(1)).contains(0L),
-        "V1 append path must carry the txn marker")
-      drain("complete", s"$base/tbl2", "name STRING, n BIGINT", agg = true)
-      val agg = spark.read.format("reftable")
-        .option("path", s"$base/tbl2").option("schema", "name STRING, n BIGINT")
-        .load().collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      assert(agg == Seq(("a", 1L)))
+      assert(e.getMessage.contains("does not support streamed writing"), e.getMessage)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.streaming.disabledV2Writers", v)
       case None => spark.conf.set("spark.sql.streaming.disabledV2Writers", "")
     }
+    assert(VersionedTable.resolve(root, conf).isEmpty, "a refused stream lands nothing")
   }
 
   test("append sink honors partitionColumns and layout options are refused") {

@@ -105,4 +105,32 @@ class RefTableMutationStrategySpec extends AnyFunSuite {
         s"mergeOnRead=$mor")
     }
   }
+
+  test("a DELETE that empties a partitioned table leaves it mutable and compactable") {
+    import spark.implicits._
+    def emptied(name: String): String = {
+      val root = tmpDir(name)
+      VersionedTable.publishPartitioned(Seq((1L, "a"), (2L, "b")).toDF("k", "p"), root, Seq("p"))
+      RefTableMutations.deleteWhere(spark, root, col("k") > 0, partitionColumns = Seq("p"))
+      // the partitioned write of the empty result staged no file at all
+      assert(SnapshotFiles.list(VersionedTable.resolve(root, conf).get, Seq("p")).isEmpty)
+      root
+    }
+    def read(root: String): Seq[(Long, String)] = spark.read.format("reftable")
+      .option("path", root).option("schema", "k BIGINT, p STRING")
+      .option("partitionColumns", "p").load()
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+
+    val up = emptied("empty_up")
+    RefTableMutations.upsert(spark, up, Seq((3L, "c"), (1L, "a")).toDF("k", "p"), Seq("k"),
+      partitionColumns = Seq("p"))
+    assert(read(up) == Seq((1L, "a"), (3L, "c")))
+
+    val cp = emptied("empty_compact")
+    VersionedTable.compact(spark, cp, partitionColumns = Seq("p"))
+    assert(read(cp).isEmpty)
+    RefTableMutations.upsertMergeOnRead(spark, cp, Seq((4L, "d")).toDF("k", "p"), Seq("k"),
+      partitionColumns = Seq("p"))
+    assert(read(cp) == Seq((4L, "d")))
+  }
 }

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The DSv2 STREAMING write path — `writeStream.toTable("cat.db.t")` —
   * executors write parquet straight into epoch staging, the driver
   * publishes from commit messages, and the `txn:` marker makes replays
-  * exactly-once (same contract as the V1 append sink, RefTableAppendSinkSpec).
+  * exactly-once (the same streaming write as `format("reftable")`,
+  * RefTableAppendSinkSpec).
   */
 class RefTableStreamingWriteSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -383,5 +384,107 @@ class RefTableStreamingWriteSpec extends AnyFunSuite {
       assert(got.length == 1 &&
         got(0).getTimestamp(1) == java.sql.Timestamp.valueOf("2024-03-01 10:30:00.123456"))
     }
+  }
+
+  test("quarantine epochs: a replay lands once, a lost quarantine CAS rebases") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_swqrb_")
+    val root = s"$base/t"
+    val qroot = s"${root}__quarantine"
+    val in = s"$base/in"
+    val ck = s"$base/ck"
+    val ddl = "id BIGINT, name STRING"
+    val qddl = "id BIGINT, name STRING, _violated STRING"
+    def qOpts = graft.sources.reftable.RefTableOptions.from(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        scala.jdk.CollectionConverters.MapHasAsJava(
+          Map("path" -> qroot, "schema" -> qddl)).asJava))
+    // the quarantine table already holds a reject, so the epoch's
+    // quarantine commit is an append onto a base
+    RefTableWrites.appendVersion(qOpts, Seq((-100L, "old", "pos_id")).toDF("id", "name", "_violated"))
+    Seq((1L, "ok"), (-2L, "neg")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
+    def drain(): Unit = {
+      val q = spark.readStream.schema("id LONG, name STRING")
+        .option("recursiveFileLookup", "true").parquet(in)
+        .writeStream.format("reftable")
+        .option("path", root).option("schema", ddl)
+        .option("expect.pos_id", "id > 0").option("onViolation", "quarantine")
+        .option("checkpointLocation", ck)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.stop()
+    }
+    def mainRows() = spark.read.format("reftable").option("path", root)
+      .option("schema", ddl).load().collect().map(_.getLong(0)).sorted.toSeq
+    def quarantineRows() = spark.read.format("reftable").option("path", qroot)
+      .option("schema", qddl).load().collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+
+    // a concurrent append lands on the quarantine table inside the CAS
+    // window of the epoch's quarantine commit: the commit must rebase onto
+    // it, not fail or re-copy the rejects
+    val r0 = VersionedTable.rebasedCommits.get
+    VersionedTable.onBeforeClaim = Some { r =>
+      if (r.endsWith("__quarantine")) {
+        VersionedTable.onBeforeClaim = None
+        RefTableWrites.appendVersion(qOpts,
+          Seq((-200L, "conc", "pos_id")).toDF("id", "name", "_violated"))
+      }
+    }
+    try drain() finally VersionedTable.onBeforeClaim = None
+    assert(VersionedTable.rebasedCommits.get == r0 + 1, "the lost quarantine CAS must rebase")
+    assert(mainRows() == Seq(1L))
+    assert(quarantineRows() == Seq((-200L, "conc"), (-100L, "old"), (-2L, "neg")))
+
+    // forced replay of the epoch: neither table lands it again
+    val nMain = VersionedTable.versionDirs(root, conf).size
+    val nQ = VersionedTable.versionDirs(qroot, conf).size
+    val commits = new java.io.File(s"$ck/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
+    assert(commits.last.delete())
+    new java.io.File(commits.last.getParentFile,
+      "." + commits.last.getName + ".crc").delete()
+    drain()
+    assert(mainRows() == Seq(1L))
+    assert(quarantineRows() == Seq((-200L, "conc"), (-100L, "old"), (-2L, "neg")),
+      "a replayed quarantine epoch must land once")
+    assert(VersionedTable.versionDirs(root, conf).size == nMain)
+    assert(VersionedTable.versionDirs(qroot, conf).size == nQ)
+  }
+
+  test("a failed post-commit stats augmentation is reported and the stream continues") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_swbe_")
+    val root = s"$base/t"
+    val in = s"$base/in"
+    Seq((1L, "red")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
+    Seq((2L, "blue")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f1")
+    val captured = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try {
+      // categorical stats read the columns a data file holds, and a
+      // partition column lives only in its directory names: the
+      // augmentation fails after every epoch's commit
+      val q = spark.readStream.schema("id LONG, name STRING")
+        .option("recursiveFileLookup", "true").option("maxFilesPerTrigger", "1")
+        .parquet(in)
+        .writeStream.format("reftable")
+        .option("path", root).option("schema", "id BIGINT, name STRING")
+        .option("partitionColumns", "name").option("categoricalStats", "name")
+        .option("checkpointLocation", s"$base/ck")
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.stop()
+    } finally System.setErr(err)
+    val got = spark.read.format("reftable").option("path", root)
+      .option("schema", "id BIGINT, name STRING").option("partitionColumns", "name").load()
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got == Seq((1L, "red"), (2L, "blue")), "both epochs land past the failure")
+    val reported = captured.toString("UTF-8").linesIterator
+      .filter(_.contains("stats augmentation failed")).toSeq
+    assert(reported.size == 2, captured.toString("UTF-8"))
   }
 }

@@ -107,43 +107,71 @@ class RefTableUpdateSinkSpec extends AnyFunSuite {
     }
   }
 
-  test("V1 sink direct: keyed update batches upsert with zombie-replay dedup") {
+  test("keyed format() update stream: a force-replayed last epoch lands nothing") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_upv1_").toString + "/t"
-    val params = Map(
-      "path" -> root, "schema" -> "id BIGINT, v DOUBLE",
-      "keyColumns" -> "id")
-    val opts = RefTableOptions.from(
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        scala.jdk.CollectionConverters.MapHasAsJava(params).asJava))
-    val sink = new RefTableSink(opts, 3, Nil, update = true, txnAppId = Some("upq"))
+    val base = Files.createTempDirectory("graft_upfrp_")
+    val root = s"$base/t"
+    val in = s"$base/in"
+    val ck = s"$base/ck"
+    def drain(): Unit = {
+      val q = spark.readStream.schema("id LONG, name STRING")
+        .option("recursiveFileLookup", "true").option("maxFilesPerTrigger", "1")
+        .parquet(in)
+        .groupBy("name").agg(count(lit(1)).as("cnt"))
+        .writeStream.format("reftable")
+        .option("path", root).option("schema", "name STRING, cnt BIGINT")
+        .option("keyColumns", "name")
+        .option("checkpointLocation", ck)
+        .outputMode("update")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      q.stop()
+    }
     def readBack() = spark.read.format("reftable")
-      .option("path", root).option("schema", "id BIGINT, v DOUBLE").load()
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    sink.addBatch(0, Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
-    assert(readBack() == Seq((1L, 1.0), (2L, 2.0)))
-    sink.addBatch(1, Seq((2L, 20.0), (3L, 3.0)).toDF("id", "v"))
-    assert(readBack() == Seq((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+      .option("path", root).option("schema", "name STRING, cnt BIGINT").load()
+      .orderBy("name").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    Seq((1L, "red"), (2L, "blue")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
+    Seq((3L, "red"), (4L, "green")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f1")
+    drain()
+    assert(readBack() == Seq(("blue", 1L), ("green", 1L), ("red", 2L)))
+    // the last epoch's commit is dropped from the checkpoint: the restart
+    // re-runs it against the sink, and its marker must land nothing
+    val commits = new java.io.File(s"$ck/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
     val nBefore = VersionedTable.versionDirs(root, conf).size
-    // zombie replay of batch 1 (and of batch 0): both must land nothing
-    sink.addBatch(1, Seq((2L, 20.0), (3L, 3.0)).toDF("id", "v"))
-    sink.addBatch(0, Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
-    assert(readBack() == Seq((1L, 1.0), (2L, 20.0), (3L, 3.0)))
+    assert(commits.last.delete())
+    new java.io.File(commits.last.getParentFile,
+      "." + commits.last.getName + ".crc").delete()
+    drain()
+    assert(readBack() == Seq(("blue", 1L), ("green", 1L), ("red", 2L)),
+      "replayed update epoch must not re-apply")
     assert(VersionedTable.versionDirs(root, conf).size == nBefore,
-      "replayed batches must not publish new versions")
-    // empty update batch against an existing table: no version churn
-    sink.addBatch(2, Seq.empty[(Long, Double)].toDF("id", "v"))
+      "a replayed epoch must not publish a version")
+    // a restart with no new data: no version churn
+    drain()
     assert(VersionedTable.versionDirs(root, conf).size == nBefore)
   }
 
-  test("V1 createSink: update mode requires keyColumns, names the contract") {
-    val prov = new RefTableProvider
-    val e = intercept[IllegalArgumentException] {
-      prov.createSink(spark.sqlContext,
-        Map("path" -> "/tmp/x", "schema" -> "id BIGINT, v DOUBLE"),
-        Nil, org.apache.spark.sql.streaming.OutputMode.Update())
+  test("format() update mode without keyColumns is refused at start") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_upfnk_")
+    Seq((1L, "x")).toDF("id", "name").write.parquet(s"$base/in/f0")
+    val e = intercept[Exception] {
+      val q = spark.readStream.schema("id LONG, name STRING")
+        .option("recursiveFileLookup", "true").parquet(s"$base/in")
+        .groupBy("name").agg(count(lit(1)).as("cnt"))
+        .writeStream.format("reftable")
+        .option("path", s"$base/t").option("schema", "name STRING, cnt BIGINT")
+        .option("checkpointLocation", s"$base/ck")
+        .outputMode("update")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      q.stop()
     }
-    assert(e.getMessage.contains("keyColumns"))
+    assert(e.getMessage != null)
+    assert(VersionedTable.resolve(s"$base/t").isEmpty, "a refused stream lands nothing")
   }
 
   test("keyed table via format(): update epochs land through the DSv2 upsert") {
