@@ -720,7 +720,8 @@ object StreamingOps {
     // SnapshotDiff.ChangeFeed in foreachBatch) collapsed onto the
     // one-option surface — `.option("changefeed", "true")` makes each
     // generation's micro-batch the key-level delta itself
-    // ([[graft.sources.reftable.RefTableChangefeedStream]]): batch 0 is
+    // (the changefeed read mode of
+    // [[graft.sources.reftable.RefTableMicroBatchStream]]): batch 0 is
     // the snapshot-as-inserts bootstrap, later batches carry exactly the
     // insert/update/delete rows (computed from the FILE delta of the two
     // pinned versions — O(changed files), not a full-table join, on

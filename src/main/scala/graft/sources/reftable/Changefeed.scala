@@ -5,9 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.sources.Filter
 
-/** The changefeed's diff core, shared by the streaming source
-  * ([[RefTableChangefeedStream]], which materializes each generation's
-  * delta for exactly-once replay) and the batch surface
+/** The changefeed's diff core, shared by the streaming source's
+  * changefeed read mode ([[RefTableMicroBatchStream]], which materializes
+  * each generation's delta for exactly-once replay) and the batch surface
   * ([[Changefeed.between]], which returns the diff LAZILY — batch reads
   * need no replay guarantee, so the plan composes like any DataFrame).
   *

@@ -224,7 +224,7 @@ class RefTableAggScan(opts: RefTableOptions, pushed: RefTableAggregates.PushedAg
   }
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
-      val gen = if (opts.refreshMs <= 0) 0L else System.currentTimeMillis() / opts.refreshMs
+      val gen = opts.generationAt(RefTableOptions.wallClock())
       // one partition per FILE (never byte ranges): a footer describes the
       // whole file, and each file must be counted exactly once. The
       // version-aware pruned listing (no filters can be pushed here)

@@ -175,8 +175,8 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
     }
 
   /** `t$changefeed`: the table under the changefeed READ MODE
-    * ([[RefTableChangefeedStream]] — schema + `change_type`, streamed
-    * deltas per generation). A metadata-SUFFIX rather than a read option
+    * of [[RefTableMicroBatchStream]] — schema + `change_type`, streamed
+    * deltas per generation. A metadata-SUFFIX rather than a read option
     * because the mode EXTENDS the schema, and Spark fixes a catalog
     * relation's schema at table resolution, before scan options exist.
     * The merge key comes from the descriptor's `keyColumns` option
@@ -669,9 +669,7 @@ class RefTableCatalog extends TableCatalog with SupportsNamespaces with Procedur
         if (!creating) prim.overwrite(dp, descriptor, conf)
       }
       try fs.delete(rtasDir, true) catch { case _: java.io.IOException => () }
-      try RefTableWrites.augmentStats(
-        opts, org.apache.spark.sql.SparkSession.active, conf)
-      catch { case scala.util.control.NonFatal(_) => () }
+      RefTableWrites.augmentStats(opts, org.apache.spark.sql.SparkSession.active, conf)
     }
 
     override def abortStagedChanges(): Unit = {

@@ -318,6 +318,12 @@ final case class RefTableOptions(
 
   /** True for a field decoded from the directory path, not file content. */
   def isPartitionCol(field: String): Boolean = partitionColumns.contains(field)
+
+  /** The refresh generation at `nowMs`: floor(now / refreshInterval), and
+    * 0 without a refresh interval — the one refresh rule of streams, batch
+    * scans and pushed-aggregate scans.
+    */
+  def generationAt(nowMs: Long): Long = if (refreshMs <= 0) 0L else nowMs / refreshMs
 }
 
 /** Batched validation failure with STRUCTURED attribution: `failures` pairs
@@ -334,6 +340,9 @@ final class RefTableValidationException(val failures: Seq[(String, String)])
     "Invalid reftable options:\n  " + failures.map(_._2).mkString("\n  "))
 
 object RefTableOptions {
+  /** The clock [[generationAt]] reads outside tests. */
+  val wallClock: () => Long = () => System.currentTimeMillis()
+
   def from(options: CaseInsensitiveStringMap): RefTableOptions = {
     // every failure carries the OFFENDING OPTION as a structured tag —
     // the Spark-side analogue of the reference FailureCollector's
@@ -511,6 +520,13 @@ object RefTableOptions {
       err("clusterBy", "Options 'clusterBy', 'zorderBy' and 'bucketBy' are mutually exclusive")
     if ((clusterBy.nonEmpty || zorderBy.nonEmpty || bucketBy.nonEmpty) && partitionColumns.nonEmpty)
       err("clusterBy", "Layout options ('clusterBy'/'zorderBy'/'bucketBy') do not combine with 'partitionColumns'")
+    // per-file stats are computed from the columns a data file holds, and a
+    // partition column lives only in its directory names
+    Seq("categoricalStats" -> categoricalStats, "bloomStats" -> bloomStats, "ndvStats" -> ndvStats)
+      .foreach { case (opt, cols) => cols.filter(partitionColumns.contains).foreach(c =>
+        err(opt, s"$opt column '$c' is a partition column: its values live in directory " +
+          "names, not in the data files per-file stats are computed from"))
+      }
     val bucketCount = Option(options.get("bucketCount")).filter(_.nonEmpty) match {
       case None => 16
       case Some(s) =>

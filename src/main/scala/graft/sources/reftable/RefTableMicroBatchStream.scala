@@ -1,15 +1,21 @@
 package graft.sources.reftable
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{
   CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxBytes, ReadMaxFiles,
-  SupportsAdmissionControl, SupportsTriggerAvailableNow}
+  ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** A snapshot file pinned at refresh time. Pinning (path, length) at the
   * refresh boundary is what gives a generation snapshot identity even if the
@@ -224,14 +230,17 @@ object RefTableOffset {
 }
 
 /** The reference's snapshot/refresh semantics as a DSv2 MicroBatchStream
-  * (reference core: TableInputDStream.scala:51-62).
+  * (reference core: TableInputDStream.scala:51-62) — the one streaming
+  * source of the reftable format, in two read modes.
   *
-  *  - Refresh policy: generation = floor(now / refreshInterval) — refreshes
-  *    align to interval multiples exactly like the reference's threshold
-  *    arithmetic (`lastRefreshTime + refreshInterval − lastRefreshTime %
+  *  - Refresh policy: generation = [[RefTableOptions.generationAt]] of the
+  *    stream's clock, floor(now / refreshInterval) — refreshes align to
+  *    interval multiples exactly like the reference's threshold arithmetic
+  *    (`lastRefreshTime + refreshInterval − lastRefreshTime %
   *    refreshInterval`, TableInputDStream.scala:56-58), and the first poll
   *    always loads (reference resets lastRefreshTime in start(),
-  *    TableInputDStream.scala:42-45).
+  *    TableInputDStream.scala:42-45). The clock is the wall clock; tests
+  *    drive a manual one.
   *  - The refresh decision is made once, on the driver, inside latestOffset()
   *    and recorded in the offset, so retried tasks always see a consistent
   *    generation (the reference decided per `compute` call with wall-clock).
@@ -246,10 +255,9 @@ object RefTableOffset {
   *    crossed mid-generation does NOT switch snapshots, preserving snapshot
   *    identity; the next generation begins at the following batch.
   *  - Trigger.AvailableNow (SupportsTriggerAvailableNow): the current
-  *    generation is pinned at prepare time and drained (in chunks if
-  *    limited), then the query stops — also what makes trigger-emit mode
-  *    terminate under AvailableNow.
-  *  - commit(end) releases snapshot metadata for generations < end.gen — the
+  *    generation is drained (in chunks if limited), then the query stops —
+  *    also what makes trigger-emit mode terminate under AvailableNow.
+  *  - commit(end) releases what generations < end.gen pinned — the
   *    reference never unpersisted old snapshots (leak at
   *    TableInputDStream.scala:59); here old generations are dropped as soon
   *    as they are committed.
@@ -265,75 +273,103 @@ object RefTableOffset {
   *    generation; sinks requiring exact determinism should run unchunked,
   *    and `strictSnapshot=true` turns that contract into a validation
   *    error by refusing the admission caps outright ([[RefTableOptions]]).
+  *
+  * The offsets above are the same in both read modes; what a generation
+  * IS comes from the mode's generation kind:
+  *  - snapshot (default): the table's pruned file listing, pinned in memory
+  *    when the generation is emitted (at prepare time under AvailableNow)
+  *    and sliced by the admission caps;
+  *  - changefeed (`.option("changefeed", "true")` + `keyColumns`, output
+  *    schema + `change_type`): the key-level CHANGE SET between the
+  *    previous generation's pinned version and this one — `change_type` ∈
+  *    insert | update | delete plus the row image (after-image;
+  *    before-image for deletes). This lifts the foreachBatch composition
+  *    (`VersionedTable.changes` per generation, q145/q165) onto a
+  *    one-option surface. Each generation is emitted whole (`upTo` = -1;
+  *    admission caps and emitMode=trigger are refused at validation).
+  *
+  * CHANGEFEED MECHANICS. Each generation pins the table's CURRENT VERSION
+  * NAME into a tiny `pin-<gen>.json` under the checkpoint (versioned roots
+  * retain versions, so the previous generation's full listing is
+  * reconstructible after ANY restart — the FileStreamSource metadata-log
+  * pattern applied to versions instead of files). The pins survive a
+  * restart, so a restarted changefeed emits nothing until the next
+  * boundary. A batch materializes its diff ONCE into
+  * `<checkpoint>/graft_cf/diff-<gen>` and the scan reads those files, so
+  * an uncommitted batch replayed after a crash re-reads the identical
+  * materialized delta (exactly-once delta content under replay).
+  *
+  * CHANGEFEED COST. The diff is computed from the FILE delta of the two
+  * pinned listings, not a full-table join: rows of files only in the old
+  * listing and positions newly deletion-vector'd form the "left" side,
+  * rows of files only in the new listing the "right" side, and one
+  * key-joined [[graft.operators.SnapshotDiff.diff]] over just those rows
+  * classifies insert/update/delete while cancelling no-op rewrites (a
+  * compaction between generations emits an EMPTY delta — same rows, new
+  * files, all cancelled). On manifest-delta commit chains
+  * (upsert/DELETE/MoR apply) that is O(changed files + changed rows) per
+  * generation on any table size; a full physical re-publish degrades to a
+  * whole-snapshot diff, which is the true change-set bound anyway.
+  *
+  * CHANGEFEED BOOTSTRAP AND FALLBACK. Where the stream STARTS is declared
+  * by `changefeedFrom`:
+  *  - `earliest` (default): the first batch emits the whole snapshot as
+  *    inserts — the standard CDF initial-load shape;
+  *  - `latest`: the first batch is EMPTY and pins the current version, so
+  *    deltas begin with the next change (consumers that only want what
+  *    changes from now on);
+  *  - a version dir name: the first batch is the delta FROM that retained
+  *    version to current (Delta CDF's startingVersion); if it has been
+  *    vacuumed the stream fails loudly — a silent bootstrap would replay
+  *    the corpus into a consumer that asked for a delta.
+  * If a previous pinned version has been vacuumed away mid-stream, the
+  * stream falls back to the snapshot-as-inserts batch (at-least-once;
+  * pair with the idempotent [[RefTableMutations.applyChangesMergeOnRead]]
+  * replay semantics downstream).
   */
 class RefTableMicroBatchStream(
-    opts: RefTableOptions, required: StructType, pushed: Array[Filter] = Array.empty)
+    opts: RefTableOptions, required: StructType, pushed: Array[Filter] = Array.empty,
+    checkpointLocation: Option[String] = None,
+    clock: () => Long = RefTableOptions.wallClock)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow
-    with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
+    with ReportsSourceMetrics {
+
+  private val kind: GenerationKind =
+    if (opts.changefeed) new Changefeed(checkpointLocation.getOrElse(
+      throw new IllegalArgumentException("the changefeed read mode keeps its version pins " +
+        "under the query's checkpoint location, and none was given")))
+    else new Snapshot
 
   /** Per-trigger source metrics, surfaced in `StreamingQueryProgress
     * .sources[].metrics` — the streaming analogue of the batch scan's
     * custom SQL metrics: which refresh generation the last batch consumed,
-    * and the pinned (already partition-pruned) snapshot's size. At scale
-    * this is the signal that tells an operator whether a slow stream is
-    * re-reading a huge snapshot every generation or draining it in chunks.
+    * plus the kind's own (the pinned snapshot's size, or the table version
+    * a delta ended at). At scale this is the signal that tells an operator
+    * whether a slow stream is re-reading a huge snapshot every generation
+    * or draining it in chunks.
     */
-  override def metrics(latestConsumedOffset: java.util.Optional[
-      org.apache.spark.sql.connector.read.streaming.Offset]): java.util.Map[String, String] =
-    synchronized {
-      val m = new java.util.HashMap[String, String]()
-      Option(latestConsumedOffset.orElse(null)).foreach { o =>
-        val off = RefTableOffset.fromJson(o.json())
-        m.put("generation", off.gen.toString)
-        snapshots.get(off.gen).map(_.files).foreach { fs =>
-          m.put("snapshotFiles", fs.size.toString)
-          m.put("snapshotBytes", fs.map(_.length).sum.toString)
-          m.put("filesEmitted",
-            (if (off.upTo >= 0) off.upTo else fs.size.toLong).toString)
-        }
-      }
-      m
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
+      : java.util.Map[String, String] = synchronized {
+    val m = new java.util.HashMap[String, String]()
+    Option(latestConsumedOffset.orElse(null)).foreach { o =>
+      val off = RefTableOffset.fromJson(o.json())
+      m.put("generation", off.gen.toString)
+      kind.metrics(off, m)
     }
+    m
+  }
 
   private var last: RefTableOffset = _
   private var availableNowGen: Option[Long] = None
-  private val snapshots = scala.collection.mutable.Map.empty[Long, SnapshotFiles.Listing]
-  // generations whose listing THIS instance pinned at emission time.
-  // `snapshots.contains` is NOT that: replay of an uncommitted batch
-  // (planInputPartitions) and prepareForTriggerAvailableNow both pin
-  // listings incidentally, and treating those as "ours" would let a
-  // restart continue a dead driver's chunked generation against a fresh
-  // listing — stitching two listings into one snapshot.
-  private val ownGens = scala.collection.mutable.Set.empty[Long]
-
-  private def computeGen(nowMs: Long): Long =
-    if (opts.refreshMs <= 0) 0L else nowMs / opts.refreshMs
-
-  private def pin(): SnapshotFiles.Listing = SnapshotFiles.listing(opts, pushed.toSeq)
-
-  // partition pruning happens at pinning time: a generation of a
-  // partitioned table under a partition filter IS the pruned listing
-  // (offsets and admission-control slices count pruned files only)
-  private def pinnedOf(gen: Long): SnapshotFiles.Listing = snapshots.getOrElseUpdate(gen, pin())
-
-  private def filesOf(gen: Long): Seq[SnapshotFile] = pinnedOf(gen).files
-
-  // optimizer statistics of the newest pinned generation, built once per
-  // generation (trigger-mode re-emissions and chunks reuse them)
-  private var pinnedStats: Option[(Long, RefTableStatistics)] = None
 
   /** Statistics of the generation the batch being planned reads: the
     * listing pinned in [[latestOffset]], not the table as it is now (a
     * version published mid-generation is not what this batch scans).
-    * None before the first pin.
+    * None before the first pin, and always None for a changefeed, whose
+    * scan sizes a fresh listing.
     */
-  def statistics(): Option[RefTableStatistics] = synchronized {
-    for (l <- Option(last); listing <- snapshots.get(l.gen)) yield {
-      if (!pinnedStats.exists(_._1 == l.gen))
-        pinnedStats = Some(l.gen -> new RefTableStatistics(opts, required, listing))
-      pinnedStats.get._2
-    }
-  }
+  def statistics(): Option[RefTableStatistics] =
+    synchronized { Option(last).flatMap(l => kind.statistics(l.gen)) }
 
   private val taskConf = new HadoopConf.PerStream
 
@@ -350,8 +386,8 @@ class RefTableMicroBatchStream(
   }
 
   override def prepareForTriggerAvailableNow(): Unit = synchronized {
-    val gen = computeGen(System.currentTimeMillis())
-    filesOf(gen)
+    val gen = opts.generationAt(clock())
+    kind.files(gen) // a sliced kind pins the drain target now
     availableNowGen = Some(gen)
   }
 
@@ -373,22 +409,35 @@ class RefTableMicroBatchStream(
     case _ => files.size.toLong
   }
 
+  /** `upTo` of a batch that starts generation `gen` from file 0: a slice
+    * end for a sliced kind, -1 (the whole generation) otherwise.
+    */
+  private def firstSliceEnd(gen: Long, limit: ReadLimit): Long =
+    kind.files(gen).fold(-1L)(sliceEnd(_, 0, limit))
+
+  /** Emit a fresh generation after `prev`. `gen` stays strictly monotonic
+    * even if a prior abandon pushed it past wall-clock, and the offset
+    * records the wall-clock generation it was emitted under.
+    */
+  private def fresh(prev: RefTableOffset, wallNow: Long, reuse: Option[Long],
+      limit: ReadLimit): RefTableOffset = {
+    val gen = math.max(wallNow, prev.gen + 1)
+    kind.pin(gen, reuse)
+    RefTableOffset(prev.batch + 1, gen, firstSliceEnd(gen, limit), wallNow)
+  }
+
   override def latestOffset(): Offset = latestOffset(null, getDefaultReadLimit)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
     val prev = Option(last)
       .orElse(Option(start).map(_.asInstanceOf[RefTableOffset]))
       .getOrElse(RefTableOffset(-1L, -1L, -1L))
-    val prevPinned = prev.gen >= 0 && ownGens.contains(prev.gen)
-    val prevTotal = if (prev.gen >= 0) filesOf(prev.gen).size.toLong else 0L
-    val prevUpTo = if (prev.upTo < 0) prevTotal else prev.upTo
-    last =
-      if (prev.gen >= 0 && prevUpTo < prevTotal && prevPinned) {
+    last = (if (prev.gen >= 0) kind.files(prev.gen) else None) match {
+      case Some(files) if prev.upTo >= 0 && kind.owns(prev.gen) && prev.upTo < files.size =>
         // partially-emitted generation: finish it before any refresh —
         // snapshot identity requires the whole generation from one pinning
-        RefTableOffset(prev.batch + 1, prev.gen,
-          sliceEnd(filesOf(prev.gen), prevUpTo.toInt, limit), prev.wall)
-      } else if (prev.gen >= 0 && !prevPinned && prev.upTo >= 0) {
+        RefTableOffset(prev.batch + 1, prev.gen, sliceEnd(files, prev.upTo.toInt, limit), prev.wall)
+      case Some(_) if prev.upTo >= 0 && !kind.owns(prev.gen) =>
         // restart recovered a chunked offset, but the pinning died with
         // the previous driver: the original listing (and its total file
         // count) is unknowable, so ANY chunked offset from a dead driver
@@ -403,37 +452,23 @@ class RefTableMicroBatchStream(
         // monotonicity), so the offset records the true wall-clock
         // generation separately — the next real refresh boundary is
         // detected against `wall`, not `gen`.
-        val pinned = snapshots(prev.gen)
-        val wallNow = computeGen(System.currentTimeMillis())
-        val gen = math.max(wallNow, prev.gen + 1)
-        snapshots(gen) = pinned
-        RefTableOffset(prev.batch + 1, gen, sliceEnd(pinned.files, 0, limit), wallNow)
-      } else {
-        val wallNow = availableNowGen.getOrElse(computeGen(System.currentTimeMillis()))
-        if (prev.gen < 0 || wallNow > prev.wallGen) {
-          // new refresh boundary crossed (or first poll): emit a fresh
-          // generation. `gen` stays strictly monotonic even if a prior
-          // abandon pushed it past wall-clock. A boundary ALWAYS re-lists
-          // (never reuse a listing pinned under a colliding older gen
-          // number after a run-ahead — that would freeze the stream on a
-          // stale listing forever); AvailableNow uses the listing pinned
-          // at prepare time.
-          val gen = math.max(wallNow, prev.gen + 1)
-          val pinned = availableNowGen match {
-            case Some(g) => pinnedOf(g)
-            case None => pin()
-          }
-          snapshots(gen) = pinned
-          RefTableOffset(prev.batch + 1, gen, sliceEnd(pinned.files, 0, limit), wallNow)
-        } else if (opts.emitPerTrigger && availableNowGen.isEmpty)
+        fresh(prev, opts.generationAt(clock()), Some(prev.gen), limit)
+      case _ =>
+        val wallNow = availableNowGen.getOrElse(opts.generationAt(clock()))
+        if (prev.gen < 0 || wallNow > prev.wallGen)
+          // new refresh boundary crossed (or first poll). A boundary ALWAYS
+          // re-pins (never reuse a listing pinned under a colliding older
+          // gen number after a run-ahead — that would freeze the stream on
+          // a stale listing forever); AvailableNow uses the pinning made at
+          // prepare time.
+          fresh(prev, wallNow, availableNowGen, limit)
+        else if (opts.emitPerTrigger && availableNowGen.isEmpty)
           // trigger-mode re-emission honors the admission caps too: a cycle
           // of chunked batches re-covers the snapshot, then restarts
-          RefTableOffset(prev.batch + 1, prev.gen, sliceEnd(filesOf(prev.gen), 0, limit), prev.wall)
+          RefTableOffset(prev.batch + 1, prev.gen, firstSliceEnd(prev.gen, limit), prev.wall)
         else prev
-      }
-    // every generation this instance emits is owned from here on —
-    // continuation of its chunks against this pinning is safe
-    if (last != null && last.gen >= 0) ownGens += last.gen
+    }
+    if (last.gen >= 0) kind.emitted(last.gen)
     last
   }
 
@@ -442,20 +477,10 @@ class RefTableMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = synchronized {
     val e = end.asInstanceOf[RefTableOffset]
     if (e.batch < 0) return Array.empty
-    val files = filesOf(e.gen)
-    val hi = if (e.upTo < 0) files.size else math.min(e.upTo, files.size.toLong).toInt
-    val lo = Option(start).map(_.asInstanceOf[RefTableOffset]) match {
-      // continuation of a partially-emitted generation; anything else
-      // (new generation, trigger-mode re-emission) starts from file 0
-      case Some(s) if s.batch >= 0 && s.gen == e.gen && s.upTo >= 0 && s.upTo < hi =>
-        math.min(s.upTo, files.size.toLong).toInt
-      case _ => 0
-    }
-    RefTablePartitions.plan(files.slice(lo, hi), e.gen)
+    RefTablePartitions.plan(kind.batchFiles(Option(start).map(_.asInstanceOf[RefTableOffset]), e), e.gen)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new RefTableReaderFactory(opts, required, pushed, None, taskConf.get())
+  override def createReaderFactory(): PartitionReaderFactory = kind.readerFactory(taskConf.get())
 
   override def deserializeOffset(json: String): Offset = {
     val o = RefTableOffset.fromJson(json)
@@ -463,16 +488,255 @@ class RefTableMicroBatchStream(
     o
   }
 
-  override def commit(end: Offset): Unit = synchronized {
-    val e = end.asInstanceOf[RefTableOffset]
-    snapshots.keys.filter(_ < e.gen).toList.foreach(snapshots.remove)
-    ownGens.filter(_ < e.gen).toList.foreach(ownGens.remove)
-  }
+  override def commit(end: Offset): Unit =
+    synchronized { kind.commit(end.asInstanceOf[RefTableOffset].gen) }
 
   override def stop(): Unit = synchronized {
-    snapshots.clear()
-    ownGens.clear()
-    pinnedStats = None
+    kind.stop()
     taskConf.release()
+  }
+
+  /** What a generation is in one read mode. Every call runs under the
+    * stream's lock.
+    */
+  private sealed abstract class GenerationKind {
+    /** The files generation `gen` is sliced from by the admission caps
+      * (pinned on first use — a replay after a restart pins the current
+      * state), or None for a kind whose generations are emitted whole.
+      */
+    def files(gen: Long): Option[Seq[SnapshotFile]]
+    /** Whether the pinning of `gen` is the one it was emitted under, so its
+      * chunks may continue (false for a dead driver's generation). By
+      * default a pinning survives the driver that made it.
+      */
+    def owns(gen: Long): Boolean = true
+    def emitted(gen: Long): Unit = ()
+    /** Pin fresh generation `gen`, reusing generation `reuse`'s pinning
+      * if given (AvailableNow's prepare-time pin, or an abandoned one).
+      */
+    def pin(gen: Long, reuse: Option[Long]): Unit
+    /** The files the batch (start, end] reads. */
+    def batchFiles(start: Option[RefTableOffset], end: RefTableOffset): Seq[SnapshotFile]
+    def readerFactory(conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory
+    def metrics(off: RefTableOffset, m: java.util.Map[String, String]): Unit
+    def statistics(gen: Long): Option[RefTableStatistics] = None
+    /** Release what generations before `gen` pinned. */
+    def commit(gen: Long): Unit
+    def stop(): Unit
+  }
+
+  private final class Snapshot extends GenerationKind {
+    private val snapshots = scala.collection.mutable.Map.empty[Long, SnapshotFiles.Listing]
+    // generations whose listing THIS instance pinned at emission time.
+    // `snapshots.contains` is NOT that: replay of an uncommitted batch
+    // (planInputPartitions) and prepareForTriggerAvailableNow both pin
+    // listings incidentally, and treating those as "ours" would let a
+    // restart continue a dead driver's chunked generation against a fresh
+    // listing — stitching two listings into one snapshot.
+    private val ownGens = scala.collection.mutable.Set.empty[Long]
+    // optimizer statistics of the newest pinned generation, built once per
+    // generation (trigger-mode re-emissions and chunks reuse them)
+    private var pinnedStats: Option[(Long, RefTableStatistics)] = None
+
+    // partition pruning happens at pinning time: a generation of a
+    // partitioned table under a partition filter IS the pruned listing
+    // (offsets and admission-control slices count pruned files only)
+    private def listing(): SnapshotFiles.Listing = SnapshotFiles.listing(opts, pushed.toSeq)
+    private def pinnedOf(gen: Long): SnapshotFiles.Listing =
+      snapshots.getOrElseUpdate(gen, listing())
+
+    def files(gen: Long): Option[Seq[SnapshotFile]] = Some(pinnedOf(gen).files)
+    override def owns(gen: Long): Boolean = ownGens.contains(gen)
+    override def emitted(gen: Long): Unit = ownGens += gen
+    def pin(gen: Long, reuse: Option[Long]): Unit =
+      snapshots(gen) = reuse.fold(listing())(pinnedOf)
+
+    def batchFiles(start: Option[RefTableOffset], end: RefTableOffset): Seq[SnapshotFile] = {
+      val files = pinnedOf(end.gen).files
+      val hi = if (end.upTo < 0) files.size else math.min(end.upTo, files.size.toLong).toInt
+      val lo = start match {
+        // continuation of a partially-emitted generation; anything else
+        // (new generation, trigger-mode re-emission) starts from file 0
+        case Some(s) if s.batch >= 0 && s.gen == end.gen && s.upTo >= 0 && s.upTo < hi =>
+          math.min(s.upTo, files.size.toLong).toInt
+        case _ => 0
+      }
+      files.slice(lo, hi)
+    }
+
+    def readerFactory(conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+      new RefTableReaderFactory(opts, required, pushed, None, conf)
+
+    def metrics(off: RefTableOffset, m: java.util.Map[String, String]): Unit =
+      snapshots.get(off.gen).map(_.files).foreach { fs =>
+        m.put("snapshotFiles", fs.size.toString)
+        m.put("snapshotBytes", fs.map(_.length).sum.toString)
+        m.put("filesEmitted", (if (off.upTo >= 0) off.upTo else fs.size.toLong).toString)
+      }
+
+    override def statistics(gen: Long): Option[RefTableStatistics] =
+      snapshots.get(gen).map { l =>
+        if (!pinnedStats.exists(_._1 == gen))
+          pinnedStats = Some(gen -> new RefTableStatistics(opts, required, l))
+        pinnedStats.get._2
+      }
+
+    def commit(gen: Long): Unit = {
+      snapshots.keys.filter(_ < gen).toList.foreach(snapshots.remove)
+      ownGens.filter(_ < gen).toList.foreach(ownGens.remove)
+    }
+
+    def stop(): Unit = {
+      snapshots.clear()
+      ownGens.clear()
+      pinnedStats = None
+    }
+  }
+
+  private final class Changefeed(checkpoint: String) extends GenerationKind {
+    private val conf = HadoopConf()
+    private val pins = scala.collection.mutable.Map.empty[Long, String]
+    private val cfDir = new Path(checkpoint, "graft_cf")
+    private def pinPath(gen: Long) = new Path(cfDir, s"pin-$gen.json")
+    private def diffDir(gen: Long) = new Path(cfDir, s"diff-$gen")
+    private val DoneMarker = "_CF_DONE"
+
+    // emitted whole; a pin lives in the checkpoint, so it survives a restart
+    def files(gen: Long): Option[Seq[SnapshotFile]] = None
+    def pin(gen: Long, reuse: Option[Long]): Unit = { ensurePinned(gen); () }
+
+    /** Pin generation `gen` to the table's current version (idempotent: an
+      * existing pin wins, so latestOffset/plan races within one generation
+      * agree on the listing). The pin is claimed through the checkpoint
+      * store's [[CommitPrimitive]]; a lost claim adopts the winner's pin.
+      */
+    private def ensurePinned(gen: Long): String =
+      pinnedVersion(gen).getOrElse {
+        val resolved = VersionedTable.resolveRobust(opts.path, conf).getOrElse(
+          throw new IllegalArgumentException(
+            s"changefeed requires a versioned table root (no version pointer at ${opts.path}); " +
+              "publish through VersionedTable first"))
+        val v = new Path(resolved).getName
+        val fs = cfDir.getFileSystem(conf)
+        fs.mkdirs(cfDir)
+        val pinBytes = s"""{"version":"$v"}""".getBytes("UTF-8")
+        val p = pinPath(gen)
+        if (CommitPrimitive.forPath(p, conf).putIfAbsent(p, pinBytes, conf)) {
+          pins(gen) = v
+          v
+        } else pinnedVersion(gen).getOrElse(
+          throw new IllegalStateException(s"changefeed pin $p lost its claim but is unreadable"))
+      }
+
+    private def pinnedVersion(gen: Long): Option[String] =
+      pins.get(gen).orElse {
+        val p = pinPath(gen)
+        val fs = p.getFileSystem(conf)
+        if (!fs.exists(p)) None
+        else {
+          val in = fs.open(p)
+          val v = try new ObjectMapper().readTree(in).path("version").asText()
+          finally in.close()
+          if (v.isEmpty) None else { pins(gen) = v; Some(v) }
+        }
+      }
+
+    /** The pruned, DV-attached listing of a pinned version. */
+    private def listingOf(version: String): Seq[SnapshotFile] =
+      SnapshotFiles.pruned(opts.copy(version = Some(version)), pushed.toSeq)
+
+    def batchFiles(start: Option[RefTableOffset], end: RefTableOffset): Seq[SnapshotFile] = {
+      val scratch = diffDir(end.gen)
+      val fs = scratch.getFileSystem(conf)
+      if (!fs.exists(new Path(scratch, DoneMarker))) {
+        if (fs.exists(scratch)) fs.delete(scratch, true) // partial attempt
+        materialize(start, end, scratch)
+        LocalFs.createWrite(fs, new Path(scratch, DoneMarker), Array.emptyByteArray)
+      }
+      SnapshotFiles.listPhysical(scratch.toString, Nil)
+    }
+
+    private def materialize(start: Option[RefTableOffset], end: RefTableOffset, scratch: Path): Unit = {
+      val spark = SparkSession.active
+      val curFiles = listingOf(ensurePinned(end.gen))
+      val prevVer = start.filter(_.batch >= 0).filter(_.gen >= 0)
+        .flatMap(s => pinnedVersion(s.gen))
+      val out = prevVer match {
+        case Some(pv) =>
+          try ChangefeedDiff.fileDeltaDiff(spark, opts, listingOf(pv), curFiles)
+          catch {
+            case NonFatal(_) =>
+              // previous version vacuumed (or unreadable): snapshot-as-inserts
+              ChangefeedDiff.bootstrap(spark, opts, curFiles)
+          }
+        case None => opts.changefeedFrom match {
+          // first batch — where the stream STARTS is the declared position:
+          case "earliest" => ChangefeedDiff.bootstrap(spark, opts, curFiles) // CDF initial load
+          case "latest" =>
+            // consumers that only want what changes from now on: empty first
+            // delta; end.gen is pinned to the current version, so the next
+            // generation diffs from HERE
+            ChangefeedDiff.emptyOutput(spark, opts)
+              .withColumn("change_type", lit("insert").cast(StringType))
+          case fromSpec =>
+            // a NAMED retained version (or a tag / TIMESTAMP AS OF spec
+            // naming one): the first delta is from→current. Loud failure if
+            // it is gone — a silent bootstrap would replay the whole corpus
+            // into a consumer that asked for a delta
+            val from = VersionedTable.resolveSpec(opts.path, fromSpec, conf)
+            val fromFiles =
+              try listingOf(from)
+              catch { case NonFatal(e) => throw new IllegalArgumentException(
+                s"changefeedFrom version '$from' of ${opts.path} is not readable " +
+                  s"(vacuumed or never committed): ${e.getMessage}", e) }
+            ChangefeedDiff.fileDeltaDiff(spark, opts, fromFiles, curFiles)
+        }
+      }
+      VersionedTable.writeParquetMicros(out, scratch.toString, Nil)
+    }
+
+    /** The scratch files hold OUTPUT-named columns plus change_type; read
+      * them through the standard reader with an identity-mapped options
+      * view (the gen column still rides the partition-constant mechanism).
+      * Identity includes the column mapping: a renamed column is stored in
+      * the scratch under its logical name, and since validation refuses
+      * duplicate field names (and `change_type` under changefeed), no two
+      * output fields share a storage column.
+      */
+    private val scanOpts: RefTableOptions = opts.copy(
+      schema = StructType(opts.schema.fields :+ StructField("change_type", StringType, nullable = false)),
+      rowField = None, keyColumn = None, columnMapping = Map.empty,
+      partitionColumns = Nil, hiddenPartitions = Nil,
+      version = None, filterSql = None,
+      changefeed = false, keyColumns = Nil)
+    def readerFactory(conf: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+      new RefTableReaderFactory(scanOpts, required, Array.empty, None, conf)
+
+    /** The pinned table version the last consumed delta ended at — the
+      * operator-visible proof the feed is advancing version-by-version
+      * rather than re-reading the corpus.
+      */
+    def metrics(off: RefTableOffset, m: java.util.Map[String, String]): Unit =
+      pinnedVersion(off.gen).foreach(v => m.put("pinnedVersion", v))
+
+    def commit(gen: Long): Unit = {
+      val fs = cfDir.getFileSystem(conf)
+      // the NEXT batch diffs against gen: keep its pin, drop older ones
+      // and every materialized delta up to and including the committed batch
+      pins.keys.filter(_ < gen).toList.foreach(pins.remove)
+      if (fs.exists(cfDir)) {
+        val PinName = "pin-(\\d+)\\.json".r
+        val DiffName = "diff-(\\d+)".r
+        fs.listStatus(cfDir).foreach { s =>
+          s.getPath.getName match {
+            case PinName(g) if g.toLong < gen => fs.delete(s.getPath, false)
+            case DiffName(g) if g.toLong < gen => fs.delete(s.getPath, true)
+            case _ => ()
+          }
+        }
+      }
+    }
+
+    def stop(): Unit = pins.clear()
   }
 }

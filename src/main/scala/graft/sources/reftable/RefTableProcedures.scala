@@ -380,6 +380,9 @@ final class AnalyzeProcedure(resolveOpts: String => RefTableOptions)
       require(!opts.schema.fields.find(_.name == c).get.dataType
         .isInstanceOf[org.apache.spark.sql.types.ArrayType],
         s"analyze: column '$c' is an array — NDV sketches cover atomic types")
+      require(!opts.partitionColumns.contains(c),
+        s"analyze: column '$c' is a partition column — its values live in directory names, " +
+          "not in the data files NDV sketches are computed from")
     }
     val conf = HadoopConf()
     val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)

@@ -339,9 +339,10 @@ class RefTableScan(
   /** Size the snapshot for the optimizer: without statistics a DSv2 relation
     * defaults to Long.MaxValue and is NEVER auto-broadcast — which would
     * defeat the source's documented purpose (a small lookup table feeding a
-    * join, docs/Table-streamingsource.md:10-14). A batch scan sizes a fresh
-    * listing; a streaming scan sizes the generation its stream pinned (see
-    * [[RefTableMicroBatchStream.statistics]]) and lists nothing per trigger.
+    * join, docs/Table-streamingsource.md:10-14). A batch or changefeed scan
+    * sizes a fresh listing; a snapshot stream's scan sizes the generation
+    * its stream pinned (see [[RefTableMicroBatchStream.statistics]]) and
+    * lists nothing per trigger.
     */
   override def estimateStatistics(): Statistics =
     stream.flatMap(_.statistics()).getOrElse(
@@ -378,14 +379,11 @@ class RefTableScan(
       Some(driverMetrics))
   }
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    if (opts.changefeed)
-      new RefTableChangefeedStream(opts, required, pushed ++ declared, checkpointLocation)
-    else {
-      val s = new RefTableMicroBatchStream(opts, required, pushed ++ declared)
-      stream = Some(s)
-      s
-    }
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    val s = new RefTableMicroBatchStream(opts, required, pushed ++ declared, Some(checkpointLocation))
+    stream = Some(s)
+    s
+  }
 }
 
 /** Optimizer statistics of one pinned listing. File bytes scaled by the
@@ -533,7 +531,7 @@ class RefTableBatch(
     limit: Option[Int] = None,
     metrics: Option[RefTableMetrics.DriverScanMetrics] = None) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
-    val gen = if (opts.refreshMs <= 0) 0L else System.currentTimeMillis() / opts.refreshMs
+    val gen = opts.generationAt(RefTableOptions.wallClock())
     val listing = SnapshotFiles.listing(opts, pushed.toSeq)
     val pruned = listing.files
     metrics.foreach { m => m.listed = listing.listed; m.kept = pruned.size }

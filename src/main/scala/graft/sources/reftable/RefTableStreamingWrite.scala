@@ -151,13 +151,6 @@ class RefTableStreamingWrite(
       }
     }
     def move(staging: Path): Unit = copyInto(staging, epochDir, staged)
-    // post-commit work is best-effort — it never fails the stream — but a
-    // failure is reported, like the drop census, never swallowed silently
-    def bestEffort(what: String)(f: => Unit): Unit =
-      try f catch { case NonFatal(e) =>
-        System.err.println(s"[reftable] epoch $epochId $what failed on ${opts.path} " +
-          s"(the commit stands): $e")
-      }
     lazy val spark = org.apache.spark.sql.SparkSession.active
     // QUARANTINE FIRST (onViolation=quarantine): the rejects log commits
     // before the main epoch, so a crash between the two leaves a
@@ -216,20 +209,24 @@ class RefTableStreamingWrite(
     // per-file stats for the committed epoch (batch writes get them inline):
     // without this, versions produced ONLY by the streaming write would
     // answer estimateStatistics with nothing and stats-based pruning would
-    // degrade until a batch write or maintenance pass ran
-    if (committed)
-      bestEffort("stats augmentation")(RefTableWrites.augmentStats(opts, spark, conf))
+    // degrade until a batch write or maintenance pass ran. Best-effort,
+    // like every write surface's stats pass: a failure is reported
+    if (committed) RefTableWrites.augmentStats(opts, spark, conf)
     // opt-in maintenance: streaming appends accrete one file per task per
     // epoch; once the file count crosses the threshold, compact as a
     // normal CAS'd publish (a concurrent writer's conflict or a transient
-    // listing error just defers compaction to the next epoch)
+    // listing error just defers compaction to the next epoch). It never
+    // fails the stream, but a failure is reported, never swallowed
     if (committed && opts.autoCompact && !truncate && !upsert)
-      bestEffort("auto-compaction") {
+      try {
         RefTableMaintenance.maintain(spark, opts.path,
           maxSmallFiles = opts.autoCompactFiles,
           keepVersions = opts.keepVersions,
           partitionColumns = opts.partitionColumns)
         ()
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[reftable] epoch $epochId auto-compaction failed on ${opts.path} " +
+          s"(the commit stands): $e")
       }
   }
 

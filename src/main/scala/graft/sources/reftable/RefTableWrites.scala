@@ -130,23 +130,27 @@ object RefTableWrites {
   }
 
   /** Post-commit skipping-stats augmentation declared by the options —
-    * run by every write surface after its commit lands. */
+    * run by every write surface after its commit lands. The commit stands
+    * whatever happens here: a failure leaves that version without the
+    * declared stats (readers of the manifest fail open) and is reported on
+    * stderr with the table path, never thrown at a caller whose write landed.
+    */
   private[reftable] def augmentStats(opts: RefTableOptions, spark: org.apache.spark.sql.SparkSession,
-      conf: Configuration): Unit = {
-    def storage(cols: Seq[String]): Seq[String] = cols.map(opts.storageColumn)
-    if (opts.categoricalStats.nonEmpty) {
-      val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)
-      RefTableStats.augmentCategorical(spark, resolved, storage(opts.categoricalStats))
+      conf: Configuration): Unit =
+    try {
+      def storage(cols: Seq[String]): Seq[String] = cols.map(opts.storageColumn)
+      // one resolve: every declared kind lands in the same version
+      lazy val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)
+      if (opts.categoricalStats.nonEmpty)
+        RefTableStats.augmentCategorical(spark, resolved, storage(opts.categoricalStats))
+      if (opts.bloomStats.nonEmpty)
+        RefTableStats.augmentBloom(spark, resolved, storage(opts.bloomStats))
+      if (opts.ndvStats.nonEmpty)
+        RefTableStats.augmentNdv(spark, resolved, storage(opts.ndvStats))
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(
+        s"[reftable] stats augmentation failed on ${opts.path} (the commit stands): $e")
     }
-    if (opts.bloomStats.nonEmpty) {
-      val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)
-      RefTableStats.augmentBloom(spark, resolved, storage(opts.bloomStats))
-    }
-    if (opts.ndvStats.nonEmpty) {
-      val resolved = SnapshotFiles.resolveDir(opts.path, None, conf)
-      RefTableStats.augmentNdv(spark, resolved, storage(opts.ndvStats))
-    }
-  }
 
   /** Highest micro-batch id transaction `appId` has committed to `root`,
     * read from [[Txn]] markers in the RETAINED commit log (markers ride
@@ -298,8 +302,8 @@ object RefTableWrites {
       if (full || !aligned.isEmpty)
         VersionedTable.writeParquetMicros(aligned, staging.toString, opts.partitionColumns)
     }
-    // outside the retry loop: a stats failure after a successful commit must
-    // not re-run the (already-committed) append; replayed no-ops skip it
+    // outside the retry loop: the stats pass follows the landed commit;
+    // replayed no-ops skip it
     if (committed) augmentStats(opts, data.sparkSession, conf)
     ()
   }

@@ -228,6 +228,25 @@ class ConfigSpec extends AnyFunSuite {
     assert(e.getMessage.contains("rowField") && e.getMessage.contains("refreshInterval"))
   }
 
+  test("per-file stats declared on a partition column are refused") {
+    import graft.sources.reftable.RefTableValidationException
+    for (opt <- Seq("categoricalStats", "bloomStats", "ndvStats")) {
+      val e = intercept[RefTableValidationException](RefTableOptions.from(opts(
+        "partitionColumns" -> "name", opt -> "name")))
+      assert(e.failures.map(_._1) == Seq(opt), e.getMessage)
+      assert(e.getMessage.contains("is a partition column"))
+    }
+    // a stats column beside the partition column stays valid
+    assert(RefTableOptions.from(opts("partitionColumns" -> "name", "bloomStats" -> "key"))
+      .bloomStats == Seq("key"))
+  }
+
+  test("generationAt: floor(now / refreshInterval), 0 without a refresh interval") {
+    val o = RefTableOptions.from(opts("refreshInterval" -> "2s"))
+    assert(Seq(0L, 1999L, 2000L, 5999L, 6000L).map(o.generationAt) == Seq(0L, 0L, 1L, 2L, 3L))
+    assert(o.copy(refreshMs = 0L).generationAt(123456789L) == 0L)
+  }
+
   test("expectations validate at analysis: predicates, columns, onViolation") {
     val o = RefTableOptions.from(opts(
       "expect.pos" -> "key > 0", "expect.named" -> "length(name) >= 2",

@@ -403,11 +403,13 @@ class RefTableSourceSpec extends AnyFunSuite {
     val o = RefTableOptions.from(new CaseInsensitiveStringMap(Map(
       "path" -> dir, "schema" -> ddl, "refreshInterval" -> "1s",
       "maxFilesPerTrigger" -> "1").asJava))
+    // a manual clock drives the refresh boundaries
+    var now = 1700000000500L
     // crash mid-generation, restart, abandon: gen now runs one ahead of
     // wall-clock, and the abandoned listing sits pinned under that number
-    val s1 = new RefTableMicroBatchStream(o, o.outputSchema)
+    val s1 = new RefTableMicroBatchStream(o, o.outputSchema, clock = () => now)
     val o1 = s1.latestOffset(s1.initialOffset(), s1.getDefaultReadLimit).asInstanceOf[RefTableOffset]
-    val s2 = new RefTableMicroBatchStream(o, o.outputSchema)
+    val s2 = new RefTableMicroBatchStream(o, o.outputSchema, clock = () => now)
     s2.deserializeOffset(o1.json())
     val o2 = s2.latestOffset(null, s2.getDefaultReadLimit).asInstanceOf[RefTableOffset]
     assert(o2.gen > o1.gen && o2.upTo == 1)
@@ -417,10 +419,10 @@ class RefTableSourceSpec extends AnyFunSuite {
     // gen number — it must re-list (3 files), not re-emit the stale 2
     (1L to 9L).map(i => (i, s"m$i")).toDF("id", "name")
       .repartition(3).write.mode("overwrite").parquet(dir)
-    val deadline = System.currentTimeMillis() + 10000
+    val deadline = now + 10000
     var nxt = o2b
-    while (nxt.gen == o2b.gen && System.currentTimeMillis() < deadline) {
-      Thread.sleep(100)
+    while (nxt.gen == o2b.gen && now < deadline) {
+      now += 100
       nxt = s2.latestOffset(nxt, s2.getDefaultReadLimit).asInstanceOf[RefTableOffset]
     }
     assert(nxt.gen > o2b.gen, "a refresh boundary must fire within the deadline")
@@ -441,12 +443,13 @@ class RefTableSourceSpec extends AnyFunSuite {
     Seq((1L, "a")).toDF("id", "name").coalesce(1).write.mode("overwrite").parquet(dir)
     val o = RefTableOptions.from(new CaseInsensitiveStringMap(Map(
       "path" -> dir, "schema" -> ddl, "refreshInterval" -> "1s").asJava))
-    val s = new RefTableMicroBatchStream(o, o.outputSchema)
+    var now = 1700000000500L // a manual clock
+    val s = new RefTableMicroBatchStream(o, o.outputSchema, clock = () => now)
     // a restart-abandon can leave gen far ahead of wall-clock; simulate the
     // checkpointed aftermath directly: gen = wall + 1000
-    val wallNow = System.currentTimeMillis() / 1000L
+    val wallNow = now / 1000L
     val prev = RefTableOffset(batch = 3L, gen = wallNow + 1000L, upTo = -1L, wall = wallNow)
-    Thread.sleep(1100) // cross at least one real refresh boundary
+    now += 1100 // cross at least one real refresh boundary
     val nxt = s.latestOffset(prev, s.getDefaultReadLimit).asInstanceOf[RefTableOffset]
     assert(nxt.batch == prev.batch + 1 && nxt.gen == prev.gen + 1,
       s"the boundary after an abandon must still emit (monotonic gen), got $nxt")
@@ -1270,4 +1273,184 @@ class RefTableSourceSpec extends AnyFunSuite {
     }
     assert(!ids2.contains(5L) && !ids2.contains(205L) && ids2.size == 498)
   }
+
+  test("generation property (manual clock): monotonic gens, one pinning per generation, boundaries emit") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import RefTableSourceSpec._
+    val opGen: Gen[GenOp] = Gen.frequency(
+      3 -> Gen.choose(0L, 2500L).map(Advance),
+      5 -> Gen.const(Poll),
+      2 -> Gen.const(Commit),
+      1 -> Gen.const(Restart),
+      2 -> Gen.choose(1, 4).map(Rewrite))
+    val caseGen = for {
+      maxFiles <- Gen.oneOf(None, Some(1), Some(2))
+      trigger <- Gen.oneOf(false, true)
+      n <- Gen.choose(5, 30)
+      ops <- Gen.listOfN(n, opGen)
+    } yield (maxFiles, trigger, ops)
+
+    val prop = Prop.forAllNoShrink(caseGen) { case (maxFiles, trigger, ops) =>
+      val dir = Files.createTempDirectory("reftable_genprop_").toFile
+      try {
+        // each rewrite replaces the table's files with a new set named by
+        // the write: a file's name tells which listing (pinning) it is from.
+        // Planning reads no file content, so the files are placeholders.
+        var writes = 0
+        def rewrite(n: Int): Unit = {
+          dir.listFiles().foreach(_.delete())
+          writes += 1
+          (0 until n).foreach(i => Files.write(
+            new java.io.File(dir, f"w$writes%03d-$i.parquet").toPath, Array.fill[Byte](16 + i)(0)))
+        }
+        rewrite(2)
+        val o = RefTableOptions.from(new CaseInsensitiveStringMap((Map(
+          "path" -> dir.toString, "schema" -> ddl, "refreshInterval" -> "1s",
+          "emitMode" -> (if (trigger) "trigger" else "refresh")) ++
+          maxFiles.map(m => "maxFilesPerTrigger" -> m.toString)).asJava))
+        var now = 1700000000500L
+        def instance() = new RefTableMicroBatchStream(o, o.outputSchema, clock = () => now)
+        var s = instance()
+        var end = s.initialOffset().asInstanceOf[RefTableOffset]
+        val pinningsOf = scala.collection.mutable.Map.empty[Long, Set[String]]
+        def check(ok: Boolean, what: => String): Unit =
+          if (!ok) throw new AssertionError(
+            s"$what (maxFiles=$maxFiles trigger=$trigger) after ops:\n  ${ops.mkString("\n  ")}")
+        ops.foreach {
+          case Advance(ms) => now += ms
+          case Rewrite(n) => rewrite(n)
+          case Commit => s.commit(end)
+          case Restart =>
+            s.stop()
+            s = instance()
+            s.deserializeOffset(end.json())
+          case Poll =>
+            val clockGen = o.generationAt(now)
+            val next = s.latestOffset(end, s.getDefaultReadLimit).asInstanceOf[RefTableOffset]
+            if (!trigger && end.batch >= 0 && clockGen > end.wallGen)
+              check(next != end, s"a crossed boundary emitted nothing: $end at clock gen $clockGen")
+            if (next != end) {
+              check(next.batch == end.batch + 1, s"batch ids skip: $end -> $next")
+              check(next.gen == end.gen || !pinningsOf.contains(next.gen),
+                s"generation ${next.gen} emitted again after ${end.gen}")
+              check(next.gen >= end.gen, s"generation went backwards: $end -> $next")
+              check(next.wallGen <= clockGen, s"wall ${next.wallGen} ahead of clock gen $clockGen")
+              val pinnings = s.planInputPartitions(end, next).map { p =>
+                val name = new org.apache.hadoop.fs.Path(
+                  p.asInstanceOf[graft.sources.reftable.RefTableInputPartition].path).getName
+                name.takeWhile(_ != '-')
+              }.toSet
+              pinningsOf(next.gen) = pinningsOf.getOrElse(next.gen, Set.empty[String]) ++ pinnings
+              check(pinningsOf(next.gen).size <= 1,
+                s"generation ${next.gen} mixes listings ${pinningsOf(next.gen)}")
+              end = next
+            }
+        }
+        s.stop()
+        true
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+    val seed = 20261019L
+    val params = Test.Parameters.default.withMinSuccessfulTests(60)
+      .withWorkers(1).withInitialSeed(Seed(seed))
+    val result = Test.check(params, prop)
+    result.status match {
+      case Test.PropException(_, e, _) => throw e
+      case other => assert(result.passed, s"seed $seed: $other")
+    }
+  }
+
+  /** A changefeed stream on a manual clock, over a versioned table. */
+  private def changefeedFixture(name: String) = {
+    import spark.implicits._
+    val root = Files.createTempDirectory(s"reftable_cfkind_$name").toString + "/t"
+    val ck = Files.createTempDirectory(s"reftable_cfkind_${name}_ck").toString
+    graft.sources.reftable.VersionedTable.publish(
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name"), root)
+    val o = RefTableOptions.from(new CaseInsensitiveStringMap(Map(
+      "path" -> root, "schema" -> ddl, "refreshInterval" -> "1s",
+      "changefeed" -> "true", "keyColumns" -> "id").asJava))
+    (root, ck, o)
+  }
+
+  /** The (id, name, change_type) rows of one changefeed batch. */
+  private def changes(s: RefTableMicroBatchStream, start: RefTableOffset,
+      end: RefTableOffset): Seq[(Long, String, String)] = {
+    val factory = s.createReaderFactory()
+    s.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val rdr = factory.createColumnarReader(p)
+      try Iterator.continually(rdr).takeWhile(_.next())
+        .flatMap(_ => rdr.get().rowIterator().asScala
+          .map(r => (r.getLong(0), r.getUTF8String(1).toString, r.getUTF8String(2).toString)))
+        .toList
+      finally rdr.close()
+    }.sorted
+  }
+
+  test("changefeed kind: a restarted instance emits nothing before the next boundary") {
+    val (_, ck, o) = changefeedFixture("restart")
+    var now = 1700000000500L
+    val s1 = new RefTableMicroBatchStream(o, o.outputSchema, checkpointLocation = Some(ck),
+      clock = () => now)
+    val start = s1.initialOffset().asInstanceOf[RefTableOffset]
+    val o1 = s1.latestOffset(start, s1.getDefaultReadLimit).asInstanceOf[RefTableOffset]
+    assert(o1.batch == 0 && o1.upTo == -1, s"a changefeed generation is emitted whole, got $o1")
+    assert(changes(s1, start, o1) == Seq((1L, "a", "insert"), (2L, "b", "insert"), (3L, "c", "insert")))
+    s1.commit(o1)
+    s1.stop()
+    // the pin lives in the checkpoint: a restart inside the same generation
+    // neither abandons nor re-emits it, however the clock moves within it
+    val s2 = new RefTableMicroBatchStream(o, o.outputSchema, checkpointLocation = Some(ck),
+      clock = () => now)
+    s2.deserializeOffset(o1.json())
+    assert(s2.latestOffset(o1, s2.getDefaultReadLimit) == o1)
+    now += 400
+    assert(s2.latestOffset(o1, s2.getDefaultReadLimit) == o1)
+    assert(s2.metrics(java.util.Optional.of(o1)).get("generation") == o1.gen.toString)
+    now += 600
+    val o2 = s2.latestOffset(o1, s2.getDefaultReadLimit).asInstanceOf[RefTableOffset]
+    assert(o2.batch == o1.batch + 1 && o2.gen == o1.gen + 1, s"the boundary emits, got $o2")
+    assert(changes(s2, o1, o2).isEmpty, "an unchanged table emits an empty delta")
+    s2.stop()
+  }
+
+  test("changefeed kind: after the boundary a restart diffs against the pinned predecessor") {
+    import spark.implicits._
+    val (root, ck, o) = changefeedFixture("diff")
+    var now = 1700000000500L
+    val s1 = new RefTableMicroBatchStream(o, o.outputSchema, checkpointLocation = Some(ck),
+      clock = () => now)
+    val start = s1.initialOffset().asInstanceOf[RefTableOffset]
+    val o1 = s1.latestOffset(start, s1.getDefaultReadLimit).asInstanceOf[RefTableOffset]
+    assert(changes(s1, start, o1).size == 3)
+    val pinned = s1.metrics(java.util.Optional.of(o1)).get("pinnedVersion")
+    assert(pinned != null, "the metric names the pinned version")
+    s1.commit(o1)
+    s1.stop()
+    // the table changes; only the checkpoint remembers what gen o1 pinned
+    graft.sources.reftable.RefTableMutations.upsert(
+      spark, root, Seq((2L, "B"), (4L, "d")).toDF("id", "name"), Seq("id"))
+    val s2 = new RefTableMicroBatchStream(o, o.outputSchema, checkpointLocation = Some(ck),
+      clock = () => now)
+    s2.deserializeOffset(o1.json())
+    assert(s2.metrics(java.util.Optional.of(o1)).get("pinnedVersion") == pinned)
+    now += 1000
+    val o2 = s2.latestOffset(o1, s2.getDefaultReadLimit).asInstanceOf[RefTableOffset]
+    assert(o2.gen > o1.gen)
+    assert(changes(s2, o1, o2) == Seq((2L, "B", "update"), (4L, "d", "insert")),
+      "the delta is against the predecessor's pinned version, not a re-bootstrap")
+    assert(s2.metrics(java.util.Optional.of(o2)).get("pinnedVersion") != pinned)
+    s2.stop()
+  }
+}
+
+object RefTableSourceSpec {
+  /** One step of the generation property. */
+  sealed trait GenOp
+  final case class Advance(ms: Long) extends GenOp
+  case object Poll extends GenOp
+  case object Commit extends GenOp
+  case object Restart extends GenOp
+  final case class Rewrite(files: Int) extends GenOp
 }

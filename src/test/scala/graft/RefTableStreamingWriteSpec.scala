@@ -456,7 +456,9 @@ class RefTableStreamingWriteSpec extends AnyFunSuite {
   test("a failed post-commit stats augmentation is reported and the stream continues") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_swbe_")
-    val root = s"$base/t"
+    // the table's filesystem refuses to rewrite a published stats
+    // manifest: the augmentation fails after every epoch's commit
+    val root = s"nostats://$base/t"
     val in = s"$base/in"
     Seq((1L, "red")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f0")
     Seq((2L, "blue")).toDF("id", "name").coalesce(1).write.parquet(s"$in/f1")
@@ -464,15 +466,12 @@ class RefTableStreamingWriteSpec extends AnyFunSuite {
     val err = System.err
     System.setErr(new java.io.PrintStream(captured, true))
     try {
-      // categorical stats read the columns a data file holds, and a
-      // partition column lives only in its directory names: the
-      // augmentation fails after every epoch's commit
       val q = spark.readStream.schema("id LONG, name STRING")
         .option("recursiveFileLookup", "true").option("maxFilesPerTrigger", "1")
         .parquet(in)
         .writeStream.format("reftable")
         .option("path", root).option("schema", "id BIGINT, name STRING")
-        .option("partitionColumns", "name").option("categoricalStats", "name")
+        .option("categoricalStats", "name")
         .option("checkpointLocation", s"$base/ck")
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
@@ -480,7 +479,7 @@ class RefTableStreamingWriteSpec extends AnyFunSuite {
       q.stop()
     } finally System.setErr(err)
     val got = spark.read.format("reftable").option("path", root)
-      .option("schema", "id BIGINT, name STRING").option("partitionColumns", "name").load()
+      .option("schema", "id BIGINT, name STRING").load()
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     assert(got == Seq((1L, "red"), (2L, "blue")), "both epochs land past the failure")
     val reported = captured.toString("UTF-8").linesIterator

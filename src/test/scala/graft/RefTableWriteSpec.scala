@@ -29,6 +29,23 @@ class RefTableWriteSpec extends AnyFunSuite {
     .option("path", root).option("schema", ddl).load()
     .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
+  test("a batch append whose stats augmentation fails returns, lands its rows and reports") {
+    import spark.implicits._
+    // the table's filesystem refuses to rewrite a published stats manifest
+    val root = s"nostats://${tmpDir("statsfail")}"
+    val captured = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(captured, true))
+    try Seq((1L, "red"), (2L, "blue")).toDF("id", "name")
+      .write.format("reftable").option("path", root).option("schema", ddl)
+      .option("categoricalStats", "name").mode("append").save()
+    finally System.setErr(err)
+    assert(readBack(root) == Seq((1L, "red"), (2L, "blue")), "the commit stands")
+    val reported = captured.toString("UTF-8").linesIterator
+      .filter(_.contains(s"stats augmentation failed on $root")).toSeq
+    assert(reported.size == 1, captured.toString("UTF-8"))
+  }
+
   test("DataFrame overwrite then append publish versions; both readable and retained") {
     import spark.implicits._
     val root = tmpDir("df")
