@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import graft.functions.VectorFunctions.{cosineSim, packVector, unpackVector}
-import graft.sources.reftable.VersionedTable
+import graft.sources.reftable.{Layout, VersionedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,7 +98,8 @@ object IvfIndex {
         centroids.select(col("cid").cast("long").as("cid"), packVector(col("cv")).as("cv")),
         centroidsRoot(root), keepVersions)
     }
-    val v = VersionedTable.publishPartitioned(assigned, root, Seq("cell"), keepVersions)
+    val v = VersionedTable.publish(assigned, root, keepVersions,
+      layout = Layout.Partitioned(Seq("cell")))
     cbDone()
     v
   }
@@ -225,7 +226,8 @@ object IvfIndex {
             metaSchemaRoot(root), keepVersions)
         }
       }
-    val v = VersionedTable.publishPartitioned(assigned, root, Seq("cell"), keepVersions)
+    val v = VersionedTable.publish(assigned, root, keepVersions,
+      layout = Layout.Partitioned(Seq("cell")))
     cbDone(); prmDone(); metaDone()
     v
   }

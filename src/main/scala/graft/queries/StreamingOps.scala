@@ -224,10 +224,11 @@ object StreamingOps {
     // residual; the result must equal the batch q93 oracle exactly.
     QueryDef("q100_stream_zorder_skip", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q100_zstream")
-      graft.sources.reftable.VersionedTable.publishZOrdered(
+      graft.sources.reftable.VersionedTable.publish(
         Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        root, Seq("o_custkey", "o_totalprice"), numFiles = 8)
+        root, layout = graft.sources.reftable.Layout.ZOrdered(
+          Seq("o_custkey", "o_totalprice"))(files = 8))
       val df = s.readStream.format("reftable")
         .option("path", root)
         .option("schema", "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE")

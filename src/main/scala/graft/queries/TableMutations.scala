@@ -164,10 +164,10 @@ object TableMutations {
     // NOT-IS-TRUE replay (rows where the predicate is NULL survive).
     QueryDef("q102_delete_where", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q102_del")
-      graft.sources.reftable.VersionedTable.publishClustered(
+      graft.sources.reftable.VersionedTable.publish(
         Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        root, Seq("o_totalprice"), numFiles = 8)
+        root, layout = graft.sources.reftable.Layout.Clustered(Seq("o_totalprice"))(files = 8))
       graft.sources.reftable.RefTableMutations.deleteWhere(
         s, root, col("o_totalprice") >= 100000.0 && col("o_totalprice") < 200000.0)
       s.read.format("reftable")
@@ -188,12 +188,12 @@ object TableMutations {
     // only overlapping files rewrite. The read-back must equal the
     // oracle's (base ANTI JOIN src) UNION src replay.
     QueryDef("q103_merge_upsert", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q103_merge")
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
-      VersionedTable.publishClustered(base, root, Seq("c_custkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("c_custkey"))(files = 8))
       val src = base.filter(col("c_custkey") <= 200)
         .withColumn("cents", col("cents") + 5000L)
         .unionAll(base.filter(col("c_custkey") % 100 === 0)
@@ -231,12 +231,12 @@ object TableMutations {
     // never lands in the table. The oracle replays the three clauses as
     // explicit set operations.
     QueryDef("q112_merge_clauses", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q112_merge")
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
-      VersionedTable.publishClustered(base, root, Seq("c_custkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("c_custkey"))(files = 8))
       val src = base
         .filter(col("c_custkey") <= 150 && col("c_custkey") % 7 =!= 0)
         .withColumn("cents", col("cents") + 1000L).withColumn("op", lit("u"))
@@ -336,12 +336,12 @@ object TableMutations {
     // a keyed upsert that moves rows into a brand-new partition directory.
     // The partitioned read path must see the post-mutation state exactly.
     QueryDef("q122_partitioned_mutations", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q122_pmut")
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"), cents.as("cents"))
-      VersionedTable.publishPartitioned(base, root, Seq("c_mktsegment"))
+      VersionedTable.publish(base, root, layout = Layout.Partitioned(Seq("c_mktsegment")))
       RefTableMutations.deleteWhere(s, root,
         col("c_mktsegment") === "BUILDING" && col("cents") < 0L,
         partitionColumns = Seq("c_mktsegment"))
@@ -381,12 +381,12 @@ object TableMutations {
     // but bucket narrowing rewrites only pmod(hash(key), n) buckets — the
     // CDC point-update shape. The oracle replays (base ANTI src) ∪ src.
     QueryDef("q127_bucketed_upsert", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q127_bkt")
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
-      VersionedTable.publishBucketed(base, root, Seq("c_custkey"), nBuckets = 16)
+      VersionedTable.publish(base, root, layout = Layout.Bucketed(Seq("c_custkey"), 16))
       // every 97th key: scattered across the whole key range by design
       val src = base.filter(col("c_custkey") % 97 === 0)
         .withColumn("cents", col("cents") + 11L)
@@ -418,13 +418,13 @@ object TableMutations {
     // oracle pins BOTH value identity across the restoring publish AND
     // the decision itself ('recluster' as a literal column).
     QueryDef("q133_maintenance", (s, dir) => {
-      import graft.sources.reftable.{RefTableMaintenance, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMaintenance, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q133_maint")
       val ddl = "c_custkey BIGINT, c_nationkey INT, cents BIGINT"
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
-      VersionedTable.publishClustered(base, root, Seq("c_custkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("c_custkey"))(files = 8))
       // churn: each appended batch is ONE file spanning ~the whole key range
       for (m <- Seq(1, 2))
         base.filter(col("c_custkey") % 100 === m).withColumn("cents", lit(0L))
@@ -600,12 +600,13 @@ object TableMutations {
     // stats), the clone the mutated one. The oracle replays both sides
     // from the raw table.
     QueryDef("q150_shallow_clone", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val srcRoot = RelationalSupport.scratchDir(s, dir, "q150_src")
       val cloneRoot = RelationalSupport.scratchDir(s, dir, "q150_clone")
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      VersionedTable.publishClustered(base, srcRoot, Seq("o_totalprice"), numFiles = 8)
+      VersionedTable.publish(base, srcRoot,
+        layout = Layout.Clustered(Seq("o_totalprice"))(files = 8))
       VersionedTable.cloneTo(srcRoot, cloneRoot)
       RefTableMutations.deleteWhere(s, cloneRoot, col("o_totalprice") < 150000.0)
       def read(root: String) = s.read.format("reftable")
@@ -664,11 +665,11 @@ object TableMutations {
     // Both the DV'd read and the post-compact read must equal the
     // oracle's plain double-DELETE replay.
     QueryDef("q157_deletion_vectors", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q157_dv")
       val base = Tables.load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      VersionedTable.publishClustered(base, root, Seq("o_orderkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("o_orderkey"))(files = 8))
       RefTableMutations.deleteWhereMergeOnRead(s, root, col("o_totalprice") < 50000.0)
       val vDv = RefTableMutations.deleteWhereMergeOnRead(s, root, col("o_orderkey") % 13 === 0)
       VersionedTable.compact(s, root)
@@ -805,12 +806,12 @@ object TableMutations {
     // sidecar bounds) — the case the engine previously rewrote
     // conservatively. The oracle replays the chain as plain SQL.
     QueryDef("q168_composite_key_cdc", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q168_ck")
       val base = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      VersionedTable.publishClustered(
-        base, root, Seq("l_orderkey", "l_linenumber"), numFiles = 8)
+      VersionedTable.publish(
+        base, root, layout = Layout.Clustered(Seq("l_orderkey", "l_linenumber"))(files = 8))
       // batch 1: update quantities on a key-sparse order subset
       val b1 = base.filter(col("l_orderkey") % 97 === 0)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -856,11 +857,11 @@ object TableMutations {
     // Compact then materializes. The oracle replays the three batches as
     // plain last-writer-wins upserts.
     QueryDef("q163_mor_cdc_apply", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q163_cdc")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey").cast("long").as("nk"))
-      VersionedTable.publishClustered(base, root, Seq("c_custkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("c_custkey"))(files = 8))
       def batch(m: Long, tag: Long) = base
         .filter(col("c_custkey") % 100 === m)
         .select(col("c_custkey"), (col("nk") + tag).as("nk"))
@@ -1040,12 +1041,12 @@ object TableMutations {
     // and the read-back must equal the oracle's replay of publish+appends:
     // a recluster is content-neutral, whatever files it touches.
     QueryDef("q209_partial_recluster", (s, dir) => {
-      import graft.sources.reftable.{RefTableMaintenance, SnapshotFiles, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMaintenance, SnapshotFiles, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q209_rcl")
       val base = Tables.load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"),
           (col("l_quantity").cast("decimal(12,2)") * 100).cast("long").as("qc"))
-      VersionedTable.publishClustered(base, root, Seq("l_orderkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("l_orderkey"))(files = 8))
       val bands = SnapshotFiles.list(root).map(_.path.split('/').last).toSet
       val maxK = base.agg(max("l_orderkey")).head().getLong(0)
       (1 to 6).foreach { i =>
@@ -1093,13 +1094,13 @@ object TableMutations {
     // entry throws if the commit re-derived instead) — and the final table
     // equals the sequential replay the oracle computes.
     QueryDef("q203_concurrent_disjoint", (s, dir) => {
-      import graft.sources.reftable.{RefTableMutations, VersionedTable}
+      import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q203_occ")
       val ddl = "c_custkey BIGINT, c_nationkey INT, cents BIGINT"
       val cents = (col("c_acctbal").cast("decimal(12,2)") * 100).cast("long")
       val base = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
-      VersionedTable.publishClustered(base, root, Seq("c_custkey"), numFiles = 8)
+      VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("c_custkey"))(files = 8))
       val r0 = VersionedTable.rebasedCommits.get
       VersionedTable.onBeforeClaim = Some { _ =>
         VersionedTable.onBeforeClaim = None // the append's own claim re-enters

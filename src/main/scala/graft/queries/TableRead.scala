@@ -320,10 +320,10 @@ object TableRead {
     // tasks for a range query on the cluster key.
     QueryDef("q91_clustered_skip", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q91_cluster")
-      graft.sources.reftable.VersionedTable.publishClustered(
+      graft.sources.reftable.VersionedTable.publish(
         Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment")),
-        root, Seq("c_acctbal"), numFiles = 8)
+        root, layout = graft.sources.reftable.Layout.Clustered(Seq("c_acctbal"))(files = 8))
       s.read.format("reftable")
         .option("path", root)
         .option("schema", "c_custkey BIGINT, c_acctbal DOUBLE, c_mktsegment STRING")
@@ -346,9 +346,9 @@ object TableRead {
     // oracle proves values; RefTableStatsSpec proves files are skipped.
     QueryDef("q98_categorical_skip", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q98_cat")
-      graft.sources.reftable.VersionedTable.publishClustered(
+      graft.sources.reftable.VersionedTable.publish(
         t(s, dir, "documents").select("doc_id", "lang", "text"),
-        root, Seq("lang"), numFiles = 4)
+        root, layout = graft.sources.reftable.Layout.Clustered(Seq("lang"))(files = 4))
       val resolved = graft.sources.reftable.SnapshotFiles.resolveDir(
         root, None, graft.sources.reftable.HadoopConf())
       graft.sources.reftable.RefTableStats.augmentCategorical(s, resolved, Seq("lang"))
@@ -404,13 +404,13 @@ object TableRead {
     // the file-skip counts and the never-wrongly-skips property.
     QueryDef("q214_string_range_skip", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q214_str")
-      graft.sources.reftable.VersionedTable.publishClustered(
+      graft.sources.reftable.VersionedTable.publish(
         t(s, dir, "documents").select(
           col("doc_id"),
           concat(lit("https://"), col("source"), lit(".example/"), col("lang"),
             lit("/doc-"), lpad(col("doc_id").cast("string"), 8, "0")).as("url"),
           col("n_chars")),
-        root, Seq("url"), numFiles = 8)
+        root, layout = graft.sources.reftable.Layout.Clustered(Seq("url"))(files = 8))
       s.read.format("reftable").option("path", root)
         .option("schema", "doc_id BIGINT, url STRING, n_chars BIGINT")
         .load()
@@ -435,10 +435,11 @@ object TableRead {
     // layout cannot prune the trailing dimension while z-order prunes all.
     QueryDef("q93_zorder_skip", (s, dir) => {
       val root = RelationalSupport.scratchDir(s, dir, "q93_zorder")
-      graft.sources.reftable.VersionedTable.publishZOrdered(
+      graft.sources.reftable.VersionedTable.publish(
         Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-        root, Seq("o_custkey", "o_totalprice"), numFiles = 8)
+        root, layout = graft.sources.reftable.Layout.ZOrdered(
+          Seq("o_custkey", "o_totalprice"))(files = 8))
       s.read.format("reftable")
         .option("path", root)
         .option("schema", "o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE")
@@ -461,17 +462,17 @@ object TableRead {
     // values). At 100 TB this is joining two co-partitioned facts in place
     // instead of re-shuffling both.
     QueryDef("q154_spj_join", (s, dir) => {
-      import graft.sources.reftable.VersionedTable
+      import graft.sources.reftable.{Layout, VersionedTable}
       val r1 = RelationalSupport.scratchDir(s, dir, "q154_a")
       val r2 = RelationalSupport.scratchDir(s, dir, "q154_b")
       val o = t(s, dir, "orders")
-      VersionedTable.publishPartitioned(
+      VersionedTable.publish(
         o.select((col("o_orderkey") % 8).as("bkt"), col("o_orderkey"), col("o_totalprice")),
-        r1, Seq("bkt"))
-      VersionedTable.publishPartitioned(
+        r1, layout = Layout.Partitioned(Seq("bkt")))
+      VersionedTable.publish(
         o.filter(col("o_custkey") % 3 === 0)
           .select((col("o_orderkey") % 8).as("bkt"), col("o_orderkey"), col("o_orderpriority")),
-        r2, Seq("bkt"))
+        r2, layout = Layout.Partitioned(Seq("bkt")))
       def rd(root: String, ddl: String) = s.read.format("reftable")
         .option("path", root).option("schema", ddl)
         .option("partitionColumns", "bkt").option("groupByPartition", "true").load()
@@ -511,11 +512,11 @@ object TableRead {
     // (RefTableHiddenPartitionSpec asserts the exact directory set kept).
     // The oracle replays the band filter over raw events.
     QueryDef("q160_hidden_partitioning", (s, dir) => {
-      import graft.sources.reftable.VersionedTable
+      import graft.sources.reftable.{Layout, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q160_hp")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      VersionedTable.publishHiddenPartitioned(ev, root, Seq("days(ts)"))
+      VersionedTable.publish(ev, root, layout = Layout.Hidden(Seq("days(ts)")))
       s.read.format("reftable")
         .option("path", root)
         .option("schema",
@@ -544,11 +545,11 @@ object TableRead {
     // still produce the right rows); the timezone guard and value fallback
     // are spec-asserted.
     QueryDef("q234_day_census_pushdown", (s, dir) => {
-      import graft.sources.reftable.VersionedTable
+      import graft.sources.reftable.{Layout, VersionedTable}
       val root = RelationalSupport.scratchDir(s, dir, "q234_daycensus")
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      VersionedTable.publishHiddenPartitioned(ev, root, Seq("days(ts)"))
+      VersionedTable.publish(ev, root, layout = Layout.Hidden(Seq("days(ts)")))
       val census = s.read.format("reftable")
         .option("path", root)
         .option("schema", "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, value DOUBLE")

@@ -516,7 +516,7 @@ object TextOps {
       // two checkpoint-leaf sides), i.e. the payload moved twice.
       val bounds = packed.groupBy("shard")
         .agg(min("doc_id").as("__lo"), max("doc_id").as("__hi"))
-      graft.sources.reftable.VersionedTable.publishPartitioned(
+      graft.sources.reftable.VersionedTable.publish(
         enc.join(broadcast(bounds),
             enc("doc_id") >= col("__lo") && enc("doc_id") <= col("__hi"))
           .select(col("doc_id"), col("token_ids"), col("n_bpe"), col("shard"))
@@ -529,7 +529,7 @@ object TextOps {
         // and the bare-Hive read path refuses >4096 directories by design
         // (per-refresh driver re-walk) — the 100x spot check hit exactly
         // that guard. The manifest lists any shard count in one read.
-        out, Seq("shard"))
+        out, layout = graft.sources.reftable.Layout.Partitioned(Seq("shard")))
       s.read.format("reftable")
         .option("path", out)
         .option("schema", "doc_id BIGINT, token_ids ARRAY<INT>, n_bpe BIGINT, shard INT")
@@ -844,13 +844,13 @@ object TextOps {
       val packed = graft.operators.Curation.packShardsAuto(
         ex, "example_id", "n_tok", targetShards = 8, minBudget = 4096L)
       val out = RelationalSupport.scratchDir(s, dir, "q241_shards")
-      graft.sources.reftable.VersionedTable.publishPartitioned(
+      graft.sources.reftable.VersionedTable.publish(
         ex.join(packed.select("example_id", "shard"), "example_id")
           .select(col("example_id"), col("token_ids"), col("n_tok"), col("shard"))
           // co-locate each shard before the dynamic-partition write (the
           // q219 lesson: without it every task touches every shard dir)
           .repartition(col("shard")),
-        out, Seq("shard"))
+        out, layout = graft.sources.reftable.Layout.Partitioned(Seq("shard")))
       s.read.format("reftable")
         .option("path", out)
         .option("schema", "example_id BIGINT, token_ids ARRAY<INT>, n_tok INT, shard INT")

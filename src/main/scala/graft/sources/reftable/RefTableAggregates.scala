@@ -174,7 +174,7 @@ object RefTableAggregates {
       val files = SnapshotFiles.pruned(opts, Nil)
       // DIRECTORY-CONSTANT check per file: a partition column through
       // pvConst; a transform key by dir presence (files published outside
-      // publishHiddenPartitioned carry no transform dir — not servable)
+      // a Layout.Hidden publish carry no transform dir — not servable)
       val servable = keys.forall {
         case PvKey(f) =>
           files.forall(file => RefTableColumnarReader.pvConst(opts, file.partitionValues, f))

@@ -169,7 +169,7 @@ object SchemaJson {
   *  - `clusterFiles`    (default 16) target file count for either layout;
   *  - `bucketBy`        comma-separated columns — published versions are
   *                      HASH-bucketed on them into `bucketCount` files
-  *                      ([[VersionedTable.publishBucketed]]): keyed
+  *                      ([[Layout.Bucketed]]): keyed
   *                      upsert/MERGE rewrite only the source's buckets
   *                      even for scattered point keys. Exclusive with
   *                      `clusterBy`/`zorderBy`/`partitionColumns`.
@@ -210,8 +210,10 @@ object SchemaJson {
   *                      the layout lives under derived directories while
   *                      the source column stays in the files, and plain
   *                      predicates on the source column prune the
-  *                      listing. Mutually exclusive with
-  *                      `partitionColumns`.
+  *                      listing. INSERT OVERWRITE and compaction keep the
+  *                      layout; appends land flat. Mutually exclusive with
+  *                      `partitionColumns` and the global layouts
+  *                      (`clusterBy`/`zorderBy`/`bucketBy`).
   *  - `expect.<name>`   row-level expectation: a SQL predicate every
   *                      written row must satisfy (NULL outcomes violate),
   *                      enforced by EVERY write surface — batch INSERT,
@@ -315,6 +317,19 @@ final case class RefTableOptions(
   def storageColumn(field: String): String =
     if (rowField.contains(field)) keyColumn.get
     else columnMapping.getOrElse(field, field)
+
+  /** The write layout the layout options declare, in storage column names
+    * (layout options name OUTPUT fields; written payloads carry storage
+    * names). Validation admits at most one layout option.
+    */
+  def layout: Layout =
+    if (zorderBy.nonEmpty) Layout.ZOrdered(zorderBy.map(storageColumn))(clusterFiles)
+    else if (clusterBy.nonEmpty) Layout.Clustered(clusterBy.map(storageColumn))(clusterFiles)
+    else if (bucketBy.nonEmpty) Layout.Bucketed(bucketBy.map(storageColumn), bucketCount)
+    else if (hiddenPartitions.nonEmpty)
+      Layout.Hidden(hiddenPartitions.map(RefTableTransforms.renameSource(_, storageColumn)))
+    else if (partitionColumns.nonEmpty) Layout.Partitioned(partitionColumns)
+    else Layout.Flat
 
   /** True for a field decoded from the directory path, not file content. */
   def isPartitionCol(field: String): Boolean = partitionColumns.contains(field)
@@ -518,8 +533,6 @@ object RefTableOptions {
     val ndvStats = colList("ndvStats")
     if (Seq(clusterBy, zorderBy, bucketBy).count(_.nonEmpty) > 1)
       err("clusterBy", "Options 'clusterBy', 'zorderBy' and 'bucketBy' are mutually exclusive")
-    if ((clusterBy.nonEmpty || zorderBy.nonEmpty || bucketBy.nonEmpty) && partitionColumns.nonEmpty)
-      err("clusterBy", "Layout options ('clusterBy'/'zorderBy'/'bucketBy') do not combine with 'partitionColumns'")
     // per-file stats are computed from the columns a data file holds, and a
     // partition column lives only in its directory names
     Seq("categoricalStats" -> categoricalStats, "bloomStats" -> bloomStats, "ndvStats" -> ndvStats)
@@ -630,6 +643,11 @@ object RefTableOptions {
     if (hiddenPartitions.nonEmpty && partitionColumns.nonEmpty)
       err("hiddenPartitions", "hiddenPartitions and partitionColumns are mutually exclusive " +
         "(a layout is either identity-partitioned or transform-partitioned)")
+    // no write keeps a global layout together with partition directories
+    if ((clusterBy.nonEmpty || zorderBy.nonEmpty || bucketBy.nonEmpty) &&
+        (partitionColumns.nonEmpty || hiddenPartitions.nonEmpty))
+      err("clusterBy", "Layout options ('clusterBy'/'zorderBy'/'bucketBy') do not combine with " +
+        "'partitionColumns' or 'hiddenPartitions'")
 
     // changefeed read mode: each micro-batch is the key-level change set
     // between generations instead of the snapshot

@@ -11,13 +11,14 @@ import org.apache.spark.sql.SparkSession
   * compact, re-cluster, or re-bucket.
   *
   * The table's INTENDED layout is self-described: every layout-establishing
-  * publish ([[VersionedTable.publishClustered]] / `publishZOrdered` /
-  * `publishBucketed`) records a `layout=<kind>:<cols>[:<n>]` marker with its
-  * commit. The last such marker is the declaration; every commit after it
-  * (appends, mutations, compactions) is churn against it. Mutations degrade
-  * deliberately and observably — rewritten files lose clustering (bounds
-  * widen in the stats manifest) and bucketed versions lose `_BUCKETS.json`
-  * — so the decision needs no hidden state, only storage:
+  * publish (`VersionedTable.publish` with a clustered, z-ordered, bucketed
+  * or hidden [[Layout]]) records the layout's marker with its commit. The
+  * last such marker is the declaration ([[Layout.declared]]); every commit
+  * after it (appends, mutations, compactions) is churn against it.
+  * Mutations degrade deliberately and observably — rewritten files lose
+  * clustering (bounds widen in the stats manifest) and bucketed versions
+  * lose `_BUCKETS.json` — so the decision needs no hidden state, only
+  * storage:
   *
   *  - declared cluster/zorder: re-cluster when churn > 0 AND the measured
   *    read amplification on the leading cluster column exceeds
@@ -27,9 +28,10 @@ import org.apache.spark.sql.SparkSession
   *  - declared bucket: re-bucket when churn > 0 AND the current version
   *    lost its `_BUCKETS.json` (some file no longer sits in its hash
   *    bucket), or when the file count outgrew 2× the bucket count.
-  *  - no declaration: compact when the file count exceeds
+  *  - no declaration, or a hidden one: compact when the file count exceeds
   *    `maxSmallFiles` AND mean file size fell under `targetFileBytes/4` —
-  *    the small-file explosion of a frequently-appended table.
+  *    the small-file explosion of a frequently-appended table (a hidden
+  *    table compacts through its transforms, [[VersionedTable.compact]]).
   *
   * Every restoring publish re-records its layout marker, so the churn
   * counter resets — maintenance is idempotent: a second [[maintain]] right
@@ -49,56 +51,48 @@ object RefTableMaintenance {
       version: String,
       nFiles: Int,
       bytes: Long,
-      declared: Option[DeclaredLayout],
+      declared: Option[Layout],
       commitsSinceLayout: Int,
       readAmplification: Option[Double],
       bucketMarkerPresent: Boolean,
       dvSidecars: Int = 0)
-
-  /** kind ∈ cluster | zorder | bucket; `buckets` set for bucket only. */
-  final case class DeclaredLayout(kind: String, cols: Seq[String], buckets: Option[Int])
 
   /** action ∈ none | compact | recluster | rebucket; `version` = the
     * restoring publish, when one ran.
     */
   final case class Decision(action: String, reason: String, version: Option[String] = None)
 
-  private[graft] def parseLayoutMarker(m: String): Option[DeclaredLayout] =
-    if (!m.startsWith("layout=")) None
-    else m.stripPrefix("layout=").split(":", -1) match {
-      case Array(kind, cols) if kind == "cluster" || kind == "zorder" =>
-        Some(DeclaredLayout(kind, cols.split(",").toSeq.filter(_.nonEmpty), None))
-      case Array("bucket", cols, n) =>
-        scala.util.Try(n.toInt).toOption
-          .map(b => DeclaredLayout("bucket", cols.split(",").toSeq.filter(_.nonEmpty), Some(b)))
-      case _ => None
-    }
-
-  /** Read amplification of the layout on `col`: Σ(per-file bound width) /
-    * global range — the expected number of files a uniformly random point
-    * predicate on `col` must read. A fresh range-clustered layout is ~1.0
-    * (near-disjoint bands tile the range once); every mutation-rewritten
-    * file that widened toward the full key range adds ~1.0. O(files) from
-    * the stats manifest, no data pages. None when bounds are missing or
-    * non-numeric (nothing trustworthy to measure).
+  /** Numeric per-file `(min, max)` bounds on one column, keyed by file
+    * path, and the `[lo, hi]` range they span.
     */
-  private def readAmplification(
-      dir: String, files: Seq[SnapshotFile], col: String, conf: Configuration): Option[Double] = {
+  private[reftable] final case class Bands(
+      byFile: Map[String, (Double, Double)], lo: Double, hi: Double) {
+    /** Σ(bound width) / range, over `paths` (default: every bounded file). */
+    def amplification(paths: Iterable[String] = byFile.keys): Double =
+      paths.iterator.map(byFile).map { case (mn, mx) => mx - mn }.sum / (hi - lo)
+  }
+
+  /** The leading cluster column's bands over `files`, from the stats
+    * manifest — no data pages. None when fewer than 2 files carry numeric
+    * bounds (nothing trustworthy to measure) or the keyspace is a single
+    * point (nothing to cluster).
+    */
+  private[reftable] def bands(
+      dir: String, files: Seq[SnapshotFile], col: String, conf: Configuration): Option[Bands] = {
     val stats = RefTableStats.statsForListing(dir, files, conf)
-    val bounds = files.flatMap { f =>
+    val byFile = files.flatMap { f =>
       for {
         fs <- stats.get(f.path)
         cs <- fs.cols.get(col)
         mn <- cs.min if mn.isNumber
         mx <- cs.max if mx.isNumber
-      } yield (mn.asDouble(), mx.asDouble())
-    }
-    if (bounds.size < 2) None
+      } yield f.path -> (mn.asDouble(), mx.asDouble())
+    }.toMap
+    if (byFile.size < 2) None
     else {
-      val lo = bounds.map(_._1).min
-      val hi = bounds.map(_._2).max
-      if (hi <= lo) None // single-point keyspace: nothing to cluster
-      else Some(bounds.map { case (mn, mx) => mx - mn }.sum / (hi - lo))
+      val lo = byFile.values.map(_._1).min
+      val hi = byFile.values.map(_._2).max
+      if (hi <= lo) None else Some(Bands(byFile, lo, hi))
     }
   }
 
@@ -112,18 +106,22 @@ object RefTableMaintenance {
     // seq-based, not log-index-based: retention prunes commit FILES beyond
     // keepVersions, but sequences are monotonic forever and the declaration
     // itself lives in the root _LAYOUT file, out of retention's reach
-    val decl = VersionedTable.layoutDeclaration(root, conf)
-    val declared = decl.flatMap { case (_, m) => parseLayoutMarker(m) }
+    val decl = Layout.declared(root, conf)
+    val declared = decl.map(_._2)
     val lastSeq = VersionedTable.lastCommit(root, conf).map(_.seq).getOrElse(0L)
     val churn = decl match {
       case Some((declSeq, _)) => math.max(0L, lastSeq - declSeq).toInt
       case None => VersionedTable.commitLog(root, conf).size
     }
     val files = SnapshotFiles.list(dir)
-    val readAmp = declared
-      .filter(d => (d.kind == "cluster" || d.kind == "zorder") && d.cols.nonEmpty)
-      .flatMap(d => readAmplification(dir, files, d.cols.head, conf))
-    val bucketMarker = VersionedTable.bucketLayout(dir, conf).nonEmpty
+    // read amplification on the leading cluster column: the expected
+    // number of files a uniformly random point predicate must read — a
+    // fresh range-clustered layout is ~1.0 (near-disjoint bands tile the
+    // range once); every mutation-rewritten file widened toward the full
+    // key range adds ~1.0
+    val readAmp = declared.collect { case b: Layout.Banded => b }
+      .flatMap(b => bands(dir, files, b.cols.head, conf)).map(_.amplification())
+    val bucketMarker = Layout.bucketedAt(dir, conf).nonEmpty
     // merge-on-read delete pressure: sidecar count only (a directory
     // listing — the census must stay metadata-cheap per table)
     val dv = DeletionVectors.sidecars(dir, conf).size
@@ -145,30 +143,30 @@ object RefTableMaintenance {
     // accreted sidecars the restoring publish (which also re-establishes
     // any declared layout) is due regardless of file-size health
     if (s.dvSidecars >= 8) {
-      val act = s.declared.map(_.kind) match {
-        case Some("bucket") => "rebucket"
-        case Some(_) => "recluster"
-        case None => "compact"
+      val act = s.declared match {
+        case Some(_: Layout.Bucketed) => "rebucket"
+        case Some(_: Layout.Banded) => "recluster"
+        case _ => "compact"
       }
       return Decision(act,
         s"${s.dvSidecars} deletion-vector sidecars pending materialization")
     }
     s.declared match {
-      case Some(d @ DeclaredLayout("bucket", _, Some(n))) =>
+      case Some(Layout.Bucketed(cols, n)) =>
         if (s.commitsSinceLayout > 0 && !s.bucketMarkerPresent)
           Decision("rebucket", s"version ${s.version} lost its bucket layout " +
             s"(${s.commitsSinceLayout} commits since declaration)")
         else if (s.nFiles > 2 * n)
           Decision("rebucket", s"${s.nFiles} files for a $n-bucket layout")
-        else Decision("none", s"bucket layout ${d.cols.mkString(",")}:$n intact")
-      case Some(d) if d.kind == "cluster" || d.kind == "zorder" =>
+        else Decision("none", s"bucket layout ${cols.mkString(",")}:$n intact")
+      case Some(b: Layout.Banded) =>
         val amp = s.readAmplification.getOrElse(1.0)
         if (s.commitsSinceLayout > 0 && amp > maxReadAmp)
           Decision("recluster", f"read amplification $amp%.2f > $maxReadAmp%.2f on " +
-            s"${d.cols.head} after ${s.commitsSinceLayout} commits")
+            s"${b.cols.head} after ${s.commitsSinceLayout} commits")
         else if (s.commitsSinceLayout > 0 && smallFiles)
           Decision("recluster", s"${s.nFiles} files averaging $avg bytes")
-        else Decision("none", f"${d.kind} layout ${d.cols.mkString(",")} intact " +
+        else Decision("none", f"${b.kind} layout ${b.cols.mkString(",")} intact " +
           f"(read amplification $amp%.2f)")
       case _ =>
         if (smallFiles) Decision("compact", s"${s.nFiles} files averaging $avg bytes")
@@ -197,41 +195,30 @@ object RefTableMaintenance {
       case "compact" =>
         val v = VersionedTable.compact(spark, root, targetFileBytes, keepVersions, partitionColumns)
         d.copy(version = Some(v))
-      case "recluster" =>
+      case _ => // recluster | rebucket: re-publish through the declaration
         val decl = s.declared.get
-        // INCREMENTAL first: rewrite only the stats-wide files and carry
-        // tight ones by reference — O(widened bytes). Not applicable when
-        // deletion vectors forced the restore (carried files would keep
-        // their sidecars pending forever), when nothing/everything is wide,
-        // or when bounds are unusable; those fall through to the full
-        // re-tile below.
-        val partial =
-          if (s.dvSidecars >= 8) None
-          else RefTableMutations.reclusterPartial(spark, root, decl.cols,
-            zorder = decl.kind == "zorder", targetFileBytes, maxReadAmp,
-            keepVersions, partitionColumns)
+        // INCREMENTAL first for a banded layout: rewrite only the stats-wide
+        // files and carry tight ones by reference — O(widened bytes). Not
+        // applicable when deletion vectors forced the restore (carried files
+        // would keep their sidecars pending forever), when nothing/everything
+        // is wide, or when bounds are unusable; those fall through to the
+        // full re-publish below.
+        val partial = decl match {
+          case b: Layout.Banded if s.dvSidecars < 8 =>
+            RefTableMutations.reclusterPartial(spark, root, b, targetFileBytes, maxReadAmp,
+              keepVersions, partitionColumns)
+          case _ => None
+        }
         val v = partial.getOrElse(VersionedTable.withConflictRetry(root) { () =>
           val cur = VersionedTable.resolve(root, conf).get
-          val df = VersionedTable.readVersion(spark, cur)
-          val nFiles = math.max(1, math.ceil(
-            SnapshotFiles.list(cur).map(_.length).sum.toDouble / targetFileBytes).toInt)
-          val parent = Some(new Path(cur).getName)
-          if (decl.kind == "zorder")
-            VersionedTable.publishZOrdered(df, root, decl.cols, nFiles, keepVersions,
-              parent = parent, requireBase = true)
-          else
-            VersionedTable.publishClustered(df, root, decl.cols, nFiles, keepVersions,
-              parent = parent, requireBase = true)
+          val layout = decl match {
+            case b: Layout.Banded => b.sized(math.max(1, math.ceil(
+              SnapshotFiles.list(cur).map(_.length).sum.toDouble / targetFileBytes).toInt))
+            case l => l
+          }
+          VersionedTable.publish(VersionedTable.readVersion(spark, cur), root, keepVersions,
+            parent = Some(new Path(cur).getName), requireBase = true, layout = layout)
         })
-        d.copy(version = Some(v))
-      case "rebucket" =>
-        val decl = s.declared.get
-        val v = VersionedTable.withConflictRetry(root) { () =>
-          val cur = VersionedTable.resolve(root, conf).get
-          val df = VersionedTable.readVersion(spark, cur)
-          VersionedTable.publishBucketed(df, root, decl.cols, decl.buckets.get, keepVersions,
-            parent = Some(new Path(cur).getName), requireBase = true)
-        }
         d.copy(version = Some(v))
     }
   }

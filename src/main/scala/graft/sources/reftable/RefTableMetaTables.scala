@@ -287,7 +287,7 @@ object RefTableMetaTables {
           row("bytes", files.map(_.length).sum.toString))
         val partitioned =
           if (pvCols.nonEmpty) Seq(row("partition_columns", pvCols.mkString(","))) else Nil
-        val bucketed = VersionedTable.bucketLayout(dir, conf).toSeq.flatMap { case (cols, n) =>
+        val bucketed = Layout.bucketedAt(dir, conf).toSeq.flatMap { case Layout.Bucketed(cols, n) =>
           Seq(row("bucket_columns", cols.mkString(",")), row("bucket_count", n.toString))
         }
         (base ++ partitioned ++ bucketed).toArray

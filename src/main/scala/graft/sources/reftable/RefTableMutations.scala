@@ -1190,7 +1190,7 @@ object RefTableMutations {
     else buckets.fold(files)(ids => files.filter(f => bucketIdOf(f.path).exists(ids.contains)))
 
   /** Hash-bucket narrowing for keyed mutations: when the CURRENT version is
-    * a physical bucketed layout ([[VersionedTable.publishBucketed]]) whose
+    * a physical bucketed layout ([[Layout.Bucketed]]) whose
     * bucket columns equal the mutation's key columns, the files that may
     * contain a source key are exactly the files of the source's bucket ids
     * — `pmod(hash(keys), n)`, the same `HashPartitioning` expression the
@@ -1204,9 +1204,9 @@ object RefTableMutations {
     */
   private def bucketsOfKeys(
       b: Base, source: DataFrame, keyCols: Seq[String]): Option[Set[Int]] =
-    VersionedTable.bucketLayout(b.current, b.conf).collect {
+    Layout.bucketedAt(b.current, b.conf).collect {
       // hash is order-sensitive: exact match only
-      case (cols, n) if cols == keyCols && n > 0 && keyCols.forall(b.types.contains) =>
+      case Layout.Bucketed(cols, n) if cols == keyCols && keyCols.forall(b.types.contains) =>
         // hash under the TABLE's key types, not the source's: Murmur3 is
         // type-sensitive (hash(3:int) != hash(3L:bigint)), and the writer
         // hashed the table-typed columns
@@ -1231,8 +1231,8 @@ object RefTableMutations {
     */
   private def bucketsOfFilters(b: Base, filters: Seq[Filter]): Option[Set[Int]] = {
     import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo}
-    val (cols, n) = VersionedTable.bucketLayout(b.current, b.conf).getOrElse(return None)
-    if (cols.isEmpty || n <= 0 || !cols.forall(b.types.contains)) return None
+    val Layout.Bucketed(cols, n) = Layout.bucketedAt(b.current, b.conf).getOrElse(return None)
+    if (!cols.forall(b.types.contains)) return None
     val valuesPerCol: Seq[Seq[Any]] = cols.map { c =>
       filters.collectFirst {
         case EqualTo(a, v) if a == c => Seq(v)
@@ -1307,32 +1307,21 @@ object RefTableMutations {
     * rewrite's own once-tiled coverage) still exceeds `maxReadAmp`:
     * full-range churn genuinely needs the full re-tile, and a partial pass
     * that cannot restore health would loop forever. The restoring publish
-    * re-records the layout marker (churn resets) and rides the
+    * re-records the declared layout's marker (churn resets) and rides the
     * commit-rebase spec of a predicate-local COW mutation: a recluster is
     * content-neutral, so concurrent appends rebase it.
     */
   def reclusterPartial(
-      spark: SparkSession, root: String, cols: Seq[String], zorder: Boolean,
+      spark: SparkSession, root: String, layout: Layout.Banded,
       targetFileBytes: Long = 128L * 1024 * 1024, maxReadAmp: Double = 1.5,
       keepVersions: Int = 3, partitionColumns: Seq[String] = Nil): Option[String] =
     VersionedTable.withConflictRetry(root) { () =>
       val b = new Base(spark, root, partitionColumns, Map.empty)
       val files = b.files
       if (files.size < 2) return None
-      val stats = RefTableStats.statsForListing(b.current, files, b.conf)
-      val lead = cols.head
-      val bounds: Map[String, (Double, Double)] = files.flatMap { f =>
-        for {
-          fs <- stats.get(f.path)
-          cs <- fs.cols.get(lead)
-          mn <- cs.min if mn.isNumber
-          mx <- cs.max if mx.isNumber
-        } yield f.path -> (mn.asDouble(), mx.asDouble())
-      }.toMap
-      if (bounds.size < 2) return None
-      val lo = bounds.values.map(_._1).min
-      val hi = bounds.values.map(_._2).max
-      if (hi <= lo) return None
+      val bands = RefTableMaintenance.bands(b.current, files, layout.cols.head, b.conf)
+        .getOrElse(return None)
+      val bounds = bands.byFile
       // interval scheduling: sweep by upper bound, keep every file disjoint
       // from the last kept — the classical maximum non-overlapping set
       val sortedByHi = files.filter(f => bounds.contains(f.path))
@@ -1350,30 +1339,22 @@ object RefTableMutations {
       // re-clustered rows tile their own union range once. Full-range
       // churn predicts ~2.0 and declines (missing bounds count as full
       // range, conservatively).
-      val keptAmp = kept.toSeq.map(p => bounds(p)._2 - bounds(p)._1).sum / (hi - lo)
+      val keptAmp = bands.amplification(kept)
       val wideBounds = wide.flatMap(f => bounds.get(f.path))
       val wideCoverage =
         if (wideBounds.size < wide.size) 1.0
-        else (wideBounds.map(_._2).max - wideBounds.map(_._1).min) / (hi - lo)
+        else (wideBounds.map(_._2).max - wideBounds.map(_._1).min) / (bands.hi - bands.lo)
       if (keptAmp + wideCoverage > maxReadAmp) return None
       val nOut = math.max(1, math.ceil(
         wide.map(_.length).sum.toDouble / targetFileBytes).toInt)
-      val marker = s"layout=${if (zorder) "zorder" else "cluster"}:${cols.mkString(",")}"
-      Some(VersionedTable.publishVia(root, keepVersions, marker = Some(marker),
+      Some(VersionedTable.publishVia(root, keepVersions, marker = layout.marker,
         parent = Some(b.version), requireBase = true,
         rebase = Some(VersionedTable.RebaseSpec(
           removedRel = relsOf(root, wide, b.conf), readRel = relsOf(root, wide, b.conf),
           partitionColumns = partitionColumns))) { staging =>
-        val df = b.read(wide)
-        val sorted =
-          if (zorder) {
-            val zc = "__graft_z"
-            val z = df.withColumn(zc, ZOrder.zColumn(df, cols))
-            z.repartitionByRange(nOut, z(zc)).sortWithinPartitions(zc).drop(zc)
-          } else df.repartitionByRange(nOut, cols.map(col): _*)
-            .sortWithinPartitions(cols.map(col): _*)
-        VersionedTable.writeParquetMicros(sorted, staging.toString, partitionColumns,
-          colocatePartitions = false) // range/z-order pre-arranged above
+        VersionedTable.writeParquetMicros(layout.sized(nOut).arrange(b.read(wide)),
+          staging.toString, partitionColumns,
+          colocatePartitions = false) // range/z-order arranged by the layout
         referenceRest(root, staging, b.current, wide, b.conf, partitionColumns)
       })
     }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * one small manifest read replaces 100k footer opens, and files whose
   * [min,max] cannot satisfy the pushed filters never become tasks at all —
   * the Delta/Iceberg data-skipping pattern on plain storage. Combined with
-  * [[VersionedTable.publishClustered]] (range-clustered layout → tight,
+  * a [[Layout.Clustered]] publish (range-clustered layout → tight,
   * disjoint per-file bounds) a selective range filter plans O(matching)
   * tasks instead of O(files).
   *

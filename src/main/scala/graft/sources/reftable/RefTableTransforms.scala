@@ -29,10 +29,10 @@ import org.apache.spark.sql.types._
   * leaf) to the outcomes rows of that directory can produce — exact where
   * decidable (day ranges, prefix order), conservative everywhere else
   * (bucket answers only equality/IN; an appended file WITHOUT the
-  * transform directory evaluates Unknown and is kept). Writes other than
-  * [[VersionedTable.publishHiddenPartitioned]] degrade the layout, never
+  * transform directory evaluates Unknown and is kept). Writes other than a
+  * [[Layout.Hidden]] publish (appends, mutations) degrade the layout, never
   * correctness — the manifest records no dir value for their files, so
-  * they survive every prune until a restoring publish re-buckets them.
+  * they survive every prune until a restoring publish re-derives them.
   */
 object RefTableTransforms {
 
@@ -177,6 +177,17 @@ object RefTableTransforms {
   private val HoursRe = """^hours\(\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)$""".r
   private val BucketRe = """^bucket\(\s*(\d+)\s*,\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)$""".r
   private val TruncRe = """^truncate\(\s*(\d+)\s*,\s*([A-Za-z_][A-Za-z0-9_]*)\s*\)$""".r
+  // every form's source column is its last argument
+  private val SourceRe = """([A-Za-z_][A-Za-z0-9_]*)(\s*\))$""".r
+
+  /** Whether `spec` follows the transform grammar (no schema check). */
+  def wellFormed(spec: String): Boolean =
+    Seq(DaysRe, HoursRe, BucketRe, TruncRe).exists(_.matches(spec.trim))
+
+  /** `spec` with its source column renamed by `f`. */
+  def renameSource(spec: String, f: String => String): String =
+    SourceRe.replaceAllIn(spec, m =>
+      scala.util.matching.Regex.quoteReplacement(f(m.group(1)) + m.group(2)))
 
   /** Parse one `hiddenPartitions` entry against the declared schema;
     * errors are returned for the option validator to collect.

@@ -243,7 +243,7 @@ object RefTableWrites {
   /** clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that
     * re-cluster per commit; an O(new data) append cannot keep them. */
   private[reftable] def refuseGlobalLayout(opts: RefTableOptions): Unit =
-    require(opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty,
+    require(!opts.layout.global,
       "reftable append: clusterBy/zorderBy/bucketBy layouts are GLOBAL properties that " +
         "re-cluster per commit; write them with batch INSERT (which rewrites the layout " +
         "per commit) or maintain them with RefTableMaintenance")
@@ -439,23 +439,7 @@ object RefTableWrites {
     val gated = enforceExpectations(opts, data)
     val aligned = alignedStorage(opts, gated)
     val storageNames = opts.schema.fields.map(f => opts.storageColumn(f.name))
-    // layout options name OUTPUT fields; the payload carries storage names
-    def storage(cols: Seq[String]): Seq[String] = cols.map(opts.storageColumn)
-    def doPublish(payload: DataFrame, parent: Option[String], cas: Boolean): String =
-      if (opts.zorderBy.nonEmpty)
-        VersionedTable.publishZOrdered(payload, opts.path, storage(opts.zorderBy),
-          opts.clusterFiles, opts.keepVersions, parent = parent, requireBase = cas)
-      else if (opts.clusterBy.nonEmpty)
-        VersionedTable.publishClustered(payload, opts.path, storage(opts.clusterBy),
-          opts.clusterFiles, opts.keepVersions, parent = parent, requireBase = cas)
-      else if (opts.bucketBy.nonEmpty)
-        VersionedTable.publishBucketed(payload, opts.path, storage(opts.bucketBy),
-          opts.bucketCount, opts.keepVersions, parent = parent, requireBase = cas)
-      else if (opts.partitionColumns.nonEmpty)
-        VersionedTable.publishPartitioned(payload, opts.path, opts.partitionColumns,
-          opts.keepVersions, parent = parent, requireBase = cas)
-      else VersionedTable.publish(payload, opts.path, opts.keepVersions,
-        parent = parent, requireBase = cas)
+    val layout = opts.layout
 
     // Spark's partitioned-overwrite contract: static (the default)
     // replaces the whole table; dynamic replaces ONLY the partitions
@@ -473,8 +457,9 @@ object RefTableWrites {
       RefTableMutations.overwritePartitions(data.sparkSession, opts.path, aligned,
         opts.partitionColumns, RefTableMutations.partitionTypesOf(opts),
         opts.keepVersions)
-    else if (overwrite) doPublish(aligned, None, cas = false) // derives from nothing
-    else if (opts.zorderBy.isEmpty && opts.clusterBy.isEmpty && opts.bucketBy.isEmpty) {
+    else if (overwrite) // derives from nothing
+      VersionedTable.publish(aligned, opts.path, opts.keepVersions, layout = layout)
+    else if (!layout.global) {
       // plain appends (no global re-clustering declared) commit O(new
       // data) through the one exactly-once append commit (the streaming
       // epochs' commit too). clusterBy/zorderBy/bucketBy tables keep the
@@ -495,16 +480,16 @@ object RefTableWrites {
             // current snapshot through our own read path (storage-named schema)
             val ddl = org.apache.spark.sql.types.StructType(opts.schema.fields.map(f =>
               f.copy(name = opts.storageColumn(f.name)))).toDDL
-            val reader = data.sparkSession.read.format("reftable")
+            // (a global layout never combines with partitionColumns)
+            val cur = data.sparkSession.read.format("reftable")
               .option("path", opts.path).option("schema", ddl)
               .option("version", b)
               .option("allowMissingColumns", opts.allowMissingColumns.toString)
-            val cur = (if (opts.partitionColumns.nonEmpty)
-              reader.option("partitionColumns", opts.partitionColumns.mkString(","))
-            else reader).load()
+              .load()
             cur.select(storageNames.map(col).toIndexedSeq: _*).unionAll(aligned)
         }
-        try { doPublish(payload, base, cas = true); () }
+        try VersionedTable.publish(payload, opts.path, opts.keepVersions,
+          parent = base, requireBase = true, layout = layout)
         catch {
           // the pinned base can be deleted mid-read by a CONCURRENT
           // committer's publish-time retention (keepVersions) — that

@@ -43,22 +43,13 @@ object VersionedTable {
     */
   val Pointer = "_CURRENT"
 
-  /** Root-level layout declaration: line 1 = commit sequence that declared
-    * it, line 2 = the `layout=<kind>:<cols>[:<n>]` marker. Written by every
-    * layout-establishing publish. The declaration must outlive commit-log
-    * retention (the declaring commit is pruned after `keepVersions` further
-    * publishes), so it lives beside the log, not in it; the in-log marker
-    * remains as provenance and as fallback when this cache write failed.
-    */
-  val LayoutDecl = "_LAYOUT"
-
   /** Declared TIME-based retention — the root-level policy file written
     * when a table declares `retainFor '<duration>'` (the reference's
     * duration grammar, `\d+[dhms]`). Every retention pass — publish-time
     * pruning AND vacuum — keeps any version younger than the window, on
-    * top of the `keepVersions` count floor. Root-level (like [[LayoutDecl]])
-    * so the policy binds every writer and pruner regardless of which
-    * surface declared it.
+    * top of the `keepVersions` count floor. Root-level (like the `_LAYOUT`
+    * declaration, [[Layout.declared]]) so the policy binds every writer
+    * and pruner regardless of which surface declared it.
     */
   val RetentionDecl = "_RETENTION"
 
@@ -398,124 +389,19 @@ object VersionedTable {
     * nothing and never conflicts; set `requireBase` (with `parent` = the
     * version the content derived from) to arm the commit CAS for derived
     * publishes.
+    *
+    * `layout` arranges the rows and records the arrangement ([[Layout]]:
+    * Hive-partitioned, hidden-partitioned, range-clustered, z-ordered or
+    * hash-bucketed); the default writes them flat.
     */
   def publish(df: DataFrame, root: String, keepVersions: Int = 3,
-      parent: Option[String] = None, requireBase: Boolean = false): String =
-    publishInternal(df, root, keepVersions, Nil, parent = parent, requireBase = requireBase)
-
-  /** As [[publish]], writing a Hive-partitioned layout inside the version
-    * directory (readers declare the matching `partitionColumns` option).
-    */
-  def publishPartitioned(
-      df: DataFrame, root: String, partitionColumns: Seq[String],
-      keepVersions: Int = 3, parent: Option[String] = None,
-      requireBase: Boolean = false): String =
-    publishInternal(df, root, keepVersions, partitionColumns, parent = parent,
-      requireBase = requireBase)
-
-  /** Publish with a range-clustered layout: rows range-partitioned and
-    * sorted on `clusterCols` across `numFiles` files. Each file then covers
-    * a tight, near-disjoint [min,max] on the cluster key, which is what
-    * makes the published `_STATS.json` effective — a selective filter on
-    * the key plans O(matching) files instead of O(files)
-    * ([[RefTableStats]]). The sort also helps parquet row-group/page skips
-    * and compression inside each file. This is the data-layout half of
-    * data skipping; the manifest is the metadata half — every publish
-    * writes one, but un-clustered layouts rarely have prunable bounds.
-    */
-  def publishClustered(
-      df: DataFrame, root: String, clusterCols: Seq[String], numFiles: Int,
-      keepVersions: Int = 3, parent: Option[String] = None,
-      requireBase: Boolean = false): String = {
-    require(clusterCols.nonEmpty, "publishClustered needs at least one cluster column")
-    require(numFiles > 0, "numFiles must be positive")
-    val cols = clusterCols.map(df.col)
-    publishInternal(
-      df.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*),
-      root, keepVersions, Nil, parent = parent, requireBase = requireBase,
-      // self-describing layout commit: RefTableMaintenance reads the last
-      // layout=* marker as the table's DECLARED layout, and counts commits
-      // after it as mutation churn
-      marker = Some(s"layout=cluster:${clusterCols.mkString(",")}"))
-  }
-
-  /** Marker file a bucketed publish writes into its version dir: the
-    * bucket columns and count the file layout was hashed by. Written by
-    * [[publishBucketed]], read back only through [[bucketLayout]].
-    */
-  private val BucketsMarker = "_BUCKETS.json"
-
-  /** The bucket columns and count a [[publishBucketed]] version `dir` was
-    * hashed by, read from its marker; None when `dir` holds no marker (not
-    * a bucketed publish — e.g. any post-mutation manifest version).
-    */
-  def bucketLayout(dir: String, conf: Configuration): Option[(Seq[String], Int)] = {
-    val bp = new Path(dir, BucketsMarker)
-    val fs = bp.getFileSystem(conf)
-    if (!fs.exists(bp)) return None
-    val in = fs.open(bp)
-    val node = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
-      finally in.close()
-    import scala.jdk.CollectionConverters._
-    Some((node.path("cols").elements().asScala.map(_.asText()).toSeq, node.path("n").asInt(0)))
-  }
-
-  /** Publish with a HASH-bucketed layout: rows land in `nBuckets` files by
-    * `pmod(hash(bucketCols), n)` — Spark's own `HashPartitioning` id
-    * expression, so `repartition(n, cols)` task indices ARE the bucket
-    * ids and the staged `part-NNNNN` file names record them. A
-    * `_BUCKETS.json` marker makes the layout self-describing.
-    *
-    * This is the point-mutation complement of [[publishClustered]]: range
-    * clustering narrows mutations whose keys are LOCAL (a [min,max] band
-    * maps to few files) but degrades to a full rewrite when the batch's
-    * keys are scattered — the CDC shape. Hash bucketing touches exactly
-    * the batch's buckets regardless of key distribution or order, so a
-    * k-key upsert on an n-bucket table rewrites ≤ k files
-    * ([[RefTableMutations.upsert]] composes this with stats narrowing).
-    * The trade: bucketed files span the full key range, so range
-    * predicates get no file skipping — pick the layout for the workload.
-    * Like clustering, the property degrades under mutation (rewritten
-    * files are not re-bucketed) until a re-publish restores it.
-    */
-  def publishBucketed(
-      df: DataFrame, root: String, bucketCols: Seq[String], nBuckets: Int,
-      keepVersions: Int = 3, parent: Option[String] = None,
-      requireBase: Boolean = false): String = {
-    require(bucketCols.nonEmpty, "publishBucketed needs at least one bucket column")
-    require(nBuckets > 0, "nBuckets must be positive")
-    publishVia(root, keepVersions, parent = parent, requireBase = requireBase,
-      marker = Some(s"layout=bucket:${bucketCols.mkString(",")}:$nBuckets")) { staging =>
-      writeParquetMicros(
-        df.repartition(nBuckets, bucketCols.map(df.col): _*), staging.toString)
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = om.createObjectNode()
-      val cols = node.putArray("cols")
-      bucketCols.foreach(cols.add)
-      node.put("n", nBuckets)
-      LocalFs.createWrite(staging.getFileSystem(HadoopConf()),
-        new Path(staging, BucketsMarker), om.writeValueAsBytes(node))
-    }
-  }
-
-  /** Publish clustered on the z-order (Morton) curve over `zCols` instead
-    * of lexicographically: every file then covers a bounded window in EACH
-    * clustered dimension, so the stats manifest prunes selective filters
-    * on any of them — the multi-column layout [[publishClustered]] cannot
-    * give (its trailing columns get no locality). See [[ZOrder]].
-    */
-  def publishZOrdered(
-      df: DataFrame, root: String, zCols: Seq[String], numFiles: Int,
-      keepVersions: Int = 3, parent: Option[String] = None,
-      requireBase: Boolean = false): String = {
-    require(numFiles > 0, "numFiles must be positive")
-    val zc = "__graft_z"
-    val staged = df.withColumn(zc, ZOrder.zColumn(df, zCols))
-    publishInternal(
-      staged.repartitionByRange(numFiles, staged(zc)).sortWithinPartitions(zc).drop(zc),
-      root, keepVersions, Nil, parent = parent, requireBase = requireBase,
-      marker = Some(s"layout=zorder:${zCols.mkString(",")}"))
-  }
+      parent: Option[String] = None, requireBase: Boolean = false,
+      layout: Layout = Layout.Flat): String =
+    // a layout that records a marker makes the commit self-describing:
+    // RefTableMaintenance reads the last one as the table's DECLARED
+    // layout, and counts commits after it as mutation churn
+    publishVia(root, keepVersions, layout.marker, parent, requireBase,
+      manifestPartitionCols = layout.dirs(df.schema))(layout.write(df, _))
 
   /** Zero-copy shallow CLONE: publish into `dstRoot` a version holding the
     * same data files as `srcRoot`'s current (or explicitly pinned)
@@ -634,15 +520,6 @@ object VersionedTable {
         (s.isDirectory && !n.startsWith("_") && !n.startsWith(".") &&
           !n.matches("v\\d{19}_[0-9a-f]{8}"))
     }.map(_.getPath)
-
-  private def publishInternal(
-      df: DataFrame, root: String, keepVersions: Int, partitionColumns: Seq[String],
-      marker: Option[String] = None, parent: Option[String] = None,
-      requireBase: Boolean = false): String =
-    publishVia(root, keepVersions, marker, parent, requireBase,
-      manifestPartitionCols = partitionColumns) { staging =>
-      writeParquetMicros(df, staging.toString, partitionColumns)
-    }
 
   /** The version `version` derived its content from, per its commit
     * record; None for derive-from-nothing publishes or uncommitted
@@ -852,11 +729,7 @@ object VersionedTable {
     swapPointerCache(rootPath, fs, conf, committed + marker.fold("")("\n" + _))
     // a layout-establishing publish re-declares the table's intended
     // layout at the root, where retention can't prune it
-    marker.filter(_.startsWith("layout=")).foreach { m =>
-      try CommitPrimitive.forPath(rootPath, conf).overwrite(
-        new Path(rootPath, LayoutDecl), s"${commit.seq}\n$m".getBytes("UTF-8"), conf)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    Layout.declare(rootPath, commit.seq, marker, conf)
     // retention: drop committed states beyond keepVersions (ours counts),
     // oldest first; never anything at or after our own sequence. A
     // directory that RETAINED versions still depend on (their manifest
@@ -1036,26 +909,6 @@ object VersionedTable {
           f.length, f.partitionValues)
       }
     }
-
-  /** Hidden-partitioned publish — Iceberg-style partition transforms
-    * ([[RefTableTransforms]]): the data lays out under DERIVED directories
-    * (`ts_day=2024-01-07/`, `user_id_bucket=7/`) while every source
-    * column stays stored in the data files. Readers declare
-    * `hiddenPartitions` with the same specs; plain predicates on the
-    * source columns then prune whole directories at listing time — before
-    * stats manifests or footers — and the query never mentions the
-    * transform. Specs: `days(col)`, `bucket(n, col)`, `truncate(w, col)`.
-    */
-  def publishHiddenPartitioned(
-      df: DataFrame, root: String, transforms: Seq[String],
-      keepVersions: Int = 3): String = {
-    require(transforms.nonEmpty, "publishHiddenPartitioned needs at least one transform")
-    val parsed = transforms.map(spec => RefTableTransforms.parse(df.schema, spec)
-      .fold(m => throw new IllegalArgumentException(m), identity))
-    val staged = parsed.foldLeft(df)((d, t) => d.withColumn(t.dirName, t.sparkExpr))
-    publishInternal(staged, root, keepVersions, parsed.map(_.dirName),
-      marker = Some(s"layout=hidden:${transforms.mkString(";")}"))
-  }
 
   /** RESTORE (rollback): make an earlier committed version's exact content
     * the NEW current version — the Delta `RESTORE TABLE … TO VERSION AS OF`
@@ -1602,7 +1455,8 @@ object VersionedTable {
     * read and task launch scales with file count); with versioned roots,
     * compaction is just another publish — readers pinned to the
     * fragmented version keep draining it, new generations get the
-    * compacted one.
+    * compacted one. A table declaring a hidden layout ([[Layout.Hidden]])
+    * is compacted through it, so its directories keep pruning.
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession, root: String,
@@ -1649,10 +1503,15 @@ object VersionedTable {
       if (partitionColumns.isEmpty) df.repartition(parts)
       else df.repartition(parts,
         partitionColumns.map(org.apache.spark.sql.functions.col): _*)
+    // a hidden-partitioned table compacts AS hidden: the transform
+    // directories re-derive from the source columns, replacing any
+    // directory column the read discovered
+    val layout = Layout.declared(root, conf).collect { case (_, h: Layout.Hidden) => h }.getOrElse(
+      if (partitionColumns.isEmpty) Layout.Flat else Layout.Partitioned(partitionColumns))
     // CAS on the compacted base: losing an interleaved append's rows to a
     // compaction would be the same lost update as any other stale derive
-    publishInternal(compacted, root, keepVersions, partitionColumns,
-      parent = Some(new Path(current).getName), requireBase = true)
+    publish(compacted, root, keepVersions,
+      parent = Some(new Path(current).getName), requireBase = true, layout = layout)
   }
 
   /** Version history of the table — the DESCRIBE HISTORY analogue,
@@ -1897,7 +1756,7 @@ object VersionedTable {
     (batch, batchId) => {
       val m = s"$instance:$batchId"
       if (!publishedMarker(root).contains(m)) {
-        publishInternal(batch, root, keepVersions, Nil, marker = Some(m))
+        publishVia(root, keepVersions, marker = Some(m))(Layout.Flat.write(batch, _))
       }
       ()
     }
@@ -1948,33 +1807,6 @@ object VersionedTable {
     * resolution through the log, and the next successful publish
     * refreshes it.
     */
-  /** The table's declared layout, as (declaring commit seq, `layout=` marker):
-    * the root [[LayoutDecl]] file when present, else the newest in-log layout
-    * marker (covers a failed cache write until retention prunes that commit).
-    * Takes whichever is newer — a stale `_LAYOUT` left by a crashed overwrite
-    * must not shadow a later in-log re-declaration.
-    */
-  def layoutDeclaration(
-      root: String, conf: Configuration = HadoopConf()): Option[(Long, String)] = {
-    val p = new Path(root, LayoutDecl)
-    val fs = p.getFileSystem(conf)
-    val fromFile =
-      try {
-        if (!fs.exists(p)) None
-        else {
-          val in = fs.open(p)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-          text.split('\n').toSeq.map(_.trim) match {
-            case seq +: m +: _ if m.startsWith("layout=") => seq.toLongOption.map((_, m))
-            case _ => None
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val fromLog = commitLog(root, conf).reverse
-      .collectFirst { case c if c.marker.exists(_.startsWith("layout=")) => (c.seq, c.marker.get) }
-    (fromFile ++ fromLog).maxByOption(_._1)
-  }
-
   private def swapPointerCache(
       rootPath: Path, fs: org.apache.hadoop.fs.FileSystem, conf: Configuration,
       content: String): Unit =

@@ -27,6 +27,17 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   // reference: TableStreamingSourceConfigTest.java:49-53 (valid config)
+  test("hiddenPartitions refuses the global layouts no write keeps alongside it") {
+    val schema = "key BIGINT, ts TIMESTAMP"
+    for (opt <- Seq("clusterBy", "zorderBy", "bucketBy")) {
+      val e = intercept[IllegalArgumentException] {
+        RefTableOptions.from(opts("schema" -> schema, "hiddenPartitions" -> "days(ts)",
+          opt -> "key"))
+      }
+      assert(e.getMessage.contains("hiddenPartitions"), e.getMessage)
+    }
+  }
+
   test("valid config parses") {
     val o = RefTableOptions.from(opts())
     assert(o.schema.fieldNames.toSeq == Seq("key", "name", "score", "ok"))

@@ -45,8 +45,8 @@ class MutationDifferentialSpec extends AnyFunSuite {
     val df = rows.map(r => (r.k, r.v, r.p)).toDF("k", "v", "p")
     layout match {
       case Flat => VersionedTable.publish(df.repartition(3), root)
-      case Partitioned => VersionedTable.publishPartitioned(df, root, Seq("p"))
-      case Bucketed => VersionedTable.publishBucketed(df, root, Seq("k"), 4)
+      case Partitioned => VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
+      case Bucketed => VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("k"), 4))
     }
   }
 

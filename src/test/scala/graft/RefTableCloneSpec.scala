@@ -42,7 +42,7 @@ class RefTableCloneSpec extends AnyFunSuite {
     val src = tmpDir("src")
     val dst = tmpDir("dst")
     val df = (0 until 5000).map(i => (i.toLong, i * 1.5, s"r$i")).toDF("id", "v", "tag")
-    VersionedTable.publishClustered(df, src, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, src, layout = Layout.Clustered(Seq("id"))(files = 8))
     VersionedTable.cloneTo(src, dst)
 
     val a = readCurrent(src).orderBy("id").collect()
@@ -66,7 +66,7 @@ class RefTableCloneSpec extends AnyFunSuite {
     val src = tmpDir("iso_src")
     val dst = tmpDir("iso_dst")
     val df = (0 until 2000).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
-    VersionedTable.publishClustered(df, src, Seq("id"), numFiles = 4)
+    VersionedTable.publish(df, src, layout = Layout.Clustered(Seq("id"))(files = 4))
     VersionedTable.cloneTo(src, dst)
 
     RefTableMutations.deleteWhere(spark, dst, col("id") < 1000L)
@@ -110,7 +110,7 @@ class RefTableCloneSpec extends AnyFunSuite {
     val src = tmpDir("part_src")
     val dst = tmpDir("part_dst")
     val df = (0 until 600).map(i => (i.toLong, s"p${i % 3}", i * 2.0)).toDF("id", "bucket", "v")
-    VersionedTable.publishPartitioned(df, src, Seq("bucket"))
+    VersionedTable.publish(df, src, layout = Layout.Partitioned(Seq("bucket")))
     VersionedTable.cloneTo(src, dst, partitionColumns = Seq("bucket"))
 
     val files = SnapshotFiles.list(dst, Seq("bucket"), None)
@@ -241,7 +241,7 @@ class RefTableCloneSpec extends AnyFunSuite {
     val src = tmpDir("man_src")
     val dst = tmpDir("man_dst")
     val df = (0 until 4000).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
-    VersionedTable.publishClustered(df, src, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, src, layout = Layout.Clustered(Seq("id"))(files = 8))
     // mutate: the current source version now NAMES most files by reference
     RefTableMutations.deleteWhere(spark, src, col("id") >= 3500L)
     VersionedTable.cloneTo(src, dst)
@@ -261,7 +261,7 @@ class RefTableCloneSpec extends AnyFunSuite {
     val dst = Files.createTempDirectory(shm, "graft_clone_xdev_dst").toString
     try {
       val df = (0 until 2000).map(i => (i.toLong, i * 0.5)).toDF("id", "v")
-      VersionedTable.publishClustered(df, src, Seq("id"), numFiles = 4)
+      VersionedTable.publish(df, src, layout = Layout.Clustered(Seq("id"))(files = 4))
       VersionedTable.cloneTo(src, dst)
       assert(readCurrent(src).orderBy("id").collect()
         .sameElements(readCurrent(dst).orderBy("id").collect()))

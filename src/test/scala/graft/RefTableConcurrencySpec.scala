@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.reftable.{RefTableMutations, VersionedTable}
+import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -187,9 +187,9 @@ class RefTableConcurrencySpec extends AnyFunSuite {
     import scala.concurrent.ExecutionContext.Implicits.global
     import spark.implicits._
     val root = tmpDir("dynovw")
-    VersionedTable.publishPartitioned(
+    VersionedTable.publish(
       (0L until 90L).map(i => (i, (i % 3).toInt)).toDF("id", "bucket"),
-      root, Seq("bucket"), keepVersions = 16)
+      root, keepVersions = 16, layout = Layout.Partitioned(Seq("bucket")))
     val itype = Map[String, org.apache.spark.sql.types.DataType](
       "bucket" -> org.apache.spark.sql.types.IntegerType)
     // two writers replace DIFFERENT partitions concurrently; the CAS +

@@ -111,8 +111,8 @@ class RefTableDvSpec extends AnyFunSuite {
   test("stats narrowing bounds the position pass on a clustered layout") {
     val root = tmpDir("narrow")
     import spark.implicits._
-    VersionedTable.publishClustered(
-      (1L to 10000L).toDF("id"), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(
+      (1L to 10000L).toDF("id"), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     RefTableMutations.deleteWhereMergeOnRead(spark, root, col("id") <= 500)
     val cur = VersionedTable.resolve(root).get
     // only the files whose range overlaps [*, 500] may appear in sidecars
@@ -269,7 +269,7 @@ class RefTableDvSpec extends AnyFunSuite {
     val dst = tmpDir("clonepart_dst")
     import spark.implicits._
     val df = (1L to 90L).toDF("id").withColumn("p", (col("id") % 3).cast("string"))
-    VersionedTable.publishPartitioned(df, root, Seq("p"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
     RefTableMutations.deleteWhereMergeOnRead(spark, root,
       col("p") === "1" && col("id") <= 40, partitionColumns = Seq("p"))
     VersionedTable.cloneTo(root, dst, partitionColumns = Seq("p"))
@@ -393,7 +393,7 @@ class RefTableDvSpec extends AnyFunSuite {
     val root = tmpDir("morup3")
     import spark.implicits._
     val df = (1L to 60L).toDF("id").withColumn("p", (col("id") % 3).cast("string"))
-    VersionedTable.publishPartitioned(df, root, Seq("p"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
     // id=9 currently in p=0; move it to p=2
     RefTableMutations.upsertMergeOnRead(spark, root,
       Seq((9L, "2")).toDF("id", "p"), Seq("id"), partitionColumns = Seq("p"))
@@ -512,7 +512,7 @@ class RefTableDvSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1L to 300L).toDF("id")
       .withColumn("p", (col("id") % 3).cast("string"))
-    VersionedTable.publishPartitioned(df, root, Seq("p"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
     RefTableMutations.deleteWhereMergeOnRead(spark, root,
       col("p") === "1" && col("id") <= 100,
       partitionColumns = Seq("p"))

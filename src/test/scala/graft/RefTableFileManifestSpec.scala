@@ -36,7 +36,7 @@ class RefTableFileManifestSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("o1")
     val df = (0 until 16000).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 64)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 64))
     val v1 = currentDir(root)
     assert(physicalParquet(v1).size == 64)
 
@@ -100,7 +100,7 @@ class RefTableFileManifestSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("gc")
     val df = (0 until 1000).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val v1name = new Path(currentDir(root)).getName
 
     // three successive 1-file mutations under minimum retention: v1's

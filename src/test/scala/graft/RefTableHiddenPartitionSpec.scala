@@ -6,14 +6,14 @@ import graft.sources.reftable._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Hidden partitioning ([[RefTableTransforms]],
-  * [[VersionedTable.publishHiddenPartitioned]]): the layout lives under
-  * DERIVED directories while the source column stays in the files — a
-  * plain predicate on the source column must prune directories at listing
-  * time, results must equal the unpartitioned read exactly (including
-  * NULL source values), appended files without the transform dirs must
-  * stay visible (Unknown keeps them), and the option grammar must
-  * validate at analysis time.
+/** Hidden partitioning ([[RefTableTransforms]], a [[Layout.Hidden]]
+  * publish): the layout lives under DERIVED directories while the source
+  * column stays in the files — a plain predicate on the source column must
+  * prune directories at listing time, results must equal the unpartitioned
+  * read exactly (including NULL source values), appended files without the
+  * transform dirs must stay visible (Unknown keeps them), INSERT OVERWRITE
+  * must re-derive the directories, and the option grammar must validate at
+  * analysis time.
   */
 class RefTableHiddenPartitionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -41,7 +41,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
     }.toDF("id", "ts")
       .unionByName(Seq((900L, None: Option[java.sql.Timestamp]),
         (901L, None), (902L, None)).toDF("id", "ts"))
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("days(ts)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("days(ts)")))
 
     val schema = "id BIGINT, ts TIMESTAMP"
     val opts = optsFor(root, schema, "days(ts)")
@@ -73,7 +73,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
     val df = Seq(
       (1L, Some(java.sql.Timestamp.valueOf("2024-03-01 10:00:00"))),
       (2L, None: Option[java.sql.Timestamp])).toDF("id", "ts")
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("days(ts)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("days(ts)")))
     val opts = optsFor(root, "id BIGINT, ts TIMESTAMP", "days(ts)")
     val nullFiles = SnapshotFiles.pruned(opts, Seq(org.apache.spark.sql.sources.IsNull("ts")))
     assert(nullFiles.forall(
@@ -86,7 +86,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
     val root = tmpDir("bucket")
     import spark.implicits._
     val df = (1L to 1000L).toDF("user_id").withColumn("v", col("user_id") * 2)
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("bucket(8, user_id)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("bucket(8, user_id)")))
     val schema = "user_id BIGINT, v BIGINT"
     val opts = optsFor(root, schema, "bucket(8, user_id)")
     val eq = SnapshotFiles.pruned(opts,
@@ -110,7 +110,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq("alpha", "alpine", "beta", "betamax", "gamma", "delta")
       .zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "name")
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("truncate(3, name)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("truncate(3, name)")))
     val opts = optsFor(root, "id BIGINT, name STRING", "truncate(3, name)")
     val eq = SnapshotFiles.pruned(opts,
       Seq(org.apache.spark.sql.sources.EqualTo("name", "alpine")))
@@ -121,7 +121,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
 
     val rootI = tmpDir("trunci")
     val dfi = (0L until 100L).toDF("n").withColumn("x", col("n") + 1)
-    VersionedTable.publishHiddenPartitioned(dfi, rootI, Seq("truncate(10, n)"))
+    VersionedTable.publish(dfi, rootI, layout = Layout.Hidden(Seq("truncate(10, n)")))
     val optsI = optsFor(rootI, "n BIGINT, x BIGINT", "truncate(10, n)")
     val band = SnapshotFiles.pruned(optsI, Seq(
       org.apache.spark.sql.sources.GreaterThanOrEqual("n", 35L),
@@ -139,7 +139,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
       (i.toLong, java.sql.Timestamp.from(
         java.time.Instant.parse("2024-03-01T00:30:00Z").plusSeconds(i * 3600L))))
       .toDF("id", "ts")
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("hours(ts)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("hours(ts)")))
     val opts = optsFor(root, "id BIGINT, ts TIMESTAMP", "hours(ts)")
     val all = SnapshotFiles.list(VersionedTable.resolve(root).get, opts.physicalNesting)
     assert(all.map(_.partitionValues("ts_hour")).distinct.size == 48)
@@ -160,7 +160,7 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
     val df = (0 until 20).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf(s"2024-03-${"%02d".format(i % 5 + 1)} 08:00:00")))
       .toDF("id", "ts")
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("days(ts)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("days(ts)")))
     // an ordinary SQL append stages flat files with no ts_day dirs
     val tbl = "hidden_append_t"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -181,13 +181,38 @@ class RefTableHiddenPartitionSpec extends AnyFunSuite {
       .count() == 5) // 4 original at 08:00 + the appended at 09:00
   }
 
+  test("INSERT OVERWRITE keeps the hidden layout: files carry their day directories") {
+    val root = tmpDir("overwrite")
+    import spark.implicits._
+    val tbl = "hidden_overwrite_t"
+    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    spark.sql(s"CREATE TABLE $tbl USING reftable OPTIONS (path '$root', " +
+      "schema 'id BIGINT, ts TIMESTAMP', hiddenPartitions 'days(ts)')")
+    // 40 events over 5 days, arriving in 8 input partitions
+    (0 until 40).map(i =>
+      (i.toLong, java.sql.Timestamp.valueOf(s"2024-03-0${i % 5 + 1} 08:00:00")))
+      .toDF("id", "ts").repartition(8).createOrReplaceTempView("hidden_overwrite_src")
+    spark.sql(s"INSERT OVERWRITE $tbl SELECT id, ts FROM hidden_overwrite_src")
+    val opts = optsFor(root, "id BIGINT, ts TIMESTAMP", "days(ts)")
+    val all = SnapshotFiles.pruned(opts, Nil)
+    assert(all.nonEmpty && all.forall(_.partitionValues.contains("ts_day")),
+      s"every overwritten file must carry a ts_day value: ${all.map(_.path)}")
+    val kept = SnapshotFiles.pruned(opts, Seq(org.apache.spark.sql.sources.EqualTo(
+      "ts", java.sql.Timestamp.valueOf("2024-03-02 08:00:00"))))
+    assert(kept.nonEmpty && kept.forall(_.partitionValues("ts_day") == "2024-03-02"),
+      s"a one-day filter keeps only that day's files: ${kept.map(_.path)}")
+    assert(readRef(root, "id BIGINT, ts TIMESTAMP", "days(ts)")
+      .filter(col("ts") === lit(java.sql.Timestamp.valueOf("2024-03-02 08:00:00")))
+      .count() == 8)
+  }
+
   test("streaming scan with a declared filter prunes transform directories") {
     val root = tmpDir("stream")
     import spark.implicits._
     val df = (0 until 50).map(i =>
       (i.toLong, java.sql.Timestamp.valueOf(s"2024-03-${"%02d".format(i % 5 + 1)} 08:00:00")))
       .toDF("id", "ts")
-    VersionedTable.publishHiddenPartitioned(df, root, Seq("days(ts)"))
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("days(ts)")))
     val stream = spark.readStream.format("reftable")
       .option("path", root).option("schema", "id BIGINT, ts TIMESTAMP")
       .option("hiddenPartitions", "days(ts)")

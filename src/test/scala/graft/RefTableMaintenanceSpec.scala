@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.reftable.{RefTableMaintenance, RefTableMutations, RefTableOptions, SnapshotFiles, VersionedTable}
+import graft.sources.reftable.{Layout, RefTableMaintenance, RefTableMutations, RefTableOptions, SnapshotFiles, VersionedTable}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -45,9 +45,9 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
   test("append churn degrades clustering; maintain detects and restores it") {
     import spark.implicits._
     val root = tmpDir("recluster")
-    VersionedTable.publishClustered(corpus(4000), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(4000), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val fresh = RefTableMaintenance.signals(root, conf)
-    assert(fresh.declared.exists(d => d.kind == "cluster" && d.cols == Seq("id")))
+    assert(fresh.declared.contains(Layout.Clustered(Seq("id"))(files = 8)))
     assert(fresh.commitsSinceLayout == 0 && fresh.readAmplification.exists(_ <= 1.1))
     assert(RefTableMaintenance.decide(fresh).action == "none")
     assert(plannedForIdRange(root, 100, 300) <= 2)
@@ -80,9 +80,9 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
   test("upsert churn drops the bucket marker; maintain re-buckets") {
     import spark.implicits._
     val root = tmpDir("rebucket")
-    VersionedTable.publishBucketed(corpus(2000), root, Seq("id"), nBuckets = 8)
+    VersionedTable.publish(corpus(2000), root, layout = Layout.Bucketed(Seq("id"), 8))
     val fresh = RefTableMaintenance.signals(root, conf)
-    assert(fresh.declared.exists(d => d.kind == "bucket" && d.buckets.contains(8)))
+    assert(fresh.declared.contains(Layout.Bucketed(Seq("id"), 8)))
     assert(fresh.bucketMarkerPresent && RefTableMaintenance.decide(fresh).action == "none")
 
     RefTableMutations.upsert(spark, root,
@@ -123,7 +123,8 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE $cat.db")
     spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, grp INT, payload STRING) USING reftable")
-    VersionedTable.publishClustered(corpus(4000), s"$wh/db/t", Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(4000), s"$wh/db/t",
+      layout = Layout.Clustered(Seq("id"))(files = 8))
     // one partition per INSERT (single-row relation exploded), so each
     // append lands as ONE file spanning nearly the full key range
     spark.sql(s"INSERT INTO $cat.db.t " +
@@ -201,16 +202,15 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
   }
 
   test("layout marker grammar round-trips; junk is rejected") {
-    import RefTableMaintenance._
-    assert(parseLayoutMarker("layout=cluster:a,b") ==
-      Some(DeclaredLayout("cluster", Seq("a", "b"), None)))
-    assert(parseLayoutMarker("layout=zorder:x") ==
-      Some(DeclaredLayout("zorder", Seq("x"), None)))
-    assert(parseLayoutMarker("layout=bucket:id:16") ==
-      Some(DeclaredLayout("bucket", Seq("id"), Some(16))))
-    assert(parseLayoutMarker("somebatch:3").isEmpty)
-    assert(parseLayoutMarker("layout=bucket:id:NaNbuckets").isEmpty)
-    assert(parseLayoutMarker("layout=wat:a").isEmpty)
+    assert(Layout.parse("layout=cluster:a,b") ==
+      Some(Layout.Clustered(Seq("a", "b"))(files = Layout.DefaultFiles)))
+    assert(Layout.parse("layout=zorder:x") ==
+      Some(Layout.ZOrdered(Seq("x"))(files = Layout.DefaultFiles)))
+    assert(Layout.parse("layout=bucket:id:16") == Some(Layout.Bucketed(Seq("id"), 16)))
+    assert(Layout.parse("layout=hidden:days(ts)") == Some(Layout.Hidden(Seq("days(ts)"))))
+    assert(Layout.parse("somebatch:3").isEmpty)
+    assert(Layout.parse("layout=bucket:id:NaNbuckets").isEmpty)
+    assert(Layout.parse("layout=wat:a").isEmpty)
   }
 
   test("bare Hive layout past the dir limit refuses with the adopt remedy; adopt fixes it") {
@@ -259,7 +259,7 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
   test("hot-region churn reclusters INCREMENTALLY: tight files carry by name") {
     import spark.implicits._
     val root = tmpDir("partial")
-    VersionedTable.publishClustered(corpus(4000), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(4000), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val tightBefore = SnapshotFiles.list(root).map(_.path.split('/').last).toSet
     assert(tightBefore.size == 8)
     // HOT-REGION churn: six appended batches all inside the first band's
@@ -299,14 +299,14 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
   test("full-range churn declines the incremental path (it cannot restore health)") {
     import spark.implicits._
     val root = tmpDir("partial_decline")
-    VersionedTable.publishClustered(corpus(4000), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(4000), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     // two appended files spanning the whole keyspace: a partial rewrite of
     // just them would still tile the full range once more (~2.0 total)
     Seq((5L, 5, "a"), (3995L, 45, "b")).toDF("id", "grp", "payload")
       .coalesce(1).write.format("reftable")
       .option("path", root).option("schema", "id BIGINT, grp INT, payload STRING")
       .mode("append").save()
-    assert(RefTableMutations.reclusterPartial(spark, root, Seq("id"), zorder = false,
+    assert(RefTableMutations.reclusterPartial(spark, root, Layout.Clustered(Seq("id"))(files = 8),
       targetFileBytes = 16 * 1024, maxReadAmp = 1.5).isEmpty,
       "full-range wide rows must fall back to the full re-tile")
     // maintain still restores through the full path
@@ -314,5 +314,107 @@ class RefTableMaintenanceSpec extends AnyFunSuite {
     assert(d.action == "recluster" && d.version.isDefined)
     assert(RefTableMaintenance.maintain(spark, root, targetFileBytes = 16 * 1024)
       .action == "none")
+  }
+
+  test("hidden layout: maintain compacts through the transforms, keeping day directories") {
+    import spark.implicits._
+    val root = tmpDir("hidden")
+    val schema = "id BIGINT, ts TIMESTAMP"
+    val day = java.time.LocalDate.parse("2024-03-02")
+    val df = (0 until 40).map(i =>
+      (i.toLong, java.sql.Timestamp.valueOf(s"2024-03-0${i % 5 + 1} 08:00:00")))
+      .toDF("id", "ts")
+    VersionedTable.publish(df, root, layout = Layout.Hidden(Seq("days(ts)")))
+    val fresh = RefTableMaintenance.signals(root, conf)
+    assert(fresh.declared.contains(Layout.Hidden(Seq("days(ts)"))), fresh.toString)
+    // a hidden declaration takes the undeclared table's branches
+    assert(RefTableMaintenance.decide(fresh.copy(dvSidecars = 8)).action == "compact")
+    def read() = spark.read.format("reftable").option("path", root)
+      .option("schema", schema).option("hiddenPartitions", "days(ts)").load()
+    val before = read().collect().map(r => (r.getLong(0), r.getTimestamp(1))).sortBy(_._1).toSeq
+
+    val d = RefTableMaintenance.maintain(spark, root, maxSmallFiles = 1)
+    assert(d.action == "compact" && d.version.isDefined, d.toString)
+    val opts = RefTableOptions.from(new CaseInsensitiveStringMap(Map(
+      "path" -> root, "schema" -> schema, "hiddenPartitions" -> "days(ts)").asJava))
+    val all = SnapshotFiles.pruned(opts, Nil)
+    assert(all.nonEmpty && all.forall(_.partitionValues.contains("ts_day")),
+      s"compaction must keep the ts_day directories: ${all.map(_.path)}")
+    val kept = SnapshotFiles.pruned(opts, Seq(org.apache.spark.sql.sources.EqualTo(
+      "ts", java.sql.Timestamp.valueOf("2024-03-02 08:00:00"))))
+    assert(kept.nonEmpty && kept.forall(_.partitionValues("ts_day") == day.toString),
+      s"a one-day filter keeps only that day's files: ${kept.map(_.path)}")
+    assert(read().collect().map(r => (r.getLong(0), r.getTimestamp(1))).sortBy(_._1).toSeq ==
+      before, "compaction must not change values")
+    assert(read().filter(to_date(col("ts")) === lit(java.sql.Date.valueOf(day))).count() == 8)
+  }
+
+  test("layout marker property: every generated layout parses back from its marker") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val ident = for {
+      h <- Gen.oneOf(Gen.alphaChar, Gen.const('_'))
+      t <- Gen.listOf(Gen.frequency(9 -> Gen.alphaNumChar, 1 -> Gen.const('_')))
+    } yield (h +: t.take(11)).mkString
+    val cols = Gen.choose(1, 4).flatMap(Gen.listOfN(_, ident))
+    val spec = for {
+      c <- ident
+      n <- Gen.choose(1, 1000)
+      s <- Gen.oneOf(s"days($c)", s"hours($c)", s"bucket($n, $c)", s"truncate($n, $c)")
+    } yield s
+    val layout: Gen[Layout] = for {
+      cs <- cols
+      n <- Gen.choose(1, 64)
+      specs <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, spec))
+      l <- Gen.oneOf[Layout](Layout.Clustered(cs)(files = n), Layout.ZOrdered(cs)(files = n),
+        Layout.Bucketed(cs, n), Layout.Hidden(specs))
+    } yield l
+    val prop = Prop.forAllNoShrink(layout)(l => l.marker.flatMap(Layout.parse).contains(l))
+    val params = Test.Parameters.default.withMinSuccessfulTests(500)
+      .withWorkers(1).withInitialSeed(Seed(20261019L))
+    val result = Test.check(params, prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("on-disk layout records are byte-identical: commit marker, _LAYOUT, _BUCKETS.json") {
+    def text(p: org.apache.hadoop.fs.Path): String = {
+      val in = p.getFileSystem(conf).open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def check(layout: Layout, marker: String): String = {
+      val root = tmpDir("ondisk")
+      VersionedTable.publish(corpus(200), root, layout = layout)
+      val seq = VersionedTable.lastCommit(root, conf).get.seq
+      assert(VersionedTable.publishedMarker(root, conf).contains(marker))
+      assert(text(new org.apache.hadoop.fs.Path(root, "_LAYOUT")) == s"$seq\n$marker")
+      root
+    }
+    check(Layout.Clustered(Seq("id", "grp"))(files = 2), "layout=cluster:id,grp")
+    check(Layout.ZOrdered(Seq("id", "grp"))(files = 2), "layout=zorder:id,grp")
+    check(Layout.Hidden(Seq("truncate(10, id)", "bucket(4, grp)")),
+      "layout=hidden:truncate(10, id);bucket(4, grp)")
+    val bucketed = check(Layout.Bucketed(Seq("id", "grp"), 4), "layout=bucket:id,grp:4")
+    assert(text(new org.apache.hadoop.fs.Path(VersionedTable.resolve(bucketed, conf).get,
+      "_BUCKETS.json")) == """{"cols":["id","grp"],"n":4}""")
+  }
+
+  test("a _BUCKETS.json of literal earlier-release bytes still narrows a bucketed upsert") {
+    import spark.implicits._
+    val root = tmpDir("legacybuckets")
+    VersionedTable.publish((0L until 8000L).map(i => (i, s"v$i")).toDF("id", "s"), root,
+      layout = Layout.Bucketed(Seq("id"), 16))
+    val cur = VersionedTable.resolve(root, conf).get
+    val sidecar = new org.apache.hadoop.fs.Path(cur, "_BUCKETS.json")
+    val fs = sidecar.getFileSystem(conf)
+    fs.delete(sidecar, false)
+    val out = fs.create(sidecar)
+    try out.write("""{"cols":["id"],"n":16}""".getBytes("UTF-8")) finally out.close()
+    val names = (root: String) => SnapshotFiles.list(VersionedTable.resolve(root, conf).get)
+      .map(f => new org.apache.hadoop.fs.Path(f.path).getName).toSet
+    val before = names(root)
+    RefTableMutations.upsert(spark, root,
+      Seq((3L, "A"), (4000L, "B"), (7999L, "C")).toDF("id", "s"), Seq("id"))
+    val carried = names(root).intersect(before)
+    assert(carried.size >= 13, s"untouched buckets carried by reference: ${carried.size}")
   }
 }

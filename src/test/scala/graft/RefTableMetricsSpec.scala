@@ -46,7 +46,7 @@ class RefTableMetricsSpec extends AnyFunSuite {
     val root = tmpDir("prune")
     import spark.implicits._
     val df = (1L to 600L).map(i => (i, (i % 6).toString)).toDF("id", "bucket")
-    VersionedTable.publishPartitioned(df.repartition(3), root, Seq("bucket"))
+    VersionedTable.publish(df.repartition(3), root, layout = Layout.Partitioned(Seq("bucket")))
 
     val listed = SnapshotFiles.list(root, Seq("bucket"))
     val kept = listed.count(_.partitionValues("bucket") == "1")

@@ -24,9 +24,10 @@ class RefTableMutationStrategySpec extends AnyFunSuite {
 
   private def publishThreePartitions(root: String): Unit = {
     import spark.implicits._
-    VersionedTable.publishPartitioned((1L to 60L).toDF("id")
+    VersionedTable.publish((1L to 60L).toDF("id")
       .withColumn("v", col("id") * 10)
-      .withColumn("dt", concat(lit("d"), (col("id") % 3).cast("string"))), root, Seq("dt"))
+      .withColumn("dt", concat(lit("d"), (col("id") % 3).cast("string"))), root,
+      layout = Layout.Partitioned(Seq("dt")))
   }
 
   private def files(root: String): Set[String] =
@@ -110,7 +111,8 @@ class RefTableMutationStrategySpec extends AnyFunSuite {
     import spark.implicits._
     def emptied(name: String): String = {
       val root = tmpDir(name)
-      VersionedTable.publishPartitioned(Seq((1L, "a"), (2L, "b")).toDF("k", "p"), root, Seq("p"))
+      VersionedTable.publish(Seq((1L, "a"), (2L, "b")).toDF("k", "p"), root,
+        layout = Layout.Partitioned(Seq("p")))
       RefTableMutations.deleteWhere(spark, root, col("k") > 0, partitionColumns = Seq("p"))
       // the partitioned write of the empty result staged no file at all
       assert(SnapshotFiles.list(VersionedTable.resolve(root, conf).get, Seq("p")).isEmpty)

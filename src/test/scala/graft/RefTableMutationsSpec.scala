@@ -43,7 +43,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     val df = (0 until 2000).map { i =>
       (i.toLong, if (i % 97 == 0) None else Some(i.toDouble))
     }.toDF("id", "v")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val before = fileNames(root)
     assert(before.size == 8)
 
@@ -75,7 +75,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("up")
     val df = (0 until 2000).map(i => (i.toLong, i % 7, i.toLong * 3)).toDF("id", "g", "m")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val before = fileNames(root)
 
     // updates confined to ids [0, 150]; inserts at NEGATIVE ids keep the
@@ -102,7 +102,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     val root = tmpDir("upmk")
     val df = (0 until 300).map(i => (i.toLong % 10, s"k${i % 30}", i.toLong)).toDF("a", "b", "m")
       .dropDuplicates("a", "b")
-    VersionedTable.publishClustered(df, root, Seq("a"), numFiles = 4)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("a"))(files = 4))
     val src = Seq((1L, "k1", -7L), (99L, "new", 1L)).toDF("a", "b", "m")
     RefTableMutations.upsert(spark, root, src, Seq("a", "b"))
     val cur = readCurrent(root)
@@ -115,7 +115,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("upempty")
     val df = (0 until 100).map(i => (i.toLong, i.toString)).toDF("id", "s")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 2)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 2))
     val before = fileNames(root)
     RefTableMutations.upsert(spark, root, df.limit(0), Seq("id"))
     assert(fileNames(root) == before, "all files carried over by name")
@@ -126,7 +126,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("refuse")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "p")
-    VersionedTable.publishPartitioned(df, root, Seq("p"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
     val e = intercept[UnsupportedOperationException] {
       RefTableMutations.deleteWhere(spark, root, col("id") === 1L)
     }
@@ -203,7 +203,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("pin")
     val df = (0 until 400).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 4)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 4))
     val v1 = VersionedTable.versionDirs(root, conf).last
     RefTableMutations.deleteWhere(spark, root, col("id") < 200L)
     // time travel to v1 still sees every row
@@ -220,7 +220,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("merge3")
     val base = (0L until 100L).map(i => (i, i * 10)).toDF("id", "v")
-    VersionedTable.publishClustered(base, root, Seq("id"), numFiles = 4)
+    VersionedTable.publish(base, root, layout = Layout.Clustered(Seq("id"))(files = 4))
     // op marker is NOT a table column; matched 'i' rows must be ignored
     val src = Seq(
       (5L, 999L, "u"), (6L, 0L, "d"), (200L, 42L, "i"),
@@ -265,7 +265,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     // keys deliberately SCATTERED across the whole range: [min,max]
     // narrowing keeps every file, bucket narrowing keeps 3
     val df = (0L until 8000L).map(i => (i, s"v$i")).toDF("id", "s")
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     val v1files = fileNames(root)
     assert(v1files.size == 16, s"16 bucket files, got ${v1files.size}")
 
@@ -293,7 +293,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(readCurrent(root).filter(col("id") === 3L).head().getString(1) == "A2")
 
     // merge narrows the same way on a fresh bucketed publish
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     val before = fileNames(root)
     RefTableMutations.merge(spark, root,
       Seq((7L, "upd")).toDF("id", "s"), Seq("id"))
@@ -303,14 +303,14 @@ class RefTableMutationsSpec extends AnyFunSuite {
     // predicate mutations narrow too: point DELETE (IN) and point UPDATE
     // touch only the named keys' buckets — unclustered bucket files span
     // the whole id range, so stats narrowing alone keeps everything
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     val b3 = fileNames(root)
     RefTableMutations.deleteWhere(spark, root, col("id").isin(11L, 6002L))
     val carried3 = fileNames(root).intersect(b3)
     assert(carried3.size >= 14, s"point delete must keep >= 14 buckets: ${carried3.size}")
     assert(readCurrent(root).count() == 7998)
 
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     val b4 = fileNames(root)
     RefTableMutations.updateWhere(spark, root, Map("s" -> lit("X")), col("id") === 13L)
     val carried4 = fileNames(root).intersect(b4)
@@ -322,7 +322,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("buckettype")
     val df = (0L until 4000L).map(i => (i, s"v$i")).toDF("id", "s") // id BIGINT
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     // source key typed INT: Murmur3 hash(3:int) != hash(3L:bigint), so
     // hashing the source's types picks the WRONG buckets — the files
     // holding the matched keys get carried unrewritten and the anti-join
@@ -335,7 +335,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(m(3L) == "A" && m(1234L) == "B" && m(5L) == "v5")
 
     // merge path narrows through the same cast
-    VersionedTable.publishBucketed(df, root, Seq("id"), nBuckets = 16)
+    VersionedTable.publish(df, root, layout = Layout.Bucketed(Seq("id"), 16))
     RefTableMutations.merge(spark, root, Seq((7, "upd")).toDF("id", "s"), Seq("id"))
     val rows2 = readCurrent(root).collect().map(r => (r.getLong(0), r.getString(1)))
     assert(rows2.length == 4000, s"merge must not duplicate keys, got ${rows2.length}")
@@ -364,7 +364,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     val root = tmpDir("ck_narrow")
     // clustered by (t, id): the files tile the two-column key space
     val df = (0 until 4000).map(i => (i / 500L, (i % 500).toLong, s"v$i")).toDF("t", "id", "s")
-    VersionedTable.publishClustered(df, root, Seq("t", "id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("t", "id"))(files = 8))
     val before = fileNames(root)
     assert(before.size == 8)
 
@@ -385,7 +385,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("ck_mor")
     val df = (0 until 4000).map(i => (i / 500L, (i % 500).toLong, i.toDouble)).toDF("t", "id", "v")
-    VersionedTable.publishClustered(df, root, Seq("t", "id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("t", "id"))(files = 8))
     val changes = Seq(
       (5L, 10L, -1.0, "update"), (5L, 20L, 0.0, "delete"), (99L, 1L, 7.0, "insert"))
       .toDF("t", "id", "v", "change_type")
@@ -441,7 +441,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("pdel")
     val df = (0 until 900).map(i => (i.toLong, i.toDouble, s"p${i % 3}")).toDF("id", "v", "p")
-    VersionedTable.publishPartitioned(df.repartition(2), root, Seq("p"))
+    VersionedTable.publish(df.repartition(2), root, layout = Layout.Partitioned(Seq("p")))
     val before = SnapshotFiles.list(VersionedTable.resolve(root, conf).get, Seq("p"))
     assert(before.size >= 3, "at least one file per partition")
 
@@ -473,7 +473,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("pups")
     val df = (0 until 400).map(i => (i.toLong, s"s$i", i % 4)).toDF("id", "s", "b")
-    VersionedTable.publishPartitioned(df, root, Seq("b"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("b")))
     val ptypes = Map[String, org.apache.spark.sql.types.DataType](
       "b" -> org.apache.spark.sql.types.IntegerType)
 
@@ -496,7 +496,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("pmove")
     val df = (0 until 300).map(i => (i.toLong, s"p${i % 3}")).toDF("id", "p")
-    VersionedTable.publishPartitioned(df, root, Seq("p"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("p")))
 
     // p is a DATA column during the rewrite, so SET p = 'p9' re-buckets the
     // rewritten rows under their new directory — partition migration for free
@@ -516,7 +516,7 @@ class RefTableMutationsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("pchain")
     val df = (0 until 600).map(i => (i.toLong, i.toDouble, s"d${i % 2}")).toDF("id", "v", "d")
-    VersionedTable.publishPartitioned(df, root, Seq("d"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("d")))
     RefTableMutations.deleteWhere(spark, root, col("d") === "d0" && col("id") < 100L,
       partitionColumns = Seq("d"))
     RefTableMutations.upsert(spark, root,

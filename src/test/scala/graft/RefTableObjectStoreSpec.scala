@@ -115,9 +115,9 @@ class RefTableObjectStoreSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val root = tmpRoot("mut")
-    VersionedTable.publishClustered(
+    VersionedTable.publish(
       (0L until 2000L).map(i => (i, s"v$i")).toDF("id", "name"), root,
-      Seq("id"), numFiles = 8)
+      layout = Layout.Clustered(Seq("id"))(files = 8))
     RefTableMutations.deleteWhere(spark, root, col("id") < 100L)
     assert(readIds(root) == (100L until 2000L))
     VersionedTable.compact(spark, root)

@@ -60,7 +60,7 @@ class RefTableShardedStatsSpec extends AnyFunSuite {
 
   test("sharded manifest surfaces exactly the stats the JSON document held") {
     val root = tmpDir("equiv")
-    VersionedTable.publishClustered(corpus(), root, Seq("id"), numFiles = 4)
+    VersionedTable.publish(corpus(), root, layout = Layout.Clustered(Seq("id"))(files = 4))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     val fromJson = RefTableStats.load(resolved, conf).get
     shardify(resolved)
@@ -71,7 +71,7 @@ class RefTableShardedStatsSpec extends AnyFunSuite {
 
   test("reads through the sharded manifest skip files, result-identically") {
     val root = tmpDir("skip")
-    VersionedTable.publishClustered(corpus(), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     shardify(SnapshotFiles.resolveDir(root, None, conf))
     val o = opts("path" -> root, "schema" -> "id BIGINT, b INT, v DOUBLE")
     assert(SnapshotFiles.pruned(o, Nil).size == 8)
@@ -138,7 +138,7 @@ class RefTableShardedStatsSpec extends AnyFunSuite {
       val seg = if (i % 97 == 0) null else s"seg${i % 5}"
       (i.toLong, seg, s"payload$i")
     }.toDF("id", "seg", "payload")
-    VersionedTable.publishClustered(df, root, Seq("seg"), numFiles = 5)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("seg"))(files = 5))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     shardify(resolved)
     RefTableStats.augmentCategorical(spark, resolved, Seq("seg"))

@@ -605,12 +605,12 @@ class RefTableSourceSpec extends AnyFunSuite {
   }
 
   test("versioned compaction preserves a Hive-partitioned layout") {
-    import graft.sources.reftable.{SnapshotFiles, VersionedTable}
+    import graft.sources.reftable.{Layout, SnapshotFiles, VersionedTable}
     val root = Files.createTempDirectory("reftable_cpart_").toString + "/tbl"
     import spark.implicits._
-    VersionedTable.publishPartitioned(
+    VersionedTable.publish(
       Seq((1L, "x", "red"), (2L, "y", "blue"), (3L, "z", "red")).toDF("id", "name", "color")
-        .repartition(4), root, Seq("color"))
+        .repartition(4), root, layout = Layout.Partitioned(Seq("color")))
     VersionedTable.compact(spark, root, partitionColumns = Seq("color"))
     // still a valid partitioned layout, values intact
     val got = spark.read.format("reftable")
@@ -623,12 +623,12 @@ class RefTableSourceSpec extends AnyFunSuite {
 
   test("full-stack integration: versioned + partitioned + genColumn + admission + restart") {
     import org.apache.spark.sql.streaming.Trigger
-    import graft.sources.reftable.VersionedTable
+    import graft.sources.reftable.{Layout, VersionedTable}
     val root = Files.createTempDirectory("reftable_full_").toString + "/tbl"
     import spark.implicits._
-    VersionedTable.publishPartitioned(
+    VersionedTable.publish(
       Seq((1L, "a", "red"), (2L, "b", "blue"), (3L, "c", "red")).toDF("id", "name", "color"),
-      root, Seq("color"))
+      root, layout = Layout.Partitioned(Seq("color")))
     val ck = Files.createTempDirectory("reftable_full_ck_").toString
     def drainOnce(): Seq[(Long, String, Long)] = {
       val acc = scala.collection.mutable.ListBuffer.empty[(Long, String, Long)]
@@ -660,9 +660,9 @@ class RefTableSourceSpec extends AnyFunSuite {
       Seq((1L, "red"), (2L, "blue"), (3L, "red")))
     // publish v2 and restart from the same checkpoint: a fresh generation
     // of exactly the new version's content (partition values intact)
-    VersionedTable.publishPartitioned(
+    VersionedTable.publish(
       Seq((4L, "d", "green"), (5L, "e", "red")).toDF("id", "name", "color"),
-      root, Seq("color"))
+      root, layout = Layout.Partitioned(Seq("color")))
     val run2 = drainOnce()
     assert(run2.nonEmpty && run2.map(_._3).distinct.size == 1)
     assert(run2.map(_._3).head > run1.map(_._3).head, "the restart emits a newer generation")
@@ -731,11 +731,12 @@ class RefTableSourceSpec extends AnyFunSuite {
   }
 
   test("partitioned compaction preserves string partition values verbatim") {
-    import graft.sources.reftable.VersionedTable
+    import graft.sources.reftable.{Layout, VersionedTable}
     val root = Files.createTempDirectory("reftable_cstr_").toString + "/tbl"
     import spark.implicits._
-    VersionedTable.publishPartitioned(
-      Seq((1L, "007"), (2L, "10")).toDF("id", "bucket"), root, Seq("bucket"))
+    VersionedTable.publish(
+      Seq((1L, "007"), (2L, "10")).toDF("id", "bucket"), root,
+      layout = Layout.Partitioned(Seq("bucket")))
     VersionedTable.compact(spark, root, partitionColumns = Seq("bucket"))
     // type inference would have rewritten bucket=007 -> bucket=7
     val got = spark.read.format("reftable")
@@ -896,8 +897,9 @@ class RefTableSourceSpec extends AnyFunSuite {
       (i.toLong, java.sql.Timestamp.valueOf(
         java.time.LocalDateTime.of(2024, 1, 1 + i % 7, i % 24, 5)), i * 1.5)
     }
-    graft.sources.reftable.VersionedTable.publishHiddenPartitioned(
-      rows.toDF("id", "ts", "v"), root, Seq("days(ts)"))
+    graft.sources.reftable.VersionedTable.publish(
+      rows.toDF("id", "ts", "v"), root,
+      layout = graft.sources.reftable.Layout.Hidden(Seq("days(ts)")))
     def read() = spark.read.format("reftable")
       .option("path", root).option("schema", "id BIGINT, ts TIMESTAMP, v DOUBLE")
       .option("hiddenPartitions", "days(ts)").load()
@@ -1229,12 +1231,12 @@ class RefTableSourceSpec extends AnyFunSuite {
     // alive because newer manifests still name their files. Rows deleted by
     // the mutations MUST still be emitted (snapshot isolation), and only
     // commit() releases the pin.
-    import graft.sources.reftable.{RefTableMutations, VersionedTable}
+    import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val root = Files.createTempDirectory("reftable_pinvac_").toString + "/tbl"
     val df = (0L until 500L).map(i => (i, s"n$i")).toDF("id", "name")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 5)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 5))
 
     val o = RefTableOptions.from(new CaseInsensitiveStringMap(
       Map("path" -> root, "schema" -> ddl, "refreshInterval" -> "1h",

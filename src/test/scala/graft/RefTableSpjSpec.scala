@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.reftable.VersionedTable
+import graft.sources.reftable.{Layout, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -50,8 +50,8 @@ class RefTableSpjSpec extends AnyFunSuite {
     // t2 misses bucket 5 entirely — partition matching must handle a value
     // present on one side only (empty side contributes no rows)
     val t2 = (0L until 1500L).filter(_ % 8 != 5).map(i => (i % 8, i, i * 100)).toDF("bkt", "id", "v")
-    VersionedTable.publishPartitioned(t1, r1, Seq("bkt"))
-    VersionedTable.publishPartitioned(t2, r2, Seq("bkt"))
+    VersionedTable.publish(t1, r1, layout = Layout.Partitioned(Seq("bkt")))
+    VersionedTable.publish(t2, r2, layout = Layout.Partitioned(Seq("bkt")))
 
     withConfs(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
@@ -77,8 +77,9 @@ class RefTableSpjSpec extends AnyFunSuite {
   test("grouped aggregation on the partition key also plans no shuffle") {
     import spark.implicits._
     val r1 = Files.createTempDirectory("graft_spj_agg").toString
-    VersionedTable.publishPartitioned(
-      (0L until 800L).map(i => (i % 4, i, i * 2)).toDF("bkt", "id", "v"), r1, Seq("bkt"))
+    VersionedTable.publish(
+      (0L until 800L).map(i => (i % 4, i, i * 2)).toDF("bkt", "id", "v"), r1,
+      layout = Layout.Partitioned(Seq("bkt")))
     withConfs(
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.adaptive.enabled" -> "false") {
@@ -93,8 +94,9 @@ class RefTableSpjSpec extends AnyFunSuite {
   test("grouped scan without the v2-bucketing conf still reads correctly") {
     import spark.implicits._
     val r1 = Files.createTempDirectory("graft_spj_plain").toString
-    VersionedTable.publishPartitioned(
-      (0L until 300L).map(i => (i % 3, i, i)).toDF("bkt", "id", "v"), r1, Seq("bkt"))
+    VersionedTable.publish(
+      (0L until 300L).map(i => (i % 3, i, i)).toDF("bkt", "id", "v"), r1,
+      layout = Layout.Partitioned(Seq("bkt")))
     val got = readGrouped(r1).agg(count(lit(1)), sum("id")).first()
     assert(got.getLong(0) == 300L && got.getLong(1) == (0L until 300L).sum)
   }

@@ -112,7 +112,8 @@ class RefTableStatsSpec extends AnyFunSuite {
       val dom = ('a' + i / 50).toChar // 8 domains a..h -> 8 clustered files
       (i.toLong, s"https://$dom-site.example/very/long/path/resource-$i")
     }
-    VersionedTable.publishClustered(rows.toDF("id", "url"), root, Seq("url"), numFiles = 8)
+    VersionedTable.publish(rows.toDF("id", "url"), root,
+      layout = Layout.Clustered(Seq("url"))(files = 8))
     val o = opts("path" -> root, "schema" -> "id BIGINT, url STRING")
     val all = SnapshotFiles.pruned(o, Nil)
     assert(all.size == 8)
@@ -144,7 +145,8 @@ class RefTableStatsSpec extends AnyFunSuite {
     // identical on the first 16 cps — equality inside must keep the file
     val root2 = tmpDir("strbounds_deep")
     val deep = (0 until 200).map(i => (i.toLong, f"prefix-0123456789-$i%03d"))
-    VersionedTable.publishClustered(deep.toDF("id", "url"), root2, Seq("url"), numFiles = 4)
+    VersionedTable.publish(deep.toDF("id", "url"), root2,
+      layout = Layout.Clustered(Seq("url"))(files = 4))
     val o2 = opts("path" -> root2, "schema" -> "id BIGINT, url STRING")
     val hit = spark.read.format("reftable")
       .option("path", root2).option("schema", "id BIGINT, url STRING").load()
@@ -155,7 +157,7 @@ class RefTableStatsSpec extends AnyFunSuite {
 
   test("clustered publish skips files a range filter cannot match, result-identically") {
     val root = tmpDir("cluster")
-    VersionedTable.publishClustered(corpus(), root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(corpus(), root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val o = opts("path" -> root, "schema" -> "id BIGINT, b INT, v DOUBLE")
     val all = SnapshotFiles.pruned(o, Nil)
     assert(all.size == 8)
@@ -188,7 +190,7 @@ class RefTableStatsSpec extends AnyFunSuite {
 
   test("random filter trees: skipping never changes the result (nulls, NaN, -0.0 present)") {
     val root = tmpDir("equiv")
-    VersionedTable.publishClustered(corpus(), root, Seq("id"), numFiles = 6)
+    VersionedTable.publish(corpus(), root, layout = Layout.Clustered(Seq("id"))(files = 6))
     val baseline = spark.read.parquet(
       SnapshotFiles.resolveDir(root, None, conf))
     def viaSource = spark.read.format("reftable")
@@ -231,7 +233,7 @@ class RefTableStatsSpec extends AnyFunSuite {
     val root = tmpDir("mixed")
     val df = (0 until 400).map(i => (i.toLong, if (i % 2 == 0) "even" else "odd"))
       .toDF("id", "par")
-    VersionedTable.publishPartitioned(df, root, Seq("par"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("par")))
     val o = opts("path" -> root, "schema" -> "id BIGINT, par STRING",
       "partitionColumns" -> "par")
     val all = SnapshotFiles.pruned(o, Nil)
@@ -302,8 +304,8 @@ class RefTableStatsSpec extends AnyFunSuite {
     val grid = (0 until 65536).map(i => (i % 256, i / 256, i.toLong)).toDF("x", "y", "id")
     val zRoot = tmpDir("zorder")
     val lexRoot = tmpDir("lex")
-    VersionedTable.publishZOrdered(grid, zRoot, Seq("x", "y"), numFiles = 16)
-    VersionedTable.publishClustered(grid, lexRoot, Seq("x", "y"), numFiles = 16)
+    VersionedTable.publish(grid, zRoot, layout = Layout.ZOrdered(Seq("x", "y"))(files = 16))
+    VersionedTable.publish(grid, lexRoot, layout = Layout.Clustered(Seq("x", "y"))(files = 16))
     val ddl = "x INT, y INT, id BIGINT"
     def planned(root: String, filters: Seq[Filter]) =
       SnapshotFiles.pruned(opts("path" -> root, "schema" -> ddl), filters).size
@@ -335,7 +337,7 @@ class RefTableStatsSpec extends AnyFunSuite {
       (java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(19000 + i % 200)),
         i % 50, i.toLong)
     }.toDF("d", "k", "id")
-    VersionedTable.publishZOrdered(grid, root, Seq("d", "k"), numFiles = 8)
+    VersionedTable.publish(grid, root, layout = Layout.ZOrdered(Seq("d", "k"))(files = 8))
     val o = opts("path" -> root, "schema" -> "d DATE, k INT, id BIGINT")
     assert(SnapshotFiles.pruned(o, Nil).size == 8)
     val onDate = Seq(And(
@@ -356,7 +358,7 @@ class RefTableStatsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.streaming.Trigger
     val root = tmpDir("streamskip")
-    VersionedTable.publishClustered(corpus(), root, Seq("id"), numFiles = 6)
+    VersionedTable.publish(corpus(), root, layout = Layout.Clustered(Seq("id"))(files = 6))
     val ck = Files.createTempDirectory("graft_streamskip_ck").toString
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     val q = spark.readStream.format("reftable")
@@ -386,7 +388,7 @@ class RefTableStatsSpec extends AnyFunSuite {
     // difference between chunking over O(matching) and O(all) files.
     val grid = (0 until 65536).map(i => (i % 256, i / 256, i.toLong)).toDF("x", "y", "id")
     val root = tmpDir("zstream")
-    VersionedTable.publishZOrdered(grid, root, Seq("x", "y"), numFiles = 16)
+    VersionedTable.publish(grid, root, layout = Layout.ZOrdered(Seq("x", "y"))(files = 16))
     val ddl = "x INT, y INT, id BIGINT"
     val box = Seq(
       And(GreaterThanOrEqual("x", 10), LessThan("x", 20)),
@@ -428,7 +430,7 @@ class RefTableStatsSpec extends AnyFunSuite {
       val seg = if (i % 97 == 0) null else s"seg${i % 5}"
       (i.toLong, seg, s"payload$i")
     }.toDF("id", "seg", "payload")
-    VersionedTable.publishClustered(df, root, Seq("seg"), numFiles = 5)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("seg"))(files = 5))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     RefTableStats.augmentCategorical(spark, resolved, Seq("seg"))
     val o = opts("path" -> root, "schema" -> "id BIGINT, seg STRING, payload STRING")
@@ -467,7 +469,7 @@ class RefTableStatsSpec extends AnyFunSuite {
       val tok = if (i % 131 == 0) null else s"tok_${i}_x"
       (i.toLong, tok)
     }.toDF("id", "tok")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 8)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 8))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     RefTableStats.augmentBloom(spark, resolved, Seq("id", "tok"), expectedItems = 1000)
     val o = opts("path" -> root, "schema" -> "id BIGINT, tok STRING")
@@ -515,7 +517,7 @@ class RefTableStatsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmpDir("bloomshard")
     val df = (0 until 2000).map(i => (i.toLong, s"k$i")).toDF("id", "k")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 6)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 6))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     // force the sharded format, then bloom through the distributed splice
     RefTableStats.writeManifest(resolved, conf, shardThreshold = 0)
@@ -537,7 +539,7 @@ class RefTableStatsSpec extends AnyFunSuite {
       val d = java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(19000 + i % 120))
       (i.toLong, seg, d)
     }.toDF("id", "seg", "d")
-    VersionedTable.publishClustered(df, root, Seq("seg", "d"), numFiles = 6)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("seg", "d"))(files = 6))
     val resolved = SnapshotFiles.resolveDir(root, None, conf)
     RefTableStats.augmentCategorical(spark, resolved, Seq("seg"))
     val baseline = spark.read.parquet(resolved)
@@ -580,7 +582,7 @@ class RefTableStatsSpec extends AnyFunSuite {
     val df = (0 until 400).map { i =>
       (i.toLong, if (i % 5 == 0) null else Int.box(i % 17), i * 0.25 - 3.0)
     }.toDF("id", "k", "v")
-    VersionedTable.publishClustered(df, root, Seq("id"), numFiles = 3)
+    VersionedTable.publish(df, root, layout = Layout.Clustered(Seq("id"))(files = 3))
     val fromStats = graft.operators.Profiling.profileFromStats(spark, root)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getString(3), r.getString(4))).sortBy(_._1).toSeq

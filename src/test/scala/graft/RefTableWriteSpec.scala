@@ -419,11 +419,11 @@ class RefTableWriteSpec extends AnyFunSuite {
 
   test("dynamic partition overwrite canonicalizes partition identity under declared types") {
     import spark.implicits._
-    import graft.sources.reftable.{RefTableMutations, VersionedTable}
+    import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
     val root = Files.createTempDirectory("graft_dynovw2").toString + "/t"
     // seed with zero-padded directory names by staging them verbatim
     val df = Seq((1L, "007"), (2L, "8")).toDF("id", "bucket")
-    VersionedTable.publishPartitioned(df, root, Seq("bucket"))
+    VersionedTable.publish(df, root, layout = Layout.Partitioned(Seq("bucket")))
     // declared type INT: source bucket 7 must replace the bucket=007 dir
     RefTableMutations.overwritePartitions(spark,
       root, Seq((100L, 7)).toDF("id", "bucket"), Seq("bucket"),
@@ -438,11 +438,12 @@ class RefTableWriteSpec extends AnyFunSuite {
 
   test("dynamic partition overwrite matches timestamp-partitioned directories") {
     import spark.implicits._
-    import graft.sources.reftable.{RefTableMutations, VersionedTable}
+    import graft.sources.reftable.{Layout, RefTableMutations, VersionedTable}
     val root = Files.createTempDirectory("graft_dynovw_ts").toString + "/t"
     val t1 = java.sql.Timestamp.valueOf("2021-01-01 00:00:00")
     val t2 = java.sql.Timestamp.valueOf("2021-01-02 00:00:00")
-    VersionedTable.publishPartitioned(Seq((1L, t1), (2L, t2)).toDF("id", "ts"), root, Seq("ts"))
+    VersionedTable.publish(Seq((1L, t1), (2L, t2)).toDF("id", "ts"), root,
+      layout = Layout.Partitioned(Seq("ts")))
     // Timestamp.toString renders "... 00:00:00.0" while the directory
     // renders "... 00:00:00" — without a shared canonical form the touched
     // set never matches and the old partition files survive (duplicates)
