@@ -71,9 +71,11 @@ private[graft] object HadoopConf {
     def release(): Unit = synchronized { b = None }
   }
 
-  /** A task's private copy of a broadcast conf. */
-  def copyOf(b: Broadcast[SerializableConfiguration]): Configuration =
-    new Configuration(b.value.value)
+  /** A task's private copy of a broadcast conf, as a JobConf: Hadoop's
+    * task contexts wrap a JobConf as it is and copy any other conf again.
+    */
+  def copyOf(b: Broadcast[SerializableConfiguration]): org.apache.hadoop.mapred.JobConf =
+    new org.apache.hadoop.mapred.JobConf(b.value.value)
 
   /** Opens a parquet file with read options taken from `conf`.
     * `ParquetFileReader.open(file)` alone builds its options from a fresh

@@ -1,12 +1,13 @@
 package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.TaskAttemptID
-import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.{MessageType, Type}
@@ -66,12 +67,51 @@ object RefTableColumnarReader {
     })
   }
 
+  /** The merged Spark schema of `files`' footers: what a `mergeSchema` read
+    * infers, with no inference job. The footers come from the cache above
+    * (a miss is read here, on the driver) and merge through Spark's own
+    * `ParquetFileFormat.readSchema`, so field order, types and the
+    * recorded-Spark-schema preference are the built-in source's. None for
+    * no files.
+    */
+  private[reftable] def mergedSchema(
+      spark: org.apache.spark.sql.SparkSession, files: Seq[SnapshotFile],
+      conf: Configuration): Option[StructType] =
+    org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge.merge(
+      files.map { f =>
+        val p = new Path(f.path)
+        new org.apache.parquet.hadoop.Footer(p, footerOf(p, f.length, conf))
+      }, spark)
+
+  /** Whether a row group belongs to the byte range [start, start + length):
+    * parquet's midpoint assignment (start + compressedSize/2 inside the
+    * range), the rule [[rowsBefore]] counts by and the split's reader
+    * decodes by.
+    */
+  private def midpointIn(
+      b: org.apache.parquet.hadoop.metadata.BlockMetaData, start: Long, length: Long): Boolean = {
+    val mid = b.getStartingPos + b.getCompressedSize / 2
+    mid >= start && mid < start + length
+  }
+
+  /** `footer` narrowed to the row groups of the split [start, start +
+    * length): what a range read of the file would parse, without reading
+    * the footer again.
+    */
+  private[reftable] def splitFooter(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata, start: Long, length: Long)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    import scala.jdk.CollectionConverters._
+    new org.apache.parquet.hadoop.metadata.ParquetMetadata(footer.getFileMetaData,
+      footer.getBlocks.asScala.filter(midpointIn(_, start, length)).asJava)
+  }
+
   /** File-global row index of the first row a byte-range split starting at
     * `start` will decode: the summed row counts of the row groups BEFORE
     * the split under parquet's standard midpoint assignment (a range read
     * takes the row groups whose start + compressedSize/2 falls inside it —
-    * the same rule every range reader here uses via withRange /
-    * withFileRange). This is what lets deletion-vector'd files keep their
+    * the same rule [[splitFooter]] narrows the decoder's footer by). This
+    * is what lets deletion-vector'd files keep their
     * byte-range splits: each split re-derives where its sequential row
     * index begins, and position subtraction stays aligned.
     */
@@ -80,7 +120,7 @@ object RefTableColumnarReader {
     if (start <= 0L) return 0L
     import scala.jdk.CollectionConverters._
     footerOf(path, fileLength, conf).getBlocks.asScala.iterator
-      .filter(b => b.getStartingPos + b.getCompressedSize / 2 < start)
+      .filter(midpointIn(_, 0L, start))
       .map(_.getRowCount).sum
   }
 
@@ -180,15 +220,17 @@ class RefTableColumnarReader(
     pushed: Array[Filter],
     partition: RefTableInputPartition,
     limit: Option[Int] = None,
-    conf: Configuration = HadoopConf())
+    conf: JobConf)
     extends PartitionReader[ColumnarBatch] {
 
   // pushed LIMIT: rows still wanted from this partition
   private var remaining: Int = limit.getOrElse(Int.MaxValue)
   private val hadoopPath = new Path(partition.path)
 
-  private val fileMeta =
-    RefTableColumnarReader.footerOf(hadoopPath, partition.fileLength, conf).getFileMetaData
+  // the whole file's footer, parsed once per executor: the schema checks
+  // below read it, and the decoder gets it narrowed to this split
+  private val footer = RefTableColumnarReader.footerOf(hadoopPath, partition.fileLength, conf)
+  private val fileMeta = footer.getFileMetaData
   private val fileSchema: MessageType = fileMeta.getSchema
 
   private def isNanos(col: String): Boolean =
@@ -316,7 +358,17 @@ class RefTableColumnarReader(
     val r = new VectorizedParquetRecordReader(
       null, dtMode, dtTz, i96Mode, i96Tz, /* offHeap */ false, /* capacity */ 4096)
     val split = new FileSplit(hadoopPath, partition.start, partition.length, Array.empty[String])
-    r.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+    // open the split once: the cached footer narrowed to the split's row
+    // groups, and a stream over the pinned length (no status call). The
+    // task context wraps the reader's conf as is: it is a JobConf, which
+    // JobContextImpl does not copy again.
+    val file = HadoopInputFile.fromStatus(
+      new FileStatus(partition.fileLength, false, 0, 0L, 0L, hadoopPath), conf)
+    val in = file.newStream()
+    try r.initialize(split, new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+      Some(file), Some(in),
+      Some(RefTableColumnarReader.splitFooter(footer, partition.start, partition.length)))
+    catch { case t: Throwable => in.close(); throw t }
     if (constFields.isEmpty) r.initBatch(new StructType(), InternalRow.empty)
     else {
       val row = new GenericInternalRow(constFields.length)

@@ -2,7 +2,7 @@ package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, hash, lit,
   max, min, not, pmod, slice, sort_array, sum, when}
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, In, LessThanOrEqual}
@@ -156,10 +156,11 @@ object RefTableMutations {
   // ===== one mutation pipeline: base → change set → write strategy =====
 
   /** The pinned base every DML derives from: the resolved current version,
-    * its listing, and its merged schema. mergeSchema because an adopted
-    * version (or one assembled by earlier mutations) can hold files
-    * predating a column; a sampled schema would silently DROP those
-    * columns from rewritten rows.
+    * its listing, and its merged schema. Merged because an adopted version
+    * (or one assembled by earlier mutations) can hold files predating a
+    * column; a sampled schema would silently DROP those columns from
+    * rewritten rows. The read merges its files' footers
+    * ([[readFilesEx]]), so taking its schema runs no job.
     */
   private final class Base(val spark: SparkSession, val root: String,
       val partitionColumns: Seq[String], val partitionTypes: Map[String, DataType]) {
@@ -206,7 +207,8 @@ object RefTableMutations {
     * files' live rows it removes, and the rows it lands besides — built
     * from those live rows (None when nothing was narrowed) or, for the
     * streaming writer, epoch files already written that `stage` moves into
-    * the version.
+    * the version. `source` is the DML's source rows, whose estimated size
+    * sizes what it stages ([[stageRows]]).
     */
   private final case class ChangeSet(
       base: Base,
@@ -214,7 +216,8 @@ object RefTableMutations {
       conflicts: Conflicts,
       removed: Removed,
       lands: Option[DataFrame] => Option[DataFrame] = _ => None,
-      stage: Option[Path => Unit] = None)
+      stage: Option[Path => Unit] = None,
+      source: Option[DataFrame] = None)
 
   private sealed trait Removed
   /** Every live row whose key appears in `keys` (upsert, applyChanges). */
@@ -262,8 +265,7 @@ object RefTableMutations {
       val rows = (rewritten ++ cs.lands(live))
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
       publish(cs, keepVersions, txn, rewrites = true, stagesImages = false) { staging =>
-        rows.foreach(VersionedTable.writeParquetMicros(
-          _, staging.toString, cs.base.partitionColumns))
+        rows.foreach(stageRows(cs, _, staging))
       }
     }
   }
@@ -292,8 +294,7 @@ object RefTableMutations {
       publish(cs, keepVersions, txn, rewrites = false, stagesImages = images.nonEmpty) { staging =>
         // new rows first: writeParquetMicros owns creating the staging dir
         // and refuses a pre-existing one; the sidecar goes beneath it
-        rows.foreach(VersionedTable.writeParquetMicros(
-          _, staging.toString, cs.base.partitionColumns))
+        rows.foreach(stageRows(cs, _, staging))
         cs.stage.foreach(_(staging))
         // one sidecar per commit: the position set of one change is the
         // small side by construction
@@ -302,6 +303,28 @@ object RefTableMutations {
           .parquet(new Path(staging, DeletionVectors.DvDir).toString))
       }
     }
+  }
+
+  /** Write the rows a change set stages. A flat layout's rows coalesce to
+    * n = ceil((narrowed file bytes + the source's estimated size) /
+    * `spark.sql.files.maxPartitionBytes`) files: coalesce neither shuffles
+    * nor raises the partition count, so a rewrite never writes more files
+    * than its rows have partitions, and a source of unknown size (Spark's
+    * default estimate) keeps them all. A partitioned layout keeps
+    * [[VersionedTable.writeParquetMicros]]' co-location by partition value.
+    */
+  private def stageRows(cs: ChangeSet, rows: DataFrame, staging: Path): Unit = {
+    val b = cs.base
+    def sourceBytes: Option[BigInt] = cs.source.fold(Option(BigInt(0))) { s =>
+      val est = s.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (est >= b.spark.sessionState.conf.defaultSizeInBytes) None else Some(est)
+    }
+    val sized = if (b.partitionColumns.nonEmpty) rows else sourceBytes.fold(rows) { src =>
+      val target = math.max(1L, RefTablePartitions.targetSplitBytes)
+      val n = (BigInt(cs.narrowed.map(_.length).sum) + src + target - 1) / target
+      if (n >= Int.MaxValue) rows else rows.coalesce(math.max(1, n.toInt))
+    }
+    VersionedTable.writeParquetMicros(sized, staging.toString, b.partitionColumns)
   }
 
   /** The publish both strategies share: CAS on the base, a `_FILES.json`
@@ -583,7 +606,8 @@ object RefTableMutations {
     val keys = images.fold(_ => aligned.get, _._2).select(keyCols.map(col): _*)
     val k = narrowByKeys(b, keys, keyCols)
     ChangeSet(b, k.narrowed, KeyConflicts(k.filters), ByKeys(keyCols, keys),
-      lands = _ => aligned.filterNot(_ => k.empty), stage = images.toOption.map(_._1))
+      lands = _ => aligned.filterNot(_ => k.empty), stage = images.toOption.map(_._1),
+      source = aligned)
   }
 
   /** SQL-MERGE-shaped row-level operation with CDC ergonomics: for each
@@ -785,7 +809,8 @@ object RefTableMutations {
       Some(rows.filter(gateApply(b.spark, gate, rows, lit(true), col, "MERGE insert")))
     }
 
-    ChangeSet(b, narrowed, conflicts, lands = inserts, removed = ByRows { live =>
+    ChangeSet(b, narrowed, conflicts, lands = inserts, source = Some(marked),
+        removed = ByRows { live =>
       val liveCols = tableCols(live)
       // marked's non-key columns are all __-prefixed, so target names
       // (NMBS conditions and values) resolve unambiguously on the join
@@ -1055,7 +1080,8 @@ object RefTableMutations {
     ChangeSet(b, k.narrowed, KeyConflicts(k.filters),
       ByKeys(keyCols, once.filter(del || pass).select(keyCols.map(col): _*)),
       lands = _ => if (!upserts) None else Some(once.filter(pass)
-        .select(curCols.map(c => col(c).cast(b.types(c)).as(c)): _*)))
+        .select(curCols.map(c => col(c).cast(b.types(c)).as(c)): _*)),
+      source = Some(once))
   }
 
   /** Resolve the current version dir. With no `partitionColumns` declared,
@@ -1131,6 +1157,12 @@ object RefTableMutations {
             col("_metadata.file_path"), DeletionVectors.RelRegex, 1))
           .withColumn("__pos", col("_metadata.row_index"))
       else DeletionVectors.applyTo(sess, df, group)
+    val conf = HadoopConf()
+    // each read takes its files' merged footer schema: no inference job
+    def read(reader: DataFrameReader, group: Seq[SnapshotFile], dirCols: Set[String]) =
+      RefTableColumnarReader.mergedSchema(spark, group, conf)
+        .fold(reader)(m => reader.schema(StructType(m.filterNot(f => dirCols.contains(f.name)))))
+        .parquet(group.map(_.path): _*)
     // flat fast path ONLY when no file carries directory values: after
     // partition evolution REMOVES the spec, old files still hold the
     // column solely in their `col=value` directories — a flat read would
@@ -1138,9 +1170,7 @@ object RefTableMutations {
     // column for every old row). Those files go through the basePath
     // discovery branch below, whose final cast restores declared types.
     if (partitionColumns.isEmpty && files.forall(_.partitionValues.isEmpty))
-      return prep(
-        spark.read.option("mergeSchema", "true").parquet(files.map(_.path): _*), files, spark)
-    val conf = HadoopConf()
+      return prep(read(spark.read, files, Set.empty), files, spark)
     val rootPath = new Path(root)
     val qualifiedRoot = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
     def hostOf(p: String): String = {
@@ -1161,13 +1191,16 @@ object RefTableMutations {
     val combined = byHost.toSeq.map { case (host, group) =>
       // DV subtraction (or __rel/__pos capture) per host group, on the
       // fresh file-source read — the `_metadata` column resolves only there
-      val df = prep(scoped.read.option("mergeSchema", "true").option("basePath", host)
-        .parquet(group.map(_.path): _*), group, scoped)
+      // directory columns stay out of the given schema: discovery attaches
+      // them as raw strings, as it would beside an inferred schema
+      val dirCols = group.flatMap(_.partitionValues.keys).distinct
+      val df = prep(read(scoped.read.option("basePath", host), group, dirCols.toSet),
+        group, scoped)
       // directory columns of THIS group's own layout that are not declared
       // table columns are derived values (hidden-transform `col_day` dirs):
       // discovery surfaces them, but they must never enter the rewrite
-      val undeclaredDir = group.flatMap(_.partitionValues.keys).distinct
-        .filter(c => !partitionColumns.contains(c) && !partitionTypes.contains(c))
+      val undeclaredDir =
+        dirCols.filter(c => !partitionColumns.contains(c) && !partitionTypes.contains(c))
       if (undeclaredDir.isEmpty) df else df.drop(undeclaredDir: _*)
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
     // cast every DECLARED column the read discovered (current partition
@@ -1264,7 +1297,7 @@ object RefTableMutations {
     opts.schema.fields.map(f => f.name -> f.dataType).toMap
 
   /** Read the full logical content of a (possibly manifest-referenced)
-    * version from its resolved listing, mergeSchema on, with partition
+    * version from its resolved listing, schemas merged, with partition
     * columns attached as typed columns ([[readFilesEx]]). An empty listing
     * holds no rows but still needs a schema: a partitioned write of an
     * empty result (a DELETE that removed every row) stages no file at all,
@@ -1287,7 +1320,7 @@ object RefTableMutations {
           val schema = readFilesEx(spark, root, fs, partitionColumns, partitionTypes,
             withMeta = false).schema
           spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-        case None => spark.read.option("mergeSchema", "true").parquet(current)
+        case None => spark.read.parquet(current)
       }
     }
 

@@ -23,7 +23,7 @@ final case class RefTableInputPartition(
 
 object RefTablePartitions {
   /** Default split target, overridden by spark.sql.files.maxPartitionBytes. */
-  private def targetSplitBytes: Long = {
+  private[reftable] def targetSplitBytes: Long = {
     import scala.util.Try
     Try(org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       org.apache.spark.sql.SparkSession.active.conf

@@ -17,7 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * three must hold the same rows. The draw includes predicates and clause
   * conditions that evaluate to NULL, NULL values, null source and target
   * keys, NULL change types, and SETs on the partition column. Three
-  * layouts: flat, partitioned by `p`, and hash-bucketed by `k`.
+  * layouts: flat, partitioned by `p`, and hash-bucketed by `k`. Each case
+  * also draws `spark.sql.files.maxPartitionBytes`: the default, or a
+  * target of a few KiB under which reads split every file and a flat
+  * rewrite stages several byte-sized files.
   *
   * Fixed seed and case count, no shrinking: a failure names its layout,
   * the op sequence up to the diverging op, and the rows that differ.
@@ -91,8 +94,11 @@ class MutationDifferentialSpec extends AnyFunSuite {
   }
 
   private def check(layout: Layout, seed: Long): Unit = {
-    val prop = Prop.forAllNoShrink(genCase(partitionSets, opsPerCase)) { case (init, ops) =>
+    val prop = Prop.forAllNoShrink(genCase(partitionSets, opsPerCase), genSplitBytes) {
+        case ((init, ops), splitBytes) =>
       val dir = Files.createTempDirectory("graft_diff").toFile
+      val prevSplit = spark.conf.getOption(SplitBytesKey)
+      splitBytes.foreach(spark.conf.set(SplitBytesKey, _))
       try {
         val cow = s"$dir/cow"
         val mor = s"$dir/mor"
@@ -105,7 +111,8 @@ class MutationDifferentialSpec extends AnyFunSuite {
           Seq("copy-on-write" -> cow, "merge-on-read" -> mor).foreach { case (name, root) =>
             val got = tableRows(root, layout)
             if (got != expected) throw new AssertionError(
-              s"$layout: $name diverged from the model at op $i of\n  " +
+              s"$layout (maxPartitionBytes ${splitBytes.getOrElse("default")}): " +
+                s"$name diverged from the model at op $i of\n  " +
                 ops.take(i + 1).mkString("\n  ") +
                 s"\n  initial ${init.size} rows; missing ${expected.diff(got)}; " +
                 s"extra ${got.diff(expected)}")
@@ -113,7 +120,10 @@ class MutationDifferentialSpec extends AnyFunSuite {
           expected
         }
         true
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      } finally {
+        prevSplit.fold(spark.conf.unset(SplitBytesKey))(spark.conf.set(SplitBytesKey, _))
+        org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      }
     }
     val params = Test.Parameters.default.withMinSuccessfulTests(casesPerLayout)
       .withWorkers(1).withInitialSeed(Seed(seed))
@@ -318,6 +328,11 @@ object MutationDifferentialSpec {
       genS(Seq(Some("insert"), Some("update"), Some("delete"), None)))).map(ApplyChanges(_)))
 
   /** A ≤200-row table (a few null-key rows among them) and `ops` DMLs. */
+  val SplitBytesKey = "spark.sql.files.maxPartitionBytes"
+
+  /** The split and rewrite-file target of a case: None keeps the session's. */
+  val genSplitBytes: Gen[Option[String]] = Gen.oneOf(None, Some("2k"))
+
   def genCase(partitionSets: Boolean, ops: Int): Gen[(Seq[R], Seq[Op])] = for {
     n <- Gen.choose(20, 197)
     keys <- Gen.pick(n, 0L until 300L)

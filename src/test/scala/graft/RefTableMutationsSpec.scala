@@ -176,6 +176,96 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(cur2.count() == 91)
   }
 
+  /** The stage names of the jobs `body` starts on this thread. A marker
+    * job after `body` proves every earlier job-start event was delivered:
+    * the listener bus delivers one listener's events in order.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val tag = java.util.UUID.randomUUID().toString
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => e.stageInfos.foreach(si => names.add(si.name))
+          case Some(t) if t == s"$tag-end" => delivered.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body
+      finally {
+        sc.setLocalProperty(key, s"$tag-end")
+        sc.parallelize(Seq(1), 1).count()
+        sc.setLocalProperty(key, null)
+      }
+      assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "job-start events were not delivered")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    names.asScala.toSeq
+  }
+
+  /** The data files a version stages in its own (flat) directory. */
+  private def stagedFiles(root: String): Seq[String] = {
+    val cur = new org.apache.hadoop.fs.Path(VersionedTable.resolve(root, conf).get)
+    cur.getFileSystem(conf).listStatus(cur).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).toSeq
+  }
+
+  test("a flat upsert reads its base schema from footers and stages byte-sized files") {
+    import spark.implicits._
+    val root = tmpDir("sized")
+    // eight files whose key ranges all overlap: the upsert narrows to all
+    // of them, and its rewrite unions eight file reads with the source
+    val df = (0 until 20000).map(i => (i.toLong, i.toLong * 2, s"s$i")).toDF("id", "a", "s")
+    VersionedTable.publish(df.repartition(8), root)
+    assert(stagedFiles(root).size == 8)
+    val src = (0 until 1000).map(i => (i.toLong * 20, -1L, s"u$i")).toDF("id", "a", "s")
+
+    val jobs = jobsOf(RefTableMutations.upsert(spark, root, src, Seq("id")))
+    assert(!jobs.exists(_.startsWith("parquet at RefTableMutations")),
+      s"a schema-inference job ran: ${jobs.mkString(", ")}")
+    // ~300 KB of narrowed files and source at the default 128 MB target
+    assert(stagedFiles(root).size == 1, s"staged ${stagedFiles(root)}")
+    val cur = readCurrent(root)
+    assert(cur.count() == 20000)
+    assert(cur.filter(col("a") === -1L).count() == 1000)
+    assert(cur.filter(col("id") === 21L).select("a").first().getLong(0) == 42L)
+  }
+
+  test("a rewrite of a mixed-schema base keeps the mergeSchema read's schema and values") {
+    import spark.implicits._
+    val root = tmpDir("mixedmerge")
+    val dir = new org.apache.hadoop.fs.Path(root)
+    dir.getFileSystem(conf).mkdirs(dir)
+    (0 until 40).map(i => Tuple1(i.toLong)).toDF("id")
+      .coalesce(1).write.mode("append").parquet(root)
+    (40 until 80).map(i => (i.toLong, i * 1.5, s"w$i")).toDF("id", "x", "w")
+      .coalesce(1).write.mode("append").parquet(root)
+    VersionedTable.adopt(root)
+    val base = SnapshotFiles.list(VersionedTable.resolve(root, conf).get).map(_.path)
+    // what a mergeSchema read of the base gives, less the deleted rows
+    val expected = spark.read.option("mergeSchema", "true").parquet(base: _*)
+      .filter(!(col("id") % 4L === 0L))
+
+    RefTableMutations.deleteWhere(spark, root, col("id") % 4L === 0L)
+    val staged = stagedFiles(root).map(n => s"${VersionedTable.resolve(root, conf).get}/$n")
+    assert(staged.nonEmpty, "every base file may match: the delete rewrites")
+    val rewritten = spark.read.parquet(staged: _*)
+    assert(rewritten.schema == expected.schema)
+    assert(rewritten.orderBy("id").collect().toSeq == expected.orderBy("id").collect().toSeq)
+    // the narrow file's rows carry the columns it lacked as nulls
+    val r5 = rewritten.filter(col("id") === 5L).first()
+    assert(r5.isNullAt(r5.fieldIndex("x")) && r5.isNullAt(r5.fieldIndex("w")))
+    assert(rewritten.filter(col("id") === 41L).select("w").first().getString(0) == "w41")
+  }
+
   test("history is metadata-only and vacuum never deletes the current version") {
     import spark.implicits._
     val root = tmpDir("hist")

@@ -273,6 +273,9 @@ class RefTableSourceSpec extends AnyFunSuite {
         s"expected byte-range splits, got ${df.rdd.getNumPartitions} partition(s)")
       assert(df.count() == 20000L)
       assert(df.agg(sum("id")).first().getLong(0) == 20000L * 20001L / 2)
+      // a pushed filter skips row groups inside each split; the rest decode
+      assert(df.filter(col("id") > 15000L).select("id").collect().map(_.getLong(0)).sorted
+        .toSeq == (15001L to 20000L))
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
