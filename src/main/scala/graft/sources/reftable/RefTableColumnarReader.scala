@@ -51,37 +51,74 @@ object RefTableColumnarReader {
     * listing, so a file swapped in place under a stable name (the
     * delete+rename pattern) stops hitting the old entry the moment its
     * size changes; same-length swaps of *parquet* files are vanishingly
-    * rare (footer offsets/stats differ). The cache is cleared if it ever
-    * grows past a bound so long-lived executors don't accumulate entries.
+    * rare (footer offsets/stats differ). Bounded: past `capacity` entries
+    * the least recently used goes, so long-lived executors don't
+    * accumulate entries and one wide read never flushes the entries the
+    * other readers in the JVM (local-mode executors included) still use.
     */
+  private[graft] final class FooterCache[V <: AnyRef](capacity: Int) {
+    /** One entry, loaded at most once however many readers miss it at the
+      * same time (a failed load retries on the next access). */
+    private final class Entry(load: () => V) { lazy val value: V = load() }
+    private val entries = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+        size > capacity
+    }
+
+    def contains(key: String): Boolean = entries.synchronized(entries.containsKey(key))
+
+    /** The entry of `key`, loaded by `load` outside the lock on a miss. */
+    def get(key: String)(load: => V): V = entries.synchronized {
+      val e = entries.get(key)
+      if (e != null) e else { val n = new Entry(() => load); entries.put(key, n); n }
+    }.value
+  }
+
   private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.parquet.hadoop.metadata.ParquetMetadata]()
+    new FooterCache[org.apache.parquet.hadoop.metadata.ParquetMetadata](4096)
+
+  private def footerKey(path: Path, fileLength: Long): String = s"$path#$fileLength"
 
   private[reftable] def footerOf(
-      path: Path, fileLength: Long, conf: Configuration): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
-    if (footerCache.size > 4096) footerCache.clear()
-    footerCache.computeIfAbsent(s"$path#$fileLength", { _ =>
+      path: Path, fileLength: Long, conf: Configuration): org.apache.parquet.hadoop.metadata.ParquetMetadata =
+    footerCache.get(footerKey(path, fileLength)) {
       val r = HadoopConf.openParquet(path, conf)
       try r.getFooter
       finally r.close()
-    })
-  }
+    }
+
+  /** The uncached footers one schema merge reads on the driver, on up to
+    * [[FooterReadThreads]] threads. A base with more misses (a cold driver
+    * over a wide table) merges in Spark's parallel footer job instead —
+    * the one a `mergeSchema` read runs — and leaves the cache to the
+    * scans. */
+  private val DriverFooterReads = 64
+  private val FooterReadThreads = 8
 
   /** The merged Spark schema of `files`' footers: what a `mergeSchema` read
-    * infers, with no inference job. The footers come from the cache above
-    * (a miss is read here, on the driver) and merge through Spark's own
+    * infers. The footers come from the cache above, misses read on the
+    * driver in parallel, and merge through Spark's own
     * `ParquetFileFormat.readSchema`, so field order, types and the
-    * recorded-Spark-schema preference are the built-in source's. None for
-    * no files.
+    * recorded-Spark-schema preference are the built-in source's. More than
+    * `driverReads` misses run Spark's footer job over all of `files`. None
+    * for no files.
     */
-  private[reftable] def mergedSchema(
+  private[graft] def mergedSchema(
       spark: org.apache.spark.sql.SparkSession, files: Seq[SnapshotFile],
-      conf: Configuration): Option[StructType] =
-    org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge.merge(
-      files.map { f =>
-        val p = new Path(f.path)
-        new org.apache.parquet.hadoop.Footer(p, footerOf(p, f.length, conf))
-      }, spark)
+      conf: Configuration, driverReads: Int = DriverFooterReads): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
+    val misses = files.count(f => !footerCache.contains(footerKey(new Path(f.path), f.length)))
+    def footer(f: SnapshotFile) = {
+      val p = new Path(f.path)
+      new org.apache.parquet.hadoop.Footer(p, footerOf(p, f.length, conf))
+    }
+    if (misses > driverReads)
+      FooterSchemaBridge.mergeInJob(
+        files.map(f => new FileStatus(f.length, false, 0, 0L, 0L, new Path(f.path))), spark)
+    else FooterSchemaBridge.merge(
+      if (misses <= 1) files.map(footer)
+      else FooterSchemaBridge.parmap(files, FooterReadThreads)(footer), spark)
+  }
 
   /** Whether a row group belongs to the byte range [start, start + length):
     * parquet's midpoint assignment (start + compressedSize/2 inside the

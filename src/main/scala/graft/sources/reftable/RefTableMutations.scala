@@ -265,7 +265,7 @@ object RefTableMutations {
       val rows = (rewritten ++ cs.lands(live))
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
       publish(cs, keepVersions, txn, rewrites = true, stagesImages = false) { staging =>
-        rows.foreach(stageRows(cs, _, staging))
+        rows.foreach(stageRows(cs, _, staging, sourceBytes(cs).map(_ + narrowedBytes(cs))))
       }
     }
   }
@@ -294,7 +294,10 @@ object RefTableMutations {
       publish(cs, keepVersions, txn, rewrites = false, stagesImages = images.nonEmpty) { staging =>
         // new rows first: writeParquetMicros owns creating the staging dir
         // and refuses a pre-existing one; the sidecar goes beneath it
-        rows.foreach(stageRows(cs, _, staging))
+        // the narrowed files stay; only an edit's after-images come from
+        // them, bounded (not sized) by their bytes
+        rows.foreach(stageRows(cs, _, staging,
+          sourceBytes(cs).map(_ + (if (images.isEmpty) BigInt(0) else narrowedBytes(cs)))))
         cs.stage.foreach(_(staging))
         // one sidecar per commit: the position set of one change is the
         // small side by construction
@@ -305,27 +308,49 @@ object RefTableMutations {
     }
   }
 
-  /** Write the rows a change set stages. A flat layout's rows coalesce to
-    * n = ceil((narrowed file bytes + the source's estimated size) /
-    * `spark.sql.files.maxPartitionBytes`) files: coalesce neither shuffles
-    * nor raises the partition count, so a rewrite never writes more files
-    * than its rows have partitions, and a source of unknown size (Spark's
-    * default estimate) keeps them all. A partitioned layout keeps
-    * [[VersionedTable.writeParquetMicros]]' co-location by partition value.
+  /** Write the rows a change set stages, `bytes` their estimated size (None
+    * unknown). A flat layout's rows coalesce to n = ceil(bytes / target)
+    * files, the target being Spark's own split size for a scan of `bytes`
+    * ([[stagedFiles]]): a small change stages one file, a large rewrite
+    * keeps a write task per core. Coalesce neither shuffles nor raises the
+    * partition count, so a change never writes more files than its rows
+    * have partitions, and an unknown size keeps them all. A partitioned
+    * layout keeps [[VersionedTable.writeParquetMicros]]' co-location by
+    * partition value.
     */
-  private def stageRows(cs: ChangeSet, rows: DataFrame, staging: Path): Unit = {
+  private def stageRows(
+      cs: ChangeSet, rows: DataFrame, staging: Path, bytes: Option[BigInt]): Unit = {
     val b = cs.base
-    def sourceBytes: Option[BigInt] = cs.source.fold(Option(BigInt(0))) { s =>
-      val est = s.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (est >= b.spark.sessionState.conf.defaultSizeInBytes) None else Some(est)
-    }
-    val sized = if (b.partitionColumns.nonEmpty) rows else sourceBytes.fold(rows) { src =>
-      val target = math.max(1L, RefTablePartitions.targetSplitBytes)
-      val n = (BigInt(cs.narrowed.map(_.length).sum) + src + target - 1) / target
-      if (n >= Int.MaxValue) rows else rows.coalesce(math.max(1, n.toInt))
+    val sized = if (b.partitionColumns.nonEmpty) rows else bytes.fold(rows) { n =>
+      val conf = b.spark.sessionState.conf
+      val cores = conf.filesMinPartitionNum.getOrElse(
+        conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+          .getOrElse(b.spark.sparkContext.defaultParallelism))
+      rows.coalesce(stagedFiles(n, conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes, cores))
     }
     VersionedTable.writeParquetMicros(sized, staging.toString, b.partitionColumns)
   }
+
+  /** The files a change of `bytes` stages: ceil(bytes / target), the target
+    * what `FilePartition.maxSplitBytes` splits a scan of `bytes` by —
+    * min(maxPartitionBytes, max(openCostInBytes, bytes / cores)).
+    */
+  private[graft] def stagedFiles(
+      bytes: BigInt, maxPartitionBytes: Long, openCostInBytes: Long, cores: Int): Int = {
+    val target = (bytes / math.max(1, cores)).max(openCostInBytes).min(maxPartitionBytes).max(1)
+    ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** The estimated size of a change set's source rows: 0 for none, None
+    * when Spark cannot estimate it (its default size). An estimate can read
+    * low (Spark sizes a Generate by its child), which only stages fewer
+    * files. */
+  private def sourceBytes(cs: ChangeSet): Option[BigInt] = cs.source.fold(Option(BigInt(0))) { s =>
+    val est = s.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= cs.base.spark.sessionState.conf.defaultSizeInBytes) None else Some(est)
+  }
+
+  private def narrowedBytes(cs: ChangeSet): BigInt = BigInt(cs.narrowed.map(_.length).sum)
 
   /** The publish both strategies share: CAS on the base, a `_FILES.json`
     * delta inheriting the base's files — minus the narrowed ones when the

@@ -327,12 +327,12 @@ object MutationDifferentialSpec {
     2 -> Gen.choose(1, 8).flatMap(n => genKeyed(n,
       genS(Seq(Some("insert"), Some("update"), Some("delete"), None)))).map(ApplyChanges(_)))
 
-  /** A ≤200-row table (a few null-key rows among them) and `ops` DMLs. */
   val SplitBytesKey = "spark.sql.files.maxPartitionBytes"
 
   /** The split and rewrite-file target of a case: None keeps the session's. */
   val genSplitBytes: Gen[Option[String]] = Gen.oneOf(None, Some("2k"))
 
+  /** A ≤200-row table (a few null-key rows among them) and `ops` DMLs. */
   def genCase(partitionSets: Boolean, ops: Int): Gen[(Seq[R], Seq[Op])] = for {
     n <- Gen.choose(20, 197)
     keys <- Gen.pick(n, 0L until 300L)

@@ -266,6 +266,40 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(rewritten.filter(col("id") === 41L).select("w").first().getString(0) == "w41")
   }
 
+  test("a base with many uncached files merges its schema in Spark's footer job, to the same schema") {
+    import spark.implicits._
+    val root = tmpDir("jobmerge")
+    (0 until 3).foreach { i =>
+      val df = if (i == 1) (0 until 10).map(j => (j.toLong, s"w$j")).toDF("id", "w")
+        else (0 until 10).map(j => Tuple1(j.toLong)).toDF("id")
+      df.coalesce(1).write.mode("append").parquet(root)
+    }
+    VersionedTable.adopt(root)
+    val files = SnapshotFiles.list(VersionedTable.resolve(root, conf).get)
+    val expected = spark.read.option("mergeSchema", "true").parquet(files.map(_.path): _*).schema
+    // uncached and past a zero driver budget: the footer job merges
+    val inJob = RefTableColumnarReader.mergedSchema(spark, files, conf, driverReads = 0)
+    // the same files again, now read on the driver and cached
+    val onDriver = RefTableColumnarReader.mergedSchema(spark, files, conf)
+    assert(inJob.contains(expected))
+    assert(onDriver.contains(expected))
+  }
+
+  test("a change stages as many files as Spark splits a scan of its bytes into") {
+    val (mb, open) = (1L << 20, 4L << 20)
+    def files(bytes: Long, cores: Int, max: Long = 128 * mb) =
+      RefTableMutations.stagedFiles(BigInt(bytes), max, open, cores)
+    // a small upsert stages one file whatever the core count
+    assert(files(300 * 1024, 4) == 1 && files(300 * 1024, 32) == 1)
+    // a 100 MB rewrite keeps a task per core down to the 4 MB open cost
+    assert(files(100 * mb, 32) == 25)
+    assert(files(100 * mb, 4) == 4)
+    // past maxPartitionBytes per core the target caps at it
+    assert(files(10240 * mb, 4) == 80)
+    assert(files(10 * 1024, 4, max = 2048) == 5)
+    assert(files(0, 4) == 1)
+  }
+
   test("history is metadata-only and vacuum never deletes the current version") {
     import spark.implicits._
     val root = tmpDir("hist")

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.sources.reftable.{RefTableMicroBatchStream, RefTableOffset, RefTableOptions}
+import graft.sources.reftable.{RefTableColumnarReader, RefTableMicroBatchStream, RefTableOffset,
+  RefTableOptions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -277,6 +278,21 @@ class RefTableSourceSpec extends AnyFunSuite {
       assert(df.filter(col("id") > 15000L).select("id").collect().map(_.getLong(0)).sorted
         .toSeq == (15001L to 20000L))
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
+  test("the footer cache evicts its least recently used entry and loads each miss once") {
+    val cache = new RefTableColumnarReader.FooterCache[String](2)
+    val loads = new java.util.concurrent.atomic.AtomicInteger()
+    def get(k: String) = cache.get(k) { loads.incrementAndGet(); Thread.sleep(20); k }
+    get("a"); get("b"); get("a"); get("c")
+    assert(cache.contains("a") && !cache.contains("b") && cache.contains("c"))
+    loads.set(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val fs = (1 to 4).map(_ => pool.submit(() => get("d")))
+      assert(fs.map(_.get()) == Seq.fill(4)("d"))
+    } finally pool.shutdown()
+    assert(loads.get() == 1)
   }
 
   test("the scan is columnar: vectorized batches with ColumnarToRow above") {
