@@ -36,17 +36,17 @@ private[reftable] object ChangefeedDiff {
   def emptyOutput(spark: SparkSession, opts: RefTableOptions): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), opts.schema)
 
+  /** Live rows of `files` under the table's declared types; `coords`
+    * keeps their file coordinates. */
   def readListing(spark: SparkSession, opts: RefTableOptions,
-      files: Seq[SnapshotFile], withMeta: Boolean): DataFrame =
-    RefTableMutations.readFilesEx(
-      spark, opts.path, files, opts.physicalNesting,
-      RefTableMutations.partitionTypesOf(opts), withMeta)
+      files: Seq[SnapshotFile], coords: Boolean): DataFrame =
+    ListingRead.readListing(spark, files, RefTableMutations.partitionTypesOf(opts), coords)
 
   /** The whole current snapshot as inserts — the CDF initial-load shape. */
   def bootstrap(spark: SparkSession, opts: RefTableOptions,
       curFiles: Seq[SnapshotFile]): DataFrame = {
     val body = if (curFiles.isEmpty) emptyOutput(spark, opts)
-      else toOutput(opts, readListing(spark, opts, curFiles, withMeta = false))
+      else toOutput(opts, readListing(spark, opts, curFiles, coords = false))
     body.withColumn("change_type", lit("insert"))
   }
 
@@ -70,14 +70,14 @@ private[reftable] object ChangefeedDiff {
       if (removed.isEmpty) None
       // the removed files' records carry the PREVIOUS generation's DVs —
       // rows already dead then must not resurface as deletes now
-      else Some(toOutput(opts, readListing(spark, opts, removed, withMeta = false)))
+      else Some(toOutput(opts, readListing(spark, opts, removed, coords = false)))
     val oldFromDv =
       if (dvDelta.isEmpty) None
       else {
         import spark.implicits._
         val pairs = dvDelta.flatMap { case (rel, ps, _) => ps.map(p => (rel, p)) }
           .toDF("__dv_file", "__dv_pos")
-        val withPos = readListing(spark, opts, dvDelta.map(_._3), withMeta = true)
+        val withPos = readListing(spark, opts, dvDelta.map(_._3), coords = true)
         Some(toOutput(opts, withPos.join(broadcast(pairs),
           withPos("__rel") === pairs("__dv_file") && withPos("__pos") === pairs("__dv_pos"),
           "left_semi")))
@@ -86,7 +86,7 @@ private[reftable] object ChangefeedDiff {
       .reduceOption(_ unionByName _).getOrElse(emptyOutput(spark, opts))
     val newSide =
       if (added.isEmpty) emptyOutput(spark, opts)
-      else toOutput(opts, readListing(spark, opts, added, withMeta = false))
+      else toOutput(opts, readListing(spark, opts, added, coords = false))
     graft.operators.SnapshotDiff.diff(oldSide, newSide, opts.keyColumns)
       .select((opts.schema.fieldNames :+ "change_type").map(col).toIndexedSeq: _*)
   }

@@ -124,23 +124,27 @@ object DeletionVectors {
   }
 
   /** Apply a listing's pinned deletion vectors to a DataFrame read of
-    * exactly those files — the batch-path (non-DSv2-reader) application:
-    * a broadcast LEFT ANTI join of `( _metadata rel path, row_index )`
-    * against the (file, pos) pairs. The pairs are already pinned on the
-    * driver, so the join side is a local dataset, not a second read. MUST
-    * be applied to the raw file-source read (before projections drop the
-    * `_metadata` column).
+    * exactly those files — the batch-path (non-DSv2-reader) application,
+    * used only by [[ListingRead.readListing]]: a broadcast LEFT ANTI join of
+    * `( _metadata rel path, row_index )` against the (file, pos) pairs. The
+    * pairs are already pinned on the driver, so the join side is a local
+    * dataset, not a second read. MUST be applied to the raw file-source read
+    * (before projections drop the `_metadata` column). With `coords` the
+    * surviving rows keep those coordinates as `__rel`/`__pos`.
     */
-  def applyTo(spark: SparkSession, df: DataFrame, files: Seq[SnapshotFile]): DataFrame = {
+  private[reftable] def applyTo(spark: SparkSession, df: DataFrame, files: Seq[SnapshotFile],
+      coords: Boolean): DataFrame = {
     val pairs = files.flatMap(f => f.dvPositions.map(p => (relOf(f.path), p)))
-    if (pairs.isEmpty) return df
-    import spark.implicits._
-    val dv = pairs.toDF("__dv_file", "__dv_pos")
-    df.withColumn("__rel", regexp_extract(col("_metadata.file_path"), RelRegex, 1))
+    if (pairs.isEmpty && !coords) return df
+    val withCoords = df.withColumn("__rel", regexp_extract(col("_metadata.file_path"), RelRegex, 1))
       .withColumn("__pos", col("_metadata.row_index"))
-      .join(broadcast(dv),
+    val live = if (pairs.isEmpty) withCoords else {
+      import spark.implicits._
+      val dv = pairs.toDF("__dv_file", "__dv_pos")
+      withCoords.join(broadcast(dv),
         col("__rel") === col("__dv_file") && col("__pos") === col("__dv_pos"), "left_anti")
-      .drop("__rel", "__pos")
+    }
+    if (coords) live else live.drop("__rel", "__pos")
   }
 
   /** Carry a parent version's DV sidecars verbatim into a mutation's

@@ -34,9 +34,10 @@ object RefTableFilters {
     * it, and the query's own Filter node remains the exactness residual —
     * the same division of labor as the batch pushed-filter contract.
     * Resolution runs against an empty relation of the output schema so the
-    * expression gets full analyzer treatment (implicit casts, literal
-    * folding) before translation; conjuncts that don't translate simply
-    * don't prune.
+    * expression gets full analyzer treatment (implicit casts) before
+    * translation, which folds each constant operand — a literal under the
+    * cast to its column's type — to its value; conjuncts that don't
+    * translate simply don't prune.
     */
   def declared(opts: RefTableOptions): Seq[Filter] = opts.filterSql.toSeq.flatMap { s =>
     fromPredicate(org.apache.spark.sql.SparkSession.active, opts.outputSchema,
@@ -78,10 +79,18 @@ object RefTableFilters {
     import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
     def attr(x: ce.Expression): Option[String] = x match {
       case a: ce.Attribute => Some(a.name)
+      // the identity cast the analyzer puts on an IN list's column
+      case c: ce.Cast if c.child.isInstanceOf[ce.Attribute] && c.child.dataType == c.dataType =>
+        attr(c.child)
       case _ => None
     }
+    // an operand that folds to a constant is its value: the analyzer wraps
+    // a literal in the cast to the column's type (`id = cast(7 as bigint)`).
+    // A cast on the COLUMN side stays untranslated: it can change order.
     def value(x: ce.Expression): Option[Any] = x match {
       case l: ce.Literal => Some(convertToScala(l.value, l.dataType))
+      case f if f.foldable && f.references.isEmpty =>
+        scala.util.Try(f.eval()).toOption.map(convertToScala(_, f.dataType))
       case _ => None
     }
     def cmp(
@@ -103,7 +112,7 @@ object RefTableFilters {
         cmp(l, r, LessThanOrEqual(_, _), GreaterThanOrEqual(_, _))
       case ce.IsNull(c) => attr(c).map(IsNull)
       case ce.IsNotNull(c) => attr(c).map(IsNotNull)
-      case ce.In(c, list) if list.forall(_.isInstanceOf[ce.Literal]) =>
+      case ce.In(c, list) if list.forall(value(_).isDefined) =>
         attr(c).map(a => In(a, list.flatMap(value).toArray))
       case ce.InSet(c, hset) =>
         attr(c).map(a => In(a, hset.map(v => convertToScala(v, c.dataType)).toArray))

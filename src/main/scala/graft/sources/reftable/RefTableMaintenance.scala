@@ -216,8 +216,8 @@ object RefTableMaintenance {
               SnapshotFiles.list(cur).map(_.length).sum.toDouble / targetFileBytes).toInt))
             case l => l
           }
-          VersionedTable.publish(VersionedTable.readVersion(spark, cur), root, keepVersions,
-            parent = Some(new Path(cur).getName), requireBase = true, layout = layout)
+          VersionedTable.publish(VersionedTable.readVersion(spark, cur, partitionColumns), root,
+            keepVersions, parent = Some(new Path(cur).getName), requireBase = true, layout = layout)
         })
         d.copy(version = Some(v))
     }

@@ -2,8 +2,8 @@ package graft.sources.reftable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_set, count, hash, lit,
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, count, hash, lit,
   max, min, not, pmod, slice, sort_array, sum, when}
 import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, In, LessThanOrEqual}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -159,8 +159,9 @@ object RefTableMutations {
     * its listing, and its merged schema. Merged because an adopted version
     * (or one assembled by earlier mutations) can hold files predating a
     * column; a sampled schema would silently DROP those columns from
-    * rewritten rows. The read merges its files' footers
-    * ([[readFilesEx]]), so taking its schema runs no job.
+    * rewritten rows. The schema merges the listing's footers and adds the
+    * declared partition columns ([[schemaAt]]), so taking it builds no
+    * DataFrame and runs no job.
     */
   private final class Base(val spark: SparkSession, val root: String,
       val partitionColumns: Seq[String], val partitionTypes: Map[String, DataType]) {
@@ -169,8 +170,11 @@ object RefTableMutations {
     // manifest-aware listing: manifest-referenced versions resolve their
     // `_FILES.json` chain, physical ones walk the declared partition tree
     val files: Seq[SnapshotFile] = SnapshotFiles.list(current, partitionColumns)
-    lazy val schema: StructType =
-      readAll(spark, root, current, files, partitionColumns, partitionTypes).schema
+    // the directory columns its reads take: the partition columns (string
+    // unless typed) and any other column `partitionTypes` declares
+    private val declared = partitionColumns.map(c => c -> pType(c, partitionTypes)).toMap ++
+      partitionTypes
+    lazy val schema: StructType = schemaAt(spark, root, current, files, partitionColumns, declared)
     lazy val types: Map[String, DataType] = schema.fields.map(f => f.name -> f.dataType).toMap
     lazy val popts: RefTableOptions = pruneOpts(root, schema, partitionColumns, partitionTypes)
     def version: String = new Path(current).getName
@@ -180,26 +184,10 @@ object RefTableMutations {
       RefTableStats.prune(current,
         RefTablePartitioning.prune(files, popts, filters), popts, filters, conf)
 
-    /** Live rows of `fs` (pinned deletion vectors subtracted). */
-    def read(fs: Seq[SnapshotFile]): DataFrame =
-      readFilesEx(spark, root, fs, partitionColumns, partitionTypes, withMeta = false)
-
-    /** Live rows of `fs` with their `__rel`/`__pos` file coordinates. The
-      * coordinate read cannot subtract deletion vectors itself, so the
-      * pinned positions are anti-joined here: without it, a row removed by
-      * an EARLIER merge-on-read commit would match again (and an update
-      * would stage its image twice).
-      */
-    def readWithCoords(fs: Seq[SnapshotFile]): DataFrame = {
-      val raw = readFilesEx(spark, root, fs, partitionColumns, partitionTypes, withMeta = true)
-      val pinned = fs.flatMap(f => f.dvPositions.map(p => (DeletionVectors.relOf(f.path), p)))
-      if (pinned.isEmpty) raw else {
-        import spark.implicits._
-        val dv = pinned.toDF("__dv_file", "__dv_pos")
-        raw.join(broadcast(dv),
-          raw("__rel") === dv("__dv_file") && raw("__pos") === dv("__dv_pos"), "left_anti")
-      }
-    }
+    /** Live rows of `fs` (pinned deletion vectors subtracted); with
+      * `coords`, their `__rel`/`__pos` file coordinates too. */
+    def read(fs: Seq[SnapshotFile], coords: Boolean = false): DataFrame =
+      ListingRead.readListing(spark, fs, declared, coords)
   }
 
   /** One DML's change over its base: the narrowed files it may touch, what
@@ -278,7 +266,7 @@ object RefTableMutations {
     */
   private case object MergeOnRead extends WriteStrategy {
     def land(cs: ChangeSet, keepVersions: Int, txn: Option[RefTableWrites.Txn]): String = {
-      val live = if (cs.narrowed.isEmpty) None else Some(cs.base.readWithCoords(cs.narrowed))
+      val live = if (cs.narrowed.isEmpty) None else Some(cs.base.read(cs.narrowed, coords = true))
       val (images, dying) = cs.removed match {
         case ByKeys(keyCols, keys) =>
           (None, live.map(_.join(keys.distinct(), keyCols, "left_semi")))
@@ -949,7 +937,7 @@ object RefTableMutations {
     * Partition identity is value-level under the DECLARED types: a file
     * under `bucket=007` and a source row with bucket 7 name the same
     * partition when the column is numeric (same canonicalization contract
-    * as [[readFilesEx]]/compaction). Null partition values match the Hive
+    * as [[ListingRead]]/compaction). Null partition values match the Hive
     * default-partition directory. The distinct-partition collect is
     * bounded by the number of touched partitions — the same bounded
     * driver-side class as shard offsets and codebooks.
@@ -1153,94 +1141,6 @@ object RefTableMutations {
   private def pType(c: String, partitionTypes: Map[String, DataType]) =
     partitionTypes.getOrElse(c, org.apache.spark.sql.types.StringType)
 
-  /** Read a set of listed files with their partition columns attached as
-    * TYPED columns. Flat layouts read directly. Partitioned reads group by
-    * HOSTING version dir (bounded by the manifest-chain length, never by
-    * partition count) and use Spark's `basePath` discovery with partition
-    * type inference OFF — raw directory strings, cast to the declared
-    * partition types, exactly how the DSv2 reader decodes them. A
-    * mutation's rewrite therefore canonicalizes partition directory NAMES
-    * (`bucket=007` → `bucket=7` when the column is typed numeric) while
-    * preserving partition VALUES under the declared type — same contract
-    * as compaction.
-    *
-    * `withMeta = false` (every rewrite path): pinned deletion vectors
-    * subtract on the raw file read — a rewrite that missed them would
-    * resurrect deleted rows into its staged files. `withMeta = true` (the
-    * merge-on-read position passes and the changefeed stream's file-delta
-    * diff): rows keep their `__rel`/`__pos` file coordinates and DVs are
-    * NOT subtracted.
-    */
-  private[reftable] def readFilesEx(
-      spark: SparkSession, root: String, files: Seq[SnapshotFile],
-      partitionColumns: Seq[String],
-      partitionTypes: Map[String, DataType],
-      withMeta: Boolean): DataFrame = {
-    def prep(df: DataFrame, group: Seq[SnapshotFile], sess: SparkSession): DataFrame =
-      if (withMeta)
-        df.withColumn("__rel", org.apache.spark.sql.functions.regexp_extract(
-            col("_metadata.file_path"), DeletionVectors.RelRegex, 1))
-          .withColumn("__pos", col("_metadata.row_index"))
-      else DeletionVectors.applyTo(sess, df, group)
-    val conf = HadoopConf()
-    // each read takes its files' merged footer schema: no inference job
-    def read(reader: DataFrameReader, group: Seq[SnapshotFile], dirCols: Set[String]) =
-      RefTableColumnarReader.mergedSchema(spark, group, conf)
-        .fold(reader)(m => reader.schema(StructType(m.filterNot(f => dirCols.contains(f.name)))))
-        .parquet(group.map(_.path): _*)
-    // flat fast path ONLY when no file carries directory values: after
-    // partition evolution REMOVES the spec, old files still hold the
-    // column solely in their `col=value` directories — a flat read would
-    // silently drop it from the rewrite (the staged files would lose the
-    // column for every old row). Those files go through the basePath
-    // discovery branch below, whose final cast restores declared types.
-    if (partitionColumns.isEmpty && files.forall(_.partitionValues.isEmpty))
-      return prep(read(spark.read, files, Set.empty), files, spark)
-    val rootPath = new Path(root)
-    val qualifiedRoot = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
-    def hostOf(p: String): String = {
-      val rel = if (p.startsWith(qualifiedRoot + "/")) p.substring(qualifiedRoot.length + 1) else p
-      val seg = rel.indexOf('/')
-      require(seg > 0, s"partitioned file not under a version dir: $p")
-      s"$qualifiedRoot/${rel.substring(0, seg)}"
-    }
-    // scoped child session: inference off so 007 stays "007" until the
-    // declared-type cast (compact scopes the same conf the same way)
-    val scoped = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try scoped.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs
-    }
-    scoped.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val byHost = files.groupBy(f => hostOf(f.path))
-    val combined = byHost.toSeq.map { case (host, group) =>
-      // DV subtraction (or __rel/__pos capture) per host group, on the
-      // fresh file-source read — the `_metadata` column resolves only there
-      // directory columns stay out of the given schema: discovery attaches
-      // them as raw strings, as it would beside an inferred schema
-      val dirCols = group.flatMap(_.partitionValues.keys).distinct
-      val df = prep(read(scoped.read.option("basePath", host), group, dirCols.toSet),
-        group, scoped)
-      // directory columns of THIS group's own layout that are not declared
-      // table columns are derived values (hidden-transform `col_day` dirs):
-      // discovery surfaces them, but they must never enter the rewrite
-      val undeclaredDir =
-        dirCols.filter(c => !partitionColumns.contains(c) && !partitionTypes.contains(c))
-      if (undeclaredDir.isEmpty) df else df.drop(undeclaredDir: _*)
-    }.reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    // cast every DECLARED column the read discovered (current partition
-    // columns, plus any since-removed one surfacing from an old file's
-    // directories as a raw string — partition evolution) back to its
-    // declared type; a cast to a column's own type is a no-op
-    val typed = combined.withColumns(
-      combined.columns.filter(c => partitionColumns.contains(c) || partitionTypes.contains(c))
-        .map(c => c -> col(c).cast(pType(c, partitionTypes))).toMap)
-    // rebind to the caller's session so downstream joins against caller
-    // DataFrames resolve under one set of confs
-    org.apache.spark.sql.graft.DatasetBridge.ofRows(
-      spark, typed.queryExecution.analyzed)
-  }
-
   /** Keep the files of `buckets` (None: the layout does not apply, keep
     * all). Evaluated only when there is something to narrow. */
   private def inBuckets(files: Seq[SnapshotFile], buckets: => Option[Set[Int]]): Seq[SnapshotFile] =
@@ -1310,43 +1210,34 @@ object RefTableMutations {
   }
 
   /** Declared name→type for EVERY schema field, not just the current
-    * partition columns — the map the mutation paths need to cast Hive
-    * directory values back to typed columns. Under partition evolution a
-    * mutation read can discover a since-removed partition column from an
-    * old file's `col=value` directories, and it must cast back to the
-    * DECLARED type (inference is off, so the raw directory string would
-    * otherwise union as string against the typed data pages of newer
-    * files).
+    * partition columns — the map the mutation paths need to type Hive
+    * directory values. Under partition evolution a mutation read meets a
+    * since-removed partition column in an old file's `col=value`
+    * directories, and it must come back at its DECLARED type, the one the
+    * newer files' data pages carry.
     */
   def partitionTypesOf(opts: RefTableOptions): Map[String, DataType] =
     opts.schema.fields.map(f => f.name -> f.dataType).toMap
 
-  /** Read the full logical content of a (possibly manifest-referenced)
-    * version from its resolved listing, schemas merged, with partition
-    * columns attached as typed columns ([[readFilesEx]]). An empty listing
-    * holds no rows but still needs a schema: a partitioned write of an
-    * empty result (a DELETE that removed every row) stages no file at all,
-    * so the schema comes from the nearest older retained version that has
-    * files. With none, the directory read keeps the pre-manifest error.
+  /** The schema of version `current` from its listing `files`
+    * ([[ListingRead.schemaOf]]). An empty listing holds no rows but still
+    * has a schema: a partitioned write of an empty result (a DELETE that
+    * removed every row) stages no file at all, so the schema comes from the
+    * nearest older retained version that has files.
     */
-  private[reftable] def readAll(
+  private[reftable] def schemaAt(
       spark: SparkSession, root: String, current: String, files: Seq[SnapshotFile],
-      partitionColumns: Seq[String],
-      partitionTypes: Map[String, DataType]): DataFrame =
-    if (files.nonEmpty)
-      readFilesEx(spark, root, files, partitionColumns, partitionTypes, withMeta = false)
+      partitionColumns: Seq[String], declared: Map[String, DataType]): StructType =
+    if (files.nonEmpty) ListingRead.schemaOf(spark, files, declared)
     else {
       val name = new Path(current).getName
       val older = VersionedTable.commitLog(root, HadoopConf()).map(_.version)
         .takeWhile(_ != name).reverse
-      older.iterator.map(v => SnapshotFiles.list(new Path(root, v).toString, partitionColumns))
-        .find(_.nonEmpty) match {
-        case Some(fs) =>
-          val schema = readFilesEx(spark, root, fs, partitionColumns, partitionTypes,
-            withMeta = false).schema
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-        case None => spark.read.parquet(current)
-      }
+      val fs = older.iterator.map(v => SnapshotFiles.list(new Path(root, v).toString, partitionColumns))
+        .find(_.nonEmpty).getOrElse(throw new IllegalStateException(
+          s"reftable: $current lists no data files and no older retained version of $root " +
+            "has any, so its schema is unknown"))
+      ListingRead.schemaOf(spark, fs, declared)
     }
 
   /** INCREMENTAL RECLUSTER — the Delta OPTIMIZE-incremental shape: carry a

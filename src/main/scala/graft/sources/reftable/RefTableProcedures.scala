@@ -295,7 +295,7 @@ final class ExpectProcedure(resolveTarget: String => (String, Seq[String]))
     StructType.fromDDL("rule STRING, violations BIGINT, total BIGINT")
 
   override def call(input: InternalRow): JIterator[Scan] = {
-    val (root, _) = resolveTarget(input.getString(0))
+    val (root, partitionColumns) = resolveTarget(input.getString(0))
     val rules = input.getString(1).split(";").toSeq.map(_.trim).filter(_.nonEmpty)
       .map { r =>
         val i = r.indexOf(':')
@@ -305,7 +305,7 @@ final class ExpectProcedure(resolveTarget: String => (String, Seq[String]))
     val spark = SparkSession.active
     val dir = VersionedTable.resolve(root).getOrElse(
       throw new IllegalArgumentException(s"$root has no published version to audit"))
-    val df = VersionedTable.readVersion(spark, dir)
+    val df = VersionedTable.readVersion(spark, dir, partitionColumns)
     val resultRows = graft.operators.Expectations.check(df, rules)
       .collect() // bounded: one row per declared rule
       .map(r => InternalRow(

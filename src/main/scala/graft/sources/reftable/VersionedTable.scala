@@ -1457,6 +1457,11 @@ object VersionedTable {
     * fragmented version keep draining it, new generations get the
     * compacted one. A table declaring a hidden layout ([[Layout.Hidden]])
     * is compacted through it, so its directories keep pruning.
+    * Hive-partitioned versions compact AS partitioned (a flat rewrite would
+    * brick readers declaring partitionColumns); their directory values read
+    * back as the strings they are ([[readVersion]]), so `bucket=007` keeps
+    * its directory name. The read subtracts deletion vectors: compaction IS
+    * their materialization.
     */
   def compact(
       spark: org.apache.spark.sql.SparkSession, root: String,
@@ -1465,47 +1470,15 @@ object VersionedTable {
     val conf = HadoopConf()
     val current = resolve(root, conf).getOrElse(
       throw new IllegalArgumentException(s"$root is not a versioned table root"))
+    val df = readVersion(spark, current, partitionColumns)
     val bytes = SnapshotFiles.list(current, partitionColumns).map(_.length).sum
     val parts = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // Hive-partitioned versions must be compacted AS partitioned — a flat
-    // rewrite would brick readers declaring partitionColumns. Partition
-    // type INFERENCE must be off for the read: it would re-type
-    // numeric-looking string values (bucket=007 → bucket=7) and rewrite
-    // the directory names, silently changing what readers decode. The
-    // conf is scoped to a child session (own SQLConf, shared context) so
-    // concurrent queries on the caller's session are untouched.
-    val df =
-      if (partitionColumns.isEmpty) readVersion(spark, current)
-      else if (RefTableFileManifest.exists(root, new Path(current).getName, conf) ||
-          DeletionVectors.hasDv(current, conf))
-        // manifest-referenced (or deletion-vector'd) partitioned version:
-        // its files live in other version dirs, so read through the
-        // resolved listing — which also subtracts DV positions; this IS
-        // the materialization read (inference-off + declared-string cast
-        // semantics match the direct branch below)
-        RefTableMutations.readAll(spark, root, current,
-          SnapshotFiles.list(current, partitionColumns), partitionColumns, Map.empty)
-      else {
-        // newSession() starts from SparkConf defaults, NOT the caller's
-        // runtime SQL confs — copy them over (timezone, parquet write
-        // options, …) before overriding the one key being scoped, or the
-        // compacted rewrite silently diverges from directly-published
-        // versions
-        val scoped = spark.newSession()
-        spark.conf.getAll.foreach { case (k, v) =>
-          try scoped.conf.set(k, v)
-          catch { case scala.util.control.NonFatal(_) => () } // static confs
-        }
-        scoped.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-        scoped.read.parquet(current)
-      }
     val compacted =
       if (partitionColumns.isEmpty) df.repartition(parts)
       else df.repartition(parts,
         partitionColumns.map(org.apache.spark.sql.functions.col): _*)
     // a hidden-partitioned table compacts AS hidden: the transform
-    // directories re-derive from the source columns, replacing any
-    // directory column the read discovered
+    // directories re-derive from the source columns
     val layout = Layout.declared(root, conf).collect { case (_, h: Layout.Hidden) => h }.getOrElse(
       if (partitionColumns.isEmpty) Layout.Flat else Layout.Partitioned(partitionColumns))
     // CAS on the compacted base: losing an interleaved append's rows to a
@@ -1687,17 +1660,14 @@ object VersionedTable {
     if (shared.isEmpty) return full // disjoint versions: delta IS the full read
     val beforeOnly = fromFiles.filterNot(f => shared(key(f)))
     val afterOnly = curFiles.filterNot(f => shared(key(f)))
-    def readSubset(files: Seq[SnapshotFile], schemaOf: => DataFrame): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
-      else DeletionVectors.applyTo(
-        spark, spark.read.parquet(files.map(_.path): _*), files)
-    // schema anchor: one footer-sampled read over the FULL current listing
-    // (lazy — only a schema, no scan), so an empty side still types
-    lazy val anchor = spark.read.parquet(curFiles.map(_.path): _*)
-    val b = readSubset(beforeOnly, anchor)
-    val a = readSubset(afterOnly, anchor)
+    val declared = dirTypes(spark, root, fromFiles ++ curFiles, Nil)
+    // an empty side types as the full current listing (footers only)
+    def readSubset(files: Seq[SnapshotFile]): DataFrame =
+      if (files.nonEmpty) ListingRead.readListing(spark, files, declared, coords = false)
+      else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        ListingRead.schemaOf(spark, curFiles, declared))
+    val b = readSubset(beforeOnly)
+    val a = readSubset(afterOnly)
     // names AND types: a data-type change across the version boundary with
     // unchanged names must also take the full-read fallback — the narrowed
     // diff join could otherwise fail or miscompare on the drifted column
@@ -1814,27 +1784,41 @@ object VersionedTable {
       .overwrite(new Path(rootPath, Pointer), content.getBytes("UTF-8"), conf)
     catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Read a version's full logical content as plain parquet: through its
-    * `_FILES.json` listing when manifest-referenced, directly from the
-    * directory otherwise (so partition-dir inference and empty-version
-    * error behavior stay exactly as before for physical versions).
+  /** Read a version's full logical content through its listing
+    * ([[ListingRead.readListing]]): what compaction, maintenance restores,
+    * `CALL expect` and version diffs consume, deletion vectors subtracted.
+    * An empty listing reads as no rows ([[RefTableMutations.schemaAt]]).
+    * `partitionColumns` direct the walk of a manifest-less version.
     */
   private[reftable] def readVersion(
-      spark: org.apache.spark.sql.SparkSession, versionDir: String): DataFrame = {
-    val conf = HadoopConf()
-    val p = new Path(versionDir)
-    val manifested = p.getName.matches("v\\d{19}_[0-9a-f]{8}") && p.getParent != null &&
-      RefTableFileManifest.exists(p.getParent.toString, p.getName, conf)
-    if (manifested) {
-      val files = SnapshotFiles.list(versionDir)
-      // merge-on-read deletion vectors subtract here — this is the read
-      // compaction, changefeeds and maintenance rewrites consume, so a
-      // miss would materialize resurrected rows
-      if (files.nonEmpty)
-        return DeletionVectors.applyTo(
-          spark, spark.read.parquet(files.map(_.path): _*), files)
-    }
-    spark.read.parquet(versionDir)
+      spark: org.apache.spark.sql.SparkSession, versionDir: String,
+      partitionColumns: Seq[String] = Nil): DataFrame = {
+    val files = SnapshotFiles.list(versionDir, partitionColumns)
+    val root = new Path(versionDir).getParent.toString
+    val declared = dirTypes(spark, root, files, partitionColumns)
+    if (files.nonEmpty) ListingRead.readListing(spark, files, declared, coords = false)
+    else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      RefTableMutations.schemaAt(spark, root, versionDir, files, partitionColumns, declared))
+  }
+
+  /** The directory columns a read of `files` takes when no schema is
+    * declared: `partitionColumns` and every other one the files carry, but
+    * for the directories the table's hidden layout derives from its data
+    * columns. Each takes the type other files store it at in their data
+    * pages (a column removed from the partition spec), else it is the
+    * string it is.
+    */
+  private def dirTypes(spark: org.apache.spark.sql.SparkSession, root: String,
+      files: Seq[SnapshotFile], partitionColumns: Seq[String])
+      : Map[String, org.apache.spark.sql.types.DataType] = {
+    val stored = RefTableColumnarReader.mergedSchema(spark, files, HadoopConf())
+    val storedTypes = stored.fold(Map.empty[String, org.apache.spark.sql.types.DataType])(
+      _.fields.map(f => f.name -> f.dataType).toMap)
+    val derived = Layout.declared(root).collect { case (_, h: Layout.Hidden) =>
+      stored.fold(Seq.empty[String])(h.dirs)
+    }.getOrElse(Nil)
+    (partitionColumns ++ files.flatMap(_.partitionValues.keys)).distinct.filterNot(derived.contains)
+      .map(c => c -> storedTypes.getOrElse(c, org.apache.spark.sql.types.StringType)).toMap
   }
 
   private def versionNum(name: String): Long = name.drop(1).take(19).toLong

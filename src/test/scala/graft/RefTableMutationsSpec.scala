@@ -176,9 +176,10 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(cur2.count() == 91)
   }
 
-  /** The stage names of the jobs `body` starts on this thread. A marker
-    * job after `body` proves every earlier job-start event was delivered:
-    * the listener bus delivers one listener's events in order.
+  /** The stage names and job descriptions of the jobs `body` starts on
+    * this thread. A marker job after `body` proves every earlier job-start
+    * event was delivered: the listener bus delivers one listener's events
+    * in order.
     */
   private def jobsOf(body: => Unit): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -190,7 +191,9 @@ class RefTableMutationsSpec extends AnyFunSuite {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => e.stageInfos.foreach(si => names.add(si.name))
+          case Some(`tag`) =>
+            e.stageInfos.foreach(si => names.add(si.name))
+            Option(e.properties.getProperty("spark.job.description")).foreach(names.add(_))
           case Some(t) if t == s"$tag-end" => delivered.countDown()
           case _ =>
         }
@@ -653,5 +656,92 @@ class RefTableMutationsSpec extends AnyFunSuite {
     assert(got(50L) == (5.5, "d0"), "upsert re-inserts a previously deleted key")
     assert(got(2000L) == (9.9, "d1"))
     assert(got.size == 600 - 50 + 2, "600 - 50 deleted evens + re-insert + new insert")
+  }
+
+  test("narrow mutations of a 200-file table start no leaf-listing job") {
+    import spark.implicits._
+    val root = tmpDir("scale")
+    // above both the parallel-listing threshold (32 paths) and the driver
+    // footer budget (64 misses)
+    VersionedTable.publish(spark.range(0, 2000, 1, 200).toDF("id").withColumn("v", col("id")), root)
+    assert(stagedFiles(root).size == 200)
+    val before = fileNames(root)
+    val jobs = jobsOf {
+      RefTableMutations.deleteWhere(spark, root, col("id") === 7L)
+      RefTableMutations.upsert(spark, root, Seq((1234L, -1L)).toDF("id", "v"), Seq("id"))
+    }
+    assert(!jobs.exists(_.startsWith("Listing leaf files")),
+      s"a listing job ran: ${jobs.filter(_.startsWith("Listing")).mkString(", ")}")
+    assert((before -- fileNames(root)).size == 2, "each mutation rewrites its one file")
+    val cur = readCurrent(root)
+    assert(cur.count() == 1999)
+    assert(cur.filter(col("id") === 1234L).select("v").first().getLong(0) == -1L)
+  }
+
+  test("a literal that needs a cast narrows: Int literals on a bigint column") {
+    val root = tmpDir("intlit")
+    VersionedTable.publish(spark.range(0, 200, 1, 20).toDF("id"), root)
+    def rewrites(condition: org.apache.spark.sql.Column): Int = {
+      val before = fileNames(root)
+      RefTableMutations.deleteWhere(spark, root, condition)
+      (before -- fileNames(root)).size
+    }
+    assert(rewrites(col("id") === 7) == 1)
+    assert(rewrites(col("id") < 3) == 1)
+    assert(rewrites(col("id").isin(55, 56)) == 1)
+    assert(readCurrent(root).count() == 200 - 1 - 3 - 2)
+  }
+
+  /** Registers a reftable catalog `cat` with namespace `db`; returns its warehouse. */
+  private def catalog(cat: String): String = {
+    val wh = tmpDir(s"${cat}_wh")
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[RefTableCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE $cat.db")
+    wh
+  }
+
+  test("internal reads of a Hive-partitioned table keep its partition column") {
+    import spark.implicits._
+    val cat = "gpcols"
+    val wh = catalog(cat)
+    spark.sql(s"CREATE TABLE $cat.db.t (id BIGINT, v BIGINT, p STRING) USING reftable " +
+      "OPTIONS (partitionColumns 'p')")
+    val root = s"$wh/db/t"
+    VersionedTable.publish((0 until 40).map(i => (i.toLong, i.toLong, s"p${i % 4}"))
+      .toDF("id", "v", "p"), root, layout = Layout.Partitioned(Seq("p")))
+    val v0 = new org.apache.hadoop.fs.Path(VersionedTable.resolve(root, conf).get).getName
+    RefTableMutations.upsert(spark, root, Seq((5L, -5L, "p1"), (100L, 100L, "p9"))
+      .toDF("id", "v", "p"), Seq("id"), partitionColumns = Seq("p"))
+    val scanned = spark.table(s"$cat.db.t").as[(Long, Long, String)].collect()
+      .map { case (id, _, p) => id -> p }.toMap
+
+    val changes = VersionedTable.changes(spark, root, Seq("id"), v0)
+    assert(changes.columns.toSeq == Seq("id", "v", "p", "change_type"))
+    assert(changes.select("id", "p").as[(Long, String)].collect().toMap ==
+      Map(5L -> scanned(5L), 100L -> scanned(100L)))
+    val images = VersionedTable.changesImages(spark, root, Seq("id"), v0)
+    assert(images.filter(col("id") === 5L).select("p_before", "p_after")
+      .as[(String, String)].collect().toSeq == Seq(("p1", "p1")))
+    // the whole-version read `CALL expect` (and a maintenance restore) takes
+    val audit = spark.sql(s"CALL $cat.system.expect(table => 'db.t', rules => 'has_p:p IS NOT NULL')")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(audit == Seq(("has_p", 0L, 41L)))
+  }
+
+  test("compaction after REMOVE partitioning keeps the column at its stored type") {
+    val cat = "gremp"
+    catalog(cat)
+    val t = s"$cat.db.t"
+    spark.sql(s"CREATE TABLE $t (id BIGINT, bucket INT, v BIGINT) USING reftable " +
+      "OPTIONS (partitionColumns 'bucket')")
+    spark.sql(s"INSERT INTO $t VALUES (1, 7, 10), (2, 9, 20)")
+    spark.sql(s"ALTER TABLE $t UNSET TBLPROPERTIES('option.partitionColumns')")
+    spark.sql(s"INSERT INTO $t VALUES (3, 5, 30)")
+    // old files hold `bucket` only in their directories, the new one in its data pages
+    spark.sql(s"CALL $cat.system.compact(table => 'db.t')")
+    val rows = spark.table(t).orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    assert(rows == Seq((1L, 7, 10L), (2L, 9, 20L), (3L, 5, 30L)))
   }
 }

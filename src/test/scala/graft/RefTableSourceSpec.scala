@@ -1241,6 +1241,22 @@ class RefTableSourceSpec extends AnyFunSuite {
     assert(VersionedTable.resolve(root).isDefined)
   }
 
+  test("a declared filter whose literal needs a cast prunes the stream's listing") {
+    import graft.sources.reftable.VersionedTable
+    val root = Files.createTempDirectory("reftable_castfilter_").toString + "/tbl"
+    VersionedTable.publish(spark.range(0, 200, 1, 20).toDF("id"), root)
+    // `id = 7` on a BIGINT column analyzes to `id = cast(7 as bigint)`
+    val o = RefTableOptions.from(new CaseInsensitiveStringMap(Map(
+      "path" -> root, "schema" -> "id BIGINT", "refreshInterval" -> "1h",
+      "filter" -> "id = 7").asJava))
+    val s = new RefTableMicroBatchStream(o, o.outputSchema,
+      graft.sources.reftable.RefTableFilters.declared(o).toArray)
+    val end = s.latestOffset(s.initialOffset(), s.getDefaultReadLimit)
+    val rows = readPartitions(o, s.planInputPartitions(s.initialOffset(), end))
+    assert(rows.size == 10, "one of the 20 ten-row files is planned")
+    assert(rows.exists(_.getLong(0) == 7L))
+  }
+
   test("a generation pinned mid-drain survives concurrent mutations + vacuum of its hosts") {
     // The retention contract on the STREAMING path: a reader that pinned its
     // generation listing keeps draining the exact pre-mutation snapshot even
